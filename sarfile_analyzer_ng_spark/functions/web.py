@@ -58,6 +58,8 @@ from pathlib import Path
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..util import session_memo
+
 PSL_PATH = Path(__file__).resolve().parent.parent / (
     "data/public_suffix_list.tsv"
 )
@@ -199,19 +201,8 @@ def _registrable_case(host, s2, s3, s4, exc3, exc2, ex3, w2, ex2, w1):
 
 # per-session broadcastable PSL flag dims, one frame per suffix
 # length the matcher probes: (sfx, flags...) with unique keys
-_PSL_DIMS_CACHE: dict[int, tuple] = {}
-
-
+@session_memo()
 def _psl_dims(spark) -> tuple:
-    # keyed by a unique token held on the session, not id(spark):
-    # ids can be reused after a session is GC'd (r12 ADVICE)
-    tok = getattr(spark, "_graft_memo_token", None)
-    if tok is None:
-        tok = object()
-        spark._graft_memo_token = tok
-    hit = _PSL_DIMS_CACHE.get(tok)
-    if hit is not None:
-        return hit
     psl = _psl()
     d1 = spark.createDataFrame(
         [(s, True) for s in sorted(psl["wild1"])], "_sfx1 string, _w1 boolean")
@@ -224,9 +215,7 @@ def _psl_dims(spark) -> tuple:
     d3 = spark.createDataFrame(
         [(s, s in psl["exact3"], s in psl["exc3"]) for s in keys3],
         "_sfx3 string, _ex3 boolean, _xc3 boolean")
-    out = (d1, d2, d3)
-    _PSL_DIMS_CACHE[tok] = out
-    return out
+    return d1, d2, d3
 
 
 def attach_registrable_domain(df, host: Column, out: str = "domain"):

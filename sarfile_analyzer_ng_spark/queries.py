@@ -17,7 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .util import fan_out, rnd, shard_hash, sql_rnd
+from .util import (MEMO_BUILDERS, fan_out, rnd, session_memo, shard_hash,
+                   sql_rnd)
 from .functions import dedup as D
 from .functions import similarity as S
 from .functions import text as TX
@@ -65,14 +66,14 @@ def q01_pricing_summary(spark, sf_dir):
     )
 
 
-SQL_Q01 = """
+SQL_Q01 = f"""
 SELECT l_returnflag, l_linestatus,
-       round(CAST(CAST((sum(l_quantity)) AS VARCHAR) AS DECIMAL(38,8)), 2)::DOUBLE                          AS sum_qty,
-       round(CAST(CAST((sum(l_extendedprice)) AS VARCHAR) AS DECIMAL(38,8)), 2)::DOUBLE                     AS sum_base_price,
-       round(CAST(CAST((sum(l_extendedprice * (1 - l_discount))) AS VARCHAR) AS DECIMAL(38,8)), 2)::DOUBLE  AS sum_disc_price,
-       round(CAST(CAST((avg(l_quantity)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE                          AS avg_qty,
-       round(CAST(CAST((avg(l_extendedprice)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE                     AS avg_price,
-       round(CAST(CAST((avg(l_discount)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE                          AS avg_disc,
+       {sql_rnd('sum(l_quantity)', 2)}                          AS sum_qty,
+       {sql_rnd('sum(l_extendedprice)', 2)}                     AS sum_base_price,
+       {sql_rnd('sum(l_extendedprice * (1 - l_discount))', 2)}  AS sum_disc_price,
+       {sql_rnd('avg(l_quantity)', 4)}                          AS avg_qty,
+       {sql_rnd('avg(l_extendedprice)', 4)}                     AS avg_price,
+       {sql_rnd('avg(l_discount)', 4)}                          AS avg_disc,
        count(*)::BIGINT                                   AS count_order
 FROM lineitem GROUP BY l_returnflag, l_linestatus
 """
@@ -90,8 +91,8 @@ SQL_Q02 = " UNION ALL ".join(
     f"""
     SELECT '{c}' AS metric, count({c})::BIGINT AS cnt,
            (count(*) - count({c}))::BIGINT AS null_cnt,
-           round(CAST(CAST((avg({c})) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS mean, round(CAST(CAST((stddev_samp({c})) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS stddev,
-           round(CAST(CAST((min({c})) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS min, round(CAST(CAST((max({c})) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS max
+           {sql_rnd(f'avg({c})', 4)} AS mean, {sql_rnd(f'stddev_samp({c})', 4)} AS stddev,
+           {sql_rnd(f'min({c})', 4)} AS min, {sql_rnd(f'max({c})', 4)} AS max
     FROM lineitem"""
     for c in DESCRIBE_COLS
 )
@@ -104,11 +105,11 @@ def q03_percentiles(spark, sf_dir):
     )
 
 
-SQL_Q03 = """
+SQL_Q03 = f"""
 SELECT l_returnflag,
-       round(CAST(CAST((quantile_cont(l_extendedprice, 0.25)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS p25,
-       round(CAST(CAST((quantile_cont(l_extendedprice, 0.50)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS p50,
-       round(CAST(CAST((quantile_cont(l_extendedprice, 0.75)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS p75
+       {sql_rnd('quantile_cont(l_extendedprice, 0.25)', 4)} AS p25,
+       {sql_rnd('quantile_cont(l_extendedprice, 0.50)', 4)} AS p50,
+       {sql_rnd('quantile_cont(l_extendedprice, 0.75)', 4)} AS p75
 FROM lineitem GROUP BY l_returnflag
 """
 
@@ -128,7 +129,7 @@ def q04_time_filter(spark, sf_dir):
 
 SQL_Q04 = f"""
 SELECT event_type, count(*)::BIGINT AS cnt,
-       round(CAST(CAST((sum(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS sum_value, round(CAST(CAST((avg(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS avg_value
+       {sql_rnd('sum(value)', 4)} AS sum_value, {sql_rnd('avg(value)', 4)} AS avg_value
 FROM events
 WHERE ts >= TIMESTAMP '{T_START}' AND ts <= TIMESTAMP '{T_END}'
 GROUP BY event_type
@@ -157,7 +158,7 @@ def q06_pivot_wide(spark, sf_dir):
 
 
 SQL_Q06 = "SELECT date_trunc('day', ts) AS day, " + ", ".join(
-    f"round(CAST(CAST((avg(CASE WHEN event_type = '{t}' THEN value END)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS {t}"
+    sql_rnd(f"avg(CASE WHEN event_type = '{t}' THEN value END)", 4) + f" AS {t}"
     for t in EVENT_TYPES
 ) + " FROM events GROUP BY 1"
 
@@ -194,8 +195,8 @@ def q09_device_filter(spark, sf_dir):
     )
 
 
-SQL_Q09 = """
-SELECT user_id, count(*)::BIGINT AS cnt, round(CAST(CAST((avg(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS avg_value
+SQL_Q09 = f"""
+SELECT user_id, count(*)::BIGINT AS cnt, {sql_rnd('avg(value)', 4)} AS avg_value
 FROM events WHERE event_type = 'click' GROUP BY user_id
 """
 
@@ -208,9 +209,9 @@ def q10_resample(spark, sf_dir):
     )
 
 
-SQL_Q10 = """
+SQL_Q10 = f"""
 SELECT date_trunc('hour', ts) AS bucket, count(*)::BIGINT AS cnt,
-       round(CAST(CAST((avg(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS avg_value
+       {sql_rnd('avg(value)', 4)} AS avg_value
 FROM events GROUP BY 1
 """
 
@@ -220,10 +221,10 @@ def q11_minmax_argmax(spark, sf_dir):
     return ST.minmax_argmax(_t(spark, sf_dir, "events"), ["event_type"], "value", "ts")
 
 
-SQL_Q11 = """
+SQL_Q11 = f"""
 WITH mm AS (
-  SELECT event_type, round(CAST(CAST((min(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS min_value,
-         round(CAST(CAST((max(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS max_value
+  SELECT event_type, {sql_rnd('min(value)', 4)} AS min_value,
+         {sql_rnd('max(value)', 4)} AS max_value
   FROM events GROUP BY event_type),
 top AS (
   SELECT event_type, ts AS max_at FROM events
@@ -290,8 +291,8 @@ WITH merged AS (
          AS source_file
   FROM events)
 SELECT source_file, event_type, count(*)::BIGINT AS cnt,
-       round(CAST(CAST((avg(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS mean, round(CAST(CAST((stddev_samp(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS stddev,
-       round(CAST(CAST((min(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS min, round(CAST(CAST((max(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS max
+       {sql_rnd('avg(value)', 4)} AS mean, {sql_rnd('stddev_samp(value)', 4)} AS stddev,
+       {sql_rnd('min(value)', 4)} AS min, {sql_rnd('max(value)', 4)} AS max
 FROM merged GROUP BY source_file, event_type
 """
 
@@ -341,9 +342,9 @@ def q17_join_rollup(spark, sf_dir):
     )
 
 
-SQL_Q17 = """
+SQL_Q17 = f"""
 SELECT c_mktsegment,
-       round(CAST(CAST((sum(l_extendedprice * (1 - l_discount))) AS VARCHAR) AS DECIMAL(38,8)), 2)::DOUBLE AS revenue,
+       {sql_rnd('sum(l_extendedprice * (1 - l_discount))', 2)} AS revenue,
        count(DISTINCT o_orderkey)::BIGINT AS n_orders,
        count(*)::BIGINT AS n_items
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -376,8 +377,8 @@ def q19_correlation(spark, sf_dir):
     )
 
 
-SQL_Q19 = """
-SELECT l_returnflag, round(CAST(CAST((corr(l_quantity, l_extendedprice)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS corr_xy,
+SQL_Q19 = f"""
+SELECT l_returnflag, {sql_rnd('corr(l_quantity, l_extendedprice)', 4)} AS corr_xy,
        count(*)::BIGINT AS cnt
 FROM lineitem GROUP BY l_returnflag
 """
@@ -394,7 +395,7 @@ def q20_outliers(spark, sf_dir):
 SQL_Q20 = f"""
 WITH s AS (SELECT event_type AS et, avg(value) AS m, stddev_samp(value) AS sd
            FROM events GROUP BY event_type)
-SELECT event_id, event_type, value, round(CAST(CAST(((value - m) / sd) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS zscore
+SELECT event_id, event_type, value, {sql_rnd('(value - m) / sd', 4)} AS zscore
 FROM events JOIN s ON event_type = et
 WHERE abs((value - m) / sd) > {ZSCORE_TAU}
 """
@@ -424,9 +425,9 @@ def q22_hourly_profile(spark, sf_dir):
     )
 
 
-SQL_Q22 = """
+SQL_Q22 = f"""
 SELECT hour(ts)::BIGINT AS hour_of_day, count(*)::BIGINT AS cnt,
-       round(CAST(CAST((avg(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS avg_value
+       {sql_rnd('avg(value)', 4)} AS avg_value
 FROM events GROUP BY 1
 """
 
@@ -438,10 +439,10 @@ def q23_rolling_avg(spark, sf_dir):
     return out.select("event_id", "event_type", "ts", "value", "rolling_mean")
 
 
-SQL_Q23 = """
+SQL_Q23 = f"""
 SELECT event_id, event_type, ts, value,
-       round(CAST(CAST((avg(value) OVER (PARTITION BY event_type ORDER BY ts
-                              ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('''avg(value) OVER (PARTITION BY event_type ORDER BY ts
+                              ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)''', 4)}
          AS rolling_mean
 FROM events
 """
@@ -453,10 +454,10 @@ def q24_running_sum(spark, sf_dir):
     return out.select("event_id", "user_id", "ts", "value", "running_sum")
 
 
-SQL_Q24 = """
+SQL_Q24 = f"""
 SELECT event_id, user_id, ts, value,
-       round(CAST(CAST((sum(value) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('''sum(value) OVER (PARTITION BY user_id ORDER BY ts
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''', 4)}
          AS running_sum
 FROM events
 """
@@ -519,7 +520,7 @@ sessions AS (
   FROM flagged)
 SELECT user_id, session_id, count(*)::BIGINT AS n_events,
        min(ts) AS session_start, max(ts) AS session_end,
-       round(CAST(CAST((sum(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS sum_value
+       {sql_rnd('sum(value)', 4)} AS sum_value
 FROM sessions GROUP BY user_id, session_id
 """
 
@@ -546,14 +547,14 @@ def q27_salted_agg(spark, sf_dir):
     )
 
 
-SQL_Q27 = """
+SQL_Q27 = f"""
 SELECT event_type,
-       round(CAST(CAST((sum(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('sum(value)', 4)}
          AS sum_value,
        count(value)::BIGINT AS cnt,
-       round(CAST(CAST((min(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('min(value)', 4)}
          AS min_value,
-       round(CAST(CAST((max(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('max(value)', 4)}
          AS max_value
 FROM events GROUP BY event_type
 """
@@ -599,7 +600,7 @@ WITH base AS (
   FROM events),
 aggs AS (
   SELECT event_type, bucket, count(*)::BIGINT AS cnt,
-         round(CAST(CAST((sum(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+         {sql_rnd('sum(value)', 4)}
            AS sum_value
   FROM base GROUP BY 1, 2),
 spans AS (
@@ -740,33 +741,6 @@ MINHASH_PORT_BANDS = 16
 # sf0.1) and protective beyond it; mirrored verbatim in the q31/q121
 # oracle SQL so value parity holds even when the cap bites.
 MINHASH_MAX_DF = 500
-_MINHASH_PAIR_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
-def _memo_key(spark, sf_dir: str, *extra) -> tuple:
-    """Session-memo key. ``id(spark)`` alone can be REUSED after a
-    SparkSession is garbage-collected (r12 ADVICE): a long process
-    cycling sessions could then be served a frame bound to a dead
-    session. A unique token object stored ON the session cannot
-    collide — a new session always gets a fresh token, and the old
-    token stays alive (as a dict key) without ever comparing equal
-    to it."""
-    tok = getattr(spark, "_graft_memo_token", None)
-    if tok is None:
-        tok = object()
-        spark._graft_memo_token = tok
-    return (tok, sf_dir, *extra)
-
-
-def _ensure_cached(df: DataFrame) -> DataFrame:
-    """Re-arm a session-memoized frame whose cache was dropped by an
-    external ``spark.catalog.clearCache()`` (the bench harness clears
-    between reps): without this, every later consumer silently
-    recomputes the shared pipeline per reference."""
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df.cache()
-    return df
 
 
 # One portable-signature frame over the planted corpus serves the q31
@@ -776,37 +750,23 @@ def _ensure_cached(df: DataFrame) -> DataFrame:
 # q121's re-offer batch synthesizes (`text || ' zz' || id%97`) — so
 # two of q121's three signature builds are the same rows under a
 # different key. Bounded: one 32-long array per planted doc.
-_MINHASH_SIG_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_minhash_sigs")
 def _minhash_sigs_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    sigs = _MINHASH_SIG_MEMO.get(key)
-    if sigs is not None:
-        return _ensure_cached(sigs)
     corpus = _planted_corpus(spark, sf_dir)
-    sigs = D.minhash_signatures_portable(
+    return D.minhash_signatures_portable(
         corpus, "text", "doc_id", num_hashes=MINHASH_PORT_HASHES
     ).cache()
-    _MINHASH_SIG_MEMO[key] = sigs
-    return sigs
 
 
+@session_memo("_memo_minhash_pairs_portable")
 def _minhash_pairs_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    pairs = _MINHASH_PAIR_MEMO.get(key)
-    if pairs is not None:
-        return _ensure_cached(pairs)
-    if pairs is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        pairs = D.minhash_lsh_pairs_portable(
-            corpus, "text", "doc_id",
-            num_hashes=MINHASH_PORT_HASHES, bands=MINHASH_PORT_BANDS,
-            max_df=MINHASH_MAX_DF,
-            sigs=_minhash_sigs_shared(spark, sf_dir),
-        ).cache()
-        _MINHASH_PAIR_MEMO[key] = pairs
-    return pairs
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.minhash_lsh_pairs_portable(
+        corpus, "text", "doc_id",
+        num_hashes=MINHASH_PORT_HASHES, bands=MINHASH_PORT_BANDS,
+        max_df=MINHASH_MAX_DF,
+        sigs=_minhash_sigs_shared(spark, sf_dir),
+    ).cache()
 
 
 def q31_dedup_minhash(spark, sf_dir):
@@ -880,21 +840,12 @@ SQL_Q31 = _sql_minhash_portable_pairs("0.5")
 # planted halves separately, union) measured SLOWER for q32 (+1.4 s at
 # sf0.1): two aggregation pipelines + a cache barrier cost more than
 # the single fused pass. Tiny frame (doc id + one long per row);
-# session-lived like _MINHASH_PAIR_MEMO, deliberately not in
+# session-lived like _minhash_pairs_shared, deliberately not in
 # _cached_inputs.
-_SIMHASH_SIG_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_simhash_sigs")
 def _planted_simhash_sigs(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    sigs = _SIMHASH_SIG_MEMO.get(key)
-    if sigs is not None:
-        return _ensure_cached(sigs)
-    if sigs is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        sigs = D.simhash(corpus, "text", "doc_id").cache()
-        _SIMHASH_SIG_MEMO[key] = sigs
-    return sigs
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.simhash(corpus, "text", "doc_id").cache()
 
 
 SIMHASH_PORT_HAMMING = 3  # 4 bands of 8 bits: pigeonhole recall EXACT here
@@ -998,48 +949,32 @@ inter AS (
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc < b.doc
   GROUP BY 1, 2)
 SELECT doc_a, doc_b, inter,
-       round(CAST(CAST((inter::DOUBLE / (sa.sz + sb.sz - inter)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS jaccard
+       {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} AS jaccard
 FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
-WHERE round(CAST(CAST((inter::DOUBLE / (sa.sz + sb.sz - inter)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE >= {JACCARD_TAU}
+WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {JACCARD_TAU}
 """
 
 
 # Exact-jaccard pair frame shared by its consumers (q33 demo, q68
 # clusters, q69 apply) — identical pipeline, identical corpus; cached
-# and memoized per (session, sf_dir) like _MINHASH_PAIR_MEMO. Bounded:
+# and memoized per (session, sf_dir) like _minhash_pairs_shared. Bounded:
 # two ids + two numbers per near-dup pair.
-_JACCARD_PAIR_MEMO: dict[tuple[int, str], DataFrame] = {}
-_SHINGLE_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_shingle_hash_rows")
 def _shingles_shared(spark, sf_dir) -> DataFrame:
     """One cached (doc, shingle-hash) frame for the whole exact-jaccard
     family (q33 via the pair memo, the max_df variant q67) — the
     shingle explode is the family's dominant shared cost."""
-    key = _memo_key(spark, sf_dir)
-    sh = _SHINGLE_MEMO.get(key)
-    if sh is not None:
-        return _ensure_cached(sh)
-    if sh is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        sh = D.shingle_hash_rows(corpus, "text", "doc_id", shingle_n=3).cache()
-        _SHINGLE_MEMO[key] = sh
-    return sh
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.shingle_hash_rows(corpus, "text", "doc_id", shingle_n=3).cache()
 
 
+@session_memo("_memo_jaccard_pairs")
 def _jaccard_pairs_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    pairs = _JACCARD_PAIR_MEMO.get(key)
-    if pairs is not None:
-        return _ensure_cached(pairs)
-    if pairs is None:
-        corpus = _planted_corpus(spark, sf_dir)
-        pairs = D.ngram_jaccard_pairs(
-            corpus, "text", "doc_id", shingle_n=3, threshold=JACCARD_TAU,
-            shingles=_shingles_shared(spark, sf_dir),
-        ).cache()
-        _JACCARD_PAIR_MEMO[key] = pairs
-    return pairs
+    corpus = _planted_corpus(spark, sf_dir)
+    return D.ngram_jaccard_pairs(
+        corpus, "text", "doc_id", shingle_n=3, threshold=JACCARD_TAU,
+        shingles=_shingles_shared(spark, sf_dir),
+    ).cache()
 
 
 def memo_builders():
@@ -1049,41 +984,9 @@ def memo_builders():
     q56 read 9 s while q33/q67/q68 read 0.07 s — which made per-query
     regressions inside a family unattributable). Each callable returns
     the memoized frame; forcing it (noop write) warms the cache every
-    registry consumer then reads."""
-    return {
-        "_memo_shingle_hash_rows": _shingles_shared,
-        "_memo_jaccard_pairs": _jaccard_pairs_shared,
-        "_memo_minhash_sigs": _minhash_sigs_shared,
-        "_memo_minhash_pairs_portable": _minhash_pairs_shared,
-        "_memo_simhash_sigs": _planted_simhash_sigs,
-        "_memo_postings": _postings_shared,
-        "_memo_pca_model": _pca_model_frame,
-        "_memo_kmeans_assign": lambda spark, sf: _kmeans_shared(
-            spark, sf)[1],
-        "_memo_unigram_lm": _unigram_lm_shared,
-        "_memo_bigram_lm": _bigram_lm_shared,
-        "_memo_ivf_topk": _ivf_topk_shared,
-        "_memo_ann_brute": _ann_brute_shared,
-        "_memo_hybrid_rrf": _rrf_pool_shared,
-        "_memo_bm25_exact": lambda spark, sf: _retrieval_shared(
-            spark, sf, "bm25"),
-        "_memo_bm25_champs": lambda spark, sf: _retrieval_shared(
-            spark, sf, "champs"),
-        "_memo_ql_topk": lambda spark, sf: _retrieval_shared(
-            spark, sf, "ql"),
-        "_memo_qc_scored": _qc_scored_shared,
-        "_memo_span_dup": _span_dup_shared,
-        "_memo_trap_audit": lambda spark, sf: _crawl_domain_shared(
-            spark, sf, "trap"),
-        "_memo_outlink_graph": lambda spark, sf: _crawl_domain_shared(
-            spark, sf, "graph"),
-        "_memo_html_blocks": lambda spark, sf: _html_blocks_shared(
-            spark, sf, "plain"),
-        "_memo_html_blocks_audit": lambda spark, sf: _html_blocks_shared(
-            spark, sf, "audit"),
-        "_memo_html_blocks_crawl": lambda spark, sf: _html_blocks_shared(
-            spark, sf, "crawl"),
-    }
+    registry consumer then reads. The entries are the ``session_memo``
+    registrations, in definition order."""
+    return dict(MEMO_BUILDERS)
 
 
 # DuckDB fragment producing the q33 pair set (doc_a, doc_b) — embedded
@@ -1105,9 +1008,9 @@ inter AS (
   GROUP BY 1, 2),
 pairs AS (
   SELECT doc_a, doc_b,
-         round(CAST(CAST((inter::DOUBLE / (sa.sz + sb.sz - inter)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS jaccard
+         {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} AS jaccard
   FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
-  WHERE round(CAST(CAST((inter::DOUBLE / (sa.sz + sb.sz - inter)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE >= {JACCARD_TAU})
+  WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {JACCARD_TAU})
 """
 
 
@@ -1115,18 +1018,10 @@ pairs AS (
 # q69 keep-min apply, q96 keep-best apply) — identical pair input ⇒
 # identical labels. The iterative label-propagation loop is the
 # family's dominant cost after the pair memo; session-lived like
-# _MINHASH_PAIR_MEMO (two longs per clustered doc).
-_CLUSTER_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+# _minhash_pairs_shared (two longs per clustered doc).
+@session_memo()
 def _dup_clusters_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    cl = _CLUSTER_MEMO.get(key)
-    if cl is not None:
-        return _ensure_cached(cl)
-    cl = D.dup_clusters(_jaccard_pairs_shared(spark, sf_dir)).cache()
-    _CLUSTER_MEMO[key] = cl
-    return cl
+    return D.dup_clusters(_jaccard_pairs_shared(spark, sf_dir)).cache()
 
 
 def q68_dup_clusters(spark, sf_dir):
@@ -1317,9 +1212,9 @@ inter AS (
   FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc < b.doc
   GROUP BY 1, 2)
 SELECT doc_a, doc_b, inter,
-       round(CAST(CAST((inter::DOUBLE / (sa.sz + sb.sz - inter)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS jaccard
+       {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} AS jaccard
 FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
-WHERE round(CAST(CAST((inter::DOUBLE / (sa.sz + sb.sz - inter)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE >= {JACCARD_TAU}
+WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {JACCARD_TAU}
 """
 
 
@@ -1597,34 +1492,20 @@ UNIGRAM_VOCAB = 20
 # per-source perplexity table; the Stupid-Backoff bigram LM likewise
 # serves q95 and q123's proxy model. Each consumer previously re-ran
 # the identical train+score pipeline (guide §1.2). Bounded: 3 scalars
-# per document. Session-lived like _MINHASH_PAIR_MEMO; bench times the
+# per document. Session-lived like _minhash_pairs_shared; bench times the
 # builds as their own ``_memo_unigram_lm`` / ``_memo_bigram_lm`` lines.
-_UNIGRAM_LM_MEMO: dict[tuple[int, str], DataFrame] = {}
-_BIGRAM_LM_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_unigram_lm")
 def _unigram_lm_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _UNIGRAM_LM_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     docs = _t(spark, sf_dir, "documents")
-    got = TX.unigram_logprob(
+    return TX.unigram_logprob(
         docs, "text", "doc_id", vocab_size=UNIGRAM_VOCAB
     ).cache()
-    _UNIGRAM_LM_MEMO[key] = got
-    return got
 
 
+@session_memo("_memo_bigram_lm")
 def _bigram_lm_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _BIGRAM_LM_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     docs = _t(spark, sf_dir, "documents")
-    got = TX.bigram_logprob(docs, "text", "doc_id").cache()
-    _BIGRAM_LM_MEMO[key] = got
-    return got
+    return TX.bigram_logprob(docs, "text", "doc_id").cache()
 
 
 def q84_unigram_logprob(spark, sf_dir):
@@ -1832,7 +1713,7 @@ def q89_source_diversity(spark, sf_dir):
     )
 
 
-SQL_Q89 = """
+SQL_Q89 = f"""
 WITH words AS (
   SELECT doc_id AS doc, source, string_split_regex(lower(trim(text)), '\\s+') AS w
   FROM documents),
@@ -1850,7 +1731,7 @@ nd AS (SELECT source, count(*)::BIGINT AS n_docs FROM documents GROUP BY source)
 SELECT n.source, n.n_docs,
        sum(c)::BIGINT AS n_shingles, count(*)::BIGINT AS n_distinct,
        round(CAST(CAST((count(*)::DOUBLE / sum(c))  AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS uniq_ratio,
-       round(CAST(CAST((max(c)::DOUBLE / sum(c)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS top_share
+       {sql_rnd('max(c)::DOUBLE / sum(c)', 4)} AS top_share
 FROM per p JOIN nd n USING (source)
 GROUP BY n.source, n.n_docs
 """
@@ -1998,7 +1879,7 @@ n AS (SELECT vec_id, label, e,
              sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS nlabel,
-         round(CAST(CAST((list_dot_product(q.e, c.e) / (q.nrm * c.nrm)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS cosine
+         {sql_rnd('list_dot_product(q.e, c.e) / (q.nrm * c.nrm)', 4)} AS cosine
   FROM n q JOIN n c ON c.vec_id != q.vec_id
   WHERE q.vec_id <= {ANN_NUM_QUERIES}),
 topk AS (
@@ -2032,9 +1913,9 @@ WITH v AS (
 n AS (SELECT vec_id, e,
              sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(CAST(CAST((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS cosine
+       {sql_rnd('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)', 4)} AS cosine
 FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE round(CAST(CAST((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE >= {COSINE_DUP_TAU}
+WHERE {sql_rnd('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)', 4)} >= {COSINE_DUP_TAU}
 """
 
 
@@ -2051,7 +1932,7 @@ n AS (SELECT vec_id, e,
              sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(CAST(CAST((list_dot_product(q.e, c.e) / (q.nrm * c.nrm)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS cosine
+         {sql_rnd('list_dot_product(q.e, c.e) / (q.nrm * c.nrm)', 4)} AS cosine
   FROM n q JOIN n c ON c.vec_id != q.vec_id
   WHERE q.vec_id <= {ANN_NUM_QUERIES})
 SELECT query_id, neighbor_id, cosine, rank FROM (
@@ -2076,29 +1957,25 @@ EMB_DIM = 64
 # re-ran the full iterative Lloyd chain (guide §1.2: don't compute
 # things you throw away). Bounded state: k rows × dim doubles for the
 # centroids, (id, cluster, cos) per vector for the assignment.
-# Session-lived like _MINHASH_PAIR_MEMO; bench times the build as its
+# Session-lived like _minhash_pairs_shared; bench times the build as its
 # own ``_memo_kmeans_assign`` line.
-_KMEANS_MEMO: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@session_memo("_memo_kmeans_assign", view=lambda spark, got: got[1])
 def _kmeans_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
-    key = _memo_key(spark, sf_dir)
-    got = _KMEANS_MEMO.get(key)
-    if got is not None:
-        return (_ensure_cached(got[0]), _ensure_cached(got[1]))
     emb = _t(spark, sf_dir, "embeddings")
     # the centroid frame localCheckpoints (k rows; its LINEAGE is the
     # whole iterative Lloyd tree — consumers would otherwise re-pay
     # full-plan analysis on every reference, the _pca_shared lesson);
-    # the assignment rides an ordinary cache.
+    # the assignment rides an ordinary cache. The centroids are cached
+    # only after the assignment is built, so the assignment's cached
+    # plan reads the checkpoint directly and every later consumer
+    # reads the cached k rows.
     cent = S.kmeans_centroids(emb, "vec_id", "embedding",
                               k=KMEANS_K,
                               iters=KMEANS_ITERS).localCheckpoint()
     assign = S.kmeans_lloyd_exact(emb, "vec_id", "embedding",
                                   k=KMEANS_K, iters=KMEANS_ITERS,
                                   centroids=cent).cache()
-    _KMEANS_MEMO[key] = (cent, assign)
-    return cent, assign
+    return cent.cache(), assign
 
 
 def q72_kmeans_twin(spark, sf_dir):
@@ -2678,17 +2555,17 @@ WITH f AS (
          len(regexp_extract_all(lower(text), '{_EN}'))::DOUBLE AS n_stop
   FROM documents)
 SELECT doc_id, n_words::BIGINT AS n_words,
-       round(CAST(CAST((CASE WHEN n_words > 0 THEN word_chars / n_words
-                  ELSE 0.0 END) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS mean_word_len,
-       round(CAST(CAST((CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('''CASE WHEN n_words > 0 THEN word_chars / n_words
+                  ELSE 0.0 END''', 4)} AS mean_word_len,
+       {sql_rnd('CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END', 4)}
          AS punct_ratio,
-       round(CAST(CAST((CASE WHEN n_words > 0 THEN n_stop / n_words ELSE 0.0 END) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('CASE WHEN n_words > 0 THEN n_stop / n_words ELSE 0.0 END', 4)}
          AS stopword_ratio,
-       round(CAST(CAST((least(n_words / 50.0, 1.0) * 0.4
+       {sql_rnd('''least(n_words / 50.0, 1.0) * 0.4
              + least(CASE WHEN n_words > 0 THEN n_stop / n_words ELSE 0.0 END
                      * 5.0, 1.0) * 0.4
              + (1.0 - least(CASE WHEN n_chars > 0 THEN n_punct / n_chars
-                            ELSE 0.0 END * 10.0, 1.0)) * 0.2) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS quality
+                            ELSE 0.0 END * 10.0, 1.0)) * 0.2''', 4)} AS quality
 FROM f
 """
 
@@ -2738,10 +2615,10 @@ def q44_json_extract(spark, sf_dir):
     )
 
 
-SQL_Q44 = """
+SQL_Q44 = f"""
 SELECT (CAST(json_extract_string(props, '$.k') AS BIGINT) % 10) AS k_bucket,
        count(*)::BIGINT AS cnt,
-       round(CAST(CAST((avg(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('avg(value)', 4)}
          AS avg_value,
        max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
 FROM events GROUP BY 1
@@ -2760,9 +2637,9 @@ def q45_rollup(spark, sf_dir):
     )
 
 
-SQL_Q45 = """
+SQL_Q45 = f"""
 SELECT event_type, count(*)::BIGINT AS cnt,
-       round(CAST(CAST((sum(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('sum(value)', 4)}
          AS sum_value,
        (CASE WHEN GROUPING(event_type) = 1 THEN 1 ELSE 0 END)::BIGINT AS is_total
 FROM events GROUP BY ROLLUP(event_type)
@@ -2827,7 +2704,7 @@ def q43_hash_split(spark, sf_dir):
     )
 
 
-SQL_Q43 = """
+SQL_Q43 = f"""
 WITH assigned AS (
   SELECT *, ((event_id % 1000003) * 2654435761 % 100 + 100) % 100 AS bucket
   FROM events),
@@ -2837,7 +2714,7 @@ split AS (
                  ELSE 'test' END AS split
   FROM assigned)
 SELECT split, event_type, count(*)::BIGINT AS cnt,
-       round(CAST(CAST((avg(value)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE
+       {sql_rnd('avg(value)', 4)}
          AS avg_value
 FROM split GROUP BY split, event_type
 """
@@ -3236,7 +3113,7 @@ def q92_eval_containment(spark, sf_dir):
     return D.eval_containment(tr, ev, "text", "doc_id", shingle_n=3)
 
 
-SQL_Q92 = r"""
+SQL_Q92 = fr"""
 WITH words AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
 sh AS (
@@ -3250,7 +3127,7 @@ ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0)
 SELECT s.doc_id,
        count(*)::BIGINT AS n_shingles,
        count(e.shingle)::BIGINT AS n_hits,
-       round(CAST(CAST((count(e.shingle)::DOUBLE / count(*)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS containment
+       {sql_rnd('count(e.shingle)::DOUBLE / count(*)', 4)} AS containment
 FROM sh s LEFT JOIN ev e ON s.shingle = e.shingle
 WHERE s.doc_id % 50 <> 0
 GROUP BY s.doc_id
@@ -3532,11 +3409,11 @@ al AS (
   FROM u JOIN anch a USING (file)),
 hourly AS (
   SELECT date_trunc('hour', ts_aligned) AS tod, count(*)::BIGINT AS cnt,
-         round(CAST(CAST((avg(CASE WHEN file = 'fa' THEN value END)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS avg_a,
-         round(CAST(CAST((avg(CASE WHEN file = 'fb' THEN value END)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS avg_b
+         {sql_rnd("avg(CASE WHEN file = 'fa' THEN value END)", 4)} AS avg_a,
+         {sql_rnd("avg(CASE WHEN file = 'fb' THEN value END)", 4)} AS avg_b
   FROM al GROUP BY 1)
 SELECT tod, cnt, avg_a, avg_b,
-       round(CAST(CAST((avg_a - avg_b) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS gap
+       {sql_rnd('avg_a - avg_b', 4)} AS gap
 FROM hourly
 """
 
@@ -3999,14 +3876,8 @@ PQ_D = 16  # EMB_DIM // PQ_M
 # (q97 codes, q98 ADC, q99 rerank) — identical config, identical
 # corpus. Codebooks are m·k rows; codes are m small ints per vector.
 # Session-lived like the other family memos.
-_PQ_MEMO: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@session_memo()
 def _pq_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
-    key = _memo_key(spark, sf_dir)
-    hit = _PQ_MEMO.get(key)
-    if hit is not None:
-        return _ensure_cached(hit[0]), _ensure_cached(hit[1])
     emb = _t(spark, sf_dir, "embeddings")
     books = S.pq_train_exact(
         emb, "vec_id", "embedding", EMB_DIM, m=PQ_M, k=PQ_K, iters=PQ_ITERS
@@ -4014,7 +3885,6 @@ def _pq_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
     codes = S.pq_codes(
         emb, "vec_id", "embedding", books, EMB_DIM, m=PQ_M
     ).cache()
-    _PQ_MEMO[key] = (books, codes)
     return books, codes
 
 
@@ -4410,18 +4280,10 @@ RS_K, RS_MIN_TOKENS = 8, 16
 # (q106 report, q107 apply) — identical corpus, identical k, identical
 # hashed→occ→dup prefix. Bounded: one row per DUPLICATED gram
 # position, not per corpus token. Session-lived like the family memos.
-_SPAN_DUP_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_span_dup")
 def _span_dup_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _SPAN_DUP_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    got = D.span_dup_frame(docs, "text", "doc_id", k=RS_K).cache()
-    _SPAN_DUP_MEMO[key] = got
-    return got
+    return D.span_dup_frame(docs, "text", "doc_id", k=RS_K).cache()
 
 
 def q106_repeated_spans(spark, sf_dir):
@@ -4679,41 +4541,32 @@ FROM mx
 PCA_ITERS, PCA_DIM = 3, 64
 
 
+def _pca_model_frame(spark, got) -> DataFrame:
+    """Bench view of the shared PCA training: the model as a small
+    frame (d, mu, v1..vD), so the bench attributes the training cost
+    to its own ``_memo_pca_model`` line."""
+    comps, mu, _w0 = got
+    rows = [(d, mu[d], *[float(c[d]) for c in comps])
+            for d in range(PCA_DIM)]
+    return spark.createDataFrame(
+        rows, ["d", "mu"] + [f"v{k + 1}" for k in range(len(comps))])
+
+
 # q109 (top-1 projection), q112 (All-but-the-Top residual) and q118
 # (top-D projection) each trained the SAME power-iteration model on
 # the SAME embeddings corpus — 3 independent trainings of ~D·iters
 # collect-jobs each (q109/q112's top-1 is arithmetically component 1
 # of q118's deflated top-D chain, see pca_power_topd_train). One
-# session-lived training (the _QC_SCORED_MEMO contract: model-sized
+# session-lived training (the _qc_scored_shared contract: model-sized
 # driver state, D·dim+dim floats, plus the checkpointed centered
 # frame) now feeds all three.
-_PCA_MEMO: dict[tuple[int, str],
-                tuple[list[list[float]], list[float], DataFrame]] = {}
-
-
+@session_memo("_memo_pca_model", view=_pca_model_frame)
 def _pca_shared(spark, sf_dir):
-    key = _memo_key(spark, sf_dir)
-    got = _PCA_MEMO.get(key)
-    if got is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        got = S.pca_power_topd_train(
-            emb, "vec_id", "embedding", dim=PCA_DIM,
-            n_components=PCA_TOPD, iters=PCA_ITERS,
-        )
-        _PCA_MEMO[key] = got
-    return got
-
-
-def _pca_model_frame(spark, sf_dir):
-    """Bench-timed builder for the shared PCA training: runs (or
-    reuses) the session training and returns the model as a small
-    frame (d, mu, v1..vD) so the bench attributes the training cost
-    to its own ``_memo_pca_model`` line."""
-    comps, mu, _w0 = _pca_shared(spark, sf_dir)
-    rows = [(d, mu[d], *[float(c[d]) for c in comps])
-            for d in range(PCA_DIM)]
-    return spark.createDataFrame(
-        rows, ["d", "mu"] + [f"v{k + 1}" for k in range(len(comps))])
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return S.pca_power_topd_train(
+        emb, "vec_id", "embedding", dim=PCA_DIM,
+        n_components=PCA_TOPD, iters=PCA_ITERS,
+    )
 
 
 def q109_pca_projection(spark, sf_dir):
@@ -5142,17 +4995,11 @@ def _qc_features(spark, sf_dir):
 
 # q104's scored frame feeds q161 (AUC), q168 (kappa) and q174
 # (threshold sweep); without a memo each consumer re-pays the 4-scan
-# training loop + scoring pass. Same contract as _RETRIEVAL_MEMO.
-_QC_SCORED_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+# training loop + scoring pass. Same contract as _retrieval_shared.
+@session_memo("_memo_qc_scored")
 def _qc_scored_shared(spark, sf_dir) -> DataFrame:
     from .functions import classify as C
 
-    key = _memo_key(spark, sf_dir)
-    df = _QC_SCORED_MEMO.get(key)
-    if df is not None:
-        return _ensure_cached(df)
     # localCheckpoint for the build: logreg_train's count + QC_ITERS
     # gradient scans and the scoring pass otherwise EACH re-ran the
     # regex-heavy quality_features pipeline (6 rebuilds — measured
@@ -5162,14 +5009,12 @@ def _qc_scored_shared(spark, sf_dir) -> DataFrame:
     feats = _qc_features(spark, sf_dir).localCheckpoint()
     w = C.logreg_train(feats, QC_FEATURES, "label",
                        iters=QC_ITERS, lr=QC_LR)
-    df = C.logreg_score(feats, QC_FEATURES, w).select(
+    return C.logreg_score(feats, QC_FEATURES, w).select(
         "doc_id",
         F.col("label").cast("long").alias("label"),
         "p_good",
         "pred",
     ).cache()
-    _QC_SCORED_MEMO[key] = df
-    return df
 
 
 def q104_quality_classifier(spark, sf_dir):
@@ -5727,13 +5572,10 @@ KN_DISCOUNT = 0.75
 
 
 # Result frames of the eval-split retrieval family, memoized per
-# (session, sf_dir) like _MINHASH_PAIR_MEMO: q150 re-reads q124+q131
+# (session, sf_dir) like _minhash_pairs_shared: q150 re-reads q124+q131
 # and q180 re-reads q124+q177, so without the memo each audit re-pays
 # its parents' full index build. Bounded: |queries|*k rows per entry.
-_RETRIEVAL_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-_POSTINGS_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_postings")
 def _postings_shared(spark, sf_dir: str) -> DataFrame:
     """The session-lived inverted-index base table (w, doc, tf) over
     the eval-split corpus side — built+cached ONCE and handed to every
@@ -5742,10 +5584,6 @@ def _postings_shared(spark, sf_dir: str) -> DataFrame:
     corpus scans per bench rep for one identical frame)."""
     from .functions import retrieval as RV
 
-    key = _memo_key(spark, sf_dir)
-    df = _POSTINGS_MEMO.get(key)
-    if df is not None:
-        return _ensure_cached(df)
     corpus, _ = _eval_split_queries(spark, sf_dir)
     # repartition by the scoring chain's dominant key before caching:
     # AQE coalesces the build's (w, doc) agg to ~1 partition at bench
@@ -5753,10 +5591,8 @@ def _postings_shared(spark, sf_dir: str) -> DataFrame:
     # stage; "w" partitioning also lines the cache up with the
     # per-term joins/aggs downstream (partition count follows
     # spark.sql.shuffle.partitions — scale-adaptive, not a constant)
-    df = (RV.corpus_postings(corpus, "text", "doc_id")
-          .repartition("w").cache())
-    _POSTINGS_MEMO[key] = df
-    return df
+    return (RV.corpus_postings(corpus, "text", "doc_id")
+            .repartition("w").cache())
 
 
 def _eval_split_queries(spark, sf_dir):
@@ -5774,13 +5610,11 @@ def _eval_split_queries(spark, sf_dir):
     return docs.where(F.col("doc_id") % 50 != 0), qs
 
 
+@session_memo(_memo_bm25_exact="bm25", _memo_bm25_champs="champs",
+              _memo_ql_topk="ql")
 def _retrieval_shared(spark, sf_dir: str, which: str) -> DataFrame:
     from .functions import retrieval as RV
 
-    key = _memo_key(spark, sf_dir, which)
-    df = _RETRIEVAL_MEMO.get(key)
-    if df is not None:
-        return _ensure_cached(df)
     corpus, qs = _eval_split_queries(spark, sf_dir)
     pt = _postings_shared(spark, sf_dir)
     if which == "bm25":
@@ -5794,9 +5628,7 @@ def _retrieval_shared(spark, sf_dir: str, which: str) -> DataFrame:
     else:
         df = RV.ql_topk(corpus, qs, "text", "doc_id", k=BM25_TOPK,
                         postings=pt)
-    df = df.cache()
-    _RETRIEVAL_MEMO[key] = df
-    return df
+    return df.cache()
 
 
 def q124_bm25_topk(spark, sf_dir):
@@ -6892,38 +6724,24 @@ IVF_NPROBE = 2
 # (q35 + q142 + q194) are each computed once per session — the two
 # recall/nDCG audits otherwise re-ran both ranking pipelines in
 # full (guide §1.2). Bounded: |queries| × k rows each. Session-lived
-# like _KMEANS_MEMO; bench times the builds as their own
+# like _kmeans_shared; bench times the builds as their own
 # ``_memo_ivf_topk`` / ``_memo_ann_brute`` lines.
-_IVF_TOPK_MEMO: dict[tuple[int, str], DataFrame] = {}
-_ANN_BRUTE_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_ivf_topk")
 def _ivf_topk_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _IVF_TOPK_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     emb = _t(spark, sf_dir, "embeddings")
-    got = S.ann_topk_ivf_portable(
+    return S.ann_topk_ivf_portable(
         emb, "vec_id", "embedding", ANN_NUM_QUERIES, k=ANN_K,
         k_lists=KMEANS_K, iters=KMEANS_ITERS, nprobe=IVF_NPROBE,
         centroids=_kmeans_shared(spark, sf_dir)[0],
     ).cache()
-    _IVF_TOPK_MEMO[key] = got
-    return got
 
 
+@session_memo("_memo_ann_brute")
 def _ann_brute_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _ANN_BRUTE_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") <= ANN_NUM_QUERIES)
-    got = S.ann_topk_bruteforce(
+    return S.ann_topk_bruteforce(
         emb, queries, "vec_id", "embedding", ANN_K).cache()
-    _ANN_BRUTE_MEMO[key] = got
-    return got
 
 
 def q142_ivf_recall(spark, sf_dir):
@@ -7006,7 +6824,7 @@ n AS (SELECT vec_id, e,
              sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
 bscored AS (
   SELECT qq.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(CAST(CAST((list_dot_product(qq.e, c.e) / (qq.nrm * c.nrm)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS cosine
+         {sql_rnd('list_dot_product(qq.e, c.e) / (qq.nrm * c.nrm)', 4)} AS cosine
   FROM n qq JOIN n c ON c.vec_id != qq.vec_id
   WHERE qq.vec_id <= {ANN_NUM_QUERIES}),
 brute AS (
@@ -7430,17 +7248,9 @@ RRF_QMAX = 5_000
 # chain to build its candidate pool). Bounded: ≤ RRF_TOPK rows per
 # eval query. Session-lived like the other family memos; bench times
 # the build as its own ``_memo_hybrid_rrf`` line.
-_RRF_POOL_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("_memo_hybrid_rrf")
 def _rrf_pool_shared(spark, sf_dir) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    got = _RRF_POOL_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
-    got = _hybrid_rrf_build(spark, sf_dir).cache()
-    _RRF_POOL_MEMO[key] = got
-    return got
+    return _hybrid_rrf_build(spark, sf_dir).cache()
 
 
 def q134_hybrid_rrf(spark, sf_dir):
@@ -7510,7 +7320,7 @@ nv AS (SELECT vec_id, e,
               sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
 semsc AS (
   SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-         round(CAST(CAST((list_dot_product(q.e, c.e) / (q.nrm * c.nrm)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS cosine
+         {sql_rnd('list_dot_product(q.e, c.e) / (q.nrm * c.nrm)', 4)} AS cosine
   FROM nv q JOIN nv c ON c.vec_id % 50 != 0
   WHERE q.vec_id % 50 = 0 AND q.vec_id < {RRF_QMAX}),
 sem AS (
@@ -9774,7 +9584,7 @@ n AS (SELECT vec_id, e,
              sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
 bscored AS (
   SELECT qq.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(CAST(CAST((list_dot_product(qq.e, c.e) / (qq.nrm * c.nrm)) AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS cosine
+         {sql_rnd('list_dot_product(qq.e, c.e) / (qq.nrm * c.nrm)', 4)} AS cosine
   FROM n qq JOIN n c ON c.vec_id != qq.vec_id
   WHERE qq.vec_id <= {ANN_NUM_QUERIES}),
 brute_rk AS (
@@ -10378,27 +10188,22 @@ def _synth_html_expr(chrome_only_mod: int | None = None):
 # sf0.1). The BLOCK frame — (doc_id, source[, url],
 # array<struct<t,lt>>) — is the shared intermediate every consumer
 # filters/aggregates, so it is memoized per (session, sf_dir,
-# variant) like _MINHASH_PAIR_MEMO and registered in memo_builders()
+# variant) like _minhash_pairs_shared and registered in memo_builders()
 # so bench attributes each build as its own _memo_* line. On a real
 # cluster the same cut is a stage-0 parquet materialization the
 # downstream queries all scan — the session cache is the local-mode
 # twin of that shape. Oracles are untouched: DuckDB re-runs the full
 # SQL chain per query, which is exactly why memoizing the Spark side
 # cannot mask a rule change.
-_HTML_BLOCKS_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-
-
-def _html_blocks_shared(spark, sf_dir, variant="plain"):
+@session_memo(_memo_html_blocks="plain", _memo_html_blocks_audit="audit",
+              _memo_html_blocks_crawl="crawl")
+def _html_blocks_shared(spark, sf_dir, variant):
     """The extracted block frame for one synthesis variant:
     ``plain`` (q203/q207), ``audit`` (q206 — derived from plain: the
     corpus differs ONLY on the chrome-only plant rows, so only the
     1/17 planted pages re-run the extraction regexps), ``crawl``
     (q201 — the funnel corpus with urls and re-fetch/mirror plants).
     """
-    key = _memo_key(spark, sf_dir, variant)
-    df = _HTML_BLOCKS_MEMO.get(key)
-    if df is not None:
-        return df
     if variant == "plain":
         docs = _t(spark, sf_dir, "documents").select(
             "doc_id", "source", "text")
@@ -10425,9 +10230,7 @@ def _html_blocks_shared(spark, sf_dir, variant="plain"):
             H.html_block_structs(F.col("html")).alias("blk"))
     else:
         raise ValueError(f"unknown html-blocks variant {variant!r}")
-    df = df.persist()
-    _HTML_BLOCKS_MEMO[key] = df
-    return df
+    return df.persist()
 
 
 def q203_html_extract(spark, sf_dir):
@@ -11533,18 +11336,10 @@ TRAP_SESSION_QUERY_RE = r"(^|&)(sessionid|sid|phpsessid)="
 # composition (which previously re-ran both chains per bench rep):
 # one cached copy each of the trap audit (q209) and the outlink graph
 # (q212). Bounded: one row per registrable domain.
-_CRAWL_DOMAIN_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-
-
+@session_memo(_memo_trap_audit="trap", _memo_outlink_graph="graph")
 def _crawl_domain_shared(spark, sf_dir, which: str) -> DataFrame:
-    key = _memo_key(spark, sf_dir, which)
-    got = _CRAWL_DOMAIN_MEMO.get(key)
-    if got is not None:
-        return _ensure_cached(got)
     build = {"trap": _trap_audit_build, "graph": _outlink_graph_build}[which]
-    got = build(spark, sf_dir).cache()
-    _CRAWL_DOMAIN_MEMO[key] = got
-    return got
+    return build(spark, sf_dir).cache()
 
 
 def q209_crawl_trap_audit(spark, sf_dir):
@@ -12367,23 +12162,11 @@ SQL_Q217 = _sql_q217()
 
 # key -> (spark callable, oracle SQL)
 #
-# ORDER MATTERS: the driver's correctness harness records only the
-# FIRST 50 entries (insertion order). Rotation policy (standing since
-# round 6): new or CHANGED keys lead the window (they need a fresh
-# driver-recorded green), then keys whose last driver recording is
-# the OLDEST round fill it, so no key goes more than ~2 rounds
-# without a recorded green. As of r8 EVERY key has a SQL oracle
-# (none are rows-only). The tail is enforced UNCHANGED by
-# tests/test_tail_staleness.py, which digests each tail entry's
-# oracle SQL + ANALYZED plan (snapshot_tail.py documents why not the
-# optimized plan) against tests/data/tail_snapshots.json and fails
-# if one drifts without being rotated back into the window.
+# Every key has a DuckDB oracle, and tests/test_oracle_parity.py
+# checks each key's values against it. The insertion order is
+# historical and kept unchanged: bench.py, tools/check_oracle.py and
+# the oracle tests all walk the keys in this order.
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    # ---- driver window (first 50 entries) ----
-    # r13 re-pin (tools/repin_window.py): new/changed keys from
-    # rotation_changed.json lead, then oldest-driver-recording-first
-    # (enforced by tools/snapshot_tail.py:check_rotation +
-    # tests/test_rotation.py).
     "q104_quality_classifier": (q104_quality_classifier, SQL_Q104),
     "q111_edit_dup_pairs": (q111_edit_dup_pairs, SQL_Q111),
     "q72_kmeans_twin": (q72_kmeans_twin, SQL_Q72),
@@ -12434,8 +12217,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "q50_sketch_stats": (q50_sketch_stats, SQL_Q50),
     "q90_bpe_merges": (q90_bpe_merges, SQL_Q90),
     "q01_pricing_summary": (q01_pricing_summary, SQL_Q01),
-    # ---- tail (staleness-guarded; see tests/test_tail_staleness.py)
-    # ordered oldest-driver-recording-first.
     "q02_describe_stats": (q02_describe_stats, SQL_Q02),
     "q03_percentiles": (q03_percentiles, SQL_Q03),
     "q06_pivot_wide": (q06_pivot_wide, SQL_Q06),

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -160,6 +163,60 @@ def memo_cols(key: tuple, builder):
     if got is None:
         got = _COLUMN_MEMO[full] = builder()
     return got
+
+
+# name -> builder(spark, sf_dir) -> DataFrame for every registered
+# session memo, in definition order: bench.py forces and times each as
+# its own ``_memo_*`` line, so a memo must be defined after every memo
+# its build reads.
+MEMO_BUILDERS: dict[str, Callable[..., DataFrame]] = {}
+
+
+def session_memo(*names: str, view=None, **variants):
+    """Memoize ``build(spark, *args)`` for the life of the session.
+
+    Results live on the session object, keyed by ``(build, *args)``:
+    a new session builds its own, and a dead session's frames go with
+    it. On a hit every frame the build left cached is re-armed, since
+    an external ``spark.catalog.clearCache()`` (bench clears between
+    reps) would otherwise make each consumer silently recompute the
+    shared pipeline; frames the build did not cache (local
+    checkpoints) stay as they are.
+
+    Registration in :data:`MEMO_BUILDERS`: each of ``names`` maps to
+    the memo itself, or to ``view(spark, result)`` when the result is
+    not the frame to force; each ``name=arg`` in ``variants`` maps to
+    the memo called with that extra argument.
+    """
+
+    def wrap(build):
+        @functools.wraps(build)
+        def memo(spark, *args):
+            store = vars(spark).setdefault("_session_memos", {})
+            key = (build, *args)
+            got = store.get(key)
+            if got is None:
+                result = build(spark, *args)
+                parts = result if isinstance(result, tuple) else (result,)
+                cached = [p for p in parts
+                          if isinstance(p, DataFrame) and p.is_cached]
+                got = store[key] = (result, cached)
+            else:
+                for df in got[1]:
+                    sl = df.storageLevel
+                    if not (sl.useMemory or sl.useDisk):
+                        df.cache()
+            return got[0]
+
+        for name in names:
+            MEMO_BUILDERS[name] = memo if view is None else (
+                lambda spark, sf_dir: view(spark, memo(spark, sf_dir)))
+        for name, arg in variants.items():
+            MEMO_BUILDERS[name] = (
+                lambda spark, sf_dir, arg=arg: memo(spark, sf_dir, arg))
+        return memo
+
+    return wrap
 
 
 def rnd_threshold(tau: float, digits: int = 4) -> float:

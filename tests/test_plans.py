@@ -784,3 +784,41 @@ def test_bigram_entropy_doc_keyed_window_no_python(spark):
 
     wins = re.findall(r"Window \[.*?partitionBy.*?\]|Window \[[^\]]*\]", p)
     assert any("doc" in w for w in wins), p
+
+
+# bench.py, tools/bench_subset.py and tools/dump_plans.py resolve these
+# ``_memo_*`` lines by name
+MEMO_NAMES = {
+    "_memo_ann_brute", "_memo_bigram_lm", "_memo_bm25_champs",
+    "_memo_bm25_exact", "_memo_html_blocks", "_memo_html_blocks_audit",
+    "_memo_html_blocks_crawl", "_memo_hybrid_rrf", "_memo_ivf_topk",
+    "_memo_jaccard_pairs", "_memo_kmeans_assign", "_memo_minhash_pairs_portable",
+    "_memo_minhash_sigs", "_memo_outlink_graph", "_memo_pca_model",
+    "_memo_postings", "_memo_qc_scored", "_memo_ql_topk",
+    "_memo_shingle_hash_rows", "_memo_simhash_sigs", "_memo_span_dup",
+    "_memo_trap_audit", "_memo_unigram_lm",
+}
+
+
+def test_memo_builders_names():
+    from sarfile_analyzer_ng_spark.queries import memo_builders
+
+    assert set(memo_builders()) == MEMO_NAMES
+
+
+@pytest.mark.parametrize("name", ["_memo_html_blocks",
+                                  "_memo_shingle_hash_rows"])
+def test_session_memo_rearms_after_clear_cache(spark, name):
+    """A memo hit returns the same frame and re-caches it after an
+    external clearCache (bench clears between reps); a new session
+    builds its own frame. Both memos build lazily, so no job runs."""
+    from sarfile_analyzer_ng_spark.queries import memo_builders
+
+    build = memo_builders()[name]
+    df = build(spark, SF_DIR)
+    assert build(spark, SF_DIR) is df
+    spark.catalog.clearCache()
+    assert not df.storageLevel.useMemory
+    assert build(spark, SF_DIR) is df
+    assert df.storageLevel.useMemory
+    assert build(spark.newSession(), SF_DIR) is not df

@@ -7,10 +7,13 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sarfile_analyzer_ng_spark.sources.sadf_json import parse_sadf_json
+
+pytestmark = pytest.mark.driver  # Tier-1 (see conftest)
 
 field = st.text(alphabet="abcdefghijklmnopqrstuvwxyz-", min_size=2, max_size=10).filter(
     lambda s: s not in {"cpu", "disk-device", "iface", "line", "filesystem", "fchost"}

@@ -5,10 +5,13 @@ hypothesis can run many examples cheaply."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sarfile_analyzer_ng_spark.sources.sar_text import parse_sar_text
+
+pytestmark = pytest.mark.driver  # Tier-1 (see conftest)
 
 _IGNORED_SUBSTRINGS = ("mhz", "intr/s", "idvendor", "temp")
 

@@ -11,6 +11,8 @@ from sarfile_analyzer_ng_spark.sources.sar_text import read_sar
 
 from .test_sar_source import SAR_24H
 
+pytestmark = pytest.mark.driver  # Tier-1 (see conftest)
+
 N_FILES = 40
 
 

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from sarfile_analyzer_ng_spark.functions import multimodal as MM
 from sarfile_analyzer_ng_spark.sources.sadf_json import parse_sadf_json, read_sadf_json
 
+pytestmark = pytest.mark.driver  # Tier-1 (see conftest)
+
 SADF = {
     "sysstat": {
         "hosts": [

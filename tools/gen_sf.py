@@ -31,11 +31,12 @@ nation/region are dimensions and stay fixed.
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import DataFrame, functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sarfile_analyzer_ng_spark.session import get_spark  # noqa: E402
 
