@@ -30,14 +30,11 @@ import sys
 
 
 def _load(spark, path: str):
-    from .sources.sadf_json import read_sadf_json
-    from .sources.sar_text import read_sar
+    from .sources.sar_text import read_files
 
-    text = read_sar(spark, path)
-    # sadf JSON files parse to zero rows in the text parser and vice
-    # versa, so the union is simply both parsers over the directory.
-    js = read_sadf_json(spark, path)
-    return text.unionByName(js).cache()
+    # one scan of the directory: each file is sniffed as sar text or
+    # sadf JSON and parsed by the matching parser (sources.sar_text)
+    return read_files(spark, path).cache()
 
 
 def _first_file(df, file: str | None) -> str:

@@ -14,8 +14,10 @@ library, so a reference user can translate calls one-to-one:
     build_overview_stats_csv           export_stats_csv
     multi-file compare (multi_files)   compare_files
 
-All functions take the long frame produced by sources.sar_text /
-sources.sadf_json and return DataFrames — nothing collects.
+All functions take the long frame produced by the SAR sources
+(sources.sar_text's ``read_sar`` / ``read_files``,
+sources.sadf_json's ``read_sadf_json``) or loaded from the store, and
+return DataFrames — nothing collects.
 """
 
 from __future__ import annotations
@@ -24,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import metadata as MD
-from .operators import stats as ST
 from .operators import timeseries as TS
 from .sources.sar_text import section_wide
 from .util import rnd
@@ -160,6 +161,18 @@ def get_table(df: DataFrame, file: str, section: str, start=None, end=None,
     return section_wide(sect, section)
 
 
+def _describe() -> list:
+    """describe() of ``value``: count, mean, stddev, min, max — the
+    statistics table's columns, shared by every call that builds one."""
+    return [
+        F.count("value").alias("cnt"),
+        rnd(F.avg("value"), 4).alias("mean"),
+        rnd(F.stddev_samp("value"), 4).alias("stddev"),
+        F.round(F.min("value"), 4).alias("min"),
+        F.round(F.max("value"), 4).alias("max"),
+    ]
+
+
 def statistics(df: DataFrame, file: str, section: str,
                device: str | None = None, start=None,
                end=None) -> DataFrame:
@@ -171,13 +184,7 @@ def statistics(df: DataFrame, file: str, section: str,
     sect = _window(sect, start, end)
     if device is not None:
         sect = sect.where(F.col("device") == device)
-    return sect.groupBy("metric").agg(
-        F.count("value").alias("cnt"),
-        rnd(F.avg("value"), 4).alias("mean"),
-        rnd(F.stddev_samp("value"), 4).alias("stddev"),
-        F.round(F.min("value"), 4).alias("min"),
-        F.round(F.max("value"), 4).alias("max"),
-    )
+    return sect.groupBy("metric").agg(*_describe())
 
 
 def analyze_section(df: DataFrame, file: str, section: str,
@@ -273,17 +280,8 @@ def compare_files(df: DataFrame, section: str, metric: str,
         overlay = TS.overlay_align(scoped, "ts", ["file"])
         return overlay.groupBy(
             "file", F.date_trunc(every, "ts_aligned").alias("ts_aligned")
-        ).agg(
-            F.count("value").alias("cnt"),
-            rnd(F.avg("value"), 4).alias("mean"),
-        )
-    return scoped.groupBy("file").agg(
-        F.count("value").alias("cnt"),
-        rnd(F.avg("value"), 4).alias("mean"),
-        rnd(F.stddev_samp("value"), 4).alias("stddev"),
-        F.round(F.min("value"), 4).alias("min"),
-        F.round(F.max("value"), 4).alias("max"),
-    )
+        ).agg(*_describe()[:2])  # cnt, mean
+    return scoped.groupBy("file").agg(*_describe())
 
 
 def export_stats_csv(df: DataFrame, file: str, out_path: str) -> None:
@@ -293,12 +291,6 @@ def export_stats_csv(df: DataFrame, file: str, out_path: str) -> None:
     stats = (
         df.where(F.col("file") == file)
         .groupBy("section", "metric")
-        .agg(
-            F.count("value").alias("cnt"),
-            rnd(F.avg("value"), 4).alias("mean"),
-            rnd(F.stddev_samp("value"), 4).alias("stddev"),
-            F.round(F.min("value"), 4).alias("min"),
-            F.round(F.max("value"), 4).alias("max"),
-        )
+        .agg(*_describe())
     )
     stats.write.mode("overwrite").option("header", True).csv(out_path)

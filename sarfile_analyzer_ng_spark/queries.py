@@ -568,11 +568,10 @@ def q46_delta_rate(spark, sf_dir):
     return out.select("event_id", "user_id", "ts", "rate")
 
 
-SQL_Q46 = """
+SQL_Q46 = f"""
 SELECT event_id, user_id, ts,
        CASE WHEN dt > 0 THEN
-         round(CAST(CAST(((value - prev_v) / dt) AS VARCHAR)
-               AS DECIMAL(38,8)), 4)::DOUBLE
+         {sql_rnd('(value - prev_v) / dt', 4)}
        END AS rate
 FROM (
   SELECT event_id, user_id, ts, value,
@@ -1730,7 +1729,7 @@ per AS (
 nd AS (SELECT source, count(*)::BIGINT AS n_docs FROM documents GROUP BY source)
 SELECT n.source, n.n_docs,
        sum(c)::BIGINT AS n_shingles, count(*)::BIGINT AS n_distinct,
-       round(CAST(CAST((count(*)::DOUBLE / sum(c))  AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS uniq_ratio,
+       {sql_rnd('count(*)::DOUBLE / sum(c)', 4)} AS uniq_ratio,
        {sql_rnd('max(c)::DOUBLE / sum(c)', 4)} AS top_share
 FROM per p JOIN nd n USING (source)
 GROUP BY n.source, n.n_docs
@@ -2806,7 +2805,7 @@ def q61_repetition_signals(spark, sf_dir):
     return TX.repetition_signals(docs, "text", "doc_id")
 
 
-SQL_Q61 = r"""
+SQL_Q61 = rf"""
 WITH toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS l
@@ -2827,14 +2826,11 @@ per_big AS (
   SELECT doc_id, sum(cnt)::BIGINT AS n_bigrams, max(cnt)::BIGINT AS top_big_cnt
   FROM bc GROUP BY doc_id)
 SELECT d.doc_id, d.n_words,
-       round(CAST(CAST((d.n_uniq / d.n_words::DOUBLE) AS VARCHAR)
-             AS DECIMAL(38,8)), 4)::DOUBLE AS uniq_word_ratio,
-       round(CAST(CAST((d.top_cnt / d.n_words::DOUBLE) AS VARCHAR)
-             AS DECIMAL(38,8)), 4)::DOUBLE AS top_word_frac,
-       round(CAST(CAST((d.dup_cnt / d.n_words::DOUBLE) AS VARCHAR)
-             AS DECIMAL(38,8)), 4)::DOUBLE AS dup_word_frac,
-       round(CAST(CAST((coalesce(b.top_big_cnt / b.n_bigrams::DOUBLE, 0.0))
-             AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS top_bigram_frac
+       {sql_rnd('d.n_uniq / d.n_words::DOUBLE', 4)} AS uniq_word_ratio,
+       {sql_rnd('d.top_cnt / d.n_words::DOUBLE', 4)} AS top_word_frac,
+       {sql_rnd('d.dup_cnt / d.n_words::DOUBLE', 4)} AS dup_word_frac,
+       {sql_rnd('coalesce(b.top_big_cnt / b.n_bigrams::DOUBLE, 0.0)', 4)}
+         AS top_bigram_frac
 FROM per_doc d LEFT JOIN per_big b USING (doc_id)
 """
 
@@ -4242,6 +4238,14 @@ def q105_budget_trim(spark, sf_dir):
     return TX.budget_select(docs, "text", "doc_id", "source", QB_BUDGET)
 
 
+# The q105/q116/q119 document quality score (DuckDB side).
+_SQL_QUALITY = sql_rnd(
+    "least(n_words / 50.0, 1.0) * 0.4"
+    " + least(CASE WHEN n_words > 0 THEN n_stop / n_words"
+    " ELSE 0.0 END * 5.0, 1.0) * 0.4"
+    " + (1.0 - least(CASE WHEN n_chars > 0 THEN n_punct / n_chars"
+    " ELSE 0.0 END * 10.0, 1.0)) * 0.2", 4)
+
 SQL_Q105 = rf"""
 WITH f AS (
   SELECT doc_id, source,
@@ -4252,12 +4256,7 @@ WITH f AS (
   FROM documents),
 q AS (
   SELECT doc_id, source, n_words::BIGINT AS n_tokens,
-         round(CAST(CAST((least(n_words / 50.0, 1.0) * 0.4
-               + least(CASE WHEN n_words > 0 THEN n_stop / n_words
-                       ELSE 0.0 END * 5.0, 1.0) * 0.4
-               + (1.0 - least(CASE WHEN n_chars > 0 THEN n_punct / n_chars
-                              ELSE 0.0 END * 10.0, 1.0)) * 0.2)
-           AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS quality
+         {_SQL_QUALITY} AS quality
   FROM f)
 SELECT doc_id, source, n_tokens, quality,
        sum(n_tokens) OVER (PARTITION BY source
@@ -4877,12 +4876,7 @@ WITH f AS (
   FROM documents),
 q AS (
   SELECT doc_id, source,
-         round(CAST(CAST((least(n_words / 50.0, 1.0) * 0.4
-               + least(CASE WHEN n_words > 0 THEN n_stop / n_words
-                       ELSE 0.0 END * 5.0, 1.0) * 0.4
-               + (1.0 - least(CASE WHEN n_chars > 0 THEN n_punct / n_chars
-                              ELSE 0.0 END * 10.0, 1.0)) * 0.2)
-           AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS quality
+         {_SQL_QUALITY} AS quality
   FROM f),
 keyed AS (
   SELECT doc_id, source, quality,
@@ -5425,12 +5419,7 @@ WITH f AS (
   FROM documents),
 q AS (
   SELECT doc_id, source, text, n_words::BIGINT AS n_tokens,
-         round(CAST(CAST((least(n_words / 50.0, 1.0) * 0.4
-               + least(CASE WHEN n_words > 0 THEN n_stop / n_words
-                       ELSE 0.0 END * 5.0, 1.0) * 0.4
-               + (1.0 - least(CASE WHEN n_chars > 0 THEN n_punct / n_chars
-                              ELSE 0.0 END * 10.0, 1.0)) * 0.2)
-           AS VARCHAR) AS DECIMAL(38,8)), 4)::DOUBLE AS quality
+         {_SQL_QUALITY} AS quality
   FROM f),
 samp AS (
   SELECT doc_id, source, text, n_tokens, quality,

@@ -2,9 +2,12 @@
 
 The reference converts sadf JSON back into sar *text* and re-parses it
 (sar_ingest.py:413 ``sadf_json_to_sar_text``) so one parser owns the
-format. Spark-first, the JSON is its own distributed source: one file
-per task, a generic traversal of the sysstat statistics tree, and the
-same long output schema as the text source — no text round-trip.
+format. Here a generic traversal of the sysstat statistics tree emits
+the text source's long rows directly — no text round-trip — and one
+decode path owns the rest: ``sar_text.decode_file`` unpacks xz (the
+reference does the same in sar_ingest.py:333), sniffs the format and
+calls :func:`parse_sadf_json`; :func:`read_sadf_json` is that module's
+distributed read restricted to sadf JSON files.
 
 Traversal rules (sysstat's public JSON layout):
 - each ``statistics`` entry is one timestamp; sections are its keys
@@ -13,24 +16,14 @@ Traversal rules (sysstat's public JSON layout):
 - numeric fields become (metric, value) rows; nested dicts (the io
   section's io-reads/io-writes) are flattened with dotted names
 - ``restarts``/boot entries become restart=True rows
-
-xz-compressed uploads (single-file .xz) are handled transparently —
-the reference does the same in sar_ingest.py:333.
 """
 
 from __future__ import annotations
 
 import json
-import lzma
 from datetime import datetime
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .sar_text import SAR_SCHEMA
-
-XZ_MAGIC = b"\xfd7zXZ\x00"
 
 _DEVICE_KEYS = ("cpu", "disk-device", "iface", "line", "filesystem", "fchost")
 
@@ -83,11 +76,10 @@ def _rows_for_section(section: str, payload, ts, base: dict,
 
 def parse_sadf_json(file_name: str, content: bytes,
                     skipped: set[str] | None = None) -> list[dict]:
-    """Pure per-file parser (executor-side body). Pass a ``skipped``
-    set to collect unknown-field warnings (upload path only — the
-    distributed read skips the bookkeeping)."""
-    if content[: len(XZ_MAGIC)] == XZ_MAGIC:
-        content = lzma.decompress(content)
+    """Pure per-file parser of plain (already unpacked) sadf JSON bytes
+    into SAR_SCHEMA row dicts. Pass a ``skipped`` set to collect
+    unknown-field warnings (upload path only — the distributed read
+    skips the bookkeeping)."""
     data = json.loads(content)
     out: list[dict] = []
     for host in data.get("sysstat", {}).get("hosts", []):
@@ -139,48 +131,10 @@ def parse_sadf_json(file_name: str, content: bytes,
 
 
 def read_sadf_json(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed sadf-JSON read: binaryFile source (handles .xz),
-    one file per task, same long schema as the text source."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*")
-        .load(path)
-        .select(F.col("path").alias("file"), F.col("content"))
-    )
-    # No repartition: the binaryFile source already packs whole files
-    # into scan partitions bounded by spark.sql.files.maxPartitionBytes
-    # (byte-aware, unlike a hash repartition on file name, which can
-    # collide two large files into one partition). Per-file pandas
-    # yields below bound python memory within a partition, and keeping
-    # the plan lazy avoids an eager listing job at construction time.
-    field_names = [f.name for f in SAR_SCHEMA.fields]
+    """Distributed sadf-JSON read: ``sar_text.read_files`` restricted to
+    sadf JSON files (``.xz`` unpacked, one file per task, same long
+    schema as the text source)."""
+    # imported here: sar_text imports this module's parser
+    from .sar_text import SADF_JSON, read_files
 
-    def batches(iterator):
-        for pdf in iterator:
-            # one Arrow batch per FILE — never accumulate a whole
-            # multi-file partition's rows in one python list
-            for file_name, content in zip(pdf["file"], pdf["content"]):
-                try:
-                    rows = parse_sadf_json(file_name, bytes(content))
-                except (json.JSONDecodeError, lzma.LZMAError, ValueError):
-                    continue  # skip broken uploads, like the reference UI
-                yield pd.DataFrame(rows, columns=field_names)
-
-    return raw.mapInPandas(batches, SAR_SCHEMA)
-
-
-def sadf_warnings(file_name: str, content: bytes) -> list[str]:
-    """Upload-time scan for sysstat fields the traversal drops
-    (reference sar_ingest.py:24-60, 382-387: per-field warnings on
-    unrecognized keys, surfaced to the uploader). One driver-side pass
-    over the single uploaded file — never part of the distributed
-    read. Returns sorted, deduplicated messages; broken JSON returns
-    no warnings here because upload fails loudly later anyway."""
-    skipped: set[str] = set()
-    try:
-        if content[: len(XZ_MAGIC)] == XZ_MAGIC:
-            content = lzma.decompress(content)
-        parse_sadf_json(file_name, content, skipped=skipped)
-    except (json.JSONDecodeError, lzma.LZMAError, ValueError, KeyError):
-        return []
-    return sorted(skipped)
+    return read_files(spark, path, (SADF_JSON,))

@@ -1,18 +1,27 @@
-"""Distributed SAR ASCII ingest.
+"""Distributed SAR ingest: the sar ASCII parser and the one decode path
+every SAR input goes through.
 
 Reference behavior (re-expressed, not ported): sarfile_analyzer_ng
 code/parse_into_polars.py:80 ``parse_sar_file`` reads one sar report
 sequentially on one core and builds a long (header, data, date) frame;
 code/pl_helpers2.py then splits the value strings into typed metric
 columns. Here one *file* is the unit of parallelism: 100k sar files fan
-out across executors (`wholetext` read → `mapInPandas`), each parsed in
-one pass, and the output is immediately the fully-typed long frame:
+out across executors (``binaryFile`` read → ``mapInPandas``), each parsed
+in one pass, and the output is immediately the fully-typed long frame:
 
     (file, host, os_details, section, ts, device, metric, value, restart)
 
 Per-file Python is fine at scale because sar reports are bounded (a day
 of samples, ≤ tens of MB); the cross-file fan-out is where the
 parallelism lives, and everything downstream is JVM-side DataFrame ops.
+
+:func:`decode_file` is the single place a file is unpacked (xz,
+reference sar_ingest.py:333), sniffed (sadf JSON or sar text) and parsed
+(:func:`parse_sar_columns` or ``sadf_json.parse_sadf_json``). The
+readers (:func:`read_sar`, ``sadf_json.read_sadf_json``, the CLI's
+mixed-directory load) are calls of one scan body, :func:`read_files`,
+and ``store.SarStore.upload`` parses an upload through the same
+function on the driver.
 
 Semantics preserved from the reference parser:
 - header detection after blank lines; sections keyed by the header's
@@ -31,13 +40,17 @@ Semantics preserved from the reference parser:
 
 from __future__ import annotations
 
+import lzma
 import re
-from datetime import datetime, timedelta
+from datetime import datetime
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .sadf_json import parse_sadf_json
 
 SAR_SCHEMA = T.StructType(
     [
@@ -52,6 +65,7 @@ SAR_SCHEMA = T.StructType(
         T.StructField("restart", T.BooleanType()),
     ]
 )
+SAR_FIELDS = [f.name for f in SAR_SCHEMA.fields]
 
 DEVICE_COLUMNS = {"CPU", "DEV", "IFACE", "TTY", "FCHOST", "FILESYSTEM"}
 DEVICE_LAST_COLUMNS = {"FCHOST", "FILESYSTEM"}
@@ -285,49 +299,98 @@ def parse_sar_text(file_name: str, content: str,
 
 
 XZ_MAGIC = b"\xfd7zXZ\x00"
+_BOM = b"\xef\xbb\xbf"
+
+# What decode_file finds a file to be, after unpacking xz.
+SADF_JSON = "sadf"  # first byte after a BOM and whitespace is "{"
+SAR_TEXT = "sar"  # anything else that decodes as UTF-8
+# Anything else: a binary sa datafile, or sar text in another
+# encoding. The readers parse it as sar text with U+FFFD replacements;
+# the store converts it through the host's sar binary instead.
+BINARY = "binary"
+KINDS = (SAR_TEXT, SADF_JSON, BINARY)
+# What decode_file raises on input it cannot decode: a broken xz
+# archive, or JSON that does not parse (JSONDecodeError is a ValueError).
+DECODE_ERRORS = (lzma.LZMAError, ValueError)
 
 
-def read_sar(spark: SparkSession, path: str,
-             drop_unwanted: bool = True) -> DataFrame:
-    """Distributed sar read: one input file per task (``binaryFile``
-    source, so single-file ``.xz`` uploads decompress transparently —
-    sar_ingest.py:333 behavior); Arrow-batched Python parse; long typed
-    output (SAR_SCHEMA). ``drop_unwanted`` applies the reference's
-    "CPU MHz" / "INTR intr/s" exclusion (see UNWANTED_HEADERS)."""
+class Decoded(NamedTuple):
+    kind: str  # SAR_TEXT, SADF_JSON or BINARY
+    unxz: bool  # the input was an xz archive
+    data: bytes  # the plain bytes after unpacking
+    frame: pd.DataFrame | None  # SAR_SCHEMA rows; None if kind not wanted
+
+
+def decode_file(file_name: str, content: bytes, kinds=KINDS,
+                drop_unwanted: bool = True,
+                skipped: set[str] | None = None) -> Decoded:
+    """The per-file decode shared by every reader and the store's
+    upload: unpack xz, sniff the format, and parse it into a
+    SAR_SCHEMA pandas frame when its kind is one of ``kinds``.
+    ``skipped`` collects the sadf fields the JSON traversal drops.
+    Raises one of :data:`DECODE_ERRORS` on input it cannot decode; the
+    caller decides whether that skips the file or fails the upload."""
+    unxz = content[: len(XZ_MAGIC)] == XZ_MAGIC
+    data = lzma.decompress(content) if unxz else content
+    if data.removeprefix(_BOM).lstrip()[:1] == b"{":
+        kind, text = SADF_JSON, None
+    else:
+        try:
+            kind, text = SAR_TEXT, data.decode("utf-8")
+        except UnicodeDecodeError:
+            kind, text = BINARY, data.decode("utf-8", "replace")
+    if kind not in kinds:
+        return Decoded(kind, unxz, data, None)
+    if kind == SADF_JSON:
+        parsed = parse_sadf_json(file_name, data, skipped)
+    else:
+        parsed = parse_sar_columns(file_name, text, drop_unwanted)
+    return Decoded(kind, unxz, data, pd.DataFrame(parsed, columns=SAR_FIELDS))
+
+
+def read_files(spark: SparkSession, path: str, kinds=KINDS,
+               drop_unwanted: bool = True) -> DataFrame:
+    """The one distributed read: every file under ``path`` whose kind
+    is in ``kinds`` goes through :func:`decode_file` (``binaryFile``
+    source, Arrow-batched Python parse, long typed SAR_SCHEMA output).
+    Files it cannot decode (truncated xz, broken JSON) are skipped, like
+    the reference UI skips broken uploads."""
     raw = (
         spark.read.format("binaryFile")
         .load(path)
         .select(F.col("path").alias("file"), F.col("content"))
     )
 
-    field_names = [f.name for f in SAR_SCHEMA.fields]
-
     def parse_batches(iterator):
-        import lzma
-
         for pdf in iterator:
             for file_name, content in zip(pdf["file"], pdf["content"]):
-                data = bytes(content)
-                if data[: len(XZ_MAGIC)] == XZ_MAGIC:
-                    try:
-                        data = lzma.decompress(data)
-                    except lzma.LZMAError:
-                        continue
-                cols = parse_sar_columns(
-                    file_name, data.decode("utf-8", "replace"),
-                    drop_unwanted,
-                )
+                try:
+                    frame = decode_file(file_name, bytes(content), kinds,
+                                        drop_unwanted).frame
+                except DECODE_ERRORS:
+                    continue
                 # one Arrow batch per file, built column-wise
-                yield pd.DataFrame(cols, columns=field_names)
+                if frame is not None:
+                    yield frame
 
-    # No repartition (matches the sadf source): the binaryFile scan
-    # already packs whole files into partitions bounded by
-    # spark.sql.files.maxPartitionBytes — byte-aware, unlike a hash
-    # repartition on file name, which can collide two gigabyte files
-    # into one partition. parse_batches yields one Arrow frame per
-    # file, bounding python memory within a partition, and the plan
-    # stays lazy (no eager listing job at construction time).
+    # No repartition: the binaryFile scan already packs whole files
+    # into partitions bounded by spark.sql.files.maxPartitionBytes —
+    # byte-aware, unlike a hash repartition on file name, which can
+    # collide two gigabyte files into one partition. parse_batches
+    # yields one Arrow frame per file, bounding python memory within a
+    # partition, and the plan stays lazy (no eager listing job at
+    # construction time).
     return raw.mapInPandas(parse_batches, SAR_SCHEMA)
+
+
+def read_sar(spark: SparkSession, path: str,
+             drop_unwanted: bool = True) -> DataFrame:
+    """Distributed sar-text read: one input file per task, ``.xz``
+    unpacked transparently (sar_ingest.py:333 behavior); sadf JSON
+    files are left to ``read_sadf_json``. ``drop_unwanted`` applies the
+    reference's "CPU MHz" / "INTR intr/s" exclusion (see
+    UNWANTED_HEADERS)."""
+    return read_files(spark, path, (SAR_TEXT, BINARY), drop_unwanted)
 
 
 def sections(df: DataFrame) -> DataFrame:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import lzma
 import os
+import re
 import shutil
 import subprocess
 import tempfile
@@ -28,8 +29,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sources.sadf_json import read_sadf_json, sadf_warnings
-from .sources.sar_text import XZ_MAGIC, read_sar
+from .sources.sar_text import (
+    BINARY, SADF_JSON, SAR_SCHEMA, SAR_TEXT, decode_file,
+)
 
 
 class StoreError(ValueError):
@@ -118,6 +120,10 @@ class SarStore:
         long frame), rename to ``<host>_<date>`` (reference
         mng_sar rename flow), store raw + parquet eagerly.
 
+        The upload is parsed once, on the driver, by the same
+        ``decode_file`` the distributed readers run per file; the only
+        Spark job is the parquet write.
+
         Binary ``sa`` datafiles convert through the host's ``sar``
         binary when one is on PATH (:func:`convert_binary_sa`); without
         one the upload is rejected with a clear error rather than
@@ -125,81 +131,56 @@ class SarStore:
         """
         self._check_name(filename)
         warnings: list[str] = []
-        if content[: len(XZ_MAGIC)] == XZ_MAGIC:
-            try:
-                content = lzma.decompress(content)
-            except lzma.LZMAError as exc:
-                raise StoreError(f"{filename}: bad xz archive: {exc}")
-            if filename.endswith(".xz"):
-                filename = filename[: -len(".xz")]
+        skipped: set[str] = set()
+        try:
+            dec = decode_file(filename, content, (SAR_TEXT, SADF_JSON),
+                              skipped=skipped)
+        except lzma.LZMAError as exc:
+            raise StoreError(f"{filename}: bad xz archive: {exc}")
+        except ValueError as exc:
+            raise StoreError(f"{filename}: bad sadf JSON: {exc}")
+        if dec.unxz:
+            filename = filename.removesuffix(".xz")
             warnings.append(f"{filename}: xz archive unpacked")
+        if dec.kind == BINARY:
+            # binary sa datafile: convert via the host sar binary when
+            # one exists (reference mng_sar.py:82), reject with a clear
+            # error otherwise
+            text, filename = convert_binary_sa(dec.data, filename)
+            warnings.append(f"{filename}: binary sa datafile converted")
+            dec = decode_file(filename, text, (SAR_TEXT, BINARY))
+        elif dec.kind == SADF_JSON:
+            warnings.append(f"{filename}: sadf JSON converted")
+            warnings.extend(f"{filename}: {w}" for w in sorted(skipped))
 
-        is_json = content.lstrip()[:1] == b"{"
-        if not is_json:
-            try:
-                content.decode("utf-8")
-            except UnicodeDecodeError:
-                # binary sa datafile: convert via the host sar binary
-                # when one exists (reference mng_sar.py:82), reject
-                # with a clear error otherwise
-                content, filename = convert_binary_sa(content, filename)
-                warnings.append(f"{filename}: binary sa datafile converted")
+        # rename to host_YYYY-MM-DD from the parsed content, like the
+        # reference's rename_sar_file
+        pdf = dec.frame
+        host = None if pdf.empty else pdf.at[pdf["ts"].idxmin(), "host"]
+        if host is None:
+            raise StoreError(f"{filename}: no sar samples found")
+        # the hostname comes from FILE CONTENT — sanitize it before it
+        # becomes a path segment, or a crafted OS line
+        # ('Linux 5.x (../../../etc/x) ...') writes outside the store
+        # root; _check_name then re-validates the result
+        safe_host = re.sub(r"[^A-Za-z0-9._-]", "_", str(host)).lstrip(".") or "host"
+        name = self._check_name(f"{safe_host}_{pdf['ts'].min():%Y-%m-%d}")
+        d = self._user_dir(user)
+        if (d / f"{name}.parquet").exists():
+            warnings.append(f"{name}: existing parquet was overwritten")
 
-        # Parse through the same distributed readers every other query
-        # uses (sources.sar_text / sources.sadf_json) via a staging dir;
-        # everything consuming the lazy frame stays inside the staging
-        # context.
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as tmp:
-            (Path(tmp) / filename).write_bytes(content)
-            if is_json:
-                df = read_sadf_json(self.spark, tmp)
-                warnings.append(f"{filename}: sadf JSON converted")
-                warnings.extend(
-                    f"{filename}: {w}" for w in sadf_warnings(filename, content)
-                )
-            else:
-                df = read_sar(self.spark, tmp)
-
-            # rename to host_YYYY-MM-DD from the parsed content, like
-            # the reference's rename_sar_file — one tiny aggregate that
-            # also carries the upload stats (row/section counts), so
-            # the whole upload is exactly two Spark actions: this agg
-            # and the parquet write. No collect of data rows.
-            head = df.agg(
-                F.min_by("host", "ts").alias("host"),
-                F.date_format(F.min("ts"), "yyyy-MM-dd").alias("day"),
-                F.count(F.lit(1)).alias("rows"),
-                F.countDistinct("section").alias("sections"),
-            ).first()
-            if head["host"] is None or head["day"] is None:
-                raise StoreError(f"{filename}: no sar samples found")
-            # the hostname comes from FILE CONTENT — sanitize it before
-            # it becomes a path segment, or a crafted OS line
-            # ('Linux 5.x (../../../etc/x) ...') writes outside the
-            # store root; _check_name then re-validates the result
-            import re as _re
-
-            safe_host = _re.sub(
-                r"[^A-Za-z0-9._-]", "_", str(head["host"])
-            ).lstrip(".") or "host"
-            name = self._check_name(f"{safe_host}_{head['day']}")
-            d = self._user_dir(user)
-            if (d / f"{name}.parquet").exists():
-                warnings.append(f"{name}: existing parquet was overwritten")
-
-            (d / name).write_bytes(content)
-            # fix the file column to the stored name, partition by
-            # section so per-section reads prune at directory level
-            out = df.withColumn("file", F.lit(name))
-            out.write.mode("overwrite").partitionBy("section").parquet(
-                str(d / f"{name}.parquet")
-            )
+        (d / name).write_bytes(dec.data)
+        # fix the file column to the stored name; one partition, so
+        # the write leaves one file per section directory (partitioned
+        # by section so per-section reads prune at directory level)
+        out = self.spark.createDataFrame(pdf.assign(file=name), SAR_SCHEMA)
+        out.coalesce(1).write.mode("overwrite").partitionBy("section").parquet(
+            str(d / f"{name}.parquet")
+        )
         return {
             "name": name,
-            "rows": head["rows"],
-            "headers": head["sections"],
+            "rows": len(pdf),
+            "headers": pdf["section"].nunique(),
             "warnings": warnings,
         }
 
@@ -237,21 +218,22 @@ class SarStore:
             )
         except Exception:  # empty/unlistable root → driver fallback
             return self._list_files_walk(user)
-        rootstr = str(self.root.resolve())
-        # no SQL-string interpolation of the root (quotes/injection) and
-        # URI-decode first so percent-encoded names still parse
-        decoded = F.url_decode(F.col("path"))
-        rel = decoded.substr(
-            F.instr(decoded, rootstr) + F.lit(len(rootstr) + 1),
-            F.lit(1 << 20),
+        # <user>/<name> are the two path segments below the root: find
+        # them by the root's depth, not by searching the path for the
+        # root string. Spark's paths are not percent-encoded, so the
+        # segments are taken verbatim.
+        depth = len(Path(os.path.abspath(self.root)).parts)
+        parts = F.split(
+            F.regexp_replace("path", r"^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", ""),
+            "/",
         )
-        parts = F.split(rel, "/")
-        per = files.select(
-            parts.getItem(0).alias("user"),
-            F.regexp_replace(parts.getItem(1), r"\.parquet$", "").alias("name"),
-            parts.getItem(1).endswith(".parquet").alias("is_pq"),
+        user_col, file_col = parts.getItem(depth), parts.getItem(depth + 1)
+        per = files.where(F.size(parts) >= depth + 2).select(
+            user_col.alias("user"),
+            F.regexp_replace(file_col, r"\.parquet$", "").alias("name"),
+            file_col.endswith(".parquet").alias("is_pq"),
             "length", "modificationTime",
-        ).where(F.size(parts) >= 2)
+        )
         if user is not None:
             per = per.where(F.col("user") == user)
         now_us = F.unix_micros(F.current_timestamp())

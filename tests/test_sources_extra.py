@@ -67,6 +67,50 @@ def test_read_sadf_json_distributed_and_xz(spark, tmp_path):
     assert cpu.count() == 4  # 2 files x 2 metrics
 
 
+def test_cli_files_over_mixed_directory(spark, tmp_path, capsys, monkeypatch):
+    """`files` over a directory mixing every input kind lists each
+    well-formed file once, from one scan that sniffs each file's
+    format; the truncated .xz and the broken JSON leave nothing."""
+    from sarfile_analyzer_ng_spark.__main__ import _load, main
+
+    from .test_sar_source import SAR_24H, SAR_AMPM
+
+    sadf = json.dumps(SADF).encode()
+    trunc = lzma.compress(SAR_24H.encode())
+    inputs = {
+        "a.txt": SAR_24H.encode(),
+        "b_ampm.txt": SAR_AMPM.encode(),
+        "c.txt.xz": lzma.compress(SAR_24H.encode()),
+        "d.json": sadf,
+        "e.json.xz": lzma.compress(sadf),
+        "trunc.txt.xz": trunc[: len(trunc) // 2],
+        "broken.json": sadf[: len(sadf) // 3],
+    }
+    for name, data in inputs.items():
+        (tmp_path / name).write_bytes(data)
+    monkeypatch.setattr(
+        "sarfile_analyzer_ng_spark.session.get_spark", lambda name: spark
+    )
+    main(["files", str(tmp_path), "--json"])
+    rows = [json.loads(l) for l in capsys.readouterr().out.splitlines()
+            if l.strip()]
+    got = [(os.path.basename(r["file"]), r["host"], r["n_restarts"])
+           for r in rows]
+    assert got == [
+        ("a.txt", "host1", 1),
+        ("b_ampm.txt", "host2", 0),
+        ("c.txt.xz", "host1", 1),
+        ("d.json", "h1", 1),
+        ("e.json.xz", "h1", 1),
+    ]
+
+    df = _load(spark, str(tmp_path))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    df.unpersist()
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("FileScan binaryFile") == 1
+
+
 def test_multimodal_fake_decode(spark):
     rows = [
         (1, "image", None, b"imagebytes-1", {"path": "/x/1.png"}),

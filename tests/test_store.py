@@ -4,6 +4,7 @@ delete → cleanup lifecycle (reference api/services.py:94/:159/:379/:524)."""
 from __future__ import annotations
 
 
+import json
 import lzma
 import os
 import time
@@ -16,6 +17,7 @@ from sarfile_analyzer_ng_spark.store import SarStore, StoreError
 pytestmark = pytest.mark.driver  # driver-facing gate (see conftest)
 
 from .test_sar_source import SAR_24H, SAR_AMPM
+from .test_sources_extra import SADF
 
 
 @pytest.fixture()
@@ -58,6 +60,18 @@ def test_upload_rejects_binary_and_bad_names(store, monkeypatch):
         store.upload("../evil", "f.txt", SAR_24H.encode())
     with pytest.raises(StoreError, match="invalid"):
         store.upload("alice", "../../etc/passwd", SAR_24H.encode())
+
+
+def test_upload_reads_bom_prefixed_sadf_json(store):
+    """A UTF-8 BOM before the JSON is still sadf JSON: the upload
+    stores the same rows the sadf reader gets from the file."""
+    plain = store.upload("alice", "plain.json", json.dumps(SADF).encode())
+    info = store.upload(
+        "bob", "bom.json", b"\xef\xbb\xbf" + json.dumps(SADF).encode()
+    )
+    assert info["rows"] == plain["rows"] > 0
+    assert info["name"] == plain["name"]
+    assert "bom.json: sadf JSON converted" in info["warnings"]
 
 
 def _stub_sar(tmp_path, monkeypatch, script_body):
@@ -148,6 +162,27 @@ def test_list_files_is_distributed_not_walk(store, monkeypatch):
     rows = store.list_files().collect()
     assert [r["user"] for r in rows] == ["alice"]
     assert rows[0]["parquet_bytes"] > 0 and rows[0]["age_days"] < 1.0
+
+
+@pytest.mark.parametrize("user", ["a+b", "b%41"])
+@pytest.mark.parametrize("root", ["c++", "pct%41", "a[1]"])
+def test_list_files_keeps_url_characters(spark, tmp_path, monkeypatch,
+                                         root, user):
+    """'+' and '%XX' in the root or the user name list verbatim: the
+    user and name segments are found by the root's depth, not by
+    searching a URL-decoded path for the root. 'a[1]' is a glob Spark
+    cannot list, so that root takes the driver-side walk."""
+    store = SarStore(spark, str(tmp_path / root))
+    name = store.upload(user, "up.txt", SAR_AMPM.encode())["name"]
+    walked = []
+    walk = store._list_files_walk
+    monkeypatch.setattr(
+        store, "_list_files_walk", lambda u=None: walked.append(u) or walk(u)
+    )
+    for who in (None, user):
+        rows = store.list_files(who).collect()
+        assert [(r["user"], r["name"]) for r in rows] == [(user, name)]
+    assert bool(walked) == (root == "a[1]")
 
 
 def test_sadf_upload_warns_on_unknown_fields(store):
