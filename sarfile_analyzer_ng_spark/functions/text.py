@@ -6,6 +6,19 @@ Python in the row path, so these run inside whole-stage codegen and
 survive a 100 TB corpus. Regexes are kept to constructs with identical
 semantics in Java regex (Spark) and RE2 (DuckDB oracle): character
 classes, alternation, ``\\b`` word boundaries — no lookaround.
+
+Counting rules (Spark rewrites ``regexp_count`` to
+``size(regexp_extract_all(...))``, which allocates one string per
+match):
+
+- Project a count once, in its own ``withColumns``, before deriving
+  ratios from it. Subexpression elimination only shares expressions
+  that are always evaluated, so a count inlined into ``CASE WHEN``
+  branches runs once per reference.
+- Count a single-character class as a length difference —
+  ``length(t) - length(translate(t, chars, ''))`` or
+  ``length(regexp_replace(t, '[complement]+', ''))`` — not as
+  ``regexp_count`` of one character, which builds a string per hit.
 """
 
 from __future__ import annotations
@@ -31,7 +44,11 @@ LANG_PATTERNS: dict[str, str] = {
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 WS_TOKEN_PATTERN = r"\S+"
-PUNCT_PATTERN = r"[^A-Za-z0-9\s]"
+# Punctuation is [^A-Za-z0-9\s]; deleting these runs leaves exactly its
+# code points, so its count is a length.
+NON_PUNCT_RUNS = r"[A-Za-z0-9\s]+"
+# Java regex \s (no UNICODE_CHARACTER_CLASS): NBSP and U+3000 are not in it.
+JAVA_WHITESPACE = " \t\n\x0B\f\r"
 
 
 def lang_scores(text: Column) -> dict[str, Column]:
@@ -79,20 +96,22 @@ def quality_score(df: DataFrame, text_col: str, round_to: int = 4) -> DataFrame:
 
     def build():
         t = F.col(text_col)
-        n_chars = F.length(t).cast("double")
-        n_words = F.regexp_count(t, F.lit(WS_TOKEN_PATTERN)).cast("double")
-        n_punct = F.regexp_count(t, F.lit(PUNCT_PATTERN)).cast("double")
-        n_stop = F.regexp_count(
-            F.lower(t), F.lit(LANG_PATTERNS["en"])).cast("double")
+        length = F.length(t)
+        # raw counts, projected once (module docstring: counting rules)
+        counts = {
+            "_qs_chars": length,
+            "_qs_words": F.regexp_count(t, F.lit(WS_TOKEN_PATTERN)),
+            "_qs_stop": F.regexp_count(F.lower(t), F.lit(LANG_PATTERNS["en"])),
+            "_qs_punct": F.length(F.regexp_replace(t, NON_PUNCT_RUNS, "")),
+            "_qs_space": length - F.length(F.translate(t, JAVA_WHITESPACE, "")),
+        }
+        n_chars, n_words, n_stop, n_punct, n_space = (
+            F.col(c).cast("double") for c in counts)
         # true mean word length: word characters / words — NOT derived
         # from n_chars with a single-space assumption, which runs of
-        # whitespace would inflate. Counted as n_chars − whitespace
-        # chars: value-identical to length(regexp_replace(t, '\s+',
-        # '')) but a pure counting scan, no rewritten-string
-        # allocation per row.
-        word_chars = n_chars - F.regexp_count(t, F.lit(r"\s")).cast("double")
+        # whitespace would inflate
         mean_word_len = F.when(
-            n_words > 0, word_chars / n_words).otherwise(F.lit(0.0))
+            n_words > 0, (n_chars - n_space) / n_words).otherwise(F.lit(0.0))
         punct_ratio = F.when(
             n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
         stop_ratio = F.when(
@@ -102,25 +121,21 @@ def quality_score(df: DataFrame, text_col: str, round_to: int = 4) -> DataFrame:
             + F.least(stop_ratio * 5.0, F.lit(1.0)) * 0.4
             + (F.lit(1.0) - F.least(punct_ratio * 10.0, F.lit(1.0))) * 0.2
         )
-        return (
-            n_words.cast("long"),
-            F.round(mean_word_len, round_to),
-            F.round(punct_ratio, round_to),
-            F.round(stop_ratio, round_to),
-            F.round(score, round_to),
-        )
+        return counts, {
+            "n_words": n_words.cast("long"),
+            "mean_word_len": F.round(mean_word_len, round_to),
+            "punct_ratio": F.round(punct_ratio, round_to),
+            "stopword_ratio": F.round(stop_ratio, round_to),
+            "quality": F.round(score, round_to),
+        }
 
     # static per (text_col, round_to): see util.memo_cols — rebuilding
     # this tree per call was pure py4j latency
-    n_words_c, mwl_c, pr_c, sr_c, q_c = memo_cols(
-        ("quality_score", text_col, round_to), build)
-    return (
-        df.withColumn("n_words", n_words_c)
-        .withColumn("mean_word_len", mwl_c)
-        .withColumn("punct_ratio", pr_c)
-        .withColumn("stopword_ratio", sr_c)
-        .withColumn("quality", q_c)
-    )
+    counts, features = memo_cols(("quality_score", text_col, round_to), build)
+    # CollapseProject keeps the counts projection apart from the
+    # features because they read each non-cheap count more than once;
+    # inlined, q38 evaluated the \S+ count 8 times a row
+    return df.withColumns(counts).withColumns(features).drop(*counts)
 
 
 def fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

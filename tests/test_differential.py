@@ -384,3 +384,63 @@ def test_decontaminate_spans_matches_bruteforce_substring_scan(spark):
         assert r["text_clean"] == txt, did
         assert r["n_cut_tokens"] == ncut, did
         assert r["n_spans_cut"] == nspans, did
+
+
+# Inputs where counting by length differences could drift from
+# regexp_count: empty, NULL and whitespace-only rows, every Java \s
+# character in runs (\x0B, tab, CRLF, form feed), NBSP and U+3000
+# (not Java \s), an emoji surrogate pair (one code point for length
+# and for [^...]), CJK, punctuation runs, uppercase stopwords, digits.
+QUALITY_EDGE_TEXTS = [
+    "", None, "   ", " \t \r\n ", "\x0b", "a\x0b\x0bb c", "\t\tx\t\ty\t",
+    "line one\r\n\r\nline two\r\n", "p\fq \f\f r",
+    "a\u00a0b\u3000c", " \u00a0\u3000", "\u3000\u3000the\u3000cat",
+    "hi \U0001F600 there \U0001F600\U0001F600", "\U0001F600",
+    "中文文本，测试。 还有 the 汉字", "wow!!! really!!! ?!?!", "!!!",
+    "THE And of To IN is That FOR With WAS", "The the THE",
+    "123 4567 89 0", "a1-b2_c3 (d4) [e5] {f6}", "x" * 400 + " the" * 60,
+]
+
+
+def test_quality_score_matches_regexp_count_formulation(spark):
+    """quality_score projects its raw counts once and counts the
+    whitespace and punctuation classes as length differences; every
+    output column must be bit-identical to the straightforward
+    regexp_count formulation it replaced, built inline here."""
+    from pyspark.sql import functions as F
+
+    from sarfile_analyzer_ng_spark.functions import text as TX
+
+    from .conftest import SF_DIR
+
+    edge = spark.createDataFrame(
+        list(enumerate(QUALITY_EDGE_TEXTS)), "doc_id long, text string")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text", "source")
+    for df in (edge, docs):
+        t = F.col("text")
+        n_chars = F.length(t).cast("double")
+        n_words = F.regexp_count(t, F.lit(r"\S+")).cast("double")
+        n_punct = F.regexp_count(t, F.lit(r"[^A-Za-z0-9\s]")).cast("double")
+        n_stop = F.regexp_count(
+            F.lower(t), F.lit(TX.LANG_PATTERNS["en"])).cast("double")
+        word_chars = n_chars - F.regexp_count(t, F.lit(r"\s")).cast("double")
+        mwl = F.when(n_words > 0, word_chars / n_words).otherwise(0.0)
+        pr = F.when(n_chars > 0, n_punct / n_chars).otherwise(0.0)
+        sr = F.when(n_words > 0, n_stop / n_words).otherwise(0.0)
+        score = (F.least(n_words / 50.0, F.lit(1.0)) * 0.4
+                 + F.least(sr * 5.0, F.lit(1.0)) * 0.4
+                 + (1.0 - F.least(pr * 10.0, F.lit(1.0))) * 0.2)
+        ref = df.select(
+            *df.columns,
+            n_words.cast("long").alias("n_words"),
+            F.round(mwl, 4).alias("mean_word_len"),
+            F.round(pr, 4).alias("punct_ratio"),
+            F.round(sr, 4).alias("stopword_ratio"),
+            F.round(score, 4).alias("quality"),
+        )
+        got = TX.quality_score(df, "text")
+        assert got.columns == ref.columns  # inputs in order, no helpers
+        # repr: bit-identical doubles, -0.0 included
+        exp = {r["doc_id"]: repr(tuple(r)) for r in ref.collect()}
+        assert exp == {r["doc_id"]: repr(tuple(r)) for r in got.collect()}

@@ -12,6 +12,7 @@ from sarfile_analyzer_ng_spark.queries import (
     q16_alias_join,
     q18_topk,
     q37_lang_id,
+    q38_quality_score,
 )
 
 from .conftest import SF_DIR
@@ -131,6 +132,25 @@ def test_quality_filter_pure_jvm_no_python(spark):
     text = plan(q70_quality_filter(spark, SF_DIR))
     assert "BatchEvalPython" not in text
     assert "ArrowEvalPython" not in text
+
+
+def test_quality_score_counts_each_feature_once(spark):
+    """regexp_count plans as size(regexp_extract_all(...)), one string
+    per match, and counts inlined into CASE branches escape
+    subexpression elimination. quality_score must project each count
+    once: one word and one stopword extraction, and the whitespace and
+    punctuation classes counted by length differences."""
+    import re
+
+    text = plan(q38_quality_score(spark, SF_DIR))
+
+    def extractions(arg):
+        return len(re.findall(r"regexp_extract_all\(" + arg, text))
+
+    assert extractions(r"text#\d+, \\S\+, ") == 1
+    assert extractions(r"lower\(text#\d+\), \\b\(the\|") == 1
+    assert extractions(r"text#\d+, \\s, ") == 0
+    assert extractions(r"text#\d+, \[\^A-Za-z0-9\\s\], ") == 0
 
 
 def test_chunking_is_map_only_no_exchange(spark):
