@@ -2,11 +2,12 @@
 
 The reference converts sadf JSON back into sar *text* and re-parses it
 (sar_ingest.py:413 ``sadf_json_to_sar_text``) so one parser owns the
-format. Here a generic traversal of the sysstat statistics tree emits
-the text source's long rows directly — no text round-trip — and one
-decode path owns the rest: ``sar_text.decode_file`` unpacks xz (the
-reference does the same in sar_ingest.py:333), sniffs the format and
-calls :func:`parse_sadf_json`; :func:`read_sadf_json` is that module's
+format. Here a generic traversal of the sysstat statistics tree fills
+the text source's parallel column lists directly — no text round-trip,
+no row dicts — and one decode path owns the rest: ``sar_text.decode_file``
+unpacks xz (the reference does the same in sar_ingest.py:333), sniffs
+the format, calls :func:`parse_sadf_columns` and turns the columns into
+one Arrow batch per file; :func:`read_sadf_json` is that module's
 distributed read restricted to sadf JSON files.
 
 Traversal rules (sysstat's public JSON layout):
@@ -16,16 +17,20 @@ Traversal rules (sysstat's public JSON layout):
 - numeric fields become (metric, value) rows; nested dicts (the io
   section's io-reads/io-writes) are flattened with dotted names
 - ``restarts``/boot entries become restart=True rows
+- ``os_details`` is set on the first row of each host block only, like
+  the text parser and the reference layout (parse_into_polars.py:154)
 """
 
 from __future__ import annotations
 
 import json
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
 _DEVICE_KEYS = ("cpu", "disk-device", "iface", "line", "filesystem", "fchost")
+_EPOCH = datetime(1970, 1, 1)
+_US = timedelta(microseconds=1)
 
 
 def _flatten(d: dict, prefix: str = "") -> dict:
@@ -38,96 +43,117 @@ def _flatten(d: dict, prefix: str = "") -> dict:
     return out
 
 
-def _rows_for_section(section: str, payload, ts, base: dict,
-                      skipped: set[str] | None = None) -> list[dict]:
-    rows = []
-    entries = payload if isinstance(payload, list) else [payload]
-    for entry in entries:
-        if not isinstance(entry, dict):
-            continue
-        flat = _flatten(entry)
-        device = None
-        for dk in _DEVICE_KEYS:
-            if isinstance(flat.get(dk), (str, int)) and dk in entry:
-                device = str(flat.pop(dk))
-                break
-        for metric, value in flat.items():
-            if isinstance(value, bool) or not isinstance(value, (int, float)):
-                # non-numeric, non-device field the generic traversal
-                # drops — surfaced to the uploader (reference
-                # sar_ingest.py:382-387 warns per unknown field); a new
-                # sysstat device-axis key would land here too.
-                if skipped is not None:
-                    skipped.add(f"unknown field skipped: {section}.{metric}")
-                continue
-            rows.append(
-                {
-                    **base,
-                    "section": section,
-                    "ts": ts,
-                    "device": device,
-                    "metric": metric,
-                    "value": float(value),
-                    "restart": False,
-                }
-            )
-    return rows
+def _epoch_us(stamp: str) -> int:
+    """Epoch microseconds of an ISO date-time; an explicit offset is
+    converted to UTC."""
+    dt = datetime.fromisoformat(stamp)
+    if dt.tzinfo is not None:
+        dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
+    return (dt - _EPOCH) // _US
 
 
-def parse_sadf_json(file_name: str, content: bytes,
-                    skipped: set[str] | None = None) -> list[dict]:
+def parse_sadf_columns(file_name: str, content: bytes,
+                       skipped: set[str] | None = None) -> dict[str, list]:
     """Pure per-file parser of plain (already unpacked) sadf JSON bytes
-    into SAR_SCHEMA row dicts. Pass a ``skipped`` set to collect
+    into parallel column lists, one per SAR_SCHEMA field, ``ts`` as int
+    epoch microseconds — the same shape as
+    ``sar_text.parse_sar_columns``. Pass a ``skipped`` set to collect
     unknown-field warnings (upload path only — the distributed read
     skips the bookkeeping)."""
     data = json.loads(content)
-    out: list[dict] = []
+    c_host: list = []
+    c_os: list = []
+    c_section: list = []
+    c_ts: list = []
+    c_device: list = []
+    c_metric: list = []
+    c_value: list = []
+    c_restart: list = []
+
+    def add_section(section: str, payload, ts: int) -> None:
+        entries = payload if isinstance(payload, list) else [payload]
+        for entry in entries:
+            if not isinstance(entry, dict):
+                continue
+            flat = _flatten(entry)
+            device = None
+            for dk in _DEVICE_KEYS:
+                if isinstance(flat.get(dk), (str, int)) and dk in entry:
+                    device = str(flat.pop(dk))
+                    break
+            k = len(c_value)
+            for metric, value in flat.items():
+                if isinstance(value, bool) or not isinstance(value, (int, float)):
+                    # non-numeric, non-device field the generic traversal
+                    # drops — surfaced to the uploader (reference
+                    # sar_ingest.py:382-387 warns per unknown field); a new
+                    # sysstat device-axis key would land here too.
+                    if skipped is not None:
+                        skipped.add(f"unknown field skipped: {section}.{metric}")
+                    continue
+                c_metric.append(metric)
+                c_value.append(float(value))
+            k = len(c_value) - k
+            c_section.extend([section] * k)
+            c_ts.extend([ts] * k)
+            c_device.extend([device] * k)
+            c_restart.extend([False] * k)
+
     for host in data.get("sysstat", {}).get("hosts", []):
         host_name = host.get("nodename")
         file_date = host.get("file-date", "2000-01-01")
-        os_details = (
-            f"Linux {host.get('release', 'unknown')} ({host_name}) {file_date}"
-        )
-        base = {"file": file_name, "host": host_name, "os_details": os_details}
-
-        def ts_of(time_str: str, date_str: str | None = None):
-            return datetime.fromisoformat(f"{date_str or file_date}T{time_str}")
-
+        first = len(c_value)
         for entry in host.get("statistics", []):
             stamp = entry.get("timestamp", {})
             time_str = stamp.get("time")
             if not time_str:
                 continue
-            ts = ts_of(time_str, stamp.get("date"))
+            ts = _epoch_us(f"{stamp.get('date') or file_date}T{time_str}")
             for section, payload in entry.items():
                 if section == "timestamp":
                     continue
                 if section == "network" and isinstance(payload, dict):
                     for sub, sub_payload in payload.items():
-                        out.extend(
-                            _rows_for_section(f"network.{sub}", sub_payload,
-                                              ts, base, skipped)
-                        )
+                        add_section(f"network.{sub}", sub_payload, ts)
                 else:
-                    out.extend(
-                        _rows_for_section(section, payload, ts, base, skipped)
-                    )
+                    add_section(section, payload, ts)
         for restart in host.get("restarts", []):
             boot = restart.get("boot", restart) if isinstance(restart, dict) else {}
             time_str = boot.get("time")
             if time_str:
-                out.append(
-                    {
-                        **base,
-                        "section": "LINUX RESTART",
-                        "ts": ts_of(time_str, boot.get("date")),
-                        "device": None,
-                        "metric": "restart",
-                        "value": 1.0,
-                        "restart": True,
-                    }
-                )
-    return out
+                c_section.append("LINUX RESTART")
+                c_ts.append(_epoch_us(f"{boot.get('date') or file_date}T{time_str}"))
+                c_device.append(None)
+                c_metric.append("restart")
+                c_value.append(1.0)
+                c_restart.append(True)
+        n_host = len(c_value) - first
+        c_host.extend([host_name] * n_host)
+        c_os.extend([None] * n_host)
+        if n_host:
+            c_os[first] = (
+                f"Linux {host.get('release', 'unknown')} ({host_name}) {file_date}"
+            )
+    return {
+        "file": [file_name] * len(c_value),
+        "host": c_host,
+        "os_details": c_os,
+        "section": c_section,
+        "ts": c_ts,
+        "device": c_device,
+        "metric": c_metric,
+        "value": c_value,
+        "restart": c_restart,
+    }
+
+
+def parse_sadf_json(file_name: str, content: bytes,
+                    skipped: set[str] | None = None) -> list[dict]:
+    """Row-dict view of :func:`parse_sadf_columns`."""
+    # imported here: sar_text imports this module's parser
+    from .sar_text import rows_of
+
+    return rows_of(parse_sadf_columns(file_name, content, skipped))
 
 
 def read_sadf_json(spark: SparkSession, path: str) -> DataFrame:

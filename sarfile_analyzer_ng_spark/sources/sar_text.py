@@ -6,7 +6,7 @@ code/parse_into_polars.py:80 ``parse_sar_file`` reads one sar report
 sequentially on one core and builds a long (header, data, date) frame;
 code/pl_helpers2.py then splits the value strings into typed metric
 columns. Here one *file* is the unit of parallelism: 100k sar files fan
-out across executors (``binaryFile`` read → ``mapInPandas``), each parsed
+out across executors (``binaryFile`` read → ``mapInArrow``), each parsed
 in one pass, and the output is immediately the fully-typed long frame:
 
     (file, host, os_details, section, ts, device, metric, value, restart)
@@ -14,10 +14,13 @@ in one pass, and the output is immediately the fully-typed long frame:
 Per-file Python is fine at scale because sar reports are bounded (a day
 of samples, ≤ tens of MB); the cross-file fan-out is where the
 parallelism lives, and everything downstream is JVM-side DataFrame ops.
+The parse is pandas-free: both parsers fill parallel column lists
+(``ts`` as epoch microseconds) and each file leaves the Python worker
+as one Arrow record batch, with no per-row object boxing.
 
 :func:`decode_file` is the single place a file is unpacked (xz,
 reference sar_ingest.py:333), sniffed (sadf JSON or sar text) and parsed
-(:func:`parse_sar_columns` or ``sadf_json.parse_sadf_json``). The
+(:func:`parse_sar_columns` or ``sadf_json.parse_sadf_columns``). The
 readers (:func:`read_sar`, ``sadf_json.read_sadf_json``, the CLI's
 mixed-directory load) are calls of one scan body, :func:`read_files`,
 and ``store.SarStore.upload`` parses an upload through the same
@@ -42,15 +45,16 @@ from __future__ import annotations
 
 import lzma
 import re
-from datetime import datetime
+from datetime import datetime, timedelta
 from typing import NamedTuple
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .sadf_json import parse_sadf_json
+from .sadf_json import parse_sadf_columns
 
 SAR_SCHEMA = T.StructType(
     [
@@ -66,6 +70,9 @@ SAR_SCHEMA = T.StructType(
     ]
 )
 SAR_FIELDS = [f.name for f in SAR_SCHEMA.fields]
+# ts is timestamp[us, tz=UTC]: the parsers' epoch microseconds as is
+ARROW_SCHEMA = to_arrow_schema(SAR_SCHEMA)
+EPOCH = datetime(1970, 1, 1)
 
 DEVICE_COLUMNS = {"CPU", "DEV", "IFACE", "TTY", "FCHOST", "FILESYSTEM"}
 DEVICE_LAST_COLUMNS = {"FCHOST", "FILESYSTEM"}
@@ -137,8 +144,10 @@ def _parse_clock_seconds(token: str, ampm: str | None) -> int:
 
 def parse_sar_columns(file_name: str, content: str,
                       drop_unwanted: bool = True) -> dict[str, list]:
-    """Parse one sar ASCII report into columnar lists (pure function —
-    the executor-side body of the distributed read).
+    """Parse one sar ASCII report into parallel column lists, one per
+    SAR_SCHEMA field, with ``ts`` as int epoch microseconds (pure
+    function — the executor-side body of the distributed read;
+    :func:`decode_file` turns the result into one Arrow batch).
 
     Columnar accumulation instead of one dict per value row: the hot
     loop appends to six parallel lists and tries ``float(raw)``
@@ -156,9 +165,8 @@ def parse_sar_columns(file_name: str, content: str,
                 break
     base_date = _parse_report_date(os_details)
     base_dt = datetime.combine(base_date, datetime.min.time())
-    # integer epoch-micros throughout the hot loop; vectorized
-    # conversion to datetime64 happens once at the end
-    base_us = int((base_dt - datetime(1970, 1, 1)).total_seconds()) * 1_000_000
+    # integer epoch-micros throughout: Arrow takes them as they are
+    base_us = int((base_dt - EPOCH).total_seconds()) * 1_000_000
 
     c_section: list = []
     c_ts: list = []
@@ -263,8 +271,6 @@ def parse_sar_columns(file_name: str, content: str,
             c_restart.append(False)
 
     n = len(c_value)
-    import numpy as np
-
     # os_details only on the first row per file — exactly the
     # reference's layout (parse_into_polars.py:154 puts it in row 0)
     # and it keeps the long frame from repeating a ~100-char string
@@ -277,25 +283,28 @@ def parse_sar_columns(file_name: str, content: str,
         "host": [host] * n,
         "os_details": os_col,
         "section": c_section,
-        "ts": pd.to_datetime(np.asarray(c_ts, dtype="int64"), unit="us"),
+        "ts": c_ts,
         "device": c_device,
         "metric": c_metric,
-        "value": np.asarray(c_value, dtype="float64"),
-        "restart": np.asarray(c_restart, dtype=bool),
+        "value": c_value,
+        "restart": c_restart,
     }
+
+
+def rows_of(cols: dict[str, list]) -> list[dict]:
+    """Row dicts of one parser's columns, ``ts`` as a naive UTC
+    datetime (test/inspection view; the reads use the columns)."""
+    # every value of a sample shares its stamp: convert each once
+    stamps = {us: EPOCH + timedelta(microseconds=us) for us in set(cols["ts"])}
+    cols = {**cols, "ts": [stamps[us] for us in cols["ts"]]}
+    return [dict(zip(SAR_FIELDS, row))
+            for row in zip(*(cols[f] for f in SAR_FIELDS))]
 
 
 def parse_sar_text(file_name: str, content: str,
                    drop_unwanted: bool = True) -> list[dict]:
-    """Row-dict view of :func:`parse_sar_columns` (test/inspection
-    convenience; the distributed read uses the columnar form)."""
-    cols = parse_sar_columns(file_name, content, drop_unwanted)
-    names = list(cols)
-    cols = {
-        k: (list(v.to_pydatetime()) if k == "ts" else list(v))
-        for k, v in cols.items()
-    }
-    return [dict(zip(names, row)) for row in zip(*cols.values())]
+    """Row-dict view of :func:`parse_sar_columns`."""
+    return rows_of(parse_sar_columns(file_name, content, drop_unwanted))
 
 
 XZ_MAGIC = b"\xfd7zXZ\x00"
@@ -318,15 +327,16 @@ class Decoded(NamedTuple):
     kind: str  # SAR_TEXT, SADF_JSON or BINARY
     unxz: bool  # the input was an xz archive
     data: bytes  # the plain bytes after unpacking
-    frame: pd.DataFrame | None  # SAR_SCHEMA rows; None if kind not wanted
+    batch: pa.RecordBatch | None  # ARROW_SCHEMA rows; None if kind not wanted
 
 
 def decode_file(file_name: str, content: bytes, kinds=KINDS,
                 drop_unwanted: bool = True,
                 skipped: set[str] | None = None) -> Decoded:
     """The per-file decode shared by every reader and the store's
-    upload: unpack xz, sniff the format, and parse it into a
-    SAR_SCHEMA pandas frame when its kind is one of ``kinds``.
+    upload: unpack xz, sniff the format, and parse it into one Arrow
+    record batch with ``to_arrow_schema(SAR_SCHEMA)`` when its kind is
+    one of ``kinds``.
     ``skipped`` collects the sadf fields the JSON traversal drops.
     Raises one of :data:`DECODE_ERRORS` on input it cannot decode; the
     caller decides whether that skips the file or fails the upload."""
@@ -342,45 +352,49 @@ def decode_file(file_name: str, content: bytes, kinds=KINDS,
     if kind not in kinds:
         return Decoded(kind, unxz, data, None)
     if kind == SADF_JSON:
-        parsed = parse_sadf_json(file_name, data, skipped)
+        cols = parse_sadf_columns(file_name, data, skipped)
     else:
-        parsed = parse_sar_columns(file_name, text, drop_unwanted)
-    return Decoded(kind, unxz, data, pd.DataFrame(parsed, columns=SAR_FIELDS))
+        cols = parse_sar_columns(file_name, text, drop_unwanted)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], f.type) for f in ARROW_SCHEMA],
+        schema=ARROW_SCHEMA,
+    )
+    return Decoded(kind, unxz, data, batch)
 
 
 def read_files(spark: SparkSession, path: str, kinds=KINDS,
                drop_unwanted: bool = True) -> DataFrame:
     """The one distributed read: every file under ``path`` whose kind
     is in ``kinds`` goes through :func:`decode_file` (``binaryFile``
-    source, Arrow-batched Python parse, long typed SAR_SCHEMA output).
-    Files it cannot decode (truncated xz, broken JSON) are skipped, like
-    the reference UI skips broken uploads."""
+    source → ``mapInArrow``, long typed SAR_SCHEMA output, one record
+    batch per file). Files it cannot decode (truncated xz, broken JSON)
+    are skipped, like the reference UI skips broken uploads."""
     raw = (
         spark.read.format("binaryFile")
         .load(path)
         .select(F.col("path").alias("file"), F.col("content"))
     )
 
-    def parse_batches(iterator):
-        for pdf in iterator:
-            for file_name, content in zip(pdf["file"], pdf["content"]):
+    def parse_batches(batches):
+        for batch in batches:
+            names, contents = batch.columns
+            for i in range(batch.num_rows):
                 try:
-                    frame = decode_file(file_name, bytes(content), kinds,
-                                        drop_unwanted).frame
+                    dec = decode_file(names[i].as_py(), contents[i].as_py(),
+                                      kinds, drop_unwanted)
                 except DECODE_ERRORS:
                     continue
-                # one Arrow batch per file, built column-wise
-                if frame is not None:
-                    yield frame
+                if dec.batch is not None:
+                    yield dec.batch
 
     # No repartition: the binaryFile scan already packs whole files
     # into partitions bounded by spark.sql.files.maxPartitionBytes —
     # byte-aware, unlike a hash repartition on file name, which can
     # collide two gigabyte files into one partition. parse_batches
-    # yields one Arrow frame per file, bounding python memory within a
+    # yields one Arrow batch per file, bounding python memory within a
     # partition, and the plan stays lazy (no eager listing job at
     # construction time).
-    return raw.mapInPandas(parse_batches, SAR_SCHEMA)
+    return raw.mapInArrow(parse_batches, SAR_SCHEMA)
 
 
 def read_sar(spark: SparkSession, path: str,

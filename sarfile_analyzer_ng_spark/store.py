@@ -24,13 +24,16 @@ import shutil
 import subprocess
 import tempfile
 import time
+from datetime import timedelta
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.sar_text import (
-    BINARY, SADF_JSON, SAR_SCHEMA, SAR_TEXT, decode_file,
+    BINARY, EPOCH, SADF_JSON, SAR_SCHEMA, SAR_TEXT, decode_file,
 )
 
 
@@ -154,9 +157,13 @@ class SarStore:
             warnings.extend(f"{filename}: {w}" for w in sorted(skipped))
 
         # rename to host_YYYY-MM-DD from the parsed content, like the
-        # reference's rename_sar_file
-        pdf = dec.frame
-        host = None if pdf.empty else pdf.at[pdf["ts"].idxmin(), "host"]
+        # reference's rename_sar_file: the host of the earliest sample
+        batch = dec.batch
+        host = first_us = None
+        if batch.num_rows:
+            ts = batch.column("ts").cast(pa.int64())
+            first_us = pc.min(ts)
+            host = batch.column("host")[pc.index(ts, first_us).as_py()].as_py()
         if host is None:
             raise StoreError(f"{filename}: no sar samples found")
         # the hostname comes from FILE CONTENT — sanitize it before it
@@ -164,7 +171,8 @@ class SarStore:
         # ('Linux 5.x (../../../etc/x) ...') writes outside the store
         # root; _check_name then re-validates the result
         safe_host = re.sub(r"[^A-Za-z0-9._-]", "_", str(host)).lstrip(".") or "host"
-        name = self._check_name(f"{safe_host}_{pdf['ts'].min():%Y-%m-%d}")
+        day = EPOCH + timedelta(microseconds=first_us.as_py())
+        name = self._check_name(f"{safe_host}_{day:%Y-%m-%d}")
         d = self._user_dir(user)
         if (d / f"{name}.parquet").exists():
             warnings.append(f"{name}: existing parquet was overwritten")
@@ -173,14 +181,17 @@ class SarStore:
         # fix the file column to the stored name; one partition, so
         # the write leaves one file per section directory (partitioned
         # by section so per-section reads prune at directory level)
-        out = self.spark.createDataFrame(pdf.assign(file=name), SAR_SCHEMA)
+        table = pa.Table.from_batches([batch]).set_column(
+            0, "file", pa.repeat(name, batch.num_rows)
+        )
+        out = self.spark.createDataFrame(table, SAR_SCHEMA)
         out.coalesce(1).write.mode("overwrite").partitionBy("section").parquet(
             str(d / f"{name}.parquet")
         )
         return {
             "name": name,
-            "rows": len(pdf),
-            "headers": pdf["section"].nunique(),
+            "rows": batch.num_rows,
+            "headers": pc.count_distinct(batch.column("section")).as_py(),
             "warnings": warnings,
         }
 

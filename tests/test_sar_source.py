@@ -78,15 +78,17 @@ def test_restart_marker():
     assert rows[0]["section"] == "LINUX RESTART"
 
 
+SAR_RESTART_EARLY = (
+    "Linux 5.x (h9) \t2024-03-01 \t_x86_64_\t(2 CPU)\n\n"
+    "00:00:01        CPU     %user\n"
+    "00:10:01        all      1.00\n\n"
+    "05:30:01 LINUX RESTART\t(2 CPU)\n"
+)
+
+
 def test_restart_marker_before_any_rollover():
     # a restart before midnight in a fresh file keeps the base date
-    sar = (
-        "Linux 5.x (h9) \t2024-03-01 \t_x86_64_\t(2 CPU)\n\n"
-        "00:00:01        CPU     %user\n"
-        "00:10:01        all      1.00\n\n"
-        "05:30:01 LINUX RESTART\t(2 CPU)\n"
-    )
-    rows = rows_for(sar, restart=True)
+    rows = rows_for(SAR_RESTART_EARLY, restart=True)
     assert len(rows) == 1
     assert str(rows[0]["ts"]) == "2024-03-01 05:30:01"
 

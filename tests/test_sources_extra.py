@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import copy
 import json
 import lzma
+import math
 import os
+from datetime import timedelta
 
 import pytest
 from pyspark.sql import functions as F
@@ -57,6 +60,13 @@ def test_parse_sadf_json_rows():
     assert all(str(r["ts"]).startswith("2024-01-15") for r in rows)
 
 
+def test_sadf_time_with_utc_offset_is_converted_to_utc():
+    doc = copy.deepcopy(SADF)
+    doc["sysstat"]["hosts"][0]["statistics"][0]["timestamp"]["time"] = "02:10:01+02:00"
+    rows = parse_sadf_json("f", json.dumps(doc).encode())
+    assert {str(r["ts"]) for r in rows if not r["restart"]} == {"2024-01-15 00:10:01"}
+
+
 def test_read_sadf_json_distributed_and_xz(spark, tmp_path):
     (tmp_path / "a.json").write_bytes(json.dumps(SADF).encode())
     (tmp_path / "b.json.xz").write_bytes(lzma.compress(json.dumps(SADF).encode()))
@@ -107,8 +117,90 @@ def test_cli_files_over_mixed_directory(spark, tmp_path, capsys, monkeypatch):
     df = _load(spark, str(tmp_path))
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     df.unpersist()
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("MapInPandas") == 0
     assert plan.count("FileScan binaryFile") == 1
+
+
+def _two_host_sadf() -> dict:
+    doc = copy.deepcopy(SADF)
+    h2 = copy.deepcopy(doc["sysstat"]["hosts"][0])
+    h2.update(nodename="h2", release="6.1.0")
+    doc["sysstat"]["hosts"].append(h2)
+    return doc
+
+
+def test_os_details_only_on_first_row_of_each_host_block():
+    """Both parsers put os_details on the first row of a host block
+    and leave it null everywhere else (reference layout,
+    parse_into_polars.py:154)."""
+    from sarfile_analyzer_ng_spark.sources.sar_text import parse_sar_text
+
+    from .test_sar_source import SAR_24H
+
+    rows = parse_sadf_json("f", json.dumps(_two_host_sadf()).encode())
+    starts = [i for i, r in enumerate(rows) if i == 0 or r["host"] != rows[i - 1]["host"]]
+    assert [rows[i]["host"] for i in starts] == ["h1", "h2"]
+    assert [i for i, r in enumerate(rows) if r["os_details"] is not None] == starts
+    assert [rows[i]["os_details"] for i in starts] == [
+        "Linux 5.14.21 (h1) 2024-01-15", "Linux 6.1.0 (h2) 2024-01-15"]
+
+    rows = parse_sar_text("f", SAR_24H)
+    assert [i for i, r in enumerate(rows) if r["os_details"] is not None] == [0]
+    assert rows[0]["os_details"].startswith("Linux 5.14.21-default (host1)")
+
+
+def test_read_files_matches_row_views(spark, tmp_path):
+    """The Arrow read (one batch per file) gives exactly the rows of
+    the pure row views over every golden fixture kind, every column
+    compared: ts to the microsecond as UTC epoch micros, null devices,
+    restart as a bool, NaN values. Malformed files leave nothing."""
+    from sarfile_analyzer_ng_spark.sources.sar_text import (
+        EPOCH, SAR_FIELDS, parse_sar_text, read_files,
+    )
+
+    from .test_sar_source import SAR_24H, SAR_AMPM, SAR_RESTART_EARLY
+
+    sar_nan = SAR_AMPM.replace("1.00     99.00", "nan     99.00")
+    sadf_nan = json.dumps(_two_host_sadf()).replace("75.5", "NaN").encode()
+    sadf = json.dumps(SADF).encode()
+    trunc = lzma.compress(SAR_24H.encode())
+    texts = {
+        "a_24h.txt": SAR_24H,
+        "b_ampm.txt": SAR_AMPM,
+        "c_restart_early.txt": SAR_RESTART_EARLY,
+        "d_nan.txt": sar_nan,
+        "e_24h.txt.xz": SAR_24H,
+    }
+    docs = {"f.json": sadf, "g_nan.json": sadf_nan, "h.json.xz": sadf}
+    for name, text in texts.items():
+        data = text.encode()
+        (tmp_path / name).write_bytes(lzma.compress(data) if name.endswith(".xz") else data)
+    for name, data in docs.items():
+        (tmp_path / name).write_bytes(lzma.compress(data) if name.endswith(".xz") else data)
+    (tmp_path / "trunc.txt.xz").write_bytes(trunc[: len(trunc) // 2])
+    (tmp_path / "broken.json").write_bytes(sadf[: len(sadf) // 3])
+
+    want = [r for name, text in texts.items() for r in parse_sar_text(name, text)]
+    want += [r for name, data in docs.items() for r in parse_sadf_json(name, data)]
+    assert any(r["device"] is None for r in want)
+    assert any(r["restart"] for r in want)
+    assert sum(isinstance(r["value"], float) and math.isnan(r["value"]) for r in want) == 3
+    want = sorted(
+        repr(tuple((r["ts"] - EPOCH) // timedelta(microseconds=1) if f == "ts" else r[f]
+                   for f in SAR_FIELDS))
+        for r in want
+    )
+
+    df = read_files(spark, str(tmp_path))
+    cols = [
+        F.regexp_extract("file", r"[^/]+$", 0).alias("file") if f == "file"
+        else F.unix_micros("ts").alias("ts") if f == "ts" else f
+        for f in SAR_FIELDS
+    ]
+    got = sorted(repr(tuple(r)) for r in df.select(*cols).collect())
+    assert got == want
+    assert {r["file"] for r in df.select(cols[0]).distinct().collect()} == set(texts) | set(docs)
 
 
 def test_multimodal_fake_decode(spark):
