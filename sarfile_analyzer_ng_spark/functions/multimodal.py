@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import worker_task
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -1114,6 +1116,7 @@ def extract_features(media: DataFrame, decode_fn=real_decode,
         raise ValueError(f"on_undecodable must be null|raise, got "
                          f"{on_undecodable!r}")
 
+    @worker_task
     def batches(iterator):
         for pdf in iterator:
             out = []
@@ -1266,6 +1269,7 @@ def sample_frames(media: DataFrame, every_n: int = 2,
         # rather than letting the per-payload catch null-row every row
         raise ValueError(f"every_n must be >= 1, got {every_n}")
 
+    @worker_task
     def batches(iterator):
         for pdf in iterator:
             out = []
@@ -1349,6 +1353,7 @@ def audio_spectral_features(media: DataFrame, n_bands: int = 8,
         np.geomspace(1, frame // 2, n_bands + 1).astype(int)
     )
 
+    @worker_task
     def batches(iterator):
         for pdf in iterator:
             out = []
@@ -1462,6 +1467,7 @@ def image_phash(media: DataFrame, id_col: str = "media_id",
         ]
     )
 
+    @worker_task
     def kernel(it):
         for pdf in it:
             rows = []
@@ -1586,6 +1592,7 @@ def video_phash(media: DataFrame, every_n: int = 1,
         ]
     )
 
+    @worker_task
     def batches(iterator):
         for pdf in iterator:
             out = []

@@ -17,7 +17,7 @@ import threading
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import rnd, rnd_np, rnd_threshold
+from ..util import rnd, rnd_np, rnd_threshold, worker_task
 
 # serializes pca_power_topd's session-wide codegen-conf toggle: two
 # concurrent trainers interleaving get/set could "restore" each
@@ -50,6 +50,7 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+@worker_task
 def _cosine_batches(a, b):
     import numpy as np
     import pandas as pd
@@ -128,6 +129,7 @@ def cosine_to_queries_arrow(corpus: DataFrame, queries: DataFrame,
     nq = len(qids)
     src = corpus.select(corpus_id, *sorted({p[0] for p in pairs}))
 
+    @worker_task
     def score(batches):
         for pdf in batches:
             n = len(pdf)
@@ -202,6 +204,7 @@ def cosine_dup_pairs(emb: DataFrame, id_col: str, vec_col: str,
         ]
     )
 
+    @worker_task
     def block_pair(key, pdf):
         l = pdf[pdf["side"] == 0]
         r = pdf[pdf["side"] == 1]
@@ -431,6 +434,7 @@ def ivf_train(emb: DataFrame, id_col: str, vec_col: str, k_lists: int = 16,
         cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
         b_cn = spark.sparkContext.broadcast(cn)
 
+        @worker_task
         def partials(iterator):
             cmat = b_cn.value
             k, dim = cmat.shape
@@ -483,6 +487,7 @@ def _ivf_assign(src: DataFrame, centroids) -> DataFrame:
         ]
     )
 
+    @worker_task
     def batches(iterator):
         cmat = b_cn.value
         for pdf in iterator:
@@ -534,6 +539,7 @@ def ann_topk_ivf(emb: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
         ]
     )
 
+    @worker_task
     def probes(iterator):
         cmat = b_cn.value
         for pdf in iterator:
@@ -1099,6 +1105,7 @@ def apply_topd_removal(emb: DataFrame, id_col: str, vec_col: str,
         ]
     )
 
+    @worker_task
     def kernel(it):
         for pdf in it:
             if len(pdf) == 0:
@@ -1169,6 +1176,7 @@ def apply_top1_removal(emb: DataFrame, id_col: str, vec_col: str,
         ]
     )
 
+    @worker_task
     def kernel(it):
         for pdf in it:
             if len(pdf) == 0:
@@ -1266,6 +1274,7 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
 
     tau_raw = rnd_threshold(tau, round_to)
 
+    @worker_task
     def prune(key, pdf):
         pdf = pdf.sort_values("_id")
         m = np.array([np.asarray(x, dtype=np.float64) for x in pdf["e"]])
@@ -1659,6 +1668,7 @@ def ann_topk_ivfpq(emb: DataFrame, queries: DataFrame, id_col: str,
         ]
     )
 
+    @worker_task
     def probes(iterator):
         cmat = b_cn.value
         for pdf in iterator:
@@ -1846,6 +1856,7 @@ def ann_topk_pq_arrow(emb: DataFrame, queries: DataFrame, id_col: str,
         ]
     )
 
+    @worker_task
     def score(iterator):
         tab = b_dtab.value
         qv = b_qids.value

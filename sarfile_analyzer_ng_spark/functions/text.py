@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import fan_out, memo_cols, rnd, shard_hash
+from ..util import fan_out, memo_cols, rnd, shard_hash, worker_task
 
 # Stopword alternations per language; the heuristic scores a document
 # by word-boundary stopword hits and takes the argmax with a fixed
@@ -1286,6 +1286,7 @@ def bpe_train(df: DataFrame, text_col: str, num_merges: int = 10,
             used.update((a, b, a + b))
         merges.extend(chosen)
 
+        @worker_task
         def rewrite(it, table=tuple((a, b) for a, b, _ in chosen)):
             for pdf in it:
                 out = []
@@ -1340,6 +1341,7 @@ def bpe_encode(df: DataFrame, text_col: str, id_col: str,
         ]
     )
 
+    @worker_task
     def encode(it):
         memo: dict[str, int] = {}
 

@@ -158,8 +158,8 @@ def parse_sadf_json(file_name: str, content: bytes,
 
 def read_sadf_json(spark: SparkSession, path: str) -> DataFrame:
     """Distributed sadf-JSON read: ``sar_text.read_files`` restricted to
-    sadf JSON files (``.xz`` unpacked, one file per task, same long
-    schema as the text source)."""
+    sadf JSON files (``.xz`` unpacked, one Python task per scan
+    partition of whole files, same long schema as the text source)."""
     # imported here: sar_text imports this module's parser
     from .sar_text import SADF_JSON, read_files
 

@@ -14,6 +14,13 @@ in one pass, and the output is immediately the fully-typed long frame:
 Per-file Python is fine at scale because sar reports are bounded (a day
 of samples, ≤ tens of MB); the cross-file fan-out is where the
 parallelism lives, and everything downstream is JVM-side DataFrame ops.
+The ``binaryFile`` scan packs whole files into partitions
+(``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes``) and each
+partition is one Python task, so a fixed cost per task is paid once
+per scan partition. PySpark's worker refreshes its cached zip finders
+before every task, re-reading ``pyspark.zip`` once per finder; the
+scan body is wrapped in ``util.worker_task``, which drops them, like
+every other function the package ships to a Python worker.
 The parse is pandas-free: both parsers fill parallel column lists
 (``ts`` as epoch microseconds) and each file leaves the Python worker
 as one Arrow record batch, with no per-row object boxing.
@@ -54,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..util import worker_task
 from .sadf_json import parse_sadf_columns
 
 SAR_SCHEMA = T.StructType(
@@ -375,6 +383,7 @@ def read_files(spark: SparkSession, path: str, kinds=KINDS,
         .select(F.col("path").alias("file"), F.col("content"))
     )
 
+    @worker_task
     def parse_batches(batches):
         for batch in batches:
             names, contents = batch.columns
@@ -399,8 +408,9 @@ def read_files(spark: SparkSession, path: str, kinds=KINDS,
 
 def read_sar(spark: SparkSession, path: str,
              drop_unwanted: bool = True) -> DataFrame:
-    """Distributed sar-text read: one input file per task, ``.xz``
-    unpacked transparently (sar_ingest.py:333 behavior); sadf JSON
+    """Distributed sar-text read: one Python task per scan partition
+    (the scan packs whole files into partitions), ``.xz`` unpacked
+    transparently (sar_ingest.py:333 behavior); sadf JSON
     files are left to ``read_sadf_json``. ``drop_unwanted`` applies the
     reference's "CPU MHz" / "INTR intr/s" exclusion (see
     UNWANTED_HEADERS)."""

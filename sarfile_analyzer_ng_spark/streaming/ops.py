@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import worker_task
+
 
 def stream_events(spark: SparkSession, path: str, schema: T.StructType,
                   fmt: str = "parquet") -> DataFrame:
@@ -89,6 +91,7 @@ def rate_stream(stream: DataFrame, ts_col: str, key_col: str,
         T.StructField("last_val", T.DoubleType()),
     ])
 
+    @worker_task
     def fn(key, pdf_iter, state):
         import pandas as pd
 
@@ -288,6 +291,7 @@ def near_dup_candidates_stream(stream: DataFrame, text_col: str,
     )
     state_schema = T.StructType([T.StructField("anchor", T.LongType())])
 
+    @worker_task
     def fn(key, pdf_iter, state):
         (band,) = key
         if state.hasTimedOut:
@@ -440,6 +444,7 @@ def semdedup_verdicts_stream(stream: DataFrame, id_col: str, vec_col: str,
     cmat_n = cmat / cnrm
     cids = np.asarray([cid for cid, _ in order], dtype=np.int64)
 
+    @worker_task
     def _assign_batch(vecs):
         if len(vecs) == 0:
             return pd.Series([], dtype="int64")
@@ -476,6 +481,7 @@ def semdedup_verdicts_stream(stream: DataFrame, id_col: str, vec_col: str,
         ]
     )
 
+    @worker_task
     def fn(key, pdf_iter, state):
         if state.hasTimedOut:
             state.remove()
@@ -585,6 +591,7 @@ def duplicated_grams_stream(stream: DataFrame, text_col: str, id_col: str,
     )
     state_schema = T.StructType([T.StructField("count", T.LongType())])
 
+    @worker_task
     def fn(key, pdf_iter, state):
         (h,) = key
         if state.hasTimedOut:
@@ -649,6 +656,7 @@ def image_dedup_stream(stream: DataFrame, ts_col: str = "ts",
 
     from ..functions.multimodal import _phash64, decode_luminance
 
+    @worker_task
     def kernel(it):
         for pdf in it:
             hashes = []
@@ -862,6 +870,7 @@ def ewma_stream(stream: DataFrame, ts_col: str, key_col: str,
     ])
     keep = 1.0 - alpha
 
+    @worker_task
     def fn(key, pdf_iter, state):
         import pandas as pd
 
@@ -1007,6 +1016,7 @@ def threshold_run_stream(stream: DataFrame, ts_col: str, key_col: str,
         T.StructField("peak", T.DoubleType()),
     ])
 
+    @worker_task
     def fn(key, pdf_iter, state):
         import pandas as pd
 
@@ -1108,6 +1118,7 @@ def cusum_stream(stream: DataFrame, ts_col: str, key_col: str,
         "mu", "sd",
     )
 
+    @worker_task
     def fn(key, pdf_iter, state):
         import pandas as pd
 
@@ -1183,6 +1194,7 @@ def trend_stream(stream: DataFrame, ts_col: str, key_col: str,
         T.StructField("sxx", T.DoubleType()),
     ])
 
+    @worker_task
     def fn(key, pdf_iter, state):
         import pandas as pd
 
