@@ -8,7 +8,6 @@ Layout:
     sources     SAR ASCII / sadf-JSON distributed ingest
     operators   relational & time-series operators (SURVEY.md §2.2)
     functions   LLM-pipeline ops: dedup, similarity, text (§2.3)
-    streaming   Structured Streaming variants (§2.4)
     queries     correctness-gate registry (queries + DuckDB oracle SQL)
 """
 

@@ -211,13 +211,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         else:
             spark.conf.set(ntz_key, prev_ntz)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table and register it as a temp view named after it."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -48,23 +48,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as an array<string> — built with
-    higher-order functions (split/transform/sequence), no UDF."""
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    k = F.size(words) - (n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(0), k - 1),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    return F.array_distinct(grams)
-
-
 def shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int = 3,
                  distinct: bool = True,
                  short_fallback: bool = True) -> DataFrame:
@@ -79,9 +62,9 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int = 3,
     per-element ``element_at`` indexing, which zip_with avoids —
     re-measured FASTER at 10k docs with an identical gram multiset).
     Documents shorter than ``n`` words fall back to one whole-text
-    shingle (matching :func:`word_shingles`) so they still participate
-    in dedup; pass ``short_fallback=False`` for consumers that must
-    only ever see TRUE n-grams (the top-n-grams report).
+    shingle so they still participate in dedup; pass
+    ``short_fallback=False`` for consumers that must only ever see TRUE
+    n-grams (the top-n-grams report).
     ``distinct=False`` skips the set-semantics shuffle — safe for
     MinHash, where duplicate shingles cannot change a minimum.
     """
@@ -853,14 +836,14 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
 
 def tokens_expr(text: Column) -> Column:
     """The ONE whitespace tokenization every gram family uses
-    (lower + trim + split) — shared by the batch gram builders and the
-    ST13 stream so the contract cannot drift."""
+    (lower + trim + split) — shared by the gram builders so the
+    contract cannot drift."""
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
 def gram_hash_expr(gram: Column) -> Column:
     """The md5-substr-conv gram hash (first 8 hex chars as a long) —
-    the cross-engine family of winnowing/q106, shared batch + stream."""
+    the cross-engine family of winnowing/q106."""
     return F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long")
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -50,22 +50,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def read_media_dir(spark: SparkSession, path: str, kind: str) -> DataFrame:
-    """Ingest a directory of media files as MEDIA_SCHEMA rows — the
-    ``binaryFile`` source streams payloads without driver involvement."""
-    raw = spark.read.format("binaryFile").load(path)
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.lit(None).cast("string").alias("mime"),
-        F.col("content").alias("payload"),
-        F.create_map(
-            F.lit("path"), F.col("path"),
-            F.lit("length"), F.col("length").cast("string"),
-        ).alias("meta"),
-    )
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -1637,63 +1621,3 @@ def video_phash(media: DataFrame, every_n: int = 1,
             )
 
     return media.mapInPandas(batches, schema)
-
-
-def video_phash_dup_pairs(frame_hashes: DataFrame,
-                          min_containment: float = 0.5,
-                          round_to: int = 4,
-                          max_df: int | None = 10_000) -> DataFrame:
-    """Near-duplicate video pairs from :func:`video_phash` frames:
-    candidate pairs share at least one EXACT frame hash (the
-    passage-dedup shape — quadratic work confined to same-hash
-    buckets), scored by containment = shared distinct hashes /
-    the smaller video's distinct-hash count, so a clip cut FROM a
-    longer video still scores 1.0. Null marker rows drop out.
-
-    ``max_df`` caps hot frame hashes (the q67 pattern): a BOILERPLATE
-    frame — black frame, logo card, intro slate — shared by 10⁵
-    videos makes its bucket quadratic. Frame hashes appearing in more
-    than ``max_df`` distinct videos are dropped from the candidate
-    join, while per-video distinct counts (the containment
-    denominators) are computed BEFORE the cap — so containment only
-    DECREASES and no false positives appear; a pair related ONLY
-    through corpus-boilerplate frames is the documented miss.
-    ``None`` disables."""
-    from ..util import rnd
-
-    d = (
-        frame_hashes.where(F.col("phash").isNotNull())
-        .select("media_id", "phash")
-        .distinct()
-    )
-    per = d.groupBy("media_id").agg(F.count(F.lit(1)).alias("n"))
-    dj = d
-    if max_df is not None:
-        hot = (
-            d.groupBy("phash")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .where(F.col("df_") > max_df)
-            .select("phash")
-        )
-        dj = d.join(F.broadcast(hot), "phash", "left_anti")
-    a = dj.select(F.col("media_id").alias("id_a"), "phash")
-    b = dj.select(F.col("media_id").alias("id_b"), "phash")
-    shared = (
-        a.join(b, "phash")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    na = per.select(F.col("media_id").alias("id_a"), F.col("n").alias("na"))
-    nb = per.select(F.col("media_id").alias("id_b"), F.col("n").alias("nb"))
-    return (
-        shared.join(na, "id_a").join(nb, "id_b")
-        .select(
-            "id_a", "id_b", "shared",
-            rnd(
-                F.col("shared") / F.least("na", "nb").cast("double"),
-                round_to,
-            ).alias("containment"),
-        )
-        .where(F.col("containment") >= float(min_containment))
-    )

@@ -199,162 +199,6 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
                            k, None, k1, b, round_to)
 
 
-def build_bm25_index(corpus: DataFrame, path: str, text_col: str,
-                     id_col: str) -> None:
-    """Persist the BM25 index — index ONCE, query forever (the q121
-    signature-persistence / PQ codebook contract applied to sparse
-    retrieval; at 100 TB re-deriving postings per query batch would
-    re-scan the corpus every time). Four parquet tables under
-    ``path``: ``postings`` (term, doc, tf) REPARTITIONED BY TERM so
-    one query term's postings live in few files and parquet min/max
-    stats prune the rest; ``doclen``; ``df`` (vocab-sized); ``stats``
-    (one row: n_docs, avgdl)."""
-    postings, doclen, df_tbl, n_avg = _index_frames(corpus, text_col,
-                                                    id_col)
-    (postings.repartition("w").sortWithinPartitions("w")
-     .write.mode("overwrite").parquet(f"{path}/postings"))
-    doclen.write.mode("overwrite").parquet(f"{path}/doclen")
-    df_tbl.write.mode("overwrite").parquet(f"{path}/df")
-    n_avg.write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def bm25_topk_from_index(spark, path: str, queries: DataFrame,
-                         k: int = 5, champions: int | None = None,
-                         query_id_col: str = "query_id",
-                         query_col: str = "query",
-                         k1: float = BM25_K1, b: float = BM25_B,
-                         round_to: int = 4) -> DataFrame:
-    """Query a persisted index: exactly :func:`bm25_topk` (or the
-    champion-cut variant when ``champions`` is set) over the stored
-    tables — the roundtrip test pins result identity against the
-    from-corpus path."""
-    return _score_and_rank(
-        spark.read.parquet(f"{path}/postings"),
-        spark.read.parquet(f"{path}/doclen"),
-        spark.read.parquet(f"{path}/df"),
-        spark.read.parquet(f"{path}/stats"),
-        _qterms(queries, query_id_col, query_col),
-        k, champions, k1, b, round_to,
-    )
-
-
-def bm25_model(corpus: DataFrame, queries: DataFrame, text_col: str,
-               id_col: str, query_id_col: str = "query_id",
-               query_col: str = "query") -> tuple[list, float]:
-    """Freeze the corpus-side BM25 statistics for row-local scoring:
-    returns ``([(qid, term, idf), …], avgdl)``.
-
-    The list is BOUNDED by contract — |queries| · |query terms|, an
-    eval suite, never the corpus — so collecting it to the driver is
-    a model-sized collect (the centroid-seed / BPE-merge class), and
-    the per-term idf rides as plan literals afterwards. ``df`` /
-    ``avgdl`` come from one pass over the corpus (term-keyed and
-    doc-keyed combinable aggs)."""
-    toks = _tokens(corpus, text_col, id_col)
-    doclen = toks.groupBy("doc").agg(
-        F.count(F.lit(1)).cast("double").alias("dl")
-    )
-    n_docs, avgdl = doclen.agg(
-        F.count(F.lit(1)).cast("double"), F.avg("dl")
-    ).collect()[0]
-    df_tbl = (
-        toks.distinct()
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("double").alias("df"))
-    )
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("qid"),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(query_col))), r"\s+")
-            ).alias("w"),
-        )
-        .distinct()
-        .join(df_tbl, "w")
-        .select(
-            "qid", "w",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ).alias("idf"),
-        )
-    )
-    model = sorted(
-        ((r.qid, r.w, r.idf) for r in qterms.collect()),
-        key=lambda t: (t[0], t[1]),
-    )
-    return model, float(avgdl)
-
-
-def bm25_score_rows(df: DataFrame, text_col: str, id_col: str,
-                    model: list, avgdl: float,
-                    passthrough: tuple[str, ...] = (),
-                    k1: float = BM25_K1, b: float = BM25_B,
-                    round_to: int = 4) -> DataFrame:
-    """Row-local BM25 scoring against a frozen query-term model — the
-    STATELESS form shared by the batch path and the ST18 ingest
-    screen (one implementation, so stream and batch verdicts cannot
-    drift — the ST16 contract). Each row computes its own term
-    frequencies with array HOFs (``filter``/``size`` over the token
-    array — no explode, no groupBy, no state), then emits one row per
-    query that shares ≥ 1 term: ``(id, *passthrough, query_id, score,
-    n_terms_hit)``. Append-mode safe on a stream because the plan is
-    a pure projection; per-term contributions ride the same 8-digit
-    rnd ladder as :func:`bm25_topk`."""
-    by_q: dict = {}
-    for qid, w, idf in model:
-        by_q.setdefault(qid, []).append((w, idf))
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    dl = F.size(words).cast("double")
-    denom_tail = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * dl / F.lit(float(avgdl))
-    )
-
-    def qstruct(qid, terms):
-        contribs = []
-        for w, idf in terms:
-            tf = F.size(
-                F.filter(words, lambda x: x == F.lit(w))
-            ).cast("double")
-            contribs.append(
-                F.when(
-                    tf > 0,
-                    rnd(
-                        F.lit(float(idf))
-                        * (tf * F.lit(k1 + 1.0))
-                        / (tf + denom_tail),
-                        8,
-                    ),
-                )
-            )
-        arr = F.filter(F.array(*contribs), lambda c: c.isNotNull())
-        return F.struct(
-            F.lit(qid).alias("query_id"),
-            rnd(
-                F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x),
-                round_to,
-            ).alias("score"),
-            F.size(arr).cast("long").alias("n_terms_hit"),
-        )
-
-    scored = df.select(
-        F.col(id_col), *[F.col(c) for c in passthrough],
-        F.explode(
-            F.filter(
-                F.array(*[qstruct(q, ts) for q, ts in sorted(by_q.items())]),
-                lambda s: s["n_terms_hit"] > 0,
-            )
-        ).alias("q"),
-    )
-    return scored.select(
-        id_col, *passthrough,
-        F.col("q.query_id").alias("query_id"),
-        F.col("q.score").alias("score"),
-        F.col("q.n_terms_hit").alias("n_terms_hit"),
-    )
-
-
 def bm25_topk_champions(corpus: DataFrame, queries: DataFrame,
                         text_col: str, id_col: str,
                         query_id_col: str = "query_id",
@@ -835,124 +679,4 @@ def ql_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
             "score",
             "n_terms_hit",
         )
-    )
-
-
-def ql_model(corpus: DataFrame, queries: DataFrame, text_col: str,
-             id_col: str, query_id_col: str = "query_id",
-             query_col: str = "query", mu: float = QL_MU):
-    """Freeze the Dirichlet-QL collection statistics for row-local
-    scoring: returns ``(terms, qstats, ctot)`` where ``terms`` is
-    [(qid, w, qtf, cf), …] for the in-vocabulary query terms
-    (bounded by the eval-suite contract — the bm25_model collect
-    class), ``qstats`` maps qid → (nq, cq) with cq computed IN Spark
-    on the same rnd ladder :func:`ql_topk` uses (so frozen-model
-    scores can never drift from the batch ranker's), and ``ctot`` is
-    the collection token count."""
-    toks = _tokens(corpus, text_col, id_col)
-    postings = toks.groupBy("w", "doc").agg(
-        F.count(F.lit(1)).cast("double").alias("tf"))
-    cf = postings.groupBy("w").agg(F.sum("tf").alias("cf"))
-    ctot = float(
-        toks.groupBy("doc").agg(F.count(F.lit(1)).cast("double")
-                                .alias("dl"))
-        .agg(F.sum("dl").alias("ct")).collect()[0].ct
-    )
-    qtf = (
-        fan_out(queries)
-        .select(
-            F.col(query_id_col).alias("qid"),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(query_col))), r"\s+")
-            ).alias("w"),
-        )
-        .groupBy("qid", "w")
-        .agg(F.count(F.lit(1)).cast("double").alias("qtf"))
-    )
-    qmodel = qtf.join(cf, "w").select(
-        "qid", "w", "qtf", "cf",
-        rnd(F.log(F.col("cf") / F.lit(ctot)), 8).alias("lp_bg"),
-    )
-    rows = qmodel.collect()
-    terms = [(r.qid, r.w, float(r.qtf), float(r.cf)) for r in rows]
-    qagg = (
-        qmodel.groupBy("qid")
-        .agg(F.sum("qtf").alias("nq"),
-             rnd(F.sum(F.col("qtf") * F.col("lp_bg")), 6).alias("cq"))
-        .collect()
-    )
-    qstats = {r.qid: (float(r.nq), float(r.cq)) for r in qagg}
-    return terms, qstats, ctot
-
-
-def ql_score_rows(df: DataFrame, text_col: str, id_col: str,
-                  terms: list, qstats: dict, ctot: float,
-                  mu: float = QL_MU,
-                  passthrough: tuple[str, ...] = (),
-                  round_to: int = 4) -> DataFrame:
-    """Row-local Dirichlet-QL scoring against a frozen model — the
-    stateless form backing ST28, built exactly like
-    :func:`bm25_score_rows` (array HOFs, no explode of tokens, no
-    shuffle, no state; one output row per query sharing ≥ 1 term).
-    The matched-term sum, length normalizer, and per-query constant
-    compose on the same rnd ladder as :func:`ql_topk`, with (nq, cq)
-    arriving as the batch ranker's own collected values. Contract:
-    agreement with ql_topk to the round_to ladder's 1e-4 tolerance
-    (what the parity test pins), not bit-identity — the matched-term
-    sum here folds left-to-right via F.aggregate while ql_topk sums
-    over a shuffle, and IEEE summation order can flip the last
-    rounded digit at a boundary."""
-    m = float(mu)
-    by_q: dict = {}
-    for qid, w, qtf, cf in terms:
-        by_q.setdefault(qid, []).append((w, qtf, cf))
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    dl = F.size(words).cast("double")
-    len_norm = rnd(F.log(F.lit(m) / (dl + F.lit(m))), 8)
-
-    def qstruct(qid, qterms):
-        contribs = []
-        for w, qtf, cf in qterms:
-            tf = F.size(
-                F.filter(words, lambda x: x == F.lit(w))
-            ).cast("double")
-            contribs.append(
-                F.when(
-                    tf > 0,
-                    F.lit(qtf)
-                    * rnd(
-                        F.log(
-                            F.lit(1.0)
-                            + tf * F.lit(ctot) / F.lit(m * cf)
-                        ),
-                        8,
-                    ),
-                )
-            )
-        arr = F.filter(F.array(*contribs), lambda c: c.isNotNull())
-        msum = rnd(
-            F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x), 6
-        )
-        nq, cq = qstats[qid]
-        return F.struct(
-            F.lit(qid).alias("query_id"),
-            rnd(msum + F.lit(nq) * len_norm + F.lit(cq), round_to)
-            .alias("score"),
-            F.size(arr).cast("long").alias("n_terms_hit"),
-        )
-
-    scored = df.select(
-        F.col(id_col), *[F.col(c) for c in passthrough],
-        F.explode(
-            F.filter(
-                F.array(*[qstruct(q, ts) for q, ts in sorted(by_q.items())]),
-                lambda s: s["n_terms_hit"] > 0,
-            )
-        ).alias("q"),
-    )
-    return scored.select(
-        id_col, *passthrough,
-        F.col("q.query_id").alias("query_id"),
-        F.col("q.score").alias("score"),
-        F.col("q.n_terms_hit").alias("n_terms_hit"),
     )

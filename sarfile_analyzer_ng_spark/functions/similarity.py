@@ -620,9 +620,8 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
                      round_to: int = 4, cent_round: int = 6) -> DataFrame:
     """The centroid frame ``(cluster, c)`` after ``iters`` Lloyd
     updates — the model half of :func:`kmeans_lloyd_exact`, exposed so
-    consumers that assign OUTSIDE the batch plan (the ST11 streaming
-    SemDeDup twin, index builders) rank against the exact centroids
-    the batch assignment uses."""
+    consumers that assign OUTSIDE the batch plan (index builders) rank
+    against the exact centroids the batch assignment uses."""
     from pyspark.sql import Window
 
     from ..util import rnd
@@ -1065,63 +1064,6 @@ def pca_power_topd(
     )
     return (pca_topd_project(w0, id_col, components, round_to),
             components, mu)
-
-
-def remove_topd(emb: DataFrame, id_col: str, vec_col: str, dim: int,
-                n_components: int = 2, iters: int = 3,
-                round_to: int = 6) -> DataFrame:
-    """Rank-D All-but-the-Top residuals: train
-    :func:`pca_power_topd`, then ONE Arrow map stage applies the
-    sequential rank-1 updates (p_k = the ``round_to`` dot with
-    component k over the running residual — :func:`remove_top1`'s
-    application ladder, so D=1 is BIT-identical to remove_top1,
-    pinned by test) and rounds the final residual at ``round_to``."""
-    _proj, comps, mu = pca_power_topd(
-        emb, id_col, vec_col, dim, n_components=n_components,
-        iters=iters, round_to=round_to,
-    )
-    return apply_topd_removal(emb, id_col, vec_col, comps, mu,
-                              round_to=round_to)
-
-
-def apply_topd_removal(emb: DataFrame, id_col: str, vec_col: str,
-                       components: list[list[float]], mu: list[float],
-                       round_to: int = 6) -> DataFrame:
-    """Apply a SAVED rank-D All-but-the-Top model — the q112 Arrow
-    kernel generalized: batch matvec + rank-1 update per component,
-    sequentially over the running residual; no join, no shuffle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..util import rnd_np
-
-    V = [np.asarray(v, dtype=np.float64) for v in components]
-    mm = np.asarray(mu, dtype=np.float64)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, emb.schema[id_col].dataType),
-            T.StructField("resid", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    @worker_task
-    def kernel(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            R = np.stack(pdf["_e"].to_numpy()).astype(np.float64) - mm
-            for vv in V:
-                p = rnd_np(R @ vv, round_to)
-                R = R - p[:, None] * vv
-            R = rnd_np(R, round_to)
-            yield pd.DataFrame({id_col: pdf["_id"], "resid": list(R)})
-
-    src = emb.select(
-        F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_e"),
-    )
-    return src.mapInPandas(kernel, schema)
 
 
 def remove_top1(emb: DataFrame, id_col: str, vec_col: str, dim: int,

@@ -1528,42 +1528,6 @@ def vocab_coverage(df: DataFrame, text_col: str, id_col: str,
     )
 
 
-def oov_score(df: DataFrame, text_col: str, id_col: str,
-              vocab: list[str], round_to: int = 4) -> DataFrame:
-    """Stateless OOV scorer against a FIXED vocabulary — the serving
-    half of :func:`vocab_coverage`: that operator derives the top-V
-    vocabulary from the corpus; this one applies a known vocabulary
-    (the one the tokenizer was locked to) as a pure codegen map stage
-    — no shuffle, no state — so the EXACT batch operator runs
-    unchanged on a ``readStream`` frame (the ST12 stream-static
-    pattern) as an ingest-side health check.
-
-    The vocabulary rides as a LITERAL array (bounded — the same
-    contract as the broadcast vocab in vocab_coverage); counting uses
-    ``filter``+``size`` so repeated OOV tokens count every occurrence,
-    exactly like the aggregation path. Emits ``(id, n_tokens, n_oov,
-    oov_rate)`` with the vocab_coverage schema.
-    """
-    vlit = F.array(*[F.lit(w) for w in sorted(set(vocab))])
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-                r"\s+"),
-        lambda w: w != "",
-    )
-    n_tokens = F.size(toks).cast("long")
-    n_oov = F.size(
-        F.filter(toks, lambda w: ~F.array_contains(vlit, w))
-    ).cast("long")
-    return df.select(
-        F.col(id_col),
-        n_tokens.alias("n_tokens"),
-        n_oov.alias("n_oov"),
-        F.when(n_tokens > 0, rnd(n_oov / n_tokens.cast("double"), round_to))
-        .otherwise(F.lit(0.0))
-        .alias("oov_rate"),
-    )
-
-
 def epoch_shuffle(df: DataFrame, id_col: str, epochs: int = 3,
                   num_shards: int = 8) -> DataFrame:
     """Deterministic per-epoch global shuffle order — the
@@ -2678,149 +2642,6 @@ def moore_lewis(df: DataFrame, text_col: str, id_col: str,
     )
     out._cached_inputs = [cnts]  # see functions.dedup.release
     return out
-
-
-def moore_lewis_model(df: DataFrame, text_col: str, in_domain_col: str,
-                      vocab_size: int = 20, delta: float = 0.5):
-    """Freeze the two Moore-Lewis unigram LMs into a bounded model for
-    row-local scoring (the ST18 ``bm25_model`` pattern): returns
-    ``(entries, unk_lpi, unk_lpg)`` where ``entries`` is one row per
-    union-vocabulary word ``(w, lpi, lpg)`` — at most ``2·vocab_size``
-    rows — and the unk pair scores every out-of-vocabulary token.
-
-    The log-probs are computed IN Spark with the exact expression
-    :func:`moore_lewis` uses (same smoothing, same 8-digit rnd), then
-    collected — so frozen-model scores can never drift from the batch
-    operator's. Driver state is the union vocabulary (model-sized,
-    the Lloyd/BPE collect contract)."""
-    flags = df.select(
-        F.col(in_domain_col).cast("int").alias("ind"),
-        F.col(text_col).alias("_t"),
-    )
-    toks = fan_out(flags).select(
-        "ind",
-        F.explode(F.split(F.lower(F.trim(F.col("_t"))), r"\s+")).alias("w"),
-    )
-    cnts = toks.groupBy("w").agg(
-        F.sum("ind").cast("double").alias("c_in"),
-        F.sum(1 - F.col("ind")).cast("double").alias("c_gen"),
-    ).persist()
-    d = float(delta)
-    vp1 = float(vocab_size + 1)
-
-    def side(c_col: str):
-        tot = cnts.agg(F.sum(c_col).alias("n")).collect()[0].n or 0.0
-        vocab = (
-            cnts.where(F.col(c_col) > 0)
-            .orderBy(F.col(c_col).desc(), F.col("w").asc())
-            .limit(vocab_size)
-            .select("w", F.col(c_col).alias("c"))
-        )
-        vrows = {r.w: r.c for r in vocab.collect()}
-        # empty vocab ⇒ unk mass = the whole side's total, with NO
-        # anti-join: a sentinel [("",)] row would wrongly exclude
-        # empty-string tokens from the unk mass, diverging from the
-        # batch moore_lewis (whose anti-join against an empty vocab
-        # keeps every token)
-        if not vrows:
-            return vrows, float(tot), float(tot)
-        unk = (
-            cnts.join(
-                F.broadcast(
-                    df.sparkSession.createDataFrame(
-                        [(w,) for w in vrows], "w string"
-                    )
-                ),
-                "w",
-                "left_anti",
-            )
-            .agg(F.coalesce(F.sum(c_col), F.lit(0.0)).alias("cu"))
-            .collect()[0]
-            .cu
-        )
-        return vrows, float(unk), float(tot)
-
-    v_in, cu_in, n_in = side("c_in")
-    v_gen, cu_gen, n_gen = side("c_gen")
-    union = sorted(set(v_in) | set(v_gen))
-
-    # round the lp values with the ENGINE's rnd (not python round —
-    # BigDecimal half-up vs banker's), via one literal-frame select
-    def lp_expr(c: float | None, cu: float, n: float):
-        base = F.lit(c) if c is not None else F.lit(None).cast("double")
-        return rnd(
-            F.log((F.coalesce(base, F.lit(cu)) + F.lit(d))
-                  / (F.lit(n) + F.lit(d * vp1))), 8)
-
-    spark = df.sparkSession
-    sel = [
-        F.struct(
-            F.lit(w).alias("w"),
-            lp_expr(v_in.get(w), cu_in, n_in).alias("lpi"),
-            lp_expr(v_gen.get(w), cu_gen, n_gen).alias("lpg"),
-        ).alias(f"_e{i}")
-        for i, w in enumerate(union)
-    ] + [
-        F.struct(
-            F.lit(None).cast("string").alias("w"),
-            lp_expr(None, cu_in, n_in).alias("lpi"),
-            lp_expr(None, cu_gen, n_gen).alias("lpg"),
-        ).alias("_unk")
-    ]
-    row = spark.range(1).select(*sel).collect()[0]
-    cnts.unpersist()
-    entries = [(e.w, float(e.lpi), float(e.lpg)) for e in row[:-1]]
-    unk = row[-1]
-    return entries, float(unk.lpi), float(unk.lpg)
-
-
-def moore_lewis_score_rows(df: DataFrame, text_col: str, id_col: str,
-                           model, unk_lpi: float, unk_lpg: float,
-                           passthrough: tuple[str, ...] = (),
-                           round_to: int = 4) -> DataFrame:
-    """Row-local Moore-Lewis scoring against a frozen model — a PURE
-    PROJECTION (per-row array HOFs over the token split: no explode,
-    no shuffle, no state), so it runs identically on a batch frame
-    and on a streaming frame (ST25). Same output contract as
-    :func:`moore_lewis` (n_tokens / avg_lp_in / avg_lp_gen / ce_diff
-    / selected), with the model's pre-rounded lps standing in for the
-    join-computed ones."""
-    mi = F.map_from_arrays(
-        F.array(*[F.lit(w) for w, _, _ in model]),
-        F.array(*[F.lit(lpi) for _, lpi, _ in model]),
-    )
-    mg = F.map_from_arrays(
-        F.array(*[F.lit(w) for w, _, _ in model]),
-        F.array(*[F.lit(lpg) for _, _, lpg in model]),
-    )
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-
-    def mean_lp(m, unk):
-        s = F.aggregate(
-            F.transform(
-                toks,
-                lambda w: F.coalesce(F.element_at(m, w), F.lit(unk)),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return rnd(s / F.size(toks), round_to)
-
-    ali = mean_lp(mi, unk_lpi)
-    alg = mean_lp(mg, unk_lpg)
-    out = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in passthrough],
-        F.size(toks).cast("long").alias("n_tokens"),
-        ali.alias("avg_lp_in"),
-        alg.alias("avg_lp_gen"),
-    )
-    ce = rnd(F.col("avg_lp_in") - F.col("avg_lp_gen"), round_to)
-    return out.select(
-        id_col, *passthrough, "n_tokens", "avg_lp_in", "avg_lp_gen",
-        ce.alias("ce_diff"),
-        (ce > 0).cast("int").cast("long").alias("selected"),
-    )
 
 
 def unimax_allocation(inv: DataFrame, key_col: str, avail_col: str,

@@ -227,7 +227,7 @@ def attach_registrable_domain(df, host: Column, out: str = "domain"):
     :func:`registrable_domain` cost ~1 s of driver time PER QUERY in
     expression construction + analysis, r12 measurement); per-row
     cost is three hash probes inside whole-stage codegen; no
-    shuffle, no state — stream-static safe, 100 TB-safe. Returns
+    shuffle, no state — 100 TB-safe. Returns
     ``df`` + the ``out`` column; row count and order preserved
     (left joins on unique dim keys)."""
     spark = df.sparkSession

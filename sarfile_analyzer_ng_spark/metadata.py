@@ -22,7 +22,6 @@ from functools import lru_cache
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _DATA = Path(__file__).resolve().parent / "data"
 
@@ -115,17 +114,3 @@ def translate_aliases(aliases: list[str], sar_headers: list[str]) -> dict[str, s
             header = best_header_match(sar_headers, header) or header
         out[alias] = _norm(header)
     return out
-
-
-def describe_headers(spark: SparkSession, headers: DataFrame,
-                     header_col: str = "header") -> DataFrame:
-    """Distributed enrichment: attach alias/description/keyword to a
-    frame of observed headers via a broadcast join on the normalized
-    header string."""
-    dim = headings_df(spark).select(
-        F.regexp_replace(F.trim("header"), r"\s+", " ").alias("_hnorm"),
-        "alias", F.col("description").alias("section_description"), "keyword",
-    )
-    return headers.withColumn(
-        "_hnorm", F.regexp_replace(F.trim(F.col(header_col)), r"\s+", " ")
-    ).join(F.broadcast(dim), on="_hnorm", how="left").drop("_hnorm")

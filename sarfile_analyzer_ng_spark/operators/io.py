@@ -1,10 +1,10 @@
-"""Dataset I/O: CSV ingestion and partitioned parquet layouts.
+"""Dataset I/O: schema-pinned CSV and JSONL reads, sharded JSONL export.
 
 The reference serves uploaded files and parquet caches
 (parse_into_polars.py:14, api/services.py upload paths); at engine
-scale the same needs become: schema-pinned CSV ingest (no inference
-job over 100 TB), date/key-partitioned parquet output, and reads that
-prune partitions before touching data.
+scale the same needs become schema-pinned ingest (no inference job
+over 100 TB) and a sharded export whose placement a manifest can
+replay.
 """
 
 from __future__ import annotations
@@ -26,31 +26,6 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType,
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
         .csv(path)
     )
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      mode: str = "overwrite") -> None:
-    """Hive-style partitioned parquet: one directory level per
-    partition column. Readers filtering on those columns prune whole
-    directories (PartitionFilters) before any file is opened."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_time_partitioned(df: DataFrame, path: str, ts_col: str,
-                           mode: str = "overwrite") -> None:
-    """Daily-partitioned layout for time-series facts — the natural
-    sar layout (one sar file = one host-day). Queries with a date
-    predicate touch only the matching day directories."""
-    out = df.withColumn("p_date", F.to_date(F.col(ts_col)))
-    write_partitioned(out, path, ["p_date"], mode)
-
-
-def partition_filters(df: DataFrame) -> str:
-    """The PartitionFilters shown at the scan — test/diagnostic hook."""
-    text = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    return "\n".join(l.strip() for l in text.splitlines() if "PartitionFilters" in l)
 
 
 def write_jsonl_shards(df: DataFrame, path: str, num_shards: int,
@@ -88,27 +63,3 @@ def read_jsonl(spark: SparkSession, path: str,
                schema: T.StructType) -> DataFrame:
     """Schema-pinned JSONL read (inference would re-scan the corpus)."""
     return spark.read.schema(schema).json(path)
-
-
-def write_orc(df: DataFrame, path: str,
-              partition_cols: list[str] | None = None,
-              mode: str = "overwrite") -> None:
-    """ORC export — the other columnar interchange format large Hive/
-    Trino estates standardize on (predicate pushdown + column pruning
-    work exactly as for parquet; Spark's ORC source is built in).
-    Optionally Hive-partitioned like :func:`write_partitioned`."""
-    w = df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str,
-             schema: T.StructType | None = None) -> DataFrame:
-    """ORC read; pass ``schema`` to pin types without a footer-scan
-    inference pass (the read_csv discipline — at 100 TB even footer
-    sampling across a million files is a job)."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)

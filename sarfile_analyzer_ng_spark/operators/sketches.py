@@ -277,8 +277,8 @@ def mg_topk(df: DataFrame, col: str, k: int = 20,
     within a shard — vocabulary-sized, not corpus-sized (a true
     beyond-memory item domain would swap the window for a per-shard
     top-(k+1) TakeOrdered; the compression arithmetic is unchanged).
-    The summary itself is ≤ shards·k rows — broadcastable, mergeable,
-    and maintainable incrementally (streaming/ops.py ST29 twin).
+    The summary itself is ≤ shards·k rows — broadcastable and
+    mergeable.
     """
     from pyspark.sql import Window
 

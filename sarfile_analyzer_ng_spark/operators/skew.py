@@ -19,7 +19,7 @@ where the planner must be forced up front.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # (kind, source column, output alias); avg decomposes into sum+count
@@ -58,19 +58,6 @@ def salted_agg(df: DataFrame, keys: list[str], aggs: list[SaltedAgg],
     )
     return partial.groupBy(*keys).agg(
         *[_MERGE[kind](alias).alias(alias) for kind, _, alias in aggs]
-    )
-
-
-def salted_avg(df: DataFrame, keys: list[str], value_col: str,
-               out_col: str = "avg_value", num_salts: int = 16) -> DataFrame:
-    """Average via salted sum+count (avg itself isn't shard-mergeable)."""
-    merged = salted_agg(
-        df, keys,
-        [("sum", value_col, "_s"), ("count", value_col, "_c")],
-        num_salts,
-    )
-    return merged.select(
-        *keys, (F.col("_s") / F.col("_c")).alias(out_col)
     )
 
 

@@ -343,7 +343,7 @@ def seasonal_baseline(df: DataFrame, ts_col: str, value_col: str,
                       by: list[str]) -> DataFrame:
     """The (series, hour-of-day) mean/stddev baseline frame — train it
     on history once, freeze it, and :func:`seasonal_score` new samples
-    against it (the serving half ST15 runs at ingest)."""
+    against it."""
     hr = F.hour(F.col(ts_col))
     return df.groupBy(*by, hr.alias("_hr")).agg(
         F.avg(value_col).alias("_mean"),
@@ -356,9 +356,7 @@ def seasonal_score(df: DataFrame, baseline: DataFrame, ts_col: str,
                    threshold: float = 3.0,
                    round_to: int = 4) -> DataFrame:
     """Score rows against a FROZEN seasonal baseline — a stateless
-    broadcast join + filter, so the EXACT same code runs on a batch
-    frame or a readStream frame (the ST6/ST8/ST12 stream-static
-    pattern; live ingest-side anomaly alerts)."""
+    broadcast join + filter."""
     from functools import reduce as _reduce
     from operator import and_ as _and
 

@@ -9468,15 +9468,14 @@ def q193_heavy_hitters(spark, sf_dir):
     (operators/sketches.py:mg_topk; Misra & Gries 1982, Metwally et
     al. 2005, Agarwal et al. 2012's merge theorem): the bounded-state
     frequent-tokens summary over the documents token stream — CMS
-    (q136/ST21) answers "how often is X", this answers "WHAT are the
+    (q136) answers "how often is X", this answers "WHAT are the
     top K" with an engine-reproducible, mergeable summary instead of
     Spark's internal FreqItems approximation. Two-level shard
     compress + merge compress; every delta is exact integer
     arithmetic on a deterministic ranking, so est/true/gap are fully
     value-hash oracled and the MG error bound rides as a checked
     boolean (the q50 bound-gate form, but with the estimate itself
-    under the hash too). ST29 (streaming/ops.py:mg_update) maintains
-    the same summary incrementally."""
+    under the hash too)."""
     from .operators import sketches as SK
 
     docs = _t(spark, sf_dir, "documents").select("text")

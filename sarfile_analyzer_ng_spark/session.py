@@ -62,7 +62,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
-        # bucketed saveAsTable target — keep it out of the repo cwd
+        # managed-table (saveAsTable) target — keep it out of the repo cwd
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),

@@ -71,10 +71,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     to ``defaultParallelism`` when the input is coarser; a no-op at
     real scale, where scans already produce ≥ cores partitions.
     """
-    if df.isStreaming:
-        # partitioning is the stream source's concern (maxFilesPerTrigger
-        # etc.), and .rdd is illegal on a streaming frame
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -85,8 +81,8 @@ def fan_out(df: DataFrame) -> DataFrame:
 def worker_task(fn):
     """Wrap a function that is shipped to a Python worker
     (``mapInArrow``, ``mapInPandas``, ``applyInPandas``,
-    ``applyInPandasWithState``, ``pandas_udf``); every such function in
-    the package goes through this decorator.
+    ``pandas_udf``); every such function in the package goes through
+    this decorator.
 
     Before each task a reused PySpark worker calls
     ``importlib.invalidate_caches()``, and CPython 3.11's

@@ -1,4 +1,5 @@
-"""CSV ingest parity and partition pruning on partitioned layouts."""
+"""CSV ingest parity, reloads of Spark-written timestamps and the sharded
+JSONL export."""
 
 from __future__ import annotations
 
@@ -25,26 +26,6 @@ def test_csv_roundtrip_matches_parquet(spark, tmp_path):
     a = ev.agg(F.sum("value"), F.min("ts"), F.max("ts")).collect()[0]
     b = back.agg(F.sum("value"), F.min("ts"), F.max("ts")).collect()[0]
     assert a == b
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    ev = load_table(spark, SF_DIR, "events")
-    out = str(tmp_path / "events_by_day")
-    IO.write_time_partitioned(ev, out, "ts")
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-    one_day = back.where(F.col("p_date") == "2024-01-05")
-    filters = IO.partition_filters(one_day)
-    assert "p_date" in filters  # predicate prunes directories, not rows
-    expected = ev.where(F.to_date("ts") == "2024-01-05").count()
-    assert one_day.count() == expected
-    # files of other days are not even listed in the scan
-    import re
-
-    text = one_day._sc._jvm.PythonSQLUtils.explainString(
-        one_day._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: []" not in text
 
 
 def test_load_table_roundtrips_spark_written_timestamps(spark, tmp_path):
@@ -175,26 +156,3 @@ def test_manifest_indexes_export(spark, tmp_path):
                 ids.extend(json.loads(line)["doc_id"] for line in f)
         assert len(ids) == row["n_docs"]
         assert min(ids) == row["lo"] and max(ids) == row["hi"]
-
-
-def test_orc_roundtrip_and_partition_pruning(spark, tmp_path):
-    """ORC write/read roundtrips values + schema, and a partitioned
-    ORC layout prunes directories exactly like the parquet path."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text", "source"
-    )
-    flat = str(tmp_path / "orc_flat")
-    IO.write_orc(docs, flat)
-    back = IO.read_orc(spark, flat, schema=docs.schema)
-    assert back.schema == docs.schema
-    assert (
-        back.orderBy("doc_id").collect()
-        == docs.orderBy("doc_id").collect()
-    )
-
-    part = str(tmp_path / "orc_part")
-    IO.write_orc(docs, part, partition_cols=["source"])
-    one = IO.read_orc(spark, part).where(F.col("source") == "web")
-    filters = IO.partition_filters(one)
-    assert "source" in filters  # pruning reached the scan
-    assert one.count() == docs.where(F.col("source") == "web").count()

@@ -1858,10 +1858,6 @@ def test_round7_operator_edges(spark):
         df, "text", "doc_id", vocab_size=1000).collect()}
     assert all(r["n_oov"] == 0 and r["oov_rate"] == 0.0
                for r in out.values())
-    # empty fixed vocabulary: every token is OOV, rate 1.0
-    o = TX.oov_score(df, "text", "doc_id", []).collect()
-    assert all(r["n_oov"] == r["n_tokens"] and r["oov_rate"] == 1.0
-               for r in o)
     # zero/negative weights rank LAST (floored, not an error), and the
     # sample still fills k from whatever exists
     w = spark.createDataFrame(
@@ -1873,11 +1869,9 @@ def test_round7_operator_edges(spark):
     assert ranked[1] == 1 and set(ranked) == {1, 2, 3}
 
 
-def test_remove_topd_reduces_to_top1_and_orthogonalizes(spark):
-    """r8: rank-D All-but-the-Top. D=1 must be BIT-identical to
-    remove_top1 (same rounding ladder); D=2 residuals must be
-    (numerically) orthogonal to BOTH removed components and the two
-    components near-orthogonal to each other."""
+def test_pca_power_topd_deflation_orthogonalizes(spark):
+    """Rank-D power iteration with deflation: the two components come
+    out near-orthogonal and aligned with the planted dominant axes."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -1889,28 +1883,12 @@ def test_remove_topd_reduces_to_top1_and_orthogonalizes(spark):
             for i, (a, b, c) in enumerate(zip(x0, x1, x2))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    r1 = {r["vec_id"]: list(r["resid"]) for r in
-          S.remove_top1(df, "vec_id", "embedding", dim=3, iters=4).collect()}
-    rd1 = {r["vec_id"]: list(r["resid"]) for r in
-           S.remove_topd(df, "vec_id", "embedding", dim=3,
-                         n_components=1, iters=4).collect()}
-    assert r1 == rd1  # exact, not approximate
-
     _proj, comps, _mu = S.pca_power_topd(
         df, "vec_id", "embedding", dim=3, n_components=2, iters=4)
     v1, v2 = np.asarray(comps[0]), np.asarray(comps[1])
     assert abs(float(v1 @ v2)) < 1e-3  # deflation orthogonalizes
     # the dominant components align with the planted axes
     assert abs(v1[0]) > 0.99 and abs(v2[1]) > 0.99
-
-    rd2 = {r["vec_id"]: np.asarray(r["resid"]) for r in
-           S.remove_topd(df, "vec_id", "embedding", dim=3,
-                         n_components=2, iters=4).collect()}
-    R = np.stack([rd2[i] for i in range(200)])
-    assert float(np.abs(R @ v1).max()) < 1e-4
-    assert float(np.abs(R @ v2).max()) < 1e-4
-    # with both dominant directions gone, only the noise floor remains
-    assert float(np.abs(R).max()) < 0.5
 
 
 def test_pca_topd_projections_match_numpy_reference(spark):

@@ -582,22 +582,6 @@ def test_zipf_head_sort_is_bounded_takeordered(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_bm25_score_rows_is_pure_projection(spark):
-    """ST18's scorer: no Exchange at all — a stateless map over the
-    arriving rows (the zero-state streaming contract)."""
-    from sarfile_analyzer_ng_spark.functions import retrieval as RV
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
-    )
-    out = RV.bm25_score_rows(
-        docs, "text", "doc_id", [(1, "beta", 0.5)], avgdl=2.0
-    )
-    p = plan(out)
-    assert "Exchange" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
 def test_hybrid_rrf_pools_join_without_corpus_shuffle_surprises(spark):
     """q134: both retrieval pools are query-bounded, so the fusion
     layer must contain no cartesian and no Python; the BM25 side's

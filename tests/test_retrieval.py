@@ -206,54 +206,6 @@ def test_kn_continuation_downweights_context_bound_words(spark):
     assert got == ref
 
 
-def test_bm25_row_local_scoring_matches_topk_scores(spark):
-    """bm25_score_rows (the stateless ST18 core) reproduces
-    bm25_topk's (query, doc) scores against the frozen model, and the
-    frozen model itself matches the hand-computed idf/avgdl."""
-    corpus = {
-        1: "apple banana cherry",
-        2: "apple apple durian",
-        3: "kiwi lemon mango apple",
-    }
-    queries = {10: "apple banana", 20: "durian"}
-    cdf = spark.createDataFrame(
-        [(d, t) for d, t in corpus.items()], "doc_id long, text string"
-    )
-    qdf = spark.createDataFrame(
-        [(q, t) for q, t in queries.items()], "query_id long, query string"
-    )
-    full = {
-        (r.query_id, r.doc_id): (r.score, r.n_terms_hit)
-        for r in RV.bm25_topk(cdf, qdf, "text", "doc_id", k=10).collect()
-    }
-    model, avgdl = RV.bm25_model(cdf, qdf, "text", "doc_id")
-    # hand-check the frozen model
-    toks = {d: t.split() for d, t in corpus.items()}
-    n_docs = float(len(toks))
-    assert avgdl == sum(len(ws) for ws in toks.values()) / n_docs
-    df_cnt = {}
-    for ws in toks.values():
-        for w in set(ws):
-            df_cnt[w] = df_cnt.get(w, 0.0) + 1.0
-    exp_model = sorted(
-        (qid, w,
-         math.log(1.0 + (n_docs - df_cnt[w] + 0.5) / (df_cnt[w] + 0.5)))
-        for qid, q in queries.items()
-        for w in set(q.split()) if w in df_cnt
-    )
-    assert [(q, w) for q, w, _ in model] == [(q, w) for q, w, _ in exp_model]
-    for (_, _, got_idf), (_, _, exp_idf) in zip(model, exp_model):
-        # JVM log vs libm log can differ by an ulp
-        assert math.isclose(got_idf, exp_idf, rel_tol=1e-12)
-    got = {
-        (r.query_id, r.doc_id): (r.score, r.n_terms_hit)
-        for r in RV.bm25_score_rows(
-            cdf, "text", "doc_id", model, avgdl
-        ).collect()
-    }
-    assert got == full
-
-
 def test_ngram_novelty_separates_templates_from_novel_text(spark):
     from sarfile_analyzer_ng_spark.functions import dedup as D
 
@@ -386,41 +338,6 @@ def test_bm25_champions_recall_and_bound(spark):
     )
     per_q = tiny.groupBy("query_id").count().agg(F.max("count")).collect()[0][0]
     assert per_q <= 2 * 2  # 2 query terms x 2 champions
-
-
-def test_bm25_index_roundtrip_identity(spark, tmp_path):
-    """build_bm25_index -> bm25_topk_from_index reproduces the
-    from-corpus result EXACTLY (both exact and champion-cut), and the
-    postings layout partitions by term."""
-    import glob
-
-    corpus = spark.createDataFrame(
-        [(d, f"term{d % 7} term{(d * 3) % 7} shared common words")
-         for d in range(40)],
-        "doc_id long, text string",
-    )
-    queries = spark.createDataFrame(
-        [(1, "term3 shared"), (2, "term5 common")],
-        "query_id long, query string",
-    )
-    idx = str(tmp_path / "bm25_idx")
-    RV.build_bm25_index(corpus, idx, "text", "doc_id")
-    assert glob.glob(f"{idx}/postings/part-*")
-    for champ in (None, 4):
-        if champ is None:
-            direct = RV.bm25_topk(corpus, queries, "text", "doc_id", k=5)
-        else:
-            direct = RV.bm25_topk_champions(
-                corpus, queries, "text", "doc_id", k=5, champions=champ
-            )
-        from_idx = RV.bm25_topk_from_index(
-            spark, idx, queries, k=5, champions=champ
-        )
-        key = ["query_id", "rank"]
-        assert (
-            direct.orderBy(*key).collect()
-            == from_idx.orderBy(*key).collect()
-        )
 
 
 def test_rrf_fuse_known_values(spark):

@@ -1,6 +1,5 @@
 """Scale machinery: salted aggregation/join must be result-identical to
-the direct plans; bucketed joins must elide the shuffle; IVF must
-approach brute-force recall as nprobe grows."""
+the direct plans; IVF must approach brute-force recall as nprobe grows."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ from pyspark.sql import functions as F
 
 from sarfile_analyzer_ng_spark.catalog import load_table
 from sarfile_analyzer_ng_spark.functions import similarity as S
-from sarfile_analyzer_ng_spark.operators import bucketing as B
 from sarfile_analyzer_ng_spark.operators import skew as SK
 
 from .conftest import SF_DIR
@@ -35,15 +33,6 @@ def test_salted_agg_matches_direct(spark):
     assert salted == direct
 
 
-def test_salted_avg_matches_direct(spark):
-    ev = load_table(spark, SF_DIR, "events")
-    direct = {r["event_type"]: round(r["a"], 6) for r in
-              ev.groupBy("event_type").agg(F.avg("value").alias("a")).collect()}
-    salted = {r["event_type"]: round(r["avg_value"], 6) for r in
-              SK.salted_avg(ev, ["event_type"], "value").collect()}
-    assert salted == direct
-
-
 def test_replicated_salt_join_matches_direct(spark):
     li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, SF_DIR, "orders").select(
@@ -52,26 +41,6 @@ def test_replicated_salt_join_matches_direct(spark):
     direct = li.join(o, on=["l_orderkey"]).count()
     salted = SK.replicated_salt_join(li, o, ["l_orderkey"]).count()
     assert salted == direct
-
-
-def test_bucketed_join_elides_shuffle(spark):
-    li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice") \
-        .withColumnRenamed("o_orderkey", "l_orderkey")
-    B.write_bucketed(li, "t_li_bucketed", ["l_orderkey"], 8)
-    B.write_bucketed(o, "t_o_bucketed", ["l_orderkey"], 8)
-    # force the non-broadcast path: at real scale neither side fits a
-    # broadcast, which is exactly when bucketing pays off
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = B.bucketed_join(spark, "t_li_bucketed", "t_o_bucketed",
-                                 ["l_orderkey"])
-        assert joined.count() == li.join(o, on=["l_orderkey"]).count()
-        assert not B.has_shuffle(joined)
-        # the same join on unbucketed frames DOES shuffle
-        assert B.has_shuffle(li.join(o, on=["l_orderkey"]))
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def _skewed_lineitem(spark):

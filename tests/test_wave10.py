@@ -1,24 +1,21 @@
-"""Round-10 wave-1 coverage: the five ADVICE fixes (kcenter id
+"""Round-10 wave-1 coverage: the ADVICE fixes (kcenter id
 types / pool exclusion, interval_join floor semantics, Benford
-cents-gate, Moore-Lewis empty-vocab, QL docstring contract), the
+cents-gate, QL docstring contract), the
 URL/domain curation family (q190/q191), passage-level MinHash
-near-dup (q192), Misra-Gries heavy hitters (q193 / ST29), and the
+near-dup (q192), Misra-Gries heavy hitters (q193), and the
 ANN nDCG audit (q194)."""
 
 from __future__ import annotations
 
 import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import similarity as S
-from sarfile_analyzer_ng_spark.functions import text as TX
 from sarfile_analyzer_ng_spark.functions import web as W
 from sarfile_analyzer_ng_spark.operators import sketches as SK
 from sarfile_analyzer_ng_spark.operators import timeseries as TS
-from sarfile_analyzer_ng_spark.streaming import ops as SO
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -78,25 +75,6 @@ def test_interval_join_negative_epoch_floor(spark):
         "ts", bucket_seconds=3600, min_count=4,
     ).collect()
     assert len(bursts) == 1 and bursts[0].n_events == 4
-
-
-def test_moore_lewis_model_empty_vocab_side(spark):
-    # every token out-of-domain: the in-domain vocab is empty, its
-    # unk mass is the (zero) side total with NO sentinel anti-join,
-    # and the smoothed unk log-probs match the closed form
-    import math
-
-    df = spark.createDataFrame(
-        [(1, "x y z", 0), (2, "x y", 0)],
-        "doc_id long, text string, ind int",
-    )
-    entries, unk_lpi, unk_lpg = TX.moore_lewis_model(
-        df, "text", "ind", vocab_size=4)
-    assert entries  # general-side vocabulary survives
-    # delta=0.5, vocab_size+1=5: in-side (cu=0, n=0) -> ln(.5/2.5);
-    # gen-side (cu=0, n=5) -> ln(.5/7.5)
-    assert unk_lpi == pytest.approx(math.log(0.5 / 2.5), abs=1e-6)
-    assert unk_lpg == pytest.approx(math.log(0.5 / 7.5), abs=1e-6)
 
 
 # ------------------------------------------------------------------ #
@@ -218,7 +196,7 @@ def test_passage_near_dups_max_df_cap(spark):
 
 
 # ------------------------------------------------------------------ #
-# Misra-Gries heavy hitters (q193 / ST29)
+# Misra-Gries heavy hitters (q193)
 # ------------------------------------------------------------------ #
 
 def _token_df(spark, counts: dict[str, int]):
@@ -247,39 +225,6 @@ def test_mg_topk_exact_when_k_covers_vocab(spark):
                       shards=2).collect()}
     assert {k: v.est for k, v in out.items()} == counts
     assert all(r.gap == 0 for r in out.values())
-
-
-def test_mg_update_stream_fold_matches_bounds(spark):
-    # fold 4 micro-batches; the merged summary must keep every MG
-    # guarantee vs the exact full-stream counts, and the heavy
-    # hitter survives
-    counts = {"hot": 40, "warm": 25, **{f"c{i}": 2 for i in range(30)}}
-    rows = [(t, j % 4) for j, t in enumerate(
-        t for t, n in counts.items() for _ in range(n))]
-    df = spark.createDataFrame(rows, "tok string, b int")
-    state = None
-    for i in range(4):
-        state = SO.mg_update(state, df.where(F.col("b") == i), "tok",
-                             k=6, shards=4)
-        state = spark.createDataFrame(state.collect(), state.schema)
-    got = {r.item: r.est for r in state.collect()}
-    assert len(got) <= 6 * 4
-    n = sum(counts.values())
-    for item, est in got.items():
-        true = counts[item]
-        assert est <= true
-        assert true - est <= 2 * n / 7  # two-level 2N/(k+1) envelope
-    assert "hot" in got and "warm" in got
-
-
-def test_mg_update_single_batch_matches_mg_topk_level1(spark):
-    counts = {"x": 9, "y": 7, "z": 1, "w": 1}
-    df = _token_df(spark, counts)
-    inc = {r.item: r.est for r in
-           SO.mg_update(None, df, "tok", k=2, shards=1).collect()}
-    # one batch, one shard: the update IS the MG compress of the
-    # exact counts — delta = 3rd largest (1), survivors x:8, y:6
-    assert inc == {"x": 8, "y": 6}
 
 
 # ------------------------------------------------------------------ #

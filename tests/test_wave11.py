@@ -1,7 +1,6 @@
 """Round-10 wave-5/6 operators: all-pairs TF-IDF cosine with prefix
 filtering (q195), Flesch readability (q196), canonical-URL dup-rate
-(q197), the mergeable rank-sample quantile summary (q198), and the
-streaming URL screen (ST30)."""
+(q197) and the mergeable rank-sample quantile summary (q198)."""
 
 from __future__ import annotations
 
@@ -15,7 +14,6 @@ from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import similarity as S
 from sarfile_analyzer_ng_spark.functions import web as W
 from sarfile_analyzer_ng_spark.operators import sketches as SK
-from sarfile_analyzer_ng_spark.streaming import ops as SO
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -178,42 +176,3 @@ def test_rank_sample_exact_when_m_covers_shard(spark):
     # step = 1 everywhere: the summary IS the data, est == exact
     assert r.err_bound == 0 and r.est_rank == r.exact_rank == 50
     assert r.est_value == 50.0 and r.within_bound
-
-
-# ------------------------------------------------------------------ #
-# streaming URL screen (ST30)
-# ------------------------------------------------------------------ #
-
-def test_url_screen_stream_batch_parity_and_streamability(spark):
-    rows = [
-        (1, "HTTP://WWW.Shop.COM:80//a/?utm_source=x&q=1#f"),
-        (2, "https://news.Example.co.uk/article/"),
-        (3, "https://blocked.net/x"),
-    ]
-    static = spark.createDataFrame(rows, "rid long, url string")
-    batch = SO.url_screen_stream(static, "url",
-                                 blocked_domains=("blocked.net",))
-    got = {r.rid: r for r in batch.collect()}
-    assert got[1].canon_url == "http://shop.com/a?q=1"
-    assert got[1].domain == "shop.com" and got[1].verdict == "keep"
-    assert got[2].domain == "example.co.uk"
-    assert got[3].verdict == "drop"
-    # the same projection must be legal on an unbounded frame
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .select(F.col("value").alias("rid"),
-                F.concat(F.lit("https://h"), F.col("value"),
-                         F.lit(".example.com/p")).alias("url"))
-    )
-    out = SO.url_screen_stream(stream, "url",
-                               blocked_domains=("blocked.net",))
-    assert out.isStreaming
-    # availableNow: the rate source emits a BOUNDED batch and the
-    # query terminates on its own — processAllAvailable on a live
-    # rate stream can starve forever under a loaded suite
-    q = (out.writeStream.format("memory").queryName("st30_smoke")
-         .outputMode("append").trigger(availableNow=True).start())
-    try:
-        assert q.awaitTermination(120)
-    finally:
-        q.stop()

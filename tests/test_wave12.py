@@ -1,6 +1,5 @@
 """Round-10 wave-7 operators: PII masking apply (q199) and
-sub-document passage containment (q200), plus the ST31
-streaming rank-sample quantile maintenance."""
+sub-document passage containment (q200)."""
 
 from __future__ import annotations
 
@@ -119,69 +118,6 @@ def test_containment_vs_jaccard_story(spark):
     jrows = jac.collect()
     D.release(jac)
     assert jrows and jrows[0].jaccard < 0.3
-
-
-# ------------------------------------------------------------------ #
-# streaming rank-sample maintenance (ST31)
-# ------------------------------------------------------------------ #
-
-def _fold_batches(spark, batches, m=16):
-    from sarfile_analyzer_ng_spark.streaming import ops as SO
-
-    state = None
-    for rows in batches:
-        df = spark.createDataFrame(rows, "event_id long, value double")
-        state = SO.rank_sample_update(state, df, "value", "event_id",
-                                      m=m)
-    return state
-
-
-def test_rank_sample_update_bounded_state_and_lower_bound(spark):
-    rows = [(i, float((i * 17) % 500)) for i in range(1, 801)]
-    batches = [rows[j::4] for j in range(4)]
-    state = _fold_batches(spark, batches, m=16).collect()
-    assert 0 < len(state) <= 32              # ≤ 2m rows forever
-    total = sum(r.g for r in state)
-    assert total == 800                      # no mass lost or created
-    # est_rank (gap cumsum) is a LOWER bound on the true rank
-    truth = sorted((v, i) for i, v in rows)
-    state = sorted(state, key=lambda r: (r.v, r.i))
-    cum = 0
-    for r in state:
-        cum += r.g
-        true_rank = sum(1 for v, i in truth if (v, i) <= (r.v, r.i))
-        assert cum <= true_rank
-    # the p50 answer lands near the true median
-    target = 400
-    cum, pick = 0, None
-    for r in state:
-        cum += r.g
-        if cum >= target:
-            pick = r
-            break
-    true_rank = sum(1 for v, i in truth if (v, i) <= (pick.v, pick.i))
-    assert abs(true_rank - target) <= 800 // 16 * 4  # fold slack
-
-
-def test_rank_sample_update_all_equal_values(spark):
-    rows = [(i, 7.0) for i in range(1, 201)]
-    state = _fold_batches(spark, [rows[:100], rows[100:]], m=8).collect()
-    assert 0 < len(state) <= 16
-    assert sum(r.g for r in state) == 200
-    assert all(r.v == 7.0 for r in state)
-
-
-def test_rank_sample_update_empty_batch_is_noop(spark):
-    from sarfile_analyzer_ng_spark.streaming import ops as SO
-
-    df = spark.createDataFrame([(1, 5.0), (2, 6.0)],
-                               "event_id long, value double")
-    state = SO.rank_sample_update(None, df, "value", "event_id", m=8)
-    empty = spark.createDataFrame([], "event_id long, value double")
-    state2 = SO.rank_sample_update(state, empty, "value", "event_id",
-                                   m=8)
-    assert sorted((r.v, r.i, r.g) for r in state.collect()) == \
-        sorted((r.v, r.i, r.g) for r in state2.collect())
 
 
 # ------------------------------------------------------------------ #

@@ -128,53 +128,6 @@ def test_synth_urls_exercise_psl_wildcard(spark):
     assert any(d.endswith(".co.uk") for d in doms)
 
 
-def test_st33_hot_block_screen_batch_parity(spark):
-    """ST33: the streaming hot-block screen (block splitter + MG
-    summary fold) flags EXACTLY the block set q207's corpus-global
-    frequency rule flags on the planted template corpus, with
-    bounded state and no over-estimate."""
-    from sarfile_analyzer_ng_spark.functions import html as H
-    from sarfile_analyzer_ng_spark.queries import (
-        BP_DF_RATIO, _synth_html_expr, _t)
-    from sarfile_analyzer_ng_spark.streaming import ops as SO
-
-    docs = _t(spark, SF_DIR, "documents").select(
-        "doc_id", "source", "text")
-    pages = docs.withColumn("html", _synth_html_expr()).select(
-        "doc_id", "html")
-    n_pages = pages.count()
-    blk = pages.select(
-        "doc_id",
-        F.explode(H.html_block_structs(F.col("html"))).alias("b"),
-    ).select("doc_id", F.md5("b.t").alias("h")).distinct()
-    true_df = {r.h: r.df for r in blk.groupBy("h").agg(
-        F.countDistinct("doc_id").cast("long").alias("df")).collect()}
-    truth = {h for h, df in true_df.items()
-             if df > BP_DF_RATIO * n_pages}
-    assert truth, "the template plants must make some block hot"
-
-    k, shards = 32, 8
-    state, seen = None, 0
-    for m in range(5):  # five micro-batches
-        b = pages.where(F.col("doc_id") % 5 == m)
-        state = SO.hot_block_update(state, b, "html", "doc_id",
-                                    k=k, shards=shards)
-        state = spark.createDataFrame(state.collect(), state.schema)
-        seen += b.count()
-    assert seen == n_pages
-    rows = state.collect()
-    assert len(rows) <= k * shards  # bounded state, ST21 contract
-    for r in rows:  # MG never over-estimates
-        assert r.est <= true_df[r.item], r
-
-    flagged = {r.h for r in
-               SO.hot_block_flags(state, seen, BP_DF_RATIO).collect()}
-    assert flagged == truth
-    # the link-free rating DIV (df = N/5) is among them — the block
-    # the link-density rule alone cannot catch
-    assert any(0.19 <= true_df[h] / n_pages <= 0.21 for h in flagged)
-
-
 def test_attach_registrable_domain_matches_column_form(spark):
     """The broadcast-join derivation (production path) and the InSet
     column form must agree on every pinned PSL case AND on the full

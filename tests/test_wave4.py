@@ -1,13 +1,10 @@
-"""Round-9 wave-4 operators: Moore-Lewis contrastive selection (q170 /
-ST25), Poisson-bootstrap CIs (q171), greedy k-center coreset (q172),
+"""Round-9 wave-4 operators: Moore-Lewis contrastive selection (q170),
+Poisson-bootstrap CIs (q171), greedy k-center coreset (q172),
 embedding outliers (q173), classifier threshold sweep (q174), and the
 cross-split leakage audit (q175)."""
 
 from __future__ import annotations
 
-import os
-
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,13 +12,12 @@ from sarfile_analyzer_ng_spark.functions import classify as C
 from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import similarity as S
 from sarfile_analyzer_ng_spark.functions import text as TX
-from sarfile_analyzer_ng_spark.streaming import ops as SO
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 # ------------------------------------------------------------------ #
-# Moore-Lewis (q170 / ST25)
+# Moore-Lewis (q170)
 # ------------------------------------------------------------------ #
 
 def _ml_corpus(spark):
@@ -49,73 +45,6 @@ def test_moore_lewis_separates_domains(spark):
     # the mixed doc scores between the two blocks
     assert rows[10].ce_diff < rows[99].ce_diff < rows[0].ce_diff
     assert rows[0].n_tokens == 5
-
-
-def test_moore_lewis_frozen_model_matches_batch(spark):
-    df = _ml_corpus(spark)
-    batch = TX.moore_lewis(df, "text", "doc_id", "ind", vocab_size=4)
-    got_batch = {r.doc_id: (r.n_tokens, r.avg_lp_in, r.avg_lp_gen,
-                            r.ce_diff, r.selected)
-                 for r in batch.collect()}
-    D.release(batch)
-    model, unk_i, unk_g = TX.moore_lewis_model(df, "text", "ind",
-                                               vocab_size=4)
-    assert len(model) <= 8 and unk_i < 0 and unk_g < 0
-    frozen = TX.moore_lewis_score_rows(df, "text", "doc_id", model,
-                                       unk_i, unk_g)
-    got_frozen = {r.doc_id: (r.n_tokens, r.avg_lp_in, r.avg_lp_gen,
-                             r.ce_diff, r.selected)
-                  for r in frozen.collect()}
-    assert got_frozen == got_batch
-
-
-def test_moore_lewis_screen_stream_matches_batch(spark, tmp_path):
-    """ST25: arriving docs score exactly like the batch row-local
-    scorer across a micro-batch boundary; min_ce cut applied."""
-    df = _ml_corpus(spark)
-    model, unk_i, unk_g = TX.moore_lewis_model(df, "text", "ind",
-                                               vocab_size=4)
-    t0 = 1_700_000_000
-    arriving = [
-        (201, "alpha beta beta gamma", t0 + 1),
-        (202, "zeta zeta epsilon", t0 + 2),
-        (203, "alpha gamma newword", t0 + 61),
-    ]
-    src = str(tmp_path / "ml_src")
-    os.makedirs(src)
-    for i, sl in enumerate((arriving[:2], arriving[2:])):
-        pdf = pd.DataFrame(
-            {
-                "doc_id": pd.array([r[0] for r in sl], dtype="int64"),
-                "text": [r[1] for r in sl],
-                "ts": pd.to_datetime([r[2] for r in sl], unit="s",
-                                     utc=True),
-            }
-        )
-        path = f"{src}/chunk{i}.parquet"
-        pdf.to_parquet(path, index=False, coerce_timestamps="us",
-                       allow_truncated_timestamps=True)
-        os.utime(path, (t0 + i, t0 + i))
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.format("parquet").schema(schema)
-        .option("maxFilesPerTrigger", 1).load(src)
-    )
-    out = SO.moore_lewis_screen_stream(stream, "text", "doc_id", model,
-                                       unk_i, unk_g, min_ce=0.0)
-    q = (
-        out.writeStream.format("memory").queryName("ml_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {r.doc_id: (r.n_tokens, r.ce_diff, r.selected)
-           for r in spark.table("ml_stream").collect()}
-    batch = {r.doc_id: (r.n_tokens, r.ce_diff, r.selected)
-             for r in TX.moore_lewis_score_rows(
-                 spark.read.parquet(src), "text", "doc_id", model,
-                 unk_i, unk_g).where(F.col("ce_diff") >= 0.0).collect()}
-    assert got == batch
-    assert 201 in got and 202 not in got  # general-domain doc cut
 
 
 # ------------------------------------------------------------------ #

@@ -1,22 +1,16 @@
 """Round-9 wave-5 operators: UniMax epoch-capped allocation (q176),
 Dirichlet-prior query-likelihood retrieval (q177), Fisher
-label-separation audit (q178), winsorized robust moments (q179), and
-the streaming cross-split leakage sentinel (ST26)."""
+label-separation audit (q178) and winsorized robust moments (q179)."""
 
 from __future__ import annotations
 
-import os
-
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from sarfile_analyzer_ng_spark.functions import dedup as D
 from sarfile_analyzer_ng_spark.functions import retrieval as RV
 from sarfile_analyzer_ng_spark.functions import similarity as S
 from sarfile_analyzer_ng_spark.functions import text as TX
 from sarfile_analyzer_ng_spark.operators import stats as ST
-from sarfile_analyzer_ng_spark.streaming import ops as SO
 
 
 # ------------------------------------------------------------------ #
@@ -137,58 +131,6 @@ def test_winsorized_mean_resists_outlier(spark):
     assert r.win_std < 40
 
 
-# ------------------------------------------------------------------ #
-# ST26 streaming split-leak sentinel
-# ------------------------------------------------------------------ #
-
-def test_split_leak_stream_flags_cross_split_arrival(spark, tmp_path):
-    from sarfile_analyzer_ng_spark.util import shard_hash
-
-    weights = {"train": 80, "val": 10, "test": 10}
-    probe = spark.createDataFrame(
-        [(i,) for i in range(300)], "doc_id long"
-    ).withColumn("bkt", shard_hash(F.col("doc_id"), 100))
-    bkt = {r.doc_id: r.bkt for r in probe.collect()}
-    test_id = next(i for i, b in bkt.items() if b >= 90)
-    train_ids = [i for i, b in bkt.items() if b < 80]
-    static = spark.createDataFrame(
-        [(test_id, "EVAL GOLD ANSWER")]
-        + [(i, f"corpus doc {i}") for i in train_ids[:5]],
-        "doc_id long, text string",
-    )
-    t0 = 1_700_000_000
-    arrive_leak, arrive_clean = train_ids[10], train_ids[11]
-    pdf = pd.DataFrame(
-        {
-            "doc_id": pd.array([arrive_leak, arrive_clean], dtype="int64"),
-            "text": ["EVAL GOLD ANSWER", "fresh unique content"],
-            "ts": pd.to_datetime([t0 + 1, t0 + 2], unit="s", utc=True),
-        }
-    )
-    src = str(tmp_path / "leak_src")
-    os.makedirs(src)
-    pdf.to_parquet(f"{src}/chunk0.parquet", index=False,
-                   coerce_timestamps="us",
-                   allow_truncated_timestamps=True)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.format("parquet").schema(schema)
-        .option("maxFilesPerTrigger", 1).load(src)
-    )
-    out = SO.split_leak_stream(stream, static, "text", "doc_id", weights)
-    q = (
-        out.writeStream.format("memory").queryName("leak_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("leak_stream").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.doc_id == arrive_leak
-    assert r.split == "train" and r.matched_split == "test"
-    assert r.n_matches == 1
-
-
 def test_ql_champions_sharp_contract(spark):
     """When every term's df <= champions, the champion cut is EXACTLY
     the exact ranking (the q131 sharp contract, applied to QL)."""
@@ -218,75 +160,3 @@ def test_ql_champions_bounds_hot_terms(spark):
     )
     out = RV.ql_topk(corpus, qs, "text", "doc_id", k=10, champions=2)
     assert out.count() == 2  # candidate set is the champion list
-
-
-def test_ql_screen_stream_matches_batch_and_topk(spark, tmp_path):
-    """ST28: streaming QL screening equals the batch row-local scorer
-    across micro-batches, and candidate docs score bit-identically to
-    ql_topk."""
-    corpus = spark.createDataFrame(
-        [(i, f"indexed corpus doc {i} about topic{i % 4} retrieval")
-         for i in range(16)],
-        "doc_id long, text string",
-    )
-    qs = spark.createDataFrame(
-        [(1, "topic2 retrieval"), (2, "absent terms")],
-        "query_id long, query string",
-    )
-    terms, qstats, ctot = RV.ql_model(corpus, qs, "text", "doc_id")
-    assert ctot > 0 and 1 in qstats
-    # query 2's terms are OOV -> dropped from the model entirely
-    assert {q for q, _, _, _ in terms} == {1}
-
-    t0 = 1_700_000_000
-    arriving = [
-        (100, "fresh doc discussing topic2 retrieval quality", t0 + 1),
-        (101, "nothing relevant here", t0 + 2),
-        (102, "retrieval text about topic2 again", t0 + 61),
-    ]
-    src = str(tmp_path / "ql_src")
-    os.makedirs(src)
-    for i, sl in enumerate((arriving[:2], arriving[2:])):
-        pdf = pd.DataFrame(
-            {
-                "doc_id": pd.array([r[0] for r in sl], dtype="int64"),
-                "text": [r[1] for r in sl],
-                "ts": pd.to_datetime([r[2] for r in sl], unit="s",
-                                     utc=True),
-            }
-        )
-        path = f"{src}/chunk{i}.parquet"
-        pdf.to_parquet(path, index=False, coerce_timestamps="us",
-                       allow_truncated_timestamps=True)
-        os.utime(path, (t0 + i, t0 + i))
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.format("parquet").schema(schema)
-        .option("maxFilesPerTrigger", 1).load(src)
-    )
-    out = SO.ql_screen_stream(stream, "text", "doc_id", terms, qstats,
-                              ctot)
-    q = (
-        out.writeStream.format("memory").queryName("ql_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {(r.doc_id, r.query_id): (r.score, r.n_terms_hit)
-           for r in spark.table("ql_stream").collect()}
-    batch = {(r.doc_id, r.query_id): (r.score, r.n_terms_hit)
-             for r in RV.ql_score_rows(
-                 spark.read.parquet(src), "text", "doc_id", terms,
-                 qstats, ctot).collect()}
-    assert got == batch
-    assert (100, 1) in got and (101, 1) not in got
-
-    # a corpus doc scored row-locally == its ql_topk score
-    topk = {(r.doc_id, r.query_id): r.score
-            for r in RV.ql_topk(corpus, qs, "text", "doc_id",
-                                k=16).collect()}
-    rowlocal = {(r.doc_id, r.query_id): r.score
-                for r in RV.ql_score_rows(
-                    corpus, "text", "doc_id", terms, qstats,
-                    ctot).collect()}
-    for key, s in topk.items():
-        assert rowlocal[key] == pytest.approx(s, abs=1e-4)

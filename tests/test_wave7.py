@@ -111,61 +111,6 @@ def test_incident_overlap_runs_on_gate_corpus(spark):
         assert r.purchase_value is not None
 
 
-def test_incident_tag_stream_matches_batch(spark, tmp_path):
-    """ST27: arriving events are tagged against static burst windows
-    exactly like the batch interval join, across micro-batches."""
-    import os
-
-    import pandas as pd
-
-    from sarfile_analyzer_ng_spark.streaming import ops as SO
-
-    intervals = spark.createDataFrame(
-        [(_ts(2, 0), _ts(3, 30), 9, 2), (_ts(10, 0), _ts(10, 45), 4, 1)],
-        "burst_start timestamp, burst_end timestamp, "
-        "n_events long, n_buckets long",
-    )
-    arriving = [
-        (1, _ts(2, 15)),    # inside burst 1
-        (2, _ts(5, 0)),     # clean
-        (3, _ts(10, 44)),   # inside burst 2 (second micro-batch)
-        (4, _ts(10, 46)),   # one minute late -> clean
-    ]
-    src = str(tmp_path / "tag_src")
-    os.makedirs(src)
-    t0 = 1_700_000_000
-    for i, sl in enumerate((arriving[:2], arriving[2:])):
-        pdf = pd.DataFrame(
-            {
-                "event_id": pd.array([r[0] for r in sl], dtype="int64"),
-                "ts": [r[1] for r in sl],
-            }
-        )
-        path = f"{src}/chunk{i}.parquet"
-        pdf.to_parquet(path, index=False, coerce_timestamps="us",
-                       allow_truncated_timestamps=True)
-        os.utime(path, (t0 + i, t0 + i))
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.format("parquet").schema(schema)
-        .option("maxFilesPerTrigger", 1).load(src)
-    )
-    out = SO.incident_tag_stream(stream, intervals)
-    q = (
-        out.writeStream.format("memory").queryName("tag_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {(r.event_id, r.burst_start)
-           for r in spark.table("tag_stream").collect()}
-    batch = {(r.event_id, r.burst_start)
-             for r in TS.interval_join(
-                 spark.read.parquet(src), intervals, "ts",
-                 "burst_start", "burst_end").collect()}
-    assert got == batch
-    assert {e for e, _ in got} == {1, 3}
-
-
 # ------------------------------------------------------------------ #
 # wave 8: vocab overlap (q185) and length EMD (q186)
 # ------------------------------------------------------------------ #
