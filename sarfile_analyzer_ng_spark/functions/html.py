@@ -52,7 +52,7 @@ byte-for-byte; these three are the stated exceptions, each pinned):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Tag names end at whitespace, "/", or ">": the `(?:\s[^>]*)?/?>`
@@ -120,17 +120,9 @@ def is_boiler(s: Column) -> Column:
     return 2 * F.length(s["lt"]) >= F.length(s["t"])
 
 
-def html_extract(df: DataFrame, html_col: str, id_col: str) -> DataFrame:
-    """The full contract: per input row, (id, n_blocks, n_boiler,
-    text, n_chars) where text is the ``\\n``-joined content blocks
-    and n_boiler counts the link-dense blocks rule 4 dropped."""
-    blk = html_block_structs(F.col(html_col))
+def content_text(blk: Column) -> tuple[Column, Column]:
+    """Rules 4–5 over a :func:`html_block_structs` array: the content
+    blocks (link-dense boilerplate dropped) and their ``\\n``-joined
+    text, the extracted document."""
     kept = F.filter(blk, lambda s: ~is_boiler(s))
-    text = F.array_join(F.transform(kept, lambda s: s["t"]), "\n")
-    return df.select(
-        F.col(id_col),
-        F.size(blk).cast("long").alias("n_blocks"),
-        (F.size(blk) - F.size(kept)).cast("long").alias("n_boiler"),
-        text.alias("text"),
-        F.length(text).cast("long").alias("n_chars"),
-    )
+    return kept, F.array_join(F.transform(kept, lambda s: s["t"]), "\n")

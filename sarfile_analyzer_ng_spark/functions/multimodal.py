@@ -1,110 +1,68 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-payloads with typed metadata, processed by Arrow-batched ``mapInPandas``
-stages.
+"""Image codecs and perceptual hashes for ``binary`` media payloads.
 
-The Spark-side mechanics (schema, batching, partitioning, UDF
-signatures) are real and tested, and so are the decoders for every
-format expressible without external codec libraries: binary netpbm,
-PNG (stdlib zlib + scanline unfilters), uncompressed 24-bit BMP, GIF
-(pure-python LZW), baseline AND progressive JPEG (pure-python huffman
-+ numpy dequant/IDCT; spectral selection, successive approximation,
-EOB runs), and WAV/PCM (stdlib wave; envelope features in the decode
-path, real FFT spectral bands via :func:`audio_spectral_features`).
-Only arithmetic-coded JPEG, lossy audio, and compressed video remain
-a documented ``NotImplementedError`` — plug a PIL/libav decoder into
-``decode_fn`` and nothing else changes.
-A deterministic fake decoder exists for pipeline tests that don't
-care about pixels.
+Every decoder here is pure python + numpy, no codec library: binary
+netpbm, PNG (stdlib zlib + scanline unfilters), uncompressed 24-bit
+BMP, GIF (pure-python LZW), and baseline AND progressive JPEG
+(pure-python huffman + numpy dequant/IDCT; spectral selection,
+successive approximation, EOB runs). Each returns the image's
+luminance plane; :func:`image_phash` hashes it in one Arrow-batched
+``mapInPandas`` stage and :func:`phash_dup_pairs` pairs the hashes.
+Arithmetic-coded JPEG and every non-image codec raise a documented
+``NotImplementedError``.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..util import worker_task
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),       # image | audio | video
-        T.StructField("mime", T.StringType()),
-        T.StructField("payload", T.BinaryType()),     # opaque bytes
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
-def real_decode(payload: bytes, kind: str, reducer=None):
-    """Decode dispatch — REAL decoders for every format expressible
-    without external codec libraries:
+def decode_luminance(payload: bytes):
+    """Full-resolution luminance plane ``(width, height, lum[h, w])``
+    in [0, 1] for any supported image payload — the shared input of
+    :func:`image_phash`. Dispatches on the magic bytes to the real
+    decoders:
 
     - binary PPM/PGM (header parse + numpy),
     - PNG (stdlib zlib inflate + the five scanline unfilters),
     - uncompressed 24-bit BMP (struct + numpy),
-    - GIF (pure-python LZW + palette map, incl. Adam-style interlace),
+    - GIF (pure-python LZW + palette map, incl. interlace),
     - baseline + progressive JPEG (pure-python huffman + numpy
-      dequant/IDCT),
-    - WAV/PCM audio (stdlib ``wave`` + numpy envelope).
+      dequant/IDCT).
 
-    Arithmetic-coded JPEG, lossy audio, and compressed video remain a
-    documented ``NotImplementedError`` (their codecs genuinely do not
-    ship in this container) — plug a PIL/libav decoder in here and
-    nothing else changes.
-
-    ``reducer`` maps the decoded luminance plane to the feature value
-    (default :func:`_lum_feature`); :func:`decode_luminance` passes
-    identity to read the full-resolution plane. Threaded explicitly —
-    not via module state — so concurrent/re-entrant driver-side use
-    can never leak a swapped reducer into other callers."""
+    Corrupt payloads and WAV audio (a payload, but not an image)
+    raise ValueError; other formats raise NotImplementedError (their
+    codecs do not ship here)."""
     if payload[:2] in (b"P6", b"P5"):
-        return decode_ppm(payload, kind, reducer)
+        return decode_ppm(payload)
     if payload[: len(PNG_MAGIC)] == PNG_MAGIC:
-        return decode_png(payload, kind, reducer)
+        return decode_png(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload, kind)
+        raise ValueError("decode_luminance: payload is not an image")
     if payload[:2] == b"BM":
-        return decode_bmp(payload, kind, reducer)
+        return decode_bmp(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif(payload, kind, reducer)
+        return decode_gif(payload)
     if payload[:2] == b"\xff\xd8":
-        return decode_jpeg(payload, kind, reducer)
+        return decode_jpeg(payload)
     raise NotImplementedError(
         "lossy-audio/compressed-video decoding requires codec "
         "libraries not present in this environment; PPM/PGM, PNG, "
-        "BMP, GIF, JPEG (baseline + progressive), and WAV decode "
-        "natively, or pass fake_decode for the stub"
+        "BMP, GIF and JPEG (baseline + progressive) decode natively"
     )
 
 
-def _ppm_header(payload: bytes, start: int = 0):
-    """Parse one binary netpbm header starting at ``start`` — the ONE
-    token scanner (magic, comments, width/height/maxval) shared by the
-    decoder and the frame splitter so the two can never drift.
-    Returns (magic, width, height, maxval, pixel_offset)."""
-    magic = payload[start:start + 2]
+def _ppm_header(payload: bytes):
+    """Parse a binary netpbm header: magic, comments,
+    width/height/maxval. Returns (magic, width, height, maxval,
+    pixel_offset)."""
+    magic = payload[:2]
     tokens: list[bytes] = []
-    i = start + 2
+    i = 2
     while len(tokens) < 3:
         while i < len(payload) and payload[i : i + 1].isspace():
             i += 1
@@ -121,14 +79,10 @@ def _ppm_header(payload: bytes, start: int = 0):
     return magic, width, height, maxval, i
 
 
-def decode_ppm(payload: bytes, kind: str, reducer=None):
+def decode_ppm(payload: bytes):
     """Real image decode for binary netpbm (P6 RGB / P5 gray) — header
     parse + ``numpy.frombuffer``, no codec library involved. Returns
-    (width, height, 0, feature) where the 8-dim feature is the
-    mean-pooled 2×4 luminance grid in [0, 1] — deterministic, so the
-    downstream similarity ops are testable on real pixels. Images
-    smaller than the grid pool over the splits that exist and pad the
-    feature with the overall mean (never NaN)."""
+    (width, height, lum) with the luminance plane in [0, 1]."""
     import numpy as np
 
     magic, width, height, maxval, i = _ppm_header(payload)
@@ -138,28 +92,9 @@ def decode_ppm(payload: bytes, kind: str, reducer=None):
         payload, dtype=dtype, count=width * height * channels, offset=i
     ).reshape(height, width, channels)
     lum = px.astype(np.float64).mean(axis=2) / maxval
-    return width, height, 0, (reducer or _lum_feature)(lum)
+    return width, height, lum
 
 
-def _lum_feature(lum) -> list[float]:
-    """Mean-pooled 2×4 luminance grid in [0, 1] — the ONE 8-dim image
-    feature shared by every image decoder, so a pixel-identical image
-    yields the identical feature regardless of container format.
-    Images smaller than the grid pool over the splits that exist and
-    pad with the overall mean (never NaN)."""
-    import numpy as np
-
-    rows = np.array_split(lum, min(2, lum.shape[0]), axis=0)
-    cells = [
-        float(c.mean())
-        for r in rows
-        for c in np.array_split(r, min(4, r.shape[1]), axis=1)
-    ]
-    cells += [float(lum.mean())] * (8 - len(cells))
-    return cells[:8]
-
-
-# Adam7 pass grid (RFC 2083 §2.6): (x_start, y_start, x_step, y_step)
 _ADAM7 = (
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
@@ -172,7 +107,7 @@ def _png_unfilter(raw: bytes, pos: int, height: int, stride: int,
     of ``height`` rows × ``stride`` bytes starting at ``pos`` in the
     inflated stream. Returns ``(rows uint8[height, stride], new_pos)``.
     Per-row python loop for the sequential filters (Sub/Average/Paeth
-    are defined recurrences) — fine for feature extraction."""
+    are defined recurrences) — fine for thumbnail-scale hashing."""
     import numpy as np
 
     out = np.zeros((height, stride), dtype=np.uint8)
@@ -206,11 +141,11 @@ def _png_unfilter(raw: bytes, pos: int, height: int, stride: int,
     return out, pos
 
 
-def decode_png(payload: bytes, kind: str, reducer=None):
+def decode_png(payload: bytes):
     """Real PNG decode with NOTHING beyond the standard library +
     numpy: chunk walk → concatenated-IDAT ``zlib.decompress`` → the
     five scanline unfilters (None/Sub/Up/Average/Paeth, RFC 2083 §6)
-    → luminance grid feature via :func:`_lum_feature`. Supports the
+    → luminance plane. Supports the
     8-bit color types (gray 0, RGB 2, gray+alpha 4, RGBA 6 — alpha
     ignored for luminance), sequential AND Adam7-interlaced (the
     seven sub-images unfilter independently, each against its own
@@ -280,10 +215,10 @@ def decode_png(payload: bytes, kind: str, reducer=None):
             px[ys::yst, xs::xst, :] = sub.reshape(ph, pw, channels)
     color = px[:, :, :3] if color_type in (2, 6) else px[:, :, :1]
     lum = color.astype(np.float64).mean(axis=2) / 255.0
-    return width, height, 0, (reducer or _lum_feature)(lum)
+    return width, height, lum
 
 
-def decode_bmp(payload: bytes, kind: str, reducer=None):
+def decode_bmp(payload: bytes):
     """Real BMP decode (uncompressed 24-bit BITMAPINFOHEADER, the
     overwhelmingly common dump format): pure struct + numpy — BGR
     rows, 4-byte-aligned, bottom-up unless height is negative. Other
@@ -316,7 +251,7 @@ def decode_bmp(payload: bytes, kind: str, reducer=None):
         rows = rows[::-1]
     # BGR order; channel order is irrelevant to mean luminance
     lum = rows.astype(np.float64).mean(axis=2) / 255.0
-    return width, height, 0, (reducer or _lum_feature)(lum)
+    return width, height, lum
 
 
 def _dct_matrix():
@@ -485,16 +420,16 @@ def _extend(v: int, t: int) -> int:
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def decode_jpeg(payload: bytes, kind: str, reducer=None):
+def decode_jpeg(payload: bytes):
     """REAL baseline JPEG decode in pure python + numpy — huffman
     entropy decode (tables from the file's own DHT segments), dequant
     (DQT), dezigzag, orthonormal 8×8 IDCT, restart markers, arbitrary
     per-component sampling factors (4:4:4, 4:2:0, grayscale, ...).
-    Only the luminance plane is inverse-transformed (the feature is
-    the luminance grid; chroma blocks are entropy-decoded solely to
-    advance the stream). Progressive (SOF2) and arithmetic-coded
-    JPEGs raise NotImplementedError; corrupt streams raise ValueError
-    (the extract_features null-row policy applies to both)."""
+    Only the luminance plane is inverse-transformed (chroma blocks are
+    entropy-decoded solely to advance the stream). Progressive (SOF2)
+    scans accumulate in :class:`_ProgressiveState`; arithmetic-coded
+    JPEGs raise NotImplementedError; corrupt streams raise
+    ValueError."""
     import struct
 
     import numpy as np
@@ -578,7 +513,7 @@ def decode_jpeg(payload: bytes, kind: str, reducer=None):
             if not progressive:
                 return _jpeg_scan(
                     payload, i + 2 + seglen, frame, scan, qt, huff,
-                    restart_interval, reducer,
+                    restart_interval,
                 )
             ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
             if prog is None:
@@ -590,12 +525,11 @@ def decode_jpeg(payload: bytes, kind: str, reducer=None):
             continue
         i += 2 + seglen
     if progressive and prog is not None:
-        return prog.finish(qt, reducer)
+        return prog.finish(qt)
     raise ValueError("decode_jpeg: no scan data")
 
 
-def _jpeg_scan(payload, start, frame, scan, qt, huff, restart_interval,
-               reducer=None):
+def _jpeg_scan(payload, start, frame, scan, qt, huff, restart_interval):
     import numpy as np
 
     w, h, comps = frame
@@ -672,7 +606,7 @@ def _jpeg_scan(payload, start, frame, scan, qt, huff, restart_interval,
                 )
     # crop the luminance plane to the component geometry
     lum = np.clip(yplane[:ch, :cw], 0, 255) / 255.0
-    return w, h, 0, (reducer or _lum_feature)(lum)
+    return w, h, lum
 
 
 def _next_marker(payload: bytes, j: int) -> int:
@@ -878,7 +812,7 @@ class _ProgressiveState:
                     newval = p1 if reader.bit() else m1
                     k = correct(coef, k, se, r, newval, False)
 
-    def finish(self, qt, reducer=None):
+    def finish(self, qt):
         import numpy as np
 
         w, h, comps = self.frame
@@ -893,7 +827,7 @@ class _ProgressiveState:
                     _render_block(self.coef[my, mx], q, dctm, zr, zc)
                 )
         lum = np.clip(plane[: self.ch, : self.cw], 0, 255) / 255.0
-        return w, h, 0, (reducer or _lum_feature)(lum)
+        return w, h, lum
 
 
 def _gif_lzw_decode(min_code: int, data: bytes, expected: int) -> bytes:
@@ -939,10 +873,10 @@ def _gif_lzw_decode(min_code: int, data: bytes, expected: int) -> bytes:
     return bytes(out[:expected])
 
 
-def decode_gif(payload: bytes, kind: str, reducer=None):
+def decode_gif(payload: bytes):
     """Real GIF decode in pure python + numpy: logical screen
     descriptor → color table → first image's LZW-compressed index
-    stream → palette-mapped RGB → luminance feature. Handles the
+    stream → palette-mapped RGB → luminance plane. Handles the
     interlaced row order; animation beyond the first frame is ignored
     (the still-image semantics every thumbnail pipeline wants)."""
     import struct
@@ -997,401 +931,12 @@ def decode_gif(payload: bytes, kind: str, reducer=None):
                 rows = deinterlaced
             rgb = table[rows]
             lum = rgb.astype(np.float64).mean(axis=2) / 255.0
-            return w, h, 0, (reducer or _lum_feature)(lum)
+            return w, h, lum
         elif block == 0x3B:  # trailer
             break
         else:
             raise ValueError(f"decode_gif: unexpected block 0x{block:02x}")
     raise ValueError("decode_gif: no image descriptor")
-
-
-def _wav_pcm_samples(payload: bytes):
-    """The ONE WAV→mono-float decode (stdlib ``wave`` + numpy), shared
-    by :func:`decode_wav` and :func:`audio_spectral_features` so their
-    format support and error policy cannot drift. Returns
-    ``(samples in [-1, 1], rate, duration_ms)``. 8/16/32-bit PCM;
-    24-bit and compressed WAVs raise ValueError (undecodable DATA for
-    this decoder — the callers' null-row policy applies)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        n_ch, sampwidth, rate, n_frames = (
-            w.getnchannels(), w.getsampwidth(), w.getframerate(), w.getnframes()
-        )
-        frames = w.readframes(n_frames)
-    duration_ms = int(n_frames * 1000 // rate) if rate else 0
-    dtypes = {1: np.uint8, 2: np.dtype("<i2"), 4: np.dtype("<i4")}
-    if sampwidth not in dtypes:
-        raise ValueError(
-            f"wav: sample width {sampwidth} undecodable here (1/2/4 only)"
-        )
-    a = np.frombuffer(frames, dtype=dtypes[sampwidth]).astype(np.float64)
-    if sampwidth == 1:
-        a = (a - 128.0) / 128.0          # unsigned 8-bit centers at 128
-    else:
-        a = a / float(2 ** (8 * sampwidth - 1))
-    if n_ch > 1 and len(a) >= n_ch:
-        a = a[: len(a) - len(a) % n_ch].reshape(-1, n_ch).mean(axis=1)
-    return a, rate, duration_ms
-
-
-def decode_wav(payload: bytes, kind: str):
-    """Real WAV/PCM audio decode: returns (0, 0, duration_ms, feature)
-    where the feature is the 8-bin mean-absolute-amplitude envelope in
-    [0, 1] — the audio twin of the image luminance grid (deterministic,
-    so downstream similarity ops are testable on real samples)."""
-    import numpy as np
-
-    a, _rate, duration_ms = _wav_pcm_samples(payload)
-    if len(a) == 0:
-        return 0, 0, duration_ms, [0.0] * 8
-    env = [float(np.abs(b).mean()) for b in np.array_split(a, min(8, len(a)))]
-    env += [env[-1]] * (8 - len(env))
-    return 0, 0, duration_ms, env[:8]
-
-
-def fake_decode(payload: bytes, kind: str):
-    """Deterministic stand-in: derives pseudo-dimensions and an 8-dim
-    feature from the payload hash, so pipelines are testable
-    end-to-end without codecs."""
-    digest = hashlib.sha256(payload).digest()
-    width = 64 + digest[0]
-    height = 64 + digest[1]
-    duration = int.from_bytes(digest[2:4], "big") if kind != "image" else 0
-    feature = [b / 255.0 for b in digest[4:12]]
-    return width, height, duration, feature
-
-
-def _null_row(mid, kind, data: bytes) -> dict:
-    """The undecodable-payload verdict row (audit with
-    ``feature IS NULL``) — one definition for the empty-payload and
-    decode-failure branches."""
-    return {
-        "media_id": mid,
-        "kind": kind,
-        "n_bytes": len(data),
-        "sha256": hashlib.sha256(data).hexdigest(),
-        "width": None,
-        "height": None,
-        "duration_ms": None,
-        "feature": None,
-    }
-
-
-def extract_features(media: DataFrame, decode_fn=real_decode,
-                     on_undecodable: str = "null") -> DataFrame:
-    """Decode/feature-extract stage: Arrow-batched ``mapInPandas``,
-    partition-parallel, nothing collected. Swap ``decode_fn`` for a
-    richer decoder in a container that ships codec libraries.
-
-    Error policy: with the default ``on_undecodable="null"``, EVERY
-    payload the decoder cannot handle — corrupt bytes, damaged magic,
-    an unsupported sub-format variant (palette PNG, 24-bit WAV), or a
-    format with no decoder at all — yields the null-feature row
-    instead of failing the scan: at corpus scale undecodable files are
-    data to audit (``feature IS NULL``), not a reason to kill the job.
-    ``on_undecodable="raise"`` is the strict mode for small curated
-    sets where an undecodable file IS a bug worth stopping for.
-    """
-    if on_undecodable not in ("null", "raise"):
-        raise ValueError(f"on_undecodable must be null|raise, got "
-                         f"{on_undecodable!r}")
-
-    @worker_task
-    def batches(iterator):
-        for pdf in iterator:
-            out = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                data = bytes(payload) if payload is not None else b""
-                if not data:
-                    out.append(_null_row(mid, kind, data))
-                    continue
-                try:
-                    width, height, duration, feature = decode_fn(data, kind)
-                except Exception:
-                    if on_undecodable == "raise":
-                        raise
-                    out.append(_null_row(mid, kind, data))
-                    continue
-                out.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "n_bytes": len(data),
-                        "sha256": hashlib.sha256(data).hexdigest(),
-                        "width": width,
-                        "height": height,
-                        "duration_ms": duration,
-                        "feature": feature,
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in FEATURE_SCHEMA.fields])
-
-    return media.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int) -> DataFrame:
-    """Video frame-sampling *plan*: one row per frame to decode.
-    Pure JVM (sequence + explode); the decode itself plugs into
-    :func:`extract_features`."""
-    dur = F.coalesce(
-        F.element_at(F.col("meta"), "duration_ms").cast("long"), F.lit(0)
-    )
-    return media.where(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(dur - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ms"),
-    )
-
-
-def _ppm_extent(payload: bytes, start: int) -> int:
-    """Byte offset one past the binary netpbm frame starting at
-    ``start`` (shared header scan + computed pixel-block size)."""
-    magic, width, height, maxval, i = _ppm_header(payload, start)
-    channels = 3 if magic == b"P6" else 1
-    bpp = 2 if maxval > 255 else 1
-    return i + width * height * channels * bpp
-
-
-def split_ppm_frames(payload: bytes) -> list[bytes]:
-    """Split a concatenated-netpbm container (the codec-free 'video'
-    format the tests and any PPM-pipe producer emit: P6/P5 frames laid
-    end to end, like ffmpeg's ``-f image2pipe -vcodec ppm``) into its
-    frame payloads."""
-    frames = []
-    i = 0
-    while i < len(payload) and payload[i:i + 2] in (b"P6", b"P5"):
-        end = _ppm_extent(payload, i)
-        frames.append(payload[i:end])
-        i = end
-    return frames
-
-
-def split_jpeg_frames(payload: bytes) -> list[bytes]:
-    """Split a Motion-JPEG elementary stream (concatenated JPEG
-    images — what MJPEG-over-HTTP cameras and ``ffmpeg -f mjpeg``
-    emit) into its frame payloads. A real marker/segment walk, not a
-    byte search: 0xFFD8 can legitimately appear inside APPn payloads
-    (EXIF thumbnails), so frame boundaries come from the EOI of each
-    properly parsed frame."""
-    import struct
-
-    frames = []
-    i = 0
-    n = len(payload)
-    while i + 4 <= n and payload[i:i + 2] == b"\xff\xd8":
-        start = i
-        j = i + 2
-        while j + 2 <= n:
-            if payload[j] != 0xFF:
-                raise ValueError("split_jpeg_frames: bad marker walk")
-            m = payload[j + 1]
-            if m == 0xFF:  # fill byte
-                j += 1
-                continue
-            if m in (0x01,) or 0xD0 <= m <= 0xD7:
-                j += 2
-                continue
-            if m == 0xD9:  # EOI: frame complete
-                j += 2
-                break
-            if j + 4 > n:
-                raise ValueError("split_jpeg_frames: truncated frame")
-            if m == 0xDA:  # SOS: skip entropy data to next real marker
-                (ln,) = struct.unpack(">H", payload[j + 2:j + 4])
-                j = _next_marker(payload, j + 2 + ln)
-                continue
-            (ln,) = struct.unpack(">H", payload[j + 2:j + 4])
-            j += 2 + ln
-        else:
-            raise ValueError("split_jpeg_frames: truncated frame")
-        frames.append(payload[start:j])
-        i = j
-    return frames
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_n: int = 2,
-                  on_undecodable: str = "null") -> DataFrame:
-    """REAL end-to-end video frame sampling — no codec library: video
-    rows carry concatenated-netpbm payloads (``split_ppm_frames``) or
-    Motion-JPEG elementary streams (``split_jpeg_frames``); every
-    ``every_n``-th frame is sliced out and decoded with the matching
-    real decoder, one feature row per sampled frame. Arrow-batched ``mapInPandas``; a task holds one payload at
-    a time, frames fan out as rows.
-
-    This is the working instance of the frame-sample contract;
-    :func:`frame_sample_plan` remains the JVM-side planning twin for
-    containers that need an external decoder. Error policy matches
-    :func:`extract_features`: with the default ``"null"`` a corrupt
-    container or frame yields ONE null-feature marker row for the
-    payload (frame_idx −1, audit with ``feature IS NULL``) instead of
-    failing the scan.
-    """
-    if on_undecodable not in ("null", "raise"):
-        raise ValueError(f"on_undecodable must be null|raise, got "
-                         f"{on_undecodable!r}")
-    if every_n < 1:
-        # a caller bug, not an undecodable payload — fail loudly here
-        # rather than letting the per-payload catch null-row every row
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-
-    @worker_task
-    def batches(iterator):
-        for pdf in iterator:
-            out = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "video" or payload is None:
-                    continue
-                data = bytes(payload)
-                try:
-                    if data[:2] == b"\xff\xd8":  # Motion-JPEG stream
-                        frames = split_jpeg_frames(data)
-                        frame_decode = decode_jpeg
-                    else:
-                        frames = split_ppm_frames(data)
-                        frame_decode = decode_ppm
-                    rows = []
-                    for idx in range(0, len(frames), every_n):
-                        w, h, _, feat = frame_decode(frames[idx], "image")
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": idx,
-                                "n_frames": len(frames),
-                                "width": w,
-                                "height": h,
-                                "feature": feat,
-                            }
-                        )
-                except Exception:
-                    if on_undecodable == "raise":
-                        raise
-                    out.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": -1,
-                            "n_frames": None,
-                            "width": None,
-                            "height": None,
-                            "feature": None,
-                        }
-                    )
-                    continue
-                out.extend(rows)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FRAME_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(batches, FRAME_SCHEMA)
-
-
-SPECTRAL_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("spectral", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def audio_spectral_features(media: DataFrame, n_bands: int = 8,
-                            frame: int = 512) -> DataFrame:
-    """REAL spectral audio features with numpy's FFT — no codec or DSP
-    library: WAV payloads are PCM-decoded (the shared
-    :func:`_wav_pcm_samples`, so format support cannot drift from
-    ``decode_wav``), framed (hann window), run through ``rfft``, and
-    the mean power spectrum is pooled into ``n_bands`` log-spaced
-    bands (log1p-compressed, unit-max normalized). The audio twin of
-    the image luminance grid one level deeper than the envelope —
-    enough signal for dedup/similarity over an audio corpus. One Arrow
-    ``mapInPandas`` stage, partition-parallel; corrupt/non-WAV
-    payloads emit a null row (the extract_features policy)."""
-    import numpy as np
-
-    # constants of the (frame, n_bands) configuration — computed once,
-    # not per row: the hann window and the log-spaced band edges over
-    # the frame//2 + 1 rfft bins
-    win = np.hanning(frame)
-    edges = np.unique(
-        np.geomspace(1, frame // 2, n_bands + 1).astype(int)
-    )
-
-    @worker_task
-    def batches(iterator):
-        for pdf in iterator:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                row = {"media_id": mid, "n_samples": None,
-                       "sample_rate": None, "spectral": None}
-                try:
-                    a, rate, _dur = _wav_pcm_samples(data)
-                    if len(a) >= frame:
-                        n_frames = len(a) // frame
-                        m = a[: n_frames * frame].reshape(n_frames, frame)
-                        spec = np.abs(np.fft.rfft(m * win, axis=1)) ** 2
-                        power = spec.mean(axis=0)  # mean over time frames
-                        bands = [
-                            float(np.log1p(power[lo:hi].mean()))
-                            for lo, hi in zip(edges[:-1], edges[1:])
-                        ]
-                        bands += [0.0] * (n_bands - len(bands))
-                        top = max(bands) or 1.0
-                        row.update(
-                            n_samples=int(len(a)), sample_rate=int(rate),
-                            spectral=[b / top for b in bands[:n_bands]],
-                        )
-                    else:
-                        row.update(n_samples=int(len(a)),
-                                   sample_rate=int(rate))
-                except Exception:
-                    pass  # null row for non-WAV/corrupt payloads
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in SPECTRAL_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(batches, SPECTRAL_SCHEMA)
-
-
-def decode_luminance(payload: bytes):
-    """Full-resolution luminance plane ``(width, height, lum[h, w])``
-    for any supported IMAGE payload — the shared input of
-    :func:`image_phash`. Reuses every format decoder's exact pixel
-    path via :func:`real_decode`'s explicit ``reducer`` parameter
-    (identity) — no module state is mutated, so concurrent or
-    re-entrant driver-side callers of extract_features/real_decode
-    can never observe a leaked reducer. Non-image payloads (WAV's 1-D
-    envelope) raise ValueError; missing-codec formats raise
-    NotImplementedError like :func:`real_decode`."""
-    import numpy as np
-
-    w, h, _dur, lum = real_decode(payload, "image", reducer=lambda p: p)
-    lum = np.asarray(lum, dtype=np.float64)
-    if lum.ndim != 2:
-        raise ValueError("decode_luminance: payload is not an image")
-    return w, h, lum
 
 
 def _phash64(lum) -> int:
@@ -1437,8 +982,8 @@ def image_phash(media: DataFrame, id_col: str = "media_id",
     decoder produces the same luminance), and lightly-edited copies
     land within a few bits, so the lexical dedup family's banded
     hamming machinery applies to images. One Arrow map stage over the
-    binary column; corrupt payloads yield a null-hash audit row (the
-    extract_features contract), genuinely missing codecs raise."""
+    binary column; corrupt or non-image payloads yield a null-hash
+    audit row, genuinely missing codecs raise."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1546,78 +1091,3 @@ def phash_dup_pairs(hashes: DataFrame, id_col: str = "media_id",
         .where(F.col("hamming") <= int(max_hamming))
         .dropDuplicates(["id_a", "id_b"])
     )
-
-
-def video_phash(media: DataFrame, every_n: int = 1,
-                on_undecodable: str = "null") -> DataFrame:
-    """Per-frame perceptual hashes for video payloads — the video half
-    of the pHash dedup story: split the container exactly like
-    :func:`sample_frames` (concatenated netpbm or Motion-JPEG), hash
-    every ``every_n``-th frame's decoded luminance with
-    :func:`_phash64`. A re-uploaded or re-cut copy shares most frame
-    hashes even when the container differs. Emits ``(media_id,
-    frame_idx, n_frames, phash)``; a corrupt payload yields one
-    null-hash marker row (frame_idx −1), matching the
-    :func:`sample_frames` error policy."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if on_undecodable not in ("null", "raise"):
-        raise ValueError(f"on_undecodable must be null|raise, got "
-                         f"{on_undecodable!r}")
-    if every_n < 1:
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("phash", T.LongType()),
-        ]
-    )
-
-    @worker_task
-    def batches(iterator):
-        for pdf in iterator:
-            out = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "video" or payload is None:
-                    continue
-                data = bytes(payload)
-                try:
-                    if data[:2] == b"\xff\xd8":
-                        frames = split_jpeg_frames(data)
-                    else:
-                        frames = split_ppm_frames(data)
-                    rows = []
-                    for idx in range(0, len(frames), every_n):
-                        _w, _h, lum = decode_luminance(frames[idx])
-                        rows.append((int(mid), idx, len(frames),
-                                     _phash64(lum)))
-                except Exception:
-                    if on_undecodable == "raise":
-                        raise
-                    out.append((int(mid), -1, None, None))
-                    continue
-                if not rows:
-                    # a container that splits into ZERO frames (empty /
-                    # whitespace-only payload) must not silently vanish
-                    # from the dedup audit — emit the same marker row
-                    # as a corrupt payload
-                    out.append((int(mid), -1, None, None))
-                    continue
-                out.extend(rows)
-            # nullable Int64 keeps the 64-bit hashes exact when marker
-            # rows (None) share the batch — see image_phash
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array([r[0] for r in out], dtype="int64"),
-                    "frame_idx": pd.array([r[1] for r in out], dtype="int32"),
-                    "n_frames": pd.array([r[2] for r in out], dtype="Int32"),
-                    "phash": pd.array([r[3] for r in out], dtype="Int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema)

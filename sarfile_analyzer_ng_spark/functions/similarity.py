@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..util import rnd, rnd_np, rnd_threshold, worker_task
 
-# serializes pca_power_topd's session-wide codegen-conf toggle: two
+# serializes pca_power_topd_train's session-wide codegen-conf toggle: two
 # concurrent trainers interleaving get/set could "restore" each
 # other's transient value and leave codegen off for the session
 _CODEGEN_TOGGLE_LOCK = threading.Lock()
@@ -790,99 +790,6 @@ def quantize_embeddings(emb: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def pca_power_top1(
-    emb: DataFrame, id_col: str, vec_col: str, dim: int, iters: int = 3,
-    round_to: int = 6,
-) -> tuple[DataFrame, list[float], list[float]]:
-    """Top principal component of an embedding corpus by distributed
-    POWER ITERATION — the whitening/compression front-end a vector
-    pipeline runs before IVF/PQ (dominant-direction removal is also
-    the standard post-processing for text embeddings, Mu & Viswanath
-    2018). No covariance matrix is ever materialized: each iteration
-    computes scores s_i = (x_i − μ)·v as a codegen map with the
-    current v/μ as LITERAL arrays (the model broadcasts in the plan
-    itself), then u = Σ s_i (x_i − μ) as ONE map-combinable agg keyed
-    by the ``dim`` dimension indices — per iteration: one corpus scan,
-    a 64-key shuffle, ``dim`` floats to the driver (bounded model
-    state, the logreg/kmeans pattern).
-
-    Deterministic cross-engine contract (the q104 rounding-ladder
-    scheme): μ and each u_d round at ``round_to``; dot products and
-    the norm pre-round at 8; v re-normalizes and rounds each
-    iteration, sign-fixed so v[0] ≥ 0 — the DuckDB twin unrolls the
-    same chain and reproduces v and every projection bit-for-bit.
-
-    Returns ``(proj_frame(id, pc1_proj), v, mu)`` — the component and
-    the mean are the MODEL (dim floats each) consumers like
-    :func:`remove_top1` re-apply. Raises on a degenerate
-    (all-identical) corpus where the centered norm collapses to 0.
-    """
-    import numpy as np
-
-    from ..util import rnd_np
-
-    v0 = float(rnd_np(np.float64(1.0 / np.sqrt(dim)), 8))
-    e = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    src = emb.select(F.col(id_col).alias("vid"), e.alias("e"))
-
-    mu_rows = (
-        src.select(F.posexplode("e").alias("d", "x"))
-        .groupBy("d")
-        .agg(rnd(F.avg("x"), round_to).alias("mu"))
-        .collect()
-    )
-    mu = [0.0] * dim
-    for r in mu_rows:
-        mu[r["d"]] = r["mu"]
-
-    def lit_arr(xs):
-        return F.array(*[F.lit(float(x)) for x in xs])
-
-    v = np.full(dim, v0)
-    for _ in range(iters):
-        centered = F.zip_with(F.col("e"), lit_arr(mu), lambda x, y: x - y)
-        s = rnd(
-            F.aggregate(
-                F.zip_with(centered, lit_arr(v), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            8,
-        )
-        u_rows = (
-            src.select(s.alias("s"), F.posexplode(centered).alias("d", "c"))
-            .groupBy("d")
-            .agg(rnd(F.sum(F.col("s") * F.col("c")), round_to).alias("u"))
-            .collect()
-        )
-        u = np.zeros(dim)
-        for r in u_rows:
-            u[r["d"]] = r["u"]
-        nrm = float(rnd_np(np.sqrt(np.sum(u * u)), 8))
-        if nrm == 0.0:
-            raise ValueError(
-                "pca_power_top1: centered corpus has zero variance along "
-                "the iterate — degenerate input"
-            )
-        v = rnd_np(u / nrm, round_to)
-        if v[0] < 0:
-            v = -v
-    centered = F.zip_with(F.col("e"), lit_arr(mu), lambda x, y: x - y)
-    proj = rnd(
-        F.aggregate(
-            F.zip_with(centered, lit_arr(v), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        round_to,
-    )
-    return (
-        src.select(F.col("vid").alias(id_col), proj.alias("pc1_proj")),
-        [float(x) for x in v],
-        [float(x) for x in mu],
-    )
-
-
 def _pca_lit_arr(xs):
     # ONE ndarray literal, not dim F.lit py4j round-trips (r11:
     # ~1100 driver-side lit() calls were ~0.7 s of q118's wall;
@@ -905,11 +812,20 @@ def pca_power_topd_train(
     emb: DataFrame, id_col: str, vec_col: str, dim: int,
     n_components: int = 2, iters: int = 3, round_to: int = 6,
 ) -> tuple[list[list[float]], list[float], DataFrame]:
-    """Training half of :func:`pca_power_topd` — top-D principal
-    components by power iteration WITH DEFLATION, the full
+    """Top-D principal components of an embedding corpus by
+    distributed power iteration WITH DEFLATION, the full
     All-but-the-Top prescription (Mu & Viswanath 2018 remove the top
-    D ≈ dim/100 directions, not just one; r7 shipped only top-1).
-    Component k runs :func:`pca_power_top1`'s exact iterate over
+    D ≈ dim/100 directions, not just one). No covariance matrix is
+    ever materialized: each iteration computes scores s_i = c_i·v as
+    a map with the current v as a LITERAL array (the model broadcasts
+    in the plan itself), then u = Σ s_i c_i as ONE map-combinable agg
+    keyed by the ``dim`` dimension indices. Deterministic
+    cross-engine contract (the q104 rounding-ladder scheme): μ and
+    each u_d round at ``round_to``; dot products and the norm
+    pre-round at 8; v re-normalizes and rounds each iteration,
+    sign-fixed so v[0] ≥ 0 — the DuckDB twin unrolls the same chain.
+
+    Component k runs that iterate over
     vectors DEFLATED by components 1..k−1: the deflated vector is
     c − Σ_j p_j·v_j applied sequentially (p_j = the rnd8 dot with
     component j — the score-ladder rounding), so every deflation
@@ -923,8 +839,8 @@ def pca_power_topd_train(
     top-1 kernel, convergence of component k is independent of k+1,
     and the oracle chain stays a mechanical unroll.
 
-    Split out of :func:`pca_power_topd` (r12) so q109/q112/q118 can
-    share ONE training per session instead of three: returns
+    The trainer is separate from :func:`pca_topd_project` so
+    q109/q112/q118 share ONE training per session: returns
     ``([v_1..v_D], mu, centered)`` where ``centered`` is the
     locally-checkpointed (vid, c = x − μ) frame the projection ladder
     reads (materialized — consumers neither re-scan parquet nor
@@ -995,7 +911,7 @@ def pca_power_topd_train(
                 nrm = float(rnd_np(np.sqrt(np.sum(u * u)), 8))
                 if nrm == 0.0:
                     raise ValueError(
-                        "pca_power_topd: centered corpus has zero variance "
+                        "pca_power_topd_train: centered corpus has zero variance "
                         "along the iterate — degenerate input or "
                         "n_components > rank"
                     )
@@ -1032,14 +948,13 @@ def pca_power_topd_train(
 def pca_topd_project(centered: DataFrame, id_col: str,
                      components: list[list[float]],
                      round_to: int = 6) -> DataFrame:
-    """Projection half of :func:`pca_power_topd`: the pc1..pcD ladder
-    over a centered (vid, c) frame from :func:`pca_power_topd_train`.
+    """The pc1..pcD projection ladder over a centered (vid, c) frame
+    from :func:`pca_power_topd_train`.
     Reading the CHECKPOINTED centered frame (its c IS x − μ,
     materialized) means the output job neither re-reads parquet nor
     re-runs the dim-literal centering (r11 plan cut — values
     bit-identical, the checkpoint stores the same doubles). With
-    ``components[:1]`` this is exactly :func:`pca_power_top1`'s
-    projection arithmetic (the q109 output)."""
+    ``components[:1]`` this is the top-1 projection q109 outputs."""
     cexpr = F.col("c")
     proj_cols = []
     for k, v in enumerate(components):
@@ -1050,59 +965,14 @@ def pca_topd_project(centered: DataFrame, id_col: str,
     return centered.select(F.col("vid").alias(id_col), *proj_cols)
 
 
-def pca_power_topd(
-    emb: DataFrame, id_col: str, vec_col: str, dim: int,
-    n_components: int = 2, iters: int = 3, round_to: int = 6,
-) -> tuple[DataFrame, list[list[float]], list[float]]:
-    """Train + project — see :func:`pca_power_topd_train` (the
-    deflated power-iteration trainer) and :func:`pca_topd_project`
-    (the output ladder). Returns
-    ``(proj_frame(id, pc1_proj..pcD_proj), [v_1..v_D], mu)``."""
-    components, mu, w0 = pca_power_topd_train(
-        emb, id_col, vec_col, dim, n_components=n_components,
-        iters=iters, round_to=round_to,
-    )
-    return (pca_topd_project(w0, id_col, components, round_to),
-            components, mu)
-
-
-def remove_top1(emb: DataFrame, id_col: str, vec_col: str, dim: int,
-                iters: int = 3, round_to: int = 6) -> DataFrame:
-    """All-but-the-Top embedding post-processing (Mu & Viswanath 2018,
-    arXiv:1702.01417): subtract the corpus mean and project out the
-    top principal direction — the standard cleanup that removes the
-    dominant "common direction" text embeddings share, measurably
-    sharpening cosine-based dedup/ANN. Composes :func:`pca_power_top1`
-    (the model: dim floats of μ and v, closed over into the kernel —
-    broadcast with the task) with ONE Arrow map stage: the residual
-    ``r = (x − μ) − p·v`` is a batch matvec + rank-1 update — no
-    join, no shuffle, corpus streams once. A JVM zip_with would
-    re-evaluate the per-row dot product p inside the per-element
-    lambda (O(dim²)/row in the interpreted HOF path); the Arrow
-    kernel computes p once per row, vectorized. Every value rounds
-    via ``rnd_np`` (the HALF_UP cross-engine ladder), so the DuckDB
-    twin reproduces the arrays bit-for-bit."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..util import rnd_np
-
-    _proj_df, v, mu = pca_power_top1(
-        emb, id_col, vec_col, dim, iters=iters, round_to=round_to
-    )
-    return apply_top1_removal(emb, id_col, vec_col, v, mu,
-                              round_to=round_to)
-
-
 def apply_top1_removal(emb: DataFrame, id_col: str, vec_col: str,
                        v: list[float], mu: list[float],
                        round_to: int = 6) -> DataFrame:
-    """Apply a SAVED All-but-the-Top model (``v``, ``mu`` from
-    :func:`pca_power_top1` / :func:`load_pca_model`) without
-    retraining — the operational split :func:`save_pq_index` gives the
-    PQ family: new embedding batches clean against the frozen model.
-    One Arrow map stage, no join, no shuffle."""
+    """Apply a trained All-but-the-Top model (component ``v`` and
+    mean ``mu``) without retraining: the residual
+    ``r = (x − μ) − p·v`` is a batch matvec + rank-1 update per Arrow
+    batch, every value rounded via ``rnd_np`` (the HALF_UP
+    cross-engine ladder). One map stage, no join, no shuffle."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -1134,25 +1004,6 @@ def apply_top1_removal(emb: DataFrame, id_col: str, vec_col: str,
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_e"),
     )
     return src.mapInPandas(kernel, schema)
-
-
-def save_pca_model(spark, path: str, v: list[float],
-                   mu: list[float]) -> None:
-    """Persist an All-but-the-Top model as one tiny parquet table
-    ``(d, v, mu)`` — dim rows. Training jobs write it once;
-    ingest/cleanup jobs :func:`load_pca_model` and apply to every new
-    batch without touching the training corpus (the PQ-index
-    operational split)."""
-    rows = [(d, float(v[d]), float(mu[d])) for d in range(len(v))]
-    spark.createDataFrame(rows, "d int, v double, mu double") \
-        .coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_pca_model(spark, path: str) -> tuple[list[float], list[float]]:
-    """Load a :func:`save_pca_model` table → ``(v, mu)``."""
-    rows = sorted(spark.read.parquet(path).collect(),
-                  key=lambda r: r["d"])
-    return [r["v"] for r in rows], [r["mu"] for r in rows]
 
 
 def semdedup(emb: DataFrame, id_col: str, vec_col: str,
@@ -1676,288 +1527,6 @@ def ann_topk_ivfpq(emb: DataFrame, queries: DataFrame, id_col: str,
     return (
         refined.withColumn("rank", F.row_number().over(w2).cast("long"))
         .where(F.col("rank") <= k)
-    )
-
-
-def pq_codes_wide(codes: DataFrame, id_col: str, m: int) -> DataFrame:
-    """Pack the long ``(id, sub, code)`` frame into one row per vector
-    ``(id, codes array<int>)`` — the layout the Arrow ADC kernel
-    consumes (and the layout a real code store persists: m small ints
-    per vector). One shuffle keyed by the uniform vector id. A vector
-    with missing/extra subspace rows raises instead of feeding the
-    kernel a ragged matrix."""
-    packed = F.transform(
-        F.array_sort(F.collect_list(F.struct("sub", "code"))),
-        lambda s: s["code"].cast("int"),
-    )
-    return (
-        codes.groupBy(id_col)
-        .agg(packed.alias("codes"))
-        .select(
-            id_col,
-            F.when(F.array_size("codes") == m, F.col("codes"))
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(f"pq_codes_wide: expected {m} codes, got "),
-                        F.array_size("codes").cast("string"),
-                    )
-                )
-            )
-            .alias("codes"),
-        )
-    )
-
-
-def ann_topk_pq_arrow(emb: DataFrame, queries: DataFrame, id_col: str,
-                      vec_col: str, dim: int, codebooks: DataFrame,
-                      codes: DataFrame, m: int = 4, k: int = 5,
-                      dist_round: int = 6,
-                      partial_top: int | None = None,
-                      max_dtab_cells: int = 8_000_000,
-                      codes_wide: DataFrame | None = None,
-                      n_queries_hint: int | None = None,
-                      n_codebooks_hint: int | None = None) -> DataFrame:
-    """The production-shape ADC scorer: same ranking contract as
-    :func:`ann_topk_pq`, different physical plan. The distance table
-    becomes a dense numpy array broadcast to every task; each Arrow
-    batch of packed codes is scored with pure table lookups
-    (``dtab[q, j, codes[:, j]]`` summed over j) and only the
-    PER-PARTITION top ``partial_top`` rows per query are emitted — so
-    the shuffle carries partitions × Q × R rows instead of the n × Q
-    scored stream the join/agg composition moves. The global top-k
-    re-applies the rounding ladder and ranks (adc asc, id asc),
-    identical to the DataFrame path: the partial cut orders by
-    (raw distance, id) — the same tie order as the final rank — with a
-    max(4k, 64) margin, so ulp-level reorderings (collapsed later by
-    the 8-digit pre-round) cannot change top-k membership.
-
-    ``codes_wide`` (pre-packed ``(id, codes array<int>)`` from
-    :func:`pq_codes_wide`) skips the packing agg — the sharded wrapper
-    packs once and reuses it across shards. ``n_queries_hint`` /
-    ``n_codebooks_hint`` are caller-known (upper-bound) sizes that
-    skip the guard's two eager count() actions; the dtab shape itself
-    always comes from the collected rows, never the hints.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    R = partial_top if partial_top is not None else max(4 * k, 64)
-    spark = emb.sparkSession
-    # CONTRACT: the query set is broadcast-sized — the Q × m × K
-    # distance table is collected to the driver and broadcast to every
-    # task (same contract the brute-force ANN documents for its query
-    # broadcast). Enforce it BEFORE the collect: two cheap scalar
-    # counts (the query frame and the ≤ m·K codebook frame) bound the
-    # table at Q·m·K float64 cells. Oversized query sets must shard
-    # (score in Q-chunks) rather than silently OOM the driver.
-    n_q = n_queries_hint if n_queries_hint is not None else queries.count()
-    n_cb = (n_codebooks_hint if n_codebooks_hint is not None
-            else codebooks.count())
-    if n_q * n_cb > max_dtab_cells:
-        raise ValueError(
-            f"ann_topk_pq_arrow: distance table would hold "
-            f"{n_q * n_cb} cells ({n_q} queries x {n_cb} codebook "
-            f"entries) > max_dtab_cells={max_dtab_cells}; shard the "
-            "query set and union the per-shard top-k instead"
-        )
-    # dense distance table: rows = query order, dtab[qi, j, c]
-    qsub = _subspaces(queries, id_col, vec_col, dim, m).select(
-        F.col("vid").alias("query_id"), "sub", F.col("e").alias("qe")
-    )
-    dtab_rows = (
-        qsub.join(F.broadcast(codebooks), "sub")
-        .select(
-            "query_id", "sub", F.col("cluster").alias("code"),
-            rnd(l2sq(F.col("qe"), F.col("c")), dist_round).alias("dsub"),
-        )
-        .collect()
-    )
-    if not dtab_rows:  # empty query set -> empty result, like the
-        #                DataFrame ANN operators
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, adc double, rank long"
-        )
-    qids = sorted({r["query_id"] for r in dtab_rows})
-    qpos = {q: i for i, q in enumerate(qids)}
-    n_codewords = 1 + max(r["code"] for r in dtab_rows)
-    dtab = np.zeros((len(qids), m, n_codewords))
-    for r in dtab_rows:
-        dtab[qpos[r["query_id"]], r["sub"], r["code"]] = r["dsub"]
-    b_dtab = spark.sparkContext.broadcast(dtab)
-    b_qids = spark.sparkContext.broadcast(np.asarray(qids, dtype=np.int64))
-
-    wide = codes_wide if codes_wide is not None \
-        else pq_codes_wide(codes, id_col, m)
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("raw", T.DoubleType()),
-        ]
-    )
-
-    @worker_task
-    def score(iterator):
-        tab = b_dtab.value
-        qv = b_qids.value
-        nq = tab.shape[0]
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            vids = pdf[id_col].to_numpy().astype(np.int64)
-            # dists[qi, row] = sum_j tab[qi, j, cm[row, j]]
-            dists = np.zeros((nq, len(vids)))
-            for j in range(cm.shape[1]):
-                dists += tab[:, j, :][:, cm[:, j]]
-            frames = []
-            for qi in range(nq):
-                d = dists[qi]
-                mask = vids != qv[qi]  # self-match excluded like ann_topk_pq
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                # (distance, id) lexicographic cut — the SAME tie order
-                # as the final rank, so a >R-row ADC tie inside one
-                # partition still surrenders exactly the rows the
-                # global (adc asc, id asc) ranking needs
-                take = idx[np.lexsort((vids[idx], d[idx]))[:R]]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qv[qi],
-                            "neighbor_id": vids[take],
-                            "raw": d[take],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    partials = wide.mapInPandas(score, out_schema)
-    scored = partials.select(
-        "query_id", "neighbor_id", rnd(F.col("raw"), dist_round).alias("adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
-
-
-# --------------------------------------------------------------------
-# Vector-index persistence: train once, encode/search forever
-# --------------------------------------------------------------------
-
-def ann_topk_pq_arrow_sharded(emb: DataFrame, queries: DataFrame,
-                              id_col: str, vec_col: str, dim: int,
-                              codebooks: DataFrame, codes: DataFrame,
-                              m: int = 4, k: int = 5, dist_round: int = 6,
-                              partial_top: int | None = None,
-                              max_dtab_cells: int = 8_000_000) -> DataFrame:
-    """Query-set sharding for :func:`ann_topk_pq_arrow` — the path its
-    oversized-query-set error points at. Per-query top-k is
-    independent across queries, so slicing the query set into chunks
-    that each respect the Q·m·K distance-table broadcast bound and
-    unioning the per-shard results is EXACTLY the unsharded ranking
-    (no cross-shard interaction to reconcile).
-
-    Shards are contiguous id ranges, never hash buckets, so no shard
-    can skew past the bound. The range BOUNDARIES are computed ONCE —
-    one ordered id pass collecting every ``q_per_shard``-th id (shard
-    count longs to the driver, not the query rows) — and each shard
-    is then a pushdown-friendly id-range filter on the ORIGINAL query
-    frame: no global sort is re-executed per shard. The packing agg
-    (:func:`pq_codes_wide`, a groupBy shuffle over the whole codes
-    frame) runs ONCE: the wide frame is persisted, materialized, and
-    handed to every shard call, so S shards pay one packing shuffle +
-    S cached scans, not S shuffles. The per-shard guard counts are
-    skipped too — shard sizes are ≤ ``q_per_shard`` by construction
-    and the codebook count is already known here. The honest cost
-    that remains: the packed-codes CACHE streams once per shard — at
-    Q beyond the broadcast bound that is the price of exact ADC
-    scoring; if the query set is a whole second corpus, flip the
-    roles or use the IVF-probed :func:`ann_topk_ivfpq` instead.
-    """
-    from pyspark.sql import Window
-
-    n_cb = codebooks.count()  # m × K rows
-    if max_dtab_cells < n_cb:
-        raise ValueError(
-            f"ann_topk_pq_arrow_sharded: max_dtab_cells={max_dtab_cells} "
-            f"is smaller than ONE query's distance-table rows ({n_cb} "
-            "codebook entries) — no sharding can satisfy the bound; "
-            "raise max_dtab_cells or shrink m/k"
-        )
-    q_per_shard = max(1, int(max_dtab_cells // n_cb))
-    rn = F.row_number().over(Window.orderBy(F.col("_qid")))
-    # shard-opening ids: rows 1, q+1, 2q+1, ... of the ordered id pass
-    openers = [
-        r[0]
-        for r in queries.select(F.col(id_col).alias("_qid"))
-        .select("_qid", rn.alias("_rn"))
-        .where((F.col("_rn") - 1) % q_per_shard == 0)
-        .orderBy("_rn")
-        .collect()
-    ]
-    if not openers:  # empty query set
-        return ann_topk_pq_arrow(
-            emb, queries, id_col, vec_col, dim, codebooks, codes, m=m,
-            k=k, dist_round=dist_round, partial_top=partial_top,
-            max_dtab_cells=max_dtab_cells, n_codebooks_hint=n_cb,
-        )
-    # pack once, reuse across every shard: persist + eager count so
-    # each shard's scan hits the cache instead of re-running the
-    # groupBy packing shuffle (S shards = 1 shuffle, not S)
-    wide = pq_codes_wide(codes, id_col, m)
-    if len(openers) > 1:
-        wide = wide.persist()
-        wide.count()
-    out = None
-    for i, lo in enumerate(openers):
-        part = queries.where(F.col(id_col) >= F.lit(lo))
-        if i + 1 < len(openers):
-            part = part.where(F.col(id_col) < F.lit(openers[i + 1]))
-        res = ann_topk_pq_arrow(
-            emb, part, id_col, vec_col, dim, codebooks, codes, m=m, k=k,
-            dist_round=dist_round, partial_top=partial_top,
-            max_dtab_cells=max_dtab_cells, codes_wide=wide,
-            n_queries_hint=q_per_shard, n_codebooks_hint=n_cb,
-        )
-        out = res if out is None else out.unionByName(res)
-    if len(openers) > 1:
-        # expose the persisted packed frame for functions.dedup.release
-        out._cached_inputs = [wide]
-    return out
-
-
-def save_pq_index(path: str, codebooks: DataFrame, codes: DataFrame,
-                  id_col: str) -> None:
-    """Persist a PQ index as two parquet tables: ``<path>/codebooks``
-    (m·k rows — the model) and ``<path>/codes`` (m small ints per
-    vector — the compressed corpus). This is the operational split a
-    vector store needs: new batches encode against the SAVED codebooks
-    (:func:`pq_codes`) and append to the codes table without
-    retraining, and search jobs load codes without touching the raw
-    vectors. Codes write id-sorted so parquet row-group min/max stats
-    prune id-range scans."""
-    codebooks.write.mode("overwrite").parquet(f"{path}/codebooks")
-    (codes.repartitionByRange(F.col(id_col))
-          .sortWithinPartitions(id_col, "sub")
-          .write.mode("overwrite").parquet(f"{path}/codes"))
-
-
-def load_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Load a persisted PQ index → (codebooks, codes). The codebook
-    frame is m·k rows — cache/broadcast it freely; the codes frame
-    streams like any parquet scan."""
-    return (
-        spark.read.parquet(f"{path}/codebooks"),
-        spark.read.parquet(f"{path}/codes"),
     )
 
 

@@ -1314,77 +1314,6 @@ def bpe_train(df: DataFrame, text_col: str, num_merges: int = 10,
     return merges
 
 
-def bpe_encode(df: DataFrame, text_col: str, id_col: str,
-               merges: list[tuple[str, str, int]]) -> DataFrame:
-    """Tokenize with a :func:`bpe_train` merge table: per document,
-    apply the merges in rank order and count the resulting tokens —
-    the honest token counter once a real tokenizer exists (vs the
-    regex approximation in :func:`token_counts`). The merge table
-    broadcasts (it is ``num_merges`` rows); encoding is one Arrow map
-    stage over the corpus, no shuffle.
-
-    The per-merge rewrite runs once per WORD TYPE, not per word
-    occurrence: a task-local memo caches word → token count, so the
-    Python-loop cost is O(word-types × merges) per task — word types
-    repeat heavily in natural text (the vocab-frame trainer exploits
-    the same skew), which keeps a real 32k-merge table tractable. The
-    memo is capped (cleared at 2M entries) so an adversarial
-    all-unique-words partition cannot grow task memory unboundedly."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    ranked = [(a, b) for a, b, _ in merges]
-    schema = T.StructType(
-        [
-            T.StructField("_id", T.LongType()),
-            T.StructField("n_bpe_tokens", T.LongType()),
-        ]
-    )
-
-    @worker_task
-    def encode(it):
-        memo: dict[str, int] = {}
-
-        def word_tokens(w: str) -> int:
-            n = memo.get(w)
-            if n is not None:
-                return n
-            s = list(w)
-            for a, b in ranked:
-                i, res = 0, []
-                while i < len(s):
-                    if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                        res.append(a + b)
-                        i += 2
-                    else:
-                        res.append(s[i])
-                        i += 1
-                s = res
-            n = len(s)
-            if len(memo) >= 2_000_000:
-                memo.clear()
-            memo[w] = n
-            return n
-
-        for pdf in it:
-            counts = []
-            for text in pdf["_t"]:
-                # NULL text arrives as None/NaN — 0 tokens, never the
-                # literal string "None"
-                if not isinstance(text, str):
-                    text = ""
-                counts.append(sum(word_tokens(w)
-                                  for w in text.lower().split()))
-            yield pd.DataFrame({"_id": pdf["_id"], "n_bpe_tokens": counts})
-
-    src = fan_out(df).select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
-    )
-    return src.mapInPandas(encode, schema).select(
-        F.col("_id").alias(id_col), "n_bpe_tokens"
-    )
-
-
 def budget_select(df: DataFrame, text_col: str, id_col: str,
                   source_col: str, budget_tokens: int,
                   approx: bool = False,

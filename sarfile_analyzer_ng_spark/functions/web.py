@@ -67,10 +67,6 @@ PSL_PATH = Path(__file__).resolve().parent.parent / (
 # tracking parameters dropped by rule 5 (one alternation, anchored)
 TRACKING_PARAM_RE = r"^(utm_[A-Za-z0-9_]*|gclid|fbclid|msclkid|mc_eid|ref)(=.*)?$"
 
-# pre-PSL heuristic retained ONLY for the r11-era oracle-twin tests
-# that pin the divergence contract (see registrable_domain_lite)
-SECOND_LEVEL_RE = r"\.(co|com|org|net|ac|gov|edu)\.[a-z][a-z]$"
-
 
 def _psl_rule_sets() -> dict[str, frozenset[str]]:
     """Parse the checked-in PSL snapshot once per process into the
@@ -294,18 +290,4 @@ def registrable_domain(host: Column) -> Column:
         in_set(s3, "exc3"), in_set(s2, "exc2"),
         in_set(s3, "exact3"), in_set(s2, "wild2"),
         in_set(s2, "exact2"), in_set(s1, "wild1"),
-    )
-
-
-def registrable_domain_lite(host: Column) -> Column:
-    """The pre-r12 public-suffix-LITE heuristic (last two labels, or
-    three on the ``co.uk``-style literal set) — kept so tests can pin
-    exactly where the PSL upgrade changed verdicts (co.de, *.ck,
-    com.mt, …)."""
-    three = F.regexp_extract(host, r"([^.]+\.[^.]+\.[^.]+)$", 1)
-    two = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
-    return (
-        F.when(host.rlike(SECOND_LEVEL_RE) & (three != ""), three)
-        .when(two != "", two)
-        .otherwise(host)
     )

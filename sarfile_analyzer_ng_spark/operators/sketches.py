@@ -5,8 +5,7 @@ The exact forms (describe, percentiles, countDistinct) are what the
 oracle gate verifies; these are their bounded-memory, one-pass
 equivalents for interactive use at full scale. Each sketch documents
 what it trades: HLL++ (relative error ~rsd), KLL-style quantiles
-(rank error ~1/accuracy), deterministic hash sampling (exact
-reproducibility, approximate fraction).
+(rank error ~1/accuracy).
 """
 
 from __future__ import annotations
@@ -48,43 +47,6 @@ def approx_percentiles(df: DataFrame, value_col: str, by: list[str],
           .alias("p" + f"{p * 100:g}".replace(".", "_"))
           for i, p in enumerate(probs)],
     )
-
-
-def hash_sample(df: DataFrame, key_col: str, percent: int,
-                seed: int = 0, portable: bool = False) -> DataFrame:
-    """Deterministic ~percent% sample by key hash: reproducible across
-    runs/engines/partitions, and consistent per key (every row of a
-    sampled key is kept — correct for per-entity sampling).
-
-    ``portable=True`` swaps xxhash64 for the engine-portable
-    multiplicative family (util.shard_hash — the JSONL-shard /
-    packing convention), so the EXACT sampled row set replays in ANSI
-    SQL. Spark's outer ``pmod`` is always non-negative while ANSI
-    ``%`` preserves sign (the INNER mod is signed in both engines —
-    Spark ``%`` and DuckDB ``%`` both follow the dividend), so the
-    replay must wrap the outer mod exactly as SQL_Q50 does — with
-    ``k = key + seed`` (seed folds in additively, so k can go
-    negative even for non-negative keys):
-
-        ``(((k % 1000003) * 2654435761) % 100 + 100) % 100
-        < percent``
-
-    Integer keys only on that path."""
-    if portable:
-        from ..util import shard_hash
-
-        bucket = shard_hash(F.col(key_col) + F.lit(seed), 100)
-    else:
-        bucket = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)), F.lit(100))
-    return df.where(bucket < percent)
-
-
-def frequent_items(df: DataFrame, col: str, support: float = 0.01) -> DataFrame:
-    """Heavy hitters with frequency above ``support`` — the skew
-    diagnosis tool (which device/key needs salting). Spark's
-    single-pass FreqItems (Karp et al); may contain false positives,
-    never false negatives."""
-    return df.freqItems([col], support)
 
 
 def bloom_build(df: DataFrame, key_col: str, m_bits: int = 1 << 16,
@@ -252,8 +214,8 @@ def mg_topk(df: DataFrame, col: str, k: int = 20,
     al. 2012 prove the summaries mergeable) — the bounded-state
     frequent-items twin of the count-min sketch (CMS answers "how
     often is X?", this answers "WHAT are the top K?"), replacing
-    ``frequent_items``'s Spark-internal approximation with an
-    engine-reproducible summary.
+    Spark's ``freqItems`` approximation with an engine-reproducible
+    summary.
 
     Two-level construction, exactly the distributed deployment: items
     shard by portable hash (``util.shard_hash`` over the md5 32-bit

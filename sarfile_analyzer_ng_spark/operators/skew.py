@@ -2,19 +2,14 @@
 
 sar data is naturally skewed — the `all` pseudo-CPU and a handful of
 busy devices dominate row counts, and at 100 TB a single hot key pins
-one reducer. Two standard remedies, expressed as reusable plans:
-
-- **salted aggregation**: split each key into N salt shards, partially
-  aggregate per shard (map-side + small shuffle), then merge shards.
-  Results are bit-identical to the direct groupBy for decomposable
-  aggregates; only the shuffle distribution changes.
-- **replicated salt join**: for a join whose LEFT side has hot keys,
-  shard the left by salt and replicate the (small) right side once per
-  shard, so a hot key spreads over N reducers.
+one reducer. The standard remedy for aggregations is **salted
+aggregation**: split each key into N salt shards, partially aggregate
+per shard (map-side + small shuffle), then merge shards. Results are
+bit-identical to the direct groupBy for decomposable aggregates; only
+the shuffle distribution changes.
 
 AQE's skew-join splitting (enabled in session.py) covers sort-merge
-joins at runtime; these operators cover aggregations and the cases
-where the planner must be forced up front.
+joins at runtime.
 """
 
 from __future__ import annotations
@@ -59,24 +54,3 @@ def salted_agg(df: DataFrame, keys: list[str], aggs: list[SaltedAgg],
     return partial.groupBy(*keys).agg(
         *[_MERGE[kind](alias).alias(alias) for kind, _, alias in aggs]
     )
-
-
-def replicated_salt_join(big: DataFrame, small: DataFrame, on: list[str],
-                         num_salts: int = 8) -> DataFrame:
-    """Join with hot keys on the big side: big rows get a deterministic
-    salt shard; the small side is replicated once per shard (explode of
-    a 0..N-1 array — N× its size, still tiny); the join key becomes
-    (on, salt) so one hot key lands on N reducers."""
-    salt_src = [c for c in big.columns if c not in on]
-    if not salt_src:
-        raise ValueError(
-            "replicated_salt_join: the big side has no non-join columns "
-            "to derive a salt from"
-        )
-    big_s = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in salt_src]), F.lit(num_salts))
-    )
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<long>"))
-    )
-    return big_s.join(small_s, on=[*on, "_salt"]).drop("_salt")

@@ -2645,9 +2645,6 @@ FROM events GROUP BY ROLLUP(event_type)
 """
 
 
-DECOR = " contact user{id}@example.com \tsee https://ex.am/{id}?x=1  end"
-
-
 def q42_text_clean(spark, sf_dir):
     """Corpus cleaning (PII/URL redaction + whitespace normalization):
     documents get a deterministic decoration (email, URL, tab, double
@@ -2906,13 +2903,11 @@ FROM packed
 
 def q74_shard_manifest(spark, sf_dir):
     """Export manifest: per-shard document/token/byte totals and id
-    range for the deterministic JSONL sharding
-    (operators/io.py:write_jsonl_shards) — the index a training job
-    reads to plan loaders without touching shard payloads. Both sides
-    call the one shard_hash helper (util.py), so directory shard=K of
-    the export holds exactly this manifest's shard-K rows —
-    drift-proof by construction, verified in
-    tests/test_io.py::test_manifest_indexes_export."""
+    range for a deterministic JSONL sharding in which document d goes
+    to shard ``util.shard_hash(doc_id, n)`` — the index a training job
+    reads to plan loaders without touching shard payloads. An export
+    that places rows with the same shard_hash helper holds exactly
+    this manifest's shard-K rows in shard K."""
     from .util import shard_hash
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3298,8 +3293,8 @@ def q50_sketch_stats(spark, sf_dir):
     """Sketch statistics over events, oracle-portable form (r8 — the
     q54 bound-gate pattern, extended): the exact anchors — distinct
     users, exact median, and the row count of the ENGINE-PORTABLE
-    deterministic hash sample (operators/sketches.py:hash_sample
-    portable=True, the util.shard_hash family) — are value-hash
+    deterministic hash sample (a ``util.shard_hash`` bucket of the
+    user id below the sample percent) — are value-hash
     oracled, and the HLL / quantile-sketch estimates must sit within
     their documented bounds (booleans the oracle expects true). The
     raw estimates are engine-internal by design; this was the last
@@ -4183,8 +4178,7 @@ def q103_tokenizer_fertility(spark, sf_dir):
     tokenizer team reads per language/source before committing a vocab
     (high fertility = the tokenizer fragments that source; bytes/token
     = compression). Uses the deterministic BPE-ish pre-tokenizer so
-    every cell is value-hash oracled; the trained-BPE variant runs via
-    bpe_encode (rows-only by nature)."""
+    every cell is value-hash oracled."""
     docs = _t(spark, sf_dir, "documents")
     toks = TX.token_counts(docs, "text")
     n_bytes = F.octet_length("text")  # UTF-8 bytes, not characters
@@ -4570,7 +4564,8 @@ def _pca_shared(spark, sf_dir):
 
 def q109_pca_projection(spark, sf_dir):
     """Top-principal-component projection by distributed power
-    iteration (functions/similarity.py:pca_power_top1) — an ORACLED
+    iteration (functions/similarity.py:pca_power_topd_train, one
+    component) — an ORACLED
     iterative algorithm like q104's logreg: the DuckDB twin unrolls
     the μ → (score, update, normalize, sign-fix) chain per iteration
     with the same rounding ladder and reproduces every projection
@@ -4584,8 +4579,9 @@ def q109_pca_projection(spark, sf_dir):
 
 def _sql_pca(iters: int = PCA_ITERS, dim: int = PCA_DIM) -> str:
     """The power iteration as one CTE chain — the exact arithmetic
-    pca_power_top1 runs: μ rnd6; per iteration s rnd8, u rnd6, norm
-    rnd8, v rnd6 with a v[0] ≥ 0 sign fix applied AFTER rounding."""
+    pca_power_topd_train runs for its first component: μ rnd6; per
+    iteration s rnd8, u rnd6, norm rnd8, v rnd6 with a v[0] ≥ 0 sign
+    fix applied AFTER rounding."""
     import math
 
     v0 = repr(round(1.0 / math.sqrt(dim), 8))
@@ -4627,16 +4623,14 @@ SQL_Q109 = _sql_pca()
 
 def q112_remove_top_direction(spark, sf_dir):
     """All-but-the-Top residuals (functions/similarity.py:
-    remove_top1, Mu & Viswanath 2018): subtract the corpus mean and
+    apply_top1_removal, Mu & Viswanath 2018): subtract the corpus mean and
     project out the q109 component — one Arrow map stage over the
     corpus; the full (mean, iterate, normalize, project, subtract)
     chain is value-hash oracled ON THE RESIDUAL ARRAYS, serialized as
     micro-unit integers (rnd6 × 10⁶ → BIGINT, the q75 comma-string
     convention — double→string formatting differs across engines,
     int→string does not). Since r12 the (v, mu) model comes from the
-    shared session training (``_pca_shared``); the Arrow apply kernel
-    is unchanged (apply_top1_removal — remove_top1 minus the
-    retraining)."""
+    shared session training (``_pca_shared``)."""
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     comps, mu, _w0 = _pca_shared(spark, sf_dir)
     r = S.apply_top1_removal(emb, "vec_id", "embedding",
@@ -4683,7 +4677,7 @@ PCA_TOPD = 2
 
 def q118_pca_topd(spark, sf_dir):
     """Top-D principal components by power iteration WITH DEFLATION
-    (functions/similarity.py:pca_power_topd — the full All-but-the-Top
+    (functions/similarity.py:pca_power_topd_train — the full All-but-the-Top
     prescription, r8 closing the 'PCA is top-1 only' gap): component
     k iterates over vectors deflated by components 1..k−1, every
     deflation step using the rnd8 score ladder so the WHOLE
@@ -4702,7 +4696,7 @@ def _sql_pca_topd(n_components: int = PCA_TOPD, iters: int = PCA_ITERS,
     q109's (score rnd8, update rnd6, norm rnd8, v rnd6, sign-fix)
     iterate over cx{k−1}, then the rnd8 deflation projection builds
     cx{k}. Final projections: rnd6 dot of each component with ITS
-    deflated input — exactly pca_power_topd's output arithmetic."""
+    deflated input — exactly pca_topd_project's output arithmetic."""
     import math
 
     v0 = repr(round(1.0 / math.sqrt(dim), 8))
@@ -10222,7 +10216,7 @@ def _html_blocks_shared(spark, sf_dir, variant):
 
 
 def q203_html_extract(spark, sf_dir):
-    """HTML → text extraction (functions/html.py:html_extract; the
+    """HTML → text extraction (functions/html.py's contract; the
     Kohlschütter WSDM'10 link-density rule at threshold 1/2, exact
     integer compare): strip comments/script/style/head, segment at
     block tags, decode entities, drop link-dense boilerplate blocks
@@ -10235,8 +10229,7 @@ def q203_html_extract(spark, sf_dir):
     block memo (r12); the boilerplate decision + text join stay in
     this plan. Fully value-hash oracled."""
     blkdf = _html_blocks_shared(spark, sf_dir, "plain")
-    kept = F.filter(F.col("blk"), lambda s: ~H.is_boiler(s))
-    txt = F.array_join(F.transform(kept, lambda s: s["t"]), "\n")
+    kept, txt = H.content_text(F.col("blk"))
     return blkdf.select(
         "doc_id",
         F.size("blk").cast("long").alias("n_blocks"),
@@ -10356,8 +10349,7 @@ def q206_extraction_audit(spark, sf_dir):
     extractor inline, no explode) + one combinable source-keyed agg.
     Fully value-hash oracled."""
     blkdf = _html_blocks_shared(spark, sf_dir, "audit")
-    kept = F.filter(F.col("blk"), lambda s: ~H.is_boiler(s))
-    txt = F.array_join(F.transform(kept, lambda s: s["t"]), "\n")
+    kept, txt = H.content_text(F.col("blk"))
     per = blkdf.select(
         "source",
         F.size("blk").cast("long").alias("nb"),
@@ -10716,13 +10708,12 @@ def q201_curation_funnel_v2(spark, sf_dir):
     no driver-side counting, nothing quadratic. Fully value-hash
     oracled."""
     blkdf = _html_blocks_shared(spark, sf_dir, "crawl")
-    kept = F.filter(F.col("blk"), lambda s: ~H.is_boiler(s))
+    kept, txt = H.content_text(F.col("blk"))
     crawl = blkdf.select(
         "doc_id", "source", "url",
         F.size("blk").cast("long").alias("_nb"),
         (F.size("blk") - F.size(kept)).cast("long").alias("_nboil"),
-        F.array_join(F.transform(kept, lambda s: s["t"]), "\n")
-        .alias("text"),
+        txt.alias("text"),
     )
     host = W.url_host(F.col("url"))
     w1 = Window.partitionBy(

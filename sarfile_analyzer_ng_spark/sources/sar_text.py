@@ -25,8 +25,9 @@ The parse is pandas-free: both parsers fill parallel column lists
 (``ts`` as epoch microseconds) and each file leaves the Python worker
 as one Arrow record batch, with no per-row object boxing.
 
-:func:`decode_file` is the single place a file is unpacked (xz,
-reference sar_ingest.py:333), sniffed (sadf JSON or sar text) and parsed
+:func:`decode_file` is the single place a file is sniffed (sadf JSON or
+sar text, from its first plain bytes), unpacked (xz, reference
+sar_ingest.py:333; only when the caller wants that kind) and parsed
 (:func:`parse_sar_columns` or ``sadf_json.parse_sadf_columns``). The
 readers (:func:`read_sar`, ``sadf_json.read_sadf_json``, the CLI's
 mixed-directory load) are calls of one scan body, :func:`read_files`,
@@ -101,7 +102,6 @@ _RE_RESTART = re.compile(r"LINUX RESTART", re.IGNORECASE)
 #   parses both sections like any other).
 _RE_IGNORE_ALWAYS = re.compile(r"(bus.*idvendor|temp.*device)", re.IGNORECASE)
 _RE_IGNORE_UNWANTED = re.compile(r"(intr/s|mhz)", re.IGNORECASE)
-UNWANTED_HEADERS = ("CPU MHz", "INTR intr/s")
 _RE_COMMA_NUM = re.compile(r"(\d+),(\d+)")
 _RE_DATE_CANDIDATES = (
     (re.compile(r"\b(\d{4})-(\d{2})-(\d{2})\b"), "ymd"),
@@ -332,25 +332,50 @@ DECODE_ERRORS = (lzma.LZMAError, ValueError)
 
 
 class Decoded(NamedTuple):
-    kind: str  # SAR_TEXT, SADF_JSON or BINARY
+    # SAR_TEXT, SADF_JSON or BINARY; None for a file that is not sadf
+    # JSON when the caller wants neither SAR_TEXT nor BINARY (the
+    # sniff does not tell those two apart)
+    kind: str | None
     unxz: bool  # the input was an xz archive
-    data: bytes  # the plain bytes after unpacking
+    data: bytes | None  # the plain bytes; None if the sniff dropped it
     batch: pa.RecordBatch | None  # ARROW_SCHEMA rows; None if kind not wanted
+
+
+def _xz_head(content: bytes) -> bytes:
+    """The leading plain bytes of an xz archive, unpacked step by step
+    only until a byte other than a BOM or whitespace shows up (or the
+    archive ends): all the sniff in :func:`decode_file` needs."""
+    dec = lzma.LZMADecompressor()
+    head = dec.decompress(content, max_length=64)
+    while (not head.removeprefix(_BOM).lstrip()
+           and not dec.eof and not dec.needs_input):
+        head += dec.decompress(b"", max_length=64)
+    return head
 
 
 def decode_file(file_name: str, content: bytes, kinds=KINDS,
                 drop_unwanted: bool = True,
                 skipped: set[str] | None = None) -> Decoded:
     """The per-file decode shared by every reader and the store's
-    upload: unpack xz, sniff the format, and parse it into one Arrow
-    record batch with ``to_arrow_schema(SAR_SCHEMA)`` when its kind is
-    one of ``kinds``.
+    upload: sniff the format from the first plain bytes (unpacking an
+    xz archive only that far), and only when ``kinds`` may want it,
+    unpack the file, tell sar text from binary, and parse it into one
+    Arrow record batch with ``to_arrow_schema(SAR_SCHEMA)`` when its
+    kind is one of ``kinds``.
     ``skipped`` collects the sadf fields the JSON traversal drops.
     Raises one of :data:`DECODE_ERRORS` on input it cannot decode; the
-    caller decides whether that skips the file or fails the upload."""
+    caller decides whether that skips the file or fails the upload.
+    A broken archive whose head already shows an unwanted kind is
+    dropped without an error."""
     unxz = content[: len(XZ_MAGIC)] == XZ_MAGIC
+    head = _xz_head(content) if unxz else content
+    is_json = head.removeprefix(_BOM).lstrip()[:1] == b"{"
+    if is_json and SADF_JSON not in kinds:
+        return Decoded(SADF_JSON, unxz, None, None)
+    if not is_json and SAR_TEXT not in kinds and BINARY not in kinds:
+        return Decoded(None, unxz, None, None)
     data = lzma.decompress(content) if unxz else content
-    if data.removeprefix(_BOM).lstrip()[:1] == b"{":
+    if is_json:
         kind, text = SADF_JSON, None
     else:
         try:
@@ -412,8 +437,7 @@ def read_sar(spark: SparkSession, path: str,
     (the scan packs whole files into partitions), ``.xz`` unpacked
     transparently (sar_ingest.py:333 behavior); sadf JSON
     files are left to ``read_sadf_json``. ``drop_unwanted`` applies the
-    reference's "CPU MHz" / "INTR intr/s" exclusion (see
-    UNWANTED_HEADERS)."""
+    reference's "CPU MHz" / "INTR intr/s" exclusion."""
     return read_files(spark, path, (SAR_TEXT, BINARY), drop_unwanted)
 
 

@@ -120,8 +120,9 @@ def rnd_np(a, digits: int = 4):
     through Decimal(repr(x)) — the same shortest-repr + HALF_UP path
     BigDecimal.valueOf takes — so kernel-side verdicts match the JVM /
     oracle bit-for-bit. Kernels that can emit raw values and round
-    JVM-side should still prefer that (ann_topk_pq_arrow's pattern);
-    this exists for kernels whose verdict must be computed in-batch.
+    JVM-side (``rnd`` over the kernel's output column) should still
+    prefer that; this exists for kernels whose verdict must be
+    computed in-batch.
     """
     from decimal import ROUND_HALF_UP, Decimal
 

@@ -288,7 +288,7 @@ def test_passage_dedup_matches_pure_python_mirror(spark):
 def test_png_unfilter_differential_vs_ppm():
     """Differential fuzz for the PNG decoder (no Spark needed): many
     random geometries × color types × per-row filter choices, each
-    encoded as netpbm and as PNG — decoded luminance features must be
+    encoded as netpbm and as PNG — decoded luminance planes must be
     identical. Catches unfilter recurrence bugs a single fixture
     would miss."""
     from sarfile_analyzer_ng_spark.functions import multimodal as MM
@@ -306,9 +306,10 @@ def test_png_unfilter_differential_vs_ppm():
         magic = b"P6" if ch == 3 else b"P5"
         ppm = magic + f"\n{w} {h}\n255\n".encode() + px.tobytes()
         png = _png_encode(px, color_type, filters)
-        a = MM.decode_ppm(ppm, "image")
-        b = MM.decode_png(png, "image")
-        assert a == b, (trial, h, w, color_type, filters)
+        wa, ha, lum_a = MM.decode_ppm(ppm)
+        wb, hb, lum_b = MM.decode_png(png)
+        assert (wa, ha) == (wb, hb) == (w, h), (trial, filters)
+        assert np.array_equal(lum_a, lum_b), (trial, h, w, color_type, filters)
 
 
 def test_decontaminate_spans_matches_bruteforce_substring_scan(spark):

@@ -249,11 +249,10 @@ def _page(rng, dirty: bool) -> str:
 def _spark_extract(spark, pages):
     df = spark.createDataFrame(
         [(i, p) for i, p in enumerate(pages)], "pid long, html string")
-    out = H.html_extract(df, "html", "pid")
-    return {
-        r.pid: (r.n_blocks, r.n_boiler, r.text)
-        for r in out.select("pid", "n_blocks", "n_boiler", "text").collect()
-    }
+    blk = H.html_block_structs(F.col("html"))
+    kept, text = H.content_text(blk)
+    out = df.select("pid", F.size(blk), F.size(blk) - F.size(kept), text)
+    return {r[0]: tuple(r[1:]) for r in out.collect()}
 
 
 def test_clean_pool_exact_agreement(spark):

@@ -1,31 +1,15 @@
-"""CSV ingest parity, reloads of Spark-written timestamps and the sharded
-JSONL export."""
+"""Reloads of Spark-written timestamps through catalog.load_table."""
 
 from __future__ import annotations
-
 
 from pyspark.sql import functions as F
 
 from sarfile_analyzer_ng_spark.catalog import load_table
-from sarfile_analyzer_ng_spark.operators import io as IO
 
 from .conftest import SF_DIR
 import pytest
 
 pytestmark = pytest.mark.driver  # driver-facing gate (see conftest)
-
-
-def test_csv_roundtrip_matches_parquet(spark, tmp_path):
-    ev = load_table(spark, SF_DIR, "events")
-    csv_dir = str(tmp_path / "events_csv")
-    ev.write.option("header", True).option(
-        "timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    ).mode("overwrite").csv(csv_dir)
-    back = IO.read_csv(spark, csv_dir, ev.schema)
-    assert back.count() == ev.count()
-    a = ev.agg(F.sum("value"), F.min("ts"), F.max("ts")).collect()[0]
-    b = back.agg(F.sum("value"), F.min("ts"), F.max("ts")).collect()[0]
-    assert a == b
 
 
 def test_load_table_roundtrips_spark_written_timestamps(spark, tmp_path):
@@ -88,71 +72,3 @@ def test_normalize_ntz_nested_and_dotted(spark, tmp_path):
     assert row["plain"] == 3
 
 
-def test_jsonl_shard_export_roundtrip(spark, tmp_path):
-    import glob
-    import json
-
-    from pyspark.sql import types as T
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "source", "text"
-    )
-    out = str(tmp_path / "corpus")
-    IO.write_jsonl_shards(docs, out, num_shards=4, shard_key="doc_id")
-    dirs = sorted(glob.glob(f"{out}/shard=*"))
-    assert len(dirs) == 4                        # exact shard count
-    files = sorted(glob.glob(f"{out}/shard=*/part-*"))
-    assert len(files) == 4                       # one file per shard dir
-    with open(files[0]) as f:
-        json.loads(f.readline())                 # valid JSONL payload
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    back = IO.read_jsonl(spark, out, schema)
-    assert back.count() == docs.count()
-    # deterministic placement: re-export shards identically
-    out2 = str(tmp_path / "corpus2")
-    IO.write_jsonl_shards(docs, out2, num_shards=4, shard_key="doc_id")
-    sizes = lambda d: sorted(
-        spark.read.text(p).count() for p in sorted(glob.glob(f"{d}/shard=*/part-*"))
-    )
-    assert sizes(out) == sizes(out2)
-
-
-def test_manifest_indexes_export(spark, tmp_path):
-    """The q74 manifest contract: directory shard=K of the JSONL
-    export holds exactly the rows the shard_hash manifest ascribes to
-    shard K (count and id range) — i.e. a loader planned from the
-    manifest reads the true shard boundaries."""
-    import glob
-    import json
-
-    from sarfile_analyzer_ng_spark.util import shard_hash
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    out = str(tmp_path / "export")
-    IO.write_jsonl_shards(docs, out, num_shards=4, shard_key="doc_id")
-    manifest = (
-        docs.groupBy(shard_hash(F.col("doc_id"), 4).alias("shard"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-        )
-        .collect()
-    )
-    assert len(manifest) == 4
-    for row in manifest:
-        ids = []
-        for fp in glob.glob(f"{out}/shard={row['shard']}/part-*"):
-            with open(fp) as f:
-                ids.extend(json.loads(line)["doc_id"] for line in f)
-        assert len(ids) == row["n_docs"]
-        assert min(ids) == row["lo"] and max(ids) == row["hi"]

@@ -1116,17 +1116,6 @@ def test_bpe_train_batched_matches_sequential(spark):
         TX.bpe_train(small, "text", num_merges=3)
 
 
-def test_bpe_encode_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "low lower"), (2, "low")], "doc_id long, text string"
-    )
-    merges = TX.bpe_train(df, "text", num_merges=2)  # l+o, lo+w
-    got = {r["doc_id"]: r["n_bpe_tokens"]
-           for r in TX.bpe_encode(df, "text", "doc_id", merges).collect()}
-    # "low"->[low]=1; "lower"->[low,e,r]=3
-    assert got == {1: 4, 2: 1}
-
-
 def test_bpe_train_matches_reference_on_random_corpora(spark):
     # three seeded random word-soups: the distributed trainer must
     # equal the reference implementation exactly on each
@@ -1364,122 +1353,6 @@ def test_ivfpq_subexhaustive_candidates_are_adc_subset(spark):
     assert len(top5 & got) >= len(top5) // 4
 
 
-def test_pq_arrow_kernel_matches_dataframe_adc(spark):
-    # the production-shape Arrow scorer must reproduce the oracled
-    # DataFrame ADC ranking row-for-row (same rounding ladder, same
-    # tie order, same self-exclusion)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") <= 10)
-    books = S.pq_train_exact(emb, "vec_id", "embedding", 64, m=4, k=8, iters=2)
-    codes = S.pq_codes(emb, "vec_id", "embedding", books, 64, m=4)
-    df_path = S.ann_topk_pq(emb, queries, "vec_id", "embedding", 64, m=4,
-                            k=5, codebooks=books, codes=codes)
-    kernel = S.ann_topk_pq_arrow(emb, queries, "vec_id", "embedding", 64,
-                                 books, codes, m=4, k=5)
-    a = {(r["query_id"], r["neighbor_id"], r["adc"], r["rank"])
-         for r in df_path.collect()}
-    b = {(r["query_id"], r["neighbor_id"], r["adc"], r["rank"])
-         for r in kernel.collect()}
-    assert a == b and len(a) > 0
-
-
-def test_pq_arrow_oversized_query_set_raises(spark):
-    # the Q x m x K distance table is driver-collected + broadcast; an
-    # oversized query set must fail loudly BEFORE the collect, with
-    # sharding guidance, not OOM the driver
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") <= 10)
-    books = S.pq_train_exact(emb, "vec_id", "embedding", 64, m=4, k=8, iters=1)
-    codes = S.pq_codes(emb, "vec_id", "embedding", books, 64, m=4)
-    with pytest.raises(ValueError, match="shard the query set"):
-        S.ann_topk_pq_arrow(emb, queries, "vec_id", "embedding", 64,
-                            books, codes, m=4, k=5, max_dtab_cells=8)
-
-
-def test_pq_arrow_sharded_rejects_impossible_bound(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") <= 3)
-    books = S.pq_train_exact(emb, "vec_id", "embedding", 64, m=4, k=8, iters=1)
-    codes = S.pq_codes(emb, "vec_id", "embedding", books, 64, m=4)
-    # m*K = 32 codebook rows > 16-cell bound: even one query per shard
-    # cannot satisfy it -> a clear error, not self-referential advice
-    with pytest.raises(ValueError, match="smaller than ONE query"):
-        S.ann_topk_pq_arrow_sharded(
-            emb, queries, "vec_id", "embedding", 64, books, codes,
-            m=4, k=5, max_dtab_cells=16,
-        )
-
-
-def test_pq_arrow_sharded_equals_unsharded(spark):
-    # contiguous-id query shards each within the broadcast bound must
-    # union to EXACTLY the unsharded ranking (per-query independence)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") <= 10)
-    books = S.pq_train_exact(emb, "vec_id", "embedding", 64, m=4, k=8, iters=1)
-    codes = S.pq_codes(emb, "vec_id", "embedding", books, 64, m=4)
-    whole = S.ann_topk_pq_arrow(emb, queries, "vec_id", "embedding", 64,
-                                books, codes, m=4, k=5)
-    # m*K = 32 codebook rows; 96 cells -> 3 queries per shard -> 4 shards
-    sharded = S.ann_topk_pq_arrow_sharded(
-        emb, queries, "vec_id", "embedding", 64, books, codes, m=4, k=5,
-        max_dtab_cells=96,
-    )
-    a = {tuple(r) for r in whole.collect()}
-    b = {tuple(r) for r in sharded.collect()}
-    assert a == b and len(a) > 0
-
-
-def test_pq_arrow_sharded_packs_codes_once(spark, monkeypatch):
-    # round-7 directive: S shards must execute the pq_codes_wide
-    # packing agg ONCE (persisted + reused), not once per shard, and
-    # must not re-count the codebook frame per shard
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") <= 10)
-    books = S.pq_train_exact(emb, "vec_id", "embedding", 64, m=4, k=8, iters=1)
-    codes = S.pq_codes(emb, "vec_id", "embedding", books, 64, m=4)
-    calls = {"pack": 0}
-    real_pack = S.pq_codes_wide
-
-    def counting_pack(*a, **kw):
-        calls["pack"] += 1
-        return real_pack(*a, **kw)
-
-    monkeypatch.setattr(S, "pq_codes_wide", counting_pack)
-    out = S.ann_topk_pq_arrow_sharded(
-        emb, queries, "vec_id", "embedding", 64, books, codes, m=4, k=5,
-        max_dtab_cells=96,  # 3 queries/shard -> 4 shards
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-    assert calls["pack"] == 1
-
-
-def test_pq_index_roundtrip_and_incremental_encode(spark, tmp_path):
-    # save -> load -> search must equal the in-memory index; a new
-    # batch encodes against the LOADED codebooks without retraining
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") <= 10)
-    books = S.pq_train_exact(emb, "vec_id", "embedding", 64, m=4, k=8, iters=2)
-    codes = S.pq_codes(emb, "vec_id", "embedding", books, 64, m=4)
-    path = str(tmp_path / "pq_index")
-    S.save_pq_index(path, books, codes, "vec_id")
-    lb, lc = S.load_pq_index(spark, path)
-    mem = S.ann_topk_pq(emb, queries, "vec_id", "embedding", 64, m=4, k=5,
-                        codebooks=books, codes=codes)
-    disk = S.ann_topk_pq(emb, queries, "vec_id", "embedding", 64, m=4, k=5,
-                         codebooks=lb, codes=lc)
-    a = {tuple(r) for r in mem.collect()}
-    b = {tuple(r) for r in disk.collect()}
-    assert a == b and len(a) > 0
-    # incremental encode: re-encoding any batch against the loaded
-    # codebooks reproduces the stored codes exactly
-    batch = emb.where(F.col("vec_id") % 7 == 0)
-    enc = S.pq_codes(batch, "vec_id", "embedding", lb, 64, m=4)
-    stored = lc.join(batch.select("vec_id"), "vec_id", "left_semi")
-    assert {tuple(r) for r in enc.collect()} == \
-           {tuple(r) for r in stored.collect()}
-
-
 def test_repeat_schedule_caps_and_shortfall(spark):
     # budget 100 tokens, 50/50 targets: source a (10 tokens) wants 5
     # epochs -> capped at 4 with shortfall 10; source b (100 tokens)
@@ -1588,16 +1461,6 @@ def test_top_ngrams_excludes_short_doc_pseudo_grams(spark):
     assert all(r["ngram"] != "click here" for r in out)
 
 
-def test_bpe_encode_null_text_counts_zero(spark):
-    df = spark.createDataFrame(
-        [(1, "aa bb"), (2, None)], "doc_id long, text string"
-    )
-    merges = TX.bpe_train(df.where(F.col("text").isNotNull()), "text", 1)
-    out = {r["doc_id"]: r["n_bpe_tokens"] for r in
-           TX.bpe_encode(df, "text", "doc_id", merges).collect()}
-    assert out[2] == 0
-
-
 def test_decontaminate_semantic_flags_paraphrase_neighbors(spark):
     # cosine is scale-invariant: a train vector that is a scaled copy
     # of an eval vector (the "paraphrase" shape n-gram decon misses)
@@ -1622,7 +1485,7 @@ def test_decontaminate_semantic_flags_paraphrase_neighbors(spark):
     assert out[3]["contaminated"] == 1 and out[3]["nearest_eval_id"] == 300
 
 
-def test_pca_power_top1_finds_dominant_direction(spark):
+def test_pca_power_topd_train_finds_dominant_direction(spark):
     import numpy as np
 
     # variance 25 along dim 0, variance ~0.01 along dim 1: the top
@@ -1633,7 +1496,10 @@ def test_pca_power_top1_finds_dominant_direction(spark):
     x1 = rng.normal(0.0, 0.1, 200)
     rows = [(i, [float(a), float(b)]) for i, (a, b) in enumerate(zip(x0, x1))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    proj, v, _mu = S.pca_power_top1(df, "vec_id", "embedding", dim=2, iters=5)
+    comps, _mu, centered = S.pca_power_topd_train(
+        df, "vec_id", "embedding", dim=2, n_components=1, iters=5)
+    proj = S.pca_topd_project(centered, "vec_id", comps)
+    v = comps[0]
     assert v[0] > 0.99 and abs(v[1]) < 0.1          # sign contract + alignment
     got = {r["vec_id"]: r["pc1_proj"] for r in proj.collect()}
     centered = x0 - x0.mean()
@@ -1641,13 +1507,14 @@ def test_pca_power_top1_finds_dominant_direction(spark):
     assert corr > 0.999
 
 
-def test_pca_power_top1_degenerate_corpus_raises(spark):
+def test_pca_power_topd_train_degenerate_corpus_raises(spark):
     df = spark.createDataFrame(
         [(i, [1.0, 2.0]) for i in range(5)],
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="degenerate"):
-        S.pca_power_top1(df, "vec_id", "embedding", dim=2, iters=2)
+        S.pca_power_topd_train(df, "vec_id", "embedding", dim=2,
+                               n_components=1, iters=2)
 
 
 def test_vocab_coverage_counts_oov(spark):
@@ -1708,7 +1575,7 @@ def test_edit_dup_pairs_exposes_lsh_cache_for_release(spark):
     assert all(not dep.storageLevel.useMemory for dep in cached)
 
 
-def test_remove_top1_projects_out_dominant_direction(spark):
+def test_apply_top1_removal_projects_out_dominant_direction(spark):
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -1716,11 +1583,12 @@ def test_remove_top1_projects_out_dominant_direction(spark):
     x1 = rng.normal(0.0, 0.1, 150)
     rows = [(i, [float(a), float(b)]) for i, (a, b) in enumerate(zip(x0, x1))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    _proj, v, mu = S.pca_power_top1(df, "vec_id", "embedding",
-                                    dim=2, iters=5)
+    comps, mu, _centered = S.pca_power_topd_train(
+        df, "vec_id", "embedding", dim=2, n_components=1, iters=5)
     out = {r["vec_id"]: np.asarray(r["resid"]) for r in
-           S.remove_top1(df, "vec_id", "embedding", dim=2, iters=5).collect()}
-    vv = np.asarray(v)
+           S.apply_top1_removal(df, "vec_id", "embedding",
+                                comps[0], mu).collect()}
+    vv = np.asarray(comps[0])
     R = np.stack([out[i] for i in range(150)])
     # residuals are (numerically) orthogonal to the removed component
     assert float(np.abs(R @ vv).max()) < 1e-4
@@ -1787,24 +1655,6 @@ def test_source_divergence_separates_disjoint_sources(spark):
     assert all(0.0 <= v <= 0.6932 for v in out.values())
 
 
-def test_pca_model_roundtrip_applies_without_retraining(spark, tmp_path):
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    rows = [(i, [float(a) for a in rng.normal(0, 3, 4)]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    _p, v, mu = S.pca_power_top1(df, "vec_id", "embedding", dim=4, iters=3)
-    want = {r["vec_id"]: tuple(r["resid"]) for r in
-            S.remove_top1(df, "vec_id", "embedding", dim=4, iters=3).collect()}
-    path = str(tmp_path / "pca_model")
-    S.save_pca_model(spark, path, v, mu)
-    lv, lmu = S.load_pca_model(spark, path)
-    assert lv == v and lmu == mu
-    got = {r["vec_id"]: tuple(r["resid"]) for r in
-           S.apply_top1_removal(df, "vec_id", "embedding", lv, lmu).collect()}
-    assert got == want
-
-
 def test_epoch_shuffle_handles_negative_and_sparse_ids(spark):
     # id-space robustness: negative and widely-spaced ids still get a
     # full permutation per epoch with deterministic addresses (the
@@ -1869,7 +1719,7 @@ def test_round7_operator_edges(spark):
     assert ranked[1] == 1 and set(ranked) == {1, 2, 3}
 
 
-def test_pca_power_topd_deflation_orthogonalizes(spark):
+def test_pca_power_topd_train_deflation_orthogonalizes(spark):
     """Rank-D power iteration with deflation: the two components come
     out near-orthogonal and aligned with the planted dominant axes."""
     import numpy as np
@@ -1883,7 +1733,7 @@ def test_pca_power_topd_deflation_orthogonalizes(spark):
             for i, (a, b, c) in enumerate(zip(x0, x1, x2))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    _proj, comps, _mu = S.pca_power_topd(
+    comps, _mu, _centered = S.pca_power_topd_train(
         df, "vec_id", "embedding", dim=3, n_components=2, iters=4)
     v1, v2 = np.asarray(comps[0]), np.asarray(comps[1])
     assert abs(float(v1 @ v2)) < 1e-3  # deflation orthogonalizes
@@ -1901,8 +1751,9 @@ def test_pca_topd_projections_match_numpy_reference(spark):
     X = rng.normal(0.0, 1.0, (120, 4)) @ np.diag([5.0, 2.0, 0.3, 0.1])
     rows = [(i, [float(v) for v in X[i]]) for i in range(120)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    proj, comps, mu = S.pca_power_topd(
+    comps, _mu, centered = S.pca_power_topd_train(
         df, "vec_id", "embedding", dim=4, n_components=2, iters=8)
+    proj = S.pca_topd_project(centered, "vec_id", comps)
     got = {r["vec_id"]: (r["pc1_proj"], r["pc2_proj"])
            for r in proj.collect()}
 

@@ -464,15 +464,15 @@ def test_decon_semantic_broadcasts_eval_and_partial_aggs(spark):
 
 
 def test_pca_iteration_model_rides_as_literals(spark):
-    # the power-iteration model (mu, v) must appear as LITERAL arrays
-    # in the plan (broadcast via the plan itself, no join against a
-    # model frame) and the per-iteration agg must be map-combinable
+    # the power-iteration model must ride as LITERAL arrays in the
+    # plan (broadcast via the plan itself, no join against a model
+    # frame) and no Python may run in the projection
     from sarfile_analyzer_ng_spark.functions import similarity as S
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    proj, _v, _mu = S.pca_power_top1(emb, "vec_id", "embedding",
-                                dim=64, iters=1)
-    p = plan(proj)
+    comps, _mu, centered = S.pca_power_topd_train(
+        emb, "vec_id", "embedding", dim=64, n_components=1, iters=1)
+    p = plan(S.pca_topd_project(centered, "vec_id", comps))
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "Join" not in p      # model is literal, not a joined frame
 

@@ -17,6 +17,21 @@ from sarfile_analyzer_ng_spark.sources.sadf_json import parse_sadf_json, read_sa
 
 pytestmark = pytest.mark.driver  # Tier-1 (see conftest)
 
+MEDIA_SCHEMA = ("media_id long, kind string, mime string, payload binary, "
+                "meta map<string, string>")
+
+
+def _grid(lum):
+    """Mean-pooled 2x4 grid of a luminance plane: a coarse summary
+    that codec tests compare across containers. Planes smaller than
+    the grid pool over the splits that exist."""
+    import numpy as np
+
+    rows = np.array_split(lum, min(2, lum.shape[0]), axis=0)
+    return [float(c.mean()) for r in rows
+            for c in np.array_split(r, min(4, r.shape[1]), axis=1)]
+
+
 SADF = {
     "sysstat": {
         "hosts": [
@@ -75,6 +90,43 @@ def test_read_sadf_json_distributed_and_xz(spark, tmp_path):
     assert df.select("file").distinct().count() == 2  # broken one skipped
     cpu = df.where((F.col("section") == "cpu-load") & (F.col("device") == "all"))
     assert cpu.count() == 4  # 2 files x 2 metrics
+
+
+def test_decode_file_unpacks_xz_only_for_wanted_kinds(monkeypatch):
+    """decode_file sniffs an .xz archive from its first plain bytes and
+    unpacks the whole archive only when the caller wants that kind: a
+    sadf report read for sar text (and sar text read for sadf) costs no
+    full unpacking. A report behind more whitespace than one sniff step
+    still sniffs as JSON, and a truncated archive of an unwanted kind
+    is dropped instead of raising."""
+    from sarfile_analyzer_ng_spark.sources import sar_text as ST
+
+    from .test_sar_source import SAR_24H
+
+    sadf_xz = lzma.compress(b"\xef\xbb\xbf" + b" \n" * 100
+                            + json.dumps(SADF).encode())
+    text_xz = lzma.compress(SAR_24H.encode())
+    unpacked = []
+    real = lzma.decompress
+    monkeypatch.setattr(
+        lzma, "decompress", lambda b: unpacked.append(len(b)) or real(b))
+
+    for content in (sadf_xz, sadf_xz[: len(sadf_xz) // 2]):
+        dec = ST.decode_file("a.json.xz", content, (ST.SAR_TEXT, ST.BINARY))
+        assert (dec.kind, dec.unxz, dec.data, dec.batch) == (
+            ST.SADF_JSON, True, None, None)
+    dec = ST.decode_file("b.txt.xz", text_xz, (ST.SADF_JSON,))
+    assert (dec.kind, dec.data, dec.batch) == (None, None, None)
+    assert unpacked == []
+
+    dec = ST.decode_file("a.json.xz", sadf_xz, (ST.SADF_JSON,))
+    assert dec.kind == ST.SADF_JSON and dec.batch.num_rows > 0
+    dec = ST.decode_file("b.txt.xz", text_xz, (ST.SAR_TEXT, ST.BINARY))
+    assert dec.kind == ST.SAR_TEXT and dec.batch.num_rows > 0
+    assert unpacked == [len(sadf_xz), len(text_xz)]
+    with pytest.raises(ST.DECODE_ERRORS):
+        ST.decode_file("a.json.xz", sadf_xz[: len(sadf_xz) // 2],
+                       (ST.SADF_JSON,))
 
 
 def test_cli_files_over_mixed_directory(spark, tmp_path, capsys, monkeypatch):
@@ -203,190 +255,56 @@ def test_read_files_matches_row_views(spark, tmp_path):
     assert {r["file"] for r in df.select(cols[0]).distinct().collect()} == set(texts) | set(docs)
 
 
-def test_multimodal_fake_decode(spark):
-    rows = [
-        (1, "image", None, b"imagebytes-1", {"path": "/x/1.png"}),
-        (2, "video", None, b"videobytes-2", {"path": "/x/2.mp4", "duration_ms": "2500"}),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    feats = MM.extract_features(media, decode_fn=MM.fake_decode)
-    got = {r["media_id"]: r for r in feats.collect()}
-    assert got[1]["n_bytes"] == len(b"imagebytes-1")
-    assert len(got[1]["feature"]) == 8
-    assert got[2]["duration_ms"] > 0 and got[1]["duration_ms"] == 0
-    # deterministic: same payload → same feature
-    again = {r["media_id"]: r for r in
-             MM.extract_features(media, decode_fn=MM.fake_decode).collect()}
-    assert again[1]["feature"] == got[1]["feature"]
-
-
 def test_multimodal_undecodable_policy(spark):
-    """Default policy: a payload no decoder handles (unknown magic,
-    damaged magic, unsupported sub-format) becomes a null-feature row;
-    strict mode surfaces the documented NotImplementedError."""
-    media = spark.createDataFrame(
-        [(1, "image", None, b"x", {})], MM.MEDIA_SCHEMA
-    )
-    got = MM.extract_features(media).collect()[0]
-    assert got["feature"] is None and got["n_bytes"] == 1
-    with pytest.raises(Exception, match="NotImplementedError|decoding"):
-        MM.extract_features(media, on_undecodable="raise").collect()
-    with pytest.raises(ValueError, match="null|raise"):
-        MM.extract_features(media, on_undecodable="bogus")
+    """A payload no decoder handles (unknown magic) surfaces the
+    documented NotImplementedError, and image_phash lets it fail the
+    job: a missing codec is an environment problem, not bad data."""
+    with pytest.raises(NotImplementedError, match="decoding"):
+        MM.decode_luminance(b"x")
+    media = spark.createDataFrame([(1, "image", None, b"x", {})], MEDIA_SCHEMA)
+    with pytest.raises(Exception, match="NotImplementedError"):
+        MM.image_phash(media).collect()
 
 
-def test_frame_sample_plan(spark):
-    media = spark.createDataFrame(
-        [(2, "video", None, b"v", {"duration_ms": "2500"})], MM.MEDIA_SCHEMA
-    )
-    frames = MM.frame_sample_plan(media, every_ms=1000).collect()
-    assert [r["frame_ms"] for r in frames] == [0, 1000, 2000]
-
-
-def test_multimodal_features_feed_dedup_surface(spark):
-    """End-to-end media near-dup: binary payloads → Arrow-batched
-    feature extraction → the SAME dedup operators the text/embedding
-    tables use (exact via content digest, near via feature cosine).
-    Nothing about the dedup surface is multimodal-specific."""
-    from sarfile_analyzer_ng_spark.functions import dedup as D
-    from sarfile_analyzer_ng_spark.functions import similarity as SIM
-
-    payloads = [b"clipA" * 40, b"clipB" * 40, b"clipC" * 40]
-    rows = [(i + 1, "image", None, p, {}) for i, p in enumerate(payloads)]
-    rows += [(100 + 1, "image", None, payloads[0], {})]  # exact dup of 1
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    feats = MM.extract_features(media, decode_fn=MM.fake_decode).cache()
-
-    # exact dedup on the digest: the duplicate payload collapses
-    kept = D.exact_dedup(feats, "sha256", "media_id")
-    assert kept.count() == 3
-    assert {r["media_id"] for r in kept.select("media_id").collect()} == {1, 2, 3}
-
-    # near-dup via feature cosine: identical payloads → cosine 1.0
-    pairs = SIM.cosine_dup_pairs(feats, "media_id", "feature", 0.999)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (1, 101) in got
-    feats.unpersist()
-
-
-def test_multimodal_real_ppm_decode(spark):
-    """real_decode genuinely decodes binary netpbm without any codec
-    library: a synthetic P6 image with known geometry and a bright
-    left / dark right half must yield matching dims and luminance
-    features."""
+def test_multimodal_real_ppm_decode():
+    """decode_luminance genuinely decodes binary netpbm without any
+    codec library: a synthetic P6 image with known geometry and a
+    bright left / dark right half must yield matching dims and
+    luminance."""
     width, height = 8, 4
     left = b"\xff\xff\xff" * (width // 2)
     right = b"\x00\x00\x00" * (width // 2)
     payload = b"P6\n# test comment\n8 4\n255\n" + (left + right) * height
-    media = spark.createDataFrame(
-        [(1, "image", None, payload, {})], MM.MEDIA_SCHEMA
-    )
-    got = MM.extract_features(media).collect()[0]  # default real_decode
-    assert (got["width"], got["height"]) == (width, height)
-    feat = got["feature"]
-    assert len(feat) == 8
-    # 2x4 grid: columns 0-1 fully white (1.0), columns 2-3 fully black
-    assert feat[0] == feat[1] == 1.0 and feat[2] == feat[3] == 0.0
-    assert got["duration_ms"] == 0
+    w, h, lum = MM.decode_luminance(payload)
+    assert (w, h) == (width, height) and lum.shape == (height, width)
+    # columns 0-3 fully white (1.0), columns 4-7 fully black
+    assert (lum[:, :4] == 1.0).all() and (lum[:, 4:] == 0.0).all()
 
 
-def test_multimodal_ppm_p5_gray_and_16bit(spark):
+def test_multimodal_ppm_p5_gray_and_16bit():
     w, h = 4, 2
     p5 = b"P5\n4 2\n255\n" + bytes([0, 64, 128, 255] * h)
     p5_16 = b"P5\n4 2\n65535\n" + b"".join(
         v.to_bytes(2, "big") for v in [0, 16384, 32768, 65535] * h
     )
-    media = spark.createDataFrame(
-        [(1, "image", None, p5, {}), (2, "image", None, p5_16, {})],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert (got[1]["width"], got[1]["height"]) == (w, h)
-    # 8-bit and 16-bit encodings of the same ramp give ~equal features
-    for a, b in zip(got[1]["feature"], got[2]["feature"]):
-        assert abs(a - b) < 0.01
+    w8, h8, lum8 = MM.decode_luminance(p5)
+    _, _, lum16 = MM.decode_luminance(p5_16)
+    assert (w8, h8) == (w, h)
+    # 8-bit and 16-bit encodings of the same ramp give ~equal luminance
+    assert abs(lum8 - lum16).max() < 0.01
 
 
-def _ppm(width, height, rgb):
-    header = f"P6\n{width} {height}\n255\n".encode()
-    return header + bytes(rgb) * (width * height)
-
-
-def test_sample_frames_real_decode_from_concatenated_ppm(spark):
-    """REAL frame sampling end to end, zero codecs: a 'video' payload
-    of concatenated binary PPM frames (the image2pipe/ppm layout) is
-    split, every 2nd frame sliced out, and each sampled frame decoded
-    by the real netpbm decoder — dims and luminance features checked
-    against the constructed pixels."""
-    frames = [
-        _ppm(8, 4, (255, 255, 255)),   # white -> luminance 1.0
-        _ppm(8, 4, (0, 0, 0)),         # black (skipped at every_n=2)
-        _ppm(8, 4, (255, 0, 0)),       # red -> luminance 1/3
-    ]
-    video = b"".join(frames)
-    media = spark.createDataFrame(
-        [(7, "video", None, video, {}), (8, "image", None, frames[0], {})],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["frame_idx"]: r
-           for r in MM.sample_frames(media, every_n=2).collect()}
-    assert set(got) == {0, 2}  # image rows ignored, frame 1 skipped
-    assert all(r["n_frames"] == 3 and (r["width"], r["height"]) == (8, 4)
-               for r in got.values())
-    assert all(abs(c - 1.0) < 1e-9 for c in got[0]["feature"])
-    assert all(abs(c - 1 / 3) < 1e-6 for c in got[2]["feature"])  # float32 storage
-    # splitting is exact: round-trips the constructed container
-    assert MM.split_ppm_frames(video) == frames
-
-
-def test_split_ppm_frames_randomized_roundtrip():
-    """Property: any concatenation of valid binary netpbm frames
-    (P6/P5, 8- or 16-bit, with or without header comments) splits back
-    into exactly the original frame payloads."""
-    import random
-
-    rng = random.Random(23)
-    for _ in range(25):
-        frames = []
-        for _ in range(rng.randint(1, 5)):
-            w, h = rng.randint(1, 9), rng.randint(1, 9)
-            gray = rng.random() < 0.5
-            maxval = rng.choice([255, 65535])
-            channels = 1 if gray else 3
-            bpp = 2 if maxval > 255 else 1
-            comment = b"# synthetic frame\n" if rng.random() < 0.3 else b""
-            header = (
-                (b"P5" if gray else b"P6") + b"\n" + comment
-                + f"{w} {h}\n{maxval}\n".encode()
-            )
-            px = bytes(rng.getrandbits(8) for _ in range(w * h * channels * bpp))
-            frames.append(header + px)
-        video = b"".join(frames)
-        assert MM.split_ppm_frames(video) == frames
-
-
-def test_decode_ppm_tiny_images_never_nan(spark):
-    import math
+def test_decode_ppm_tiny_images_never_nan():
+    """Images smaller than pHash's 32x32 pool decode and hash without
+    NaN (the pool upsamples by repetition first)."""
+    import numpy as np
 
     for w, h in [(1, 1), (4, 1), (1, 4), (2, 2)]:
         payload = f"P6\n{w} {h}\n255\n".encode() + bytes((10, 20, 30)) * (w * h)
-        width, height, _, feat = MM.decode_ppm(payload, "image")
-        assert (width, height) == (w, h)
-        assert len(feat) == 8
-        assert all(not math.isnan(c) for c in feat)
-
-
-def test_extract_features_skips_empty_payload_rows(spark):
-    rows = [
-        (1, "image", None, b"", {}),
-        (2, "image", None, None, {}),
-        (3, "image", None, _ppm(4, 4, (9, 9, 9)), {}),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert set(got) == {1, 2, 3}
-    assert got[1]["n_bytes"] == 0 and got[1]["feature"] is None
-    assert got[3]["width"] == 4 and got[3]["feature"] is not None
+        width, height, lum = MM.decode_ppm(payload)
+        assert (width, height) == (w, h) and lum.shape == (h, w)
+        assert not np.isnan(lum).any()
+        assert isinstance(MM._phash64(lum), int)
 
 
 def _png_filter_rows(px, filters):
@@ -458,27 +376,24 @@ def _png_encode(px, color_type, filters, interlace=0):
     )
 
 
-def test_multimodal_real_png_decode_matches_ppm(spark):
-    """PNG is now a REAL decoder (stdlib zlib + the five unfilters):
-    the same pixel array encoded as P6 netpbm and as RGB PNG — with
-    every filter type 0-4 exercised across rows — must produce the
-    IDENTICAL luminance feature."""
+def test_multimodal_real_png_decode_matches_ppm():
+    """PNG is a REAL decoder (stdlib zlib + the five unfilters): the
+    same pixel array encoded as P6 netpbm and as RGB PNG — with every
+    filter type 0-4 exercised across rows — must produce the
+    IDENTICAL luminance plane."""
     import numpy as np
 
     rng = np.random.default_rng(7)
     px = rng.integers(0, 256, size=(10, 8, 3), dtype=np.uint8)
     ppm = b"P6\n8 10\n255\n" + px.tobytes()
     png = _png_encode(px, color_type=2, filters=[0, 1, 2, 3, 4])
-    media = spark.createDataFrame(
-        [(1, "image", None, ppm, {}), (2, "image", None, png, {})],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert (got[2]["width"], got[2]["height"]) == (8, 10)
-    assert got[1]["feature"] == got[2]["feature"]
+    _, _, want = MM.decode_luminance(ppm)
+    w, h, lum = MM.decode_luminance(png)
+    assert (w, h) == (8, 10)
+    assert np.array_equal(lum, want)
 
 
-def test_multimodal_png_adam7_interlace_pixel_identity(spark):
+def test_multimodal_png_adam7_interlace_pixel_identity():
     """Adam7-interlaced PNGs (round-7 directive — common in old
     screenshots) decode to the SAME pixels as their sequential twin:
     the seven reduced images unfilter independently (every filter
@@ -492,83 +407,70 @@ def test_multimodal_png_adam7_interlace_pixel_identity(spark):
         px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
         plain = _png_encode(px, 2, [0, 1, 2, 3, 4], interlace=0)
         adam7 = _png_encode(px, 2, [4, 3, 2, 1, 0], interlace=1)
-        media = spark.createDataFrame(
-            [(1, "image", None, plain, {}), (2, "image", None, adam7, {})],
-            MM.MEDIA_SCHEMA,
-        )
-        got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-        assert (got[2]["width"], got[2]["height"]) == (w, h)
-        assert got[1]["feature"] == got[2]["feature"], (h, w)
-        assert got[2]["feature"] is not None
+        _, _, want = MM.decode_luminance(plain)
+        gw, gh, lum = MM.decode_luminance(adam7)
+        assert (gw, gh) == (w, h)
+        assert np.array_equal(lum, want), (h, w)
 
 
-def test_multimodal_png_rgba_and_gray(spark):
+def test_multimodal_png_rgba_and_gray():
     import numpy as np
 
     gray = np.tile(np.array([0, 255], dtype=np.uint8), (4, 2))[..., None]
     rgba = np.dstack([gray.repeat(3, axis=2),
                       np.full(gray.shape[:2], 9, dtype=np.uint8)])
-    media = spark.createDataFrame(
-        [
-            (1, "image", None, _png_encode(gray, 0, [0, 1, 2, 3, 4]), {}),
-            (2, "image", None, _png_encode(rgba, 6, [4, 3, 2, 1, 0]), {}),
-        ],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    # alpha is ignored for luminance: gray and RGBA features agree
-    assert got[1]["feature"] == got[2]["feature"]
+    _, _, lum_gray = MM.decode_luminance(_png_encode(gray, 0, [0, 1, 2, 3, 4]))
+    _, _, lum_rgba = MM.decode_luminance(_png_encode(rgba, 6, [4, 3, 2, 1, 0]))
+    # alpha is ignored for luminance: gray and RGBA planes agree
+    assert np.array_equal(lum_gray, lum_rgba)
 
 
-def test_multimodal_real_wav_decode(spark):
-    """WAV/PCM decodes through the stdlib wave module: duration and
-    the 8-bin amplitude envelope come from real samples."""
-    import io
-    import wave
-
-    import numpy as np
-
-    rate, n = 8000, 4000  # half a second
-    t = np.arange(n)
-    # quiet first half, loud second half
-    amp = np.where(t < n // 2, 2000, 16000)
-    samples = (amp * np.sin(2 * np.pi * 440 * t / rate)).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(samples.tobytes())
-    media = spark.createDataFrame(
-        [(1, "audio", None, buf.getvalue(), {})], MM.MEDIA_SCHEMA
-    )
-    got = MM.extract_features(media).collect()[0]
-    assert got["duration_ms"] == 500
-    feat = got["feature"]
-    assert len(feat) == 8 and all(0.0 <= v <= 1.0 for v in feat)
-    # envelope tracks the amplitude step: loud half well above quiet half
-    assert min(feat[4:]) > 4 * max(feat[:4])
+def test_extract_features_skips_empty_payload_rows(spark):
+    """An empty or null payload keeps its row with a null hash; the
+    decodable row beside it still hashes."""
+    rows = [
+        (1, "image", None, b"", {}),
+        (2, "image", None, None, {}),
+        (3, "image", None, b"P6\n4 4\n255\n" + bytes([9]) * 48, {}),
+    ]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    got = {r["media_id"]: r for r in MM.image_phash(media).collect()}
+    assert set(got) == {1, 2, 3}
+    assert got[1]["phash"] is None and got[2]["phash"] is None
+    assert got[3]["width"] == 4 and got[3]["phash"] is not None
 
 
 def test_multimodal_corrupt_payload_yields_null_row_not_job_failure(spark):
     """A payload with a valid magic but corrupt body is a DATA
-    problem: the scan survives and emits a null-feature row (audit
-    with feature IS NULL); only a genuinely missing codec
-    (NotImplementedError) still fails loudly."""
+    problem, and so is a WAV payload: image_phash survives and emits a
+    null-hash row for each (audit with phash IS NULL); only a genuinely
+    missing codec (NotImplementedError) still fails loudly."""
+    import io
+    import wave
+
     corrupt_png = b"\x89PNG\r\n\x1a\n" + b"garbage" * 4
     good = b"P5\n2 2\n255\n\x00\x40\x80\xff"
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(b"\x00\x10" * 800)
     media = spark.createDataFrame(
-        [(1, "image", None, corrupt_png, {}), (2, "image", None, good, {})],
-        MM.MEDIA_SCHEMA,
+        [(1, "image", None, corrupt_png, {}), (2, "image", None, good, {}),
+         (3, "audio", None, buf.getvalue(), {})],
+        MEDIA_SCHEMA,
     )
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert got[1]["feature"] is None and got[1]["n_bytes"] > 0
-    assert got[2]["feature"] is not None  # the good row still decodes
+    got = {r["media_id"]: r for r in MM.image_phash(media).collect()}
+    assert set(got) == {1, 2, 3}
+    assert all(got[i]["phash"] is None for i in (1, 3))
+    assert got[2]["phash"] is not None  # the good row still decodes
+    assert (got[2]["width"], got[2]["height"]) == (2, 2)
 
 
-def test_multimodal_real_bmp_decode_matches_ppm(spark):
+def test_multimodal_real_bmp_decode_matches_ppm():
     """BMP (uncompressed 24-bit) is a real decoder: the same pixels as
-    netpbm and as a bottom-up padded BMP give identical features."""
+    netpbm and as a bottom-up padded BMP give identical luminance."""
     import struct
 
     import numpy as np
@@ -586,51 +488,13 @@ def test_multimodal_real_bmp_decode_matches_ppm(spark):
         + struct.pack("<IiiHHIIiiII", 40, 3, 5, 1, 24, 0, len(body),
                       2835, 2835, 0, 0)
     )
-    media = spark.createDataFrame(
-        [(1, "image", None, ppm, {}), (2, "image", None, header + body, {})],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert (got[2]["width"], got[2]["height"]) == (3, 5)
-    assert got[1]["feature"] == got[2]["feature"]
+    _, _, want = MM.decode_luminance(ppm)
+    w, h, lum = MM.decode_luminance(header + body)
+    assert (w, h) == (3, 5)
+    assert np.array_equal(lum, want)
 
 
-def test_multimodal_audio_spectral_features(spark):
-    """Spectral features come from a real FFT: a pure 440 Hz tone
-    concentrates its energy in the band containing 440 Hz, and a
-    non-WAV payload yields a null row, not a job failure."""
-    import io
-    import wave
-
-    import numpy as np
-
-    rate, n = 8000, 8192
-    t = np.arange(n)
-    tone = (12000 * np.sin(2 * np.pi * 440 * t / rate)).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(tone.tobytes())
-    media = spark.createDataFrame(
-        [(1, "audio", None, buf.getvalue(), {}),
-         (2, "audio", None, b"not audio", {})],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in MM.audio_spectral_features(media).collect()}
-    spec = got[1]["spectral"]
-    assert got[1]["sample_rate"] == rate and got[1]["n_samples"] == n
-    assert len(spec) == 8 and max(spec) == 1.0
-    # 440 Hz in a 512-pt rfft at 8 kHz -> bin ~28 of 257; the peak band
-    # must dominate every other band decisively
-    peak = spec.index(max(spec))
-    assert sum(1 for v in spec if v > 0.5) == 1
-    assert 0 < peak < 7  # not the DC band, not the top band
-    assert got[2]["spectral"] is None  # non-WAV -> null row
-
-
-def test_multimodal_png_decompression_bomb_is_bounded(spark):
+def test_multimodal_png_decompression_bomb_is_bounded():
     """A hostile IDAT that inflates to ~100 MB behind a 2x2 IHDR must
     not balloon memory: the inflate is capped at the pixel bytes the
     header promises, so the row decodes (bounded) instead of OOMing."""
@@ -649,13 +513,10 @@ def test_multimodal_png_decompression_bomb_is_bounded(spark):
         b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
         + chunk(b"IDAT", bomb) + chunk(b"IEND", b"")
     )
-    media = spark.createDataFrame(
-        [(1, "image", None, payload, {})], MM.MEDIA_SCHEMA
-    )
-    got = MM.extract_features(media).collect()[0]
+    w, h, lum = MM.decode_luminance(payload)
     # zero-filled "pixels" decode to a black 2x2 image, memory bounded
-    assert (got["width"], got["height"]) == (2, 2)
-    assert got["feature"] is not None and max(got["feature"]) == 0.0
+    assert (w, h) == (2, 2)
+    assert lum.shape == (2, 2) and lum.max() == 0.0
 
 
 def _gif_encode(idx, palette, interlace=False):
@@ -714,10 +575,10 @@ def _gif_encode(idx, palette, interlace=False):
     )
 
 
-def test_multimodal_real_gif_decode_matches_ppm(spark):
+def test_multimodal_real_gif_decode_matches_ppm():
     """GIF is a real decoder (pure-python LZW + palette): the same
     pixels as palette-mapped GIF — plain and interlaced — and as P6
-    netpbm give identical features."""
+    netpbm give identical luminance."""
     import numpy as np
 
     rng = np.random.default_rng(17)
@@ -725,17 +586,11 @@ def test_multimodal_real_gif_decode_matches_ppm(spark):
     idx = rng.integers(0, 256, size=(9, 7), dtype=np.uint8)
     rgb = palette[idx]
     ppm = b"P6\n7 9\n255\n" + rgb.tobytes()
-    media = spark.createDataFrame(
-        [
-            (1, "image", None, ppm, {}),
-            (2, "image", None, _gif_encode(idx, palette), {}),
-            (3, "image", None, _gif_encode(idx, palette, interlace=True), {}),
-        ],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert (got[2]["width"], got[2]["height"]) == (7, 9)
-    assert got[1]["feature"] == got[2]["feature"] == got[3]["feature"]
+    _, _, want = MM.decode_luminance(ppm)
+    w, h, plain = MM.decode_luminance(_gif_encode(idx, palette))
+    _, _, laced = MM.decode_luminance(_gif_encode(idx, palette, interlace=True))
+    assert (w, h) == (7, 9)
+    assert np.array_equal(plain, want) and np.array_equal(laced, want)
 
 
 def test_gif_interlace_order_is_the_spec_order():
@@ -759,9 +614,9 @@ def test_gif_interlace_order_is_the_spec_order():
     desc_at = gif.index(b"\x2C")
     gif = gif[:desc_at + 9] + bytes([gif[desc_at + 9] | 0x40]) \
         + gif[desc_at + 10:]
-    w, h, _, feat = decode_gif(gif, "image")
+    w, h, lum = decode_gif(gif)
     assert (w, h) == (8, 8)
-    assert feat[:4] == [0.0] * 4 and feat[4:] == [1.0] * 4
+    assert (lum[:4] == 0.0).all() and (lum[4:] == 1.0).all()
 
 
 def test_multimodal_gif_corrupt_lzw_is_null_row(spark):
@@ -769,11 +624,9 @@ def test_multimodal_gif_corrupt_lzw_is_null_row(spark):
         __import__("numpy").zeros((2, 2), dtype="uint8"),
         [(0, 0, 0)] * 256,
     )[:-6]  # chop the stream mid-data
-    media = spark.createDataFrame(
-        [(1, "image", None, bad, {})], MM.MEDIA_SCHEMA
-    )
-    got = MM.extract_features(media).collect()[0]
-    assert got["feature"] is None
+    media = spark.createDataFrame([(1, "image", None, bad, {})], MEDIA_SCHEMA)
+    got = MM.image_phash(media).collect()[0]
+    assert got["phash"] is None
 
 
 def test_gif_lzw_roundtrip_real_compression():
@@ -975,10 +828,10 @@ def _jpeg_encode(planes, w, h, sampling, quant_flat=1):
             + seg(0xC0, sof) + seg(0xDA, sos) + bytes(out) + b"\xff\xd9")
 
 
-def test_multimodal_real_jpeg_decode(spark):
+def test_multimodal_real_jpeg_decode():
     """Baseline JPEG is a real decoder: grayscale, 4:4:4 color, and
     4:2:0 chroma-subsampled encodings of the same luminance decode to
-    features matching the netpbm ground truth within the flat-quant
+    grids matching the netpbm ground truth within the flat-quant
     loss bound; a flat-gray image roundtrips EXACTLY (DC-only path)."""
     import numpy as np
 
@@ -997,33 +850,28 @@ def test_multimodal_real_jpeg_decode(spark):
     color420 = _jpeg_encode([lum, sub, sub], w, h,
                             [(2, 2), (1, 1), (1, 1)])
 
-    media = spark.createDataFrame(
-        [(1, "image", None, ppm, {}), (2, "image", None, gray, {}),
-         (3, "image", None, color444, {}), (4, "image", None, color420, {})],
-        MM.MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    ref = got[1]["feature"]
-    for mid in (2, 3, 4):
-        assert (got[mid]["width"], got[mid]["height"]) == (w, h), mid
-        assert got[mid]["feature"] is not None, mid
-        for a, b in zip(ref, got[mid]["feature"]):
-            assert abs(a - b) < 0.02, (mid, ref, got[mid]["feature"])
+    ref = _grid(MM.decode_luminance(ppm)[2])
+    for name, payload in [("gray", gray), ("444", color444), ("420", color420)]:
+        wd, hd, plane = MM.decode_luminance(payload)
+        assert (wd, hd) == (w, h), name
+        feat = _grid(plane)
+        for a, b in zip(ref, feat):
+            assert abs(a - b) < 0.02, (name, ref, feat)
 
     # DC-only exactness: a flat 100-gray image decodes to exactly 100
     flat = np.full((8, 8), 100, dtype=np.uint8)
     jf = _jpeg_encode([flat], 8, 8, [(1, 1)])
-    wd, hd, _, feat = MM.decode_jpeg(jf, "image")
+    wd, hd, plane = MM.decode_jpeg(jf)
     assert (wd, hd) == (8, 8)
-    assert all(abs(v - 100 / 255) < 1e-9 for v in feat)
+    assert abs(plane - 100 / 255).max() < 1e-9
 
     # a grayscale file DECLARING 2x2 sampling still scans
     # non-interleaved (T.81 A.2.2) — the sampling factors must not
     # shape a single-component scan
     g22 = _jpeg_encode([lum], w, h, [(2, 2)])
-    wd, hd, _, feat22 = MM.decode_jpeg(g22, "image")
+    wd, hd, plane22 = MM.decode_jpeg(g22)
     assert (wd, hd) == (w, h)
-    for a, b in zip(ref, feat22):
+    for a, b in zip(ref, _grid(plane22)):
         assert abs(a - b) < 0.02
 
     # arithmetic-coded JPEG refuses clearly (SOF9); a baseline scan
@@ -1034,11 +882,11 @@ def test_multimodal_real_jpeg_decode(spark):
     sof_at = arith.index(b"\xff\xc0")
     arith[sof_at + 1] = 0xC9
     with _pytest.raises(NotImplementedError, match="huffman"):
-        MM.decode_jpeg(bytes(arith), "image")
+        MM.decode_jpeg(bytes(arith))
     fake_prog = bytearray(gray)
     fake_prog[sof_at + 1] = 0xC2
     with _pytest.raises(ValueError, match="scan script"):
-        MM.decode_jpeg(bytes(fake_prog), "image")
+        MM.decode_jpeg(bytes(fake_prog))
 
 
 _MEDIA_DIR = os.path.join(os.path.dirname(__file__), "data", "media")
@@ -1059,7 +907,8 @@ def test_multimodal_jpeg_decodes_real_world_files():
     from sarfile_analyzer_ng_spark.functions.multimodal import decode_jpeg
 
     mandala = os.path.join(_MEDIA_DIR, "flower-of-life.jpg")
-    w, h, _, feat = decode_jpeg(open(mandala, "rb").read(), "image")
+    w, h, lum = decode_jpeg(open(mandala, "rb").read())
+    feat = _grid(lum)
     assert (w, h) == (161, 161)
     # radial symmetry: each grid row reads the same left-to-right as
     # right-to-left (within JPEG loss), and the image is bright
@@ -1070,9 +919,9 @@ def test_multimodal_jpeg_decodes_real_world_files():
     diagram = ("/usr/lib/google-cloud-sdk/platform/gsutil/third_party/"
                "pyparsing/docs/_static/pyparsingClassDiagram_1.5.2.jpg")
     if os.path.exists(diagram):
-        w, h, _, feat = decode_jpeg(open(diagram, "rb").read(), "image")
+        w, h, lum = decode_jpeg(open(diagram, "rb").read())
         assert (w, h) == (1155, 1659)
-        assert min(feat) > 0.9  # a documentation page is mostly white
+        assert min(_grid(lum)) > 0.9  # a documentation page is mostly white
 
 
 def _jpeg_encode_progressive(lum, w, h, refine=False):
@@ -1081,7 +930,7 @@ def _jpeg_encode_progressive(lum, w, h, refine=False):
     approximation script (Al=1 first passes + Ah=1 refinement for DC
     and AC) whose correction-bit stream mirrors the decoder walk.
     Quant=1 everywhere, so a full progression reconstructs EXACTLY the
-    coefficients the baseline encoder writes — features must match
+    coefficients the baseline encoder writes — planes must match
     bit-for-bit."""
     import numpy as np
 
@@ -1265,7 +1114,7 @@ def _jpeg_encode_progressive(lum, w, h, refine=False):
 
 def test_multimodal_progressive_jpeg_matches_baseline():
     """A full progression reconstructs the EXACT coefficients the
-    baseline encoding carries, so the decoded features must be
+    baseline encoding carries, so the decoded planes must be
     identical — for plain spectral selection AND for a successive-
     approximation script exercising DC/AC refinement, EOB, ZRL, and
     correction bits."""
@@ -1281,13 +1130,14 @@ def test_multimodal_progressive_jpeg_matches_baseline():
         + rng.normal(0, 12, (h, w)),
         0, 255,
     ).astype(np.uint8)
-    base = decode_jpeg(_jpeg_encode([lum], w, h, [(1, 1)]), "image")
-    spectral = decode_jpeg(_jpeg_encode_progressive(lum, w, h), "image")
-    refined = decode_jpeg(
-        _jpeg_encode_progressive(lum, w, h, refine=True), "image"
+    bw, bh, base = decode_jpeg(_jpeg_encode([lum], w, h, [(1, 1)]))
+    sw, sh, spectral = decode_jpeg(_jpeg_encode_progressive(lum, w, h))
+    rw, rh, refined = decode_jpeg(
+        _jpeg_encode_progressive(lum, w, h, refine=True)
     )
-    assert spectral == base
-    assert refined == base
+    assert (bw, bh) == (sw, sh) == (rw, rh) == (w, h)
+    assert np.array_equal(spectral, base)
+    assert np.array_equal(refined, base)
 
 
 def test_ac_refine_zrl_bit_order_matches_libjpeg():
@@ -1323,67 +1173,12 @@ def test_multimodal_real_progressive_jpegs():
     from sarfile_analyzer_ng_spark.functions.multimodal import decode_jpeg
 
     thin = os.path.join(_MEDIA_DIR, "thin-white-stripe.jpg")
-    w, h, _, feat = decode_jpeg(open(thin, "rb").read(), "image")
-    assert (w, h) == (493, 58) and min(feat) > 0.7
+    w, h, lum = decode_jpeg(open(thin, "rb").read())
+    assert (w, h) == (493, 58) and min(_grid(lum)) > 0.7
     full = "/usr/share/doc/nodejs/full-white-stripe.jpg"
     if os.path.exists(full):
-        w, h, _, feat = decode_jpeg(open(full, "rb").read(), "image")
-        assert (w, h) == (493, 312) and min(feat) > 0.9
-
-
-def test_multimodal_mjpeg_frame_sampling(spark):
-    """Motion-JPEG video (concatenated JPEG frames) samples through
-    the SAME frame pipeline as netpbm video, with the real JPEG
-    decoder per frame — per-frame features must match the PPM-encoded
-    twin of the same frame pixels."""
-    import numpy as np
-
-    rng = np.random.default_rng(37)
-    h, w = 16, 16
-    yy, xx = np.mgrid[0:h, 0:w]
-    frames_px = [
-        np.clip(128 + 80 * np.sin(yy / 3.0 + t) * np.cos(xx / 4.0 - t),
-                0, 255).astype(np.uint8)
-        for t in range(5)
-    ]
-    mjpeg = b"".join(_jpeg_encode([f], w, h, [(1, 1)]) for f in frames_px)
-    ppm_video = b"".join(
-        b"P5\n16 16\n255\n" + f.tobytes() for f in frames_px
-    )
-    media = spark.createDataFrame(
-        [(1, "video", None, mjpeg, {}), (2, "video", None, ppm_video, {})],
-        MM.MEDIA_SCHEMA,
-    )
-    rows = MM.sample_frames(media, every_n=2).collect()
-    by = {}
-    for r in rows:
-        by.setdefault(r["media_id"], {})[r["frame_idx"]] = r
-    assert set(by[1]) == set(by[2]) == {0, 2, 4}
-    for idx in (0, 2, 4):
-        a, b = by[1][idx], by[2][idx]
-        assert (a["width"], a["height"], a["n_frames"]) == (16, 16, 5)
-        # JPEG at quant=1 is near-lossless: features match within 0.01
-        for x, y in zip(a["feature"], b["feature"]):
-            assert abs(x - y) < 0.01
-
-
-def test_multimodal_corrupt_video_yields_marker_row(spark):
-    good = b"P5\n2 2\n255\n\x00\x40\x80\xff" * 2
-    bad = b"\xff\xd8\xff\xee"  # truncated MJPEG
-    media = spark.createDataFrame(
-        [(1, "video", None, bad, {}), (2, "video", None, good, {})],
-        MM.MEDIA_SCHEMA,
-    )
-    rows = MM.sample_frames(media, every_n=1).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r["media_id"], []).append(r)
-    assert len(got[1]) == 1 and got[1][0]["frame_idx"] == -1
-    assert got[1][0]["feature"] is None
-    assert len(got[2]) == 2 and all(r["feature"] for r in got[2])
-    import pytest as _pytest
-    with _pytest.raises(Exception):
-        MM.sample_frames(media, every_n=1, on_undecodable="raise").collect()
+        w, h, lum = decode_jpeg(open(full, "rb").read())
+        assert (w, h) == (493, 312) and min(_grid(lum)) > 0.9
 
 
 def test_image_phash_is_container_invariant_and_robust(spark):
@@ -1430,7 +1225,7 @@ def test_image_phash_is_container_invariant_and_robust(spark):
             (5, "image", None, b"P6\n48 40\n255\n" + other.tobytes(), {}),
             (6, "image", None, b"\x89PNG\r\n\x1a\n" + b"junk" * 4, {}),
         ],
-        MM.MEDIA_SCHEMA,
+        MEDIA_SCHEMA,
     )
     hashes = MM.image_phash(media)
     got = {r["media_id"]: r for r in hashes.collect()}
@@ -1447,87 +1242,6 @@ def test_image_phash_is_container_invariant_and_robust(spark):
              for r in MM.phash_dup_pairs(hashes).collect()}
     assert pairs[(1, 2)] == 0 and pairs[(1, 3)] == 0 and pairs[(2, 3)] == 0
     assert (1, 4) in pairs and (1, 5) not in pairs and (4, 5) not in pairs
-
-
-def test_video_phash_hashes_each_frame_and_marks_corrupt(spark):
-    """Video pHash: every frame of a multi-frame payload gets its own
-    row, and a corrupt payload yields one marker row."""
-    import numpy as np
-
-    from sarfile_analyzer_ng_spark.functions import multimodal as MM
-
-    def frame(seed):
-        yy, xx = np.mgrid[0:16, 0:16]
-        g = ((xx * (3 + seed) + yy * (2 + seed)) % 256).astype(np.uint8)
-        g[(seed % 8):(seed % 8) + 5, 2:9] = 250
-        px = np.stack([g] * 3, axis=2)
-        return b"P6\n16 16\n255\n" + px.tobytes()
-
-    video_a = b"".join(frame(i * 7) for i in range(6))  # 6 frames
-    media = spark.createDataFrame(
-        [
-            (1, "video", None, video_a, {}),
-            (5, "video", None, b"P6\ngarbage", {}),
-        ],
-        MM.MEDIA_SCHEMA,
-    )
-    rows = MM.video_phash(media).collect()
-    marker = [r for r in rows if r["media_id"] == 5]
-    assert len(marker) == 1 and marker[0]["phash"] is None
-    assert len([r for r in rows if r["media_id"] == 1]) == 6
-
-
-def test_video_phash_zero_frame_payload_emits_marker(spark):
-    """r8 ADVICE: a payload that splits into ZERO frames (empty or
-    whitespace-only container) must emit the (media_id, -1, null)
-    marker row like a corrupt payload — never silently vanish from
-    the dedup audit."""
-    from sarfile_analyzer_ng_spark.functions import multimodal as MM
-
-    media = spark.createDataFrame(
-        [(1, "video", None, b"   ", {}), (2, "video", None, b"\n\n", {})],
-        MM.MEDIA_SCHEMA,
-    )
-    rows = MM.video_phash(media).collect()
-    got = {r["media_id"]: r for r in rows}
-    assert set(got) == {1, 2}
-    for r in rows:
-        assert r["frame_idx"] == -1 and r["phash"] is None
-
-
-def test_decode_luminance_does_not_leak_reducer():
-    """r8 ADVICE: decode_luminance threads an explicit reducer through
-    real_decode instead of swapping module state — a nested or
-    interleaved real_decode call mid-flight must still produce the
-    8-dim grid feature, and the module global must be untouched."""
-    import numpy as np
-
-    from sarfile_analyzer_ng_spark.functions import multimodal as MM
-
-    px = np.stack([(np.arange(12 * 16).reshape(12, 16) % 256)
-                   .astype(np.uint8)] * 3, axis=2)
-    ppm = b"P6\n16 12\n255\n" + px.tobytes()
-
-    before = MM._lum_feature
-    w, h, lum = MM.decode_luminance(ppm)
-    assert (w, h) == (16, 12) and lum.shape == (12, 16)
-    # the module-level reducer is untouched and real_decode still
-    # produces the pooled 8-dim feature
-    assert MM._lum_feature is before
-    _, _, _, feat = MM.real_decode(ppm, "image")
-    assert isinstance(feat, list) and len(feat) == 8
-
-    # interleaved: a reducer passed to one call never leaks into another
-    seen = {}
-
-    def probe(lum_plane):
-        seen["shape"] = lum_plane.shape
-        _, _, _, inner = MM.real_decode(ppm, "image")  # nested default call
-        seen["inner_len"] = len(inner)
-        return MM._lum_feature(lum_plane)
-
-    MM.real_decode(ppm, "image", reducer=probe)
-    assert seen["shape"] == (12, 16) and seen["inner_len"] == 8
 
 
 def test_phash_dup_pairs_caps_hot_band_buckets(spark):
@@ -1580,18 +1294,10 @@ def test_image_phash_bit_exact_with_corrupt_row_in_batch(spark):
     media = spark.createDataFrame(
         [(1, "image", None, ppm, {}),
          (2, "image", None, b"\x89PNG\r\n\x1a\njunk", {})],
-        MM.MEDIA_SCHEMA,
+        MEDIA_SCHEMA,
     ).coalesce(1)  # force one Arrow batch containing the corrupt row
     got = {r["media_id"]: r["phash"] for r in MM.image_phash(media).collect()}
     assert got[1] == expect and got[2] is None
-
-    # video path: marker row in-batch must not corrupt frame hashes
-    vid = spark.createDataFrame(
-        [(1, "video", None, ppm, {}), (2, "video", None, b"   ", {})],
-        MM.MEDIA_SCHEMA,
-    ).coalesce(1)
-    vrows = {r["media_id"]: r["phash"] for r in MM.video_phash(vid).collect()}
-    assert vrows[1] == expect and vrows[2] is None
 
 
 def test_media_inventory_counts_and_corrupt_row(spark):

@@ -12,7 +12,12 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _extract(spark, html: str):
     df = spark.createDataFrame([(1, html)], "doc_id long, html string")
-    return H.html_extract(df, "html", "doc_id").collect()[0]
+    blk = H.html_block_structs(F.col("html"))
+    kept, text = H.content_text(blk)
+    return df.select(F.size(blk).alias("n_blocks"),
+                     (F.size(blk) - F.size(kept)).alias("n_boiler"),
+                     text.alias("text"),
+                     F.length(text).alias("n_chars")).collect()[0]
 
 
 def test_script_style_head_comment_stripped(spark):
@@ -75,8 +80,8 @@ def test_funnel_page_roundtrips_text_exactly(spark):
 
     crawl = _funnel2_crawl(spark, SF_DIR)
     pages = crawl.withColumn("html", _funnel2_page_expr())
-    ext = H.html_extract(pages, "html", "doc_id").select(
-        "doc_id", F.col("text").alias("ext"))
+    _kept, text = H.content_text(H.html_block_structs(F.col("html")))
+    ext = pages.select("doc_id", text.alias("ext"))
     bad = (
         crawl.join(ext, "doc_id")
         .where(F.col("text") != F.col("ext"))

@@ -1,27 +1,96 @@
-"""Dump ``.explain("formatted")`` for registry keys to files.
+"""Dump ``.explain("formatted")`` for registry keys, or digest them all.
 
-Usage: python tools/dump_plans.py <outdir> <suffix> <key> [key ...]
+Usage:
+    python tools/dump_plans.py <outdir> <suffix> <key> [key ...]
+    python tools/dump_plans.py --digest [sf_dir]
 
-Writes ``<outdir>/<key>_<suffix>.txt`` for each key — the optimization
-rounds' committed plan evidence (plans/r12/<query>_before.txt /
-..._after.txt). Uses SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-so the plans match the bench inputs. Memo keys (``_memo_*``) resolve
-through queries.memo_builders().
+The first form writes ``<outdir>/<key>_<suffix>.txt`` for each key,
+built at SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata). Memo keys
+(``_memo_*``) resolve through queries.memo_builders().
+
+``--digest`` builds, in one session, every memo (in memo_builders()
+order) and then every registry key (in registry order) at ``sf_dir``
+(default: the sf0.001 testdata, as in tools/check_oracle.py) on
+``local[4]``, each build starting from its own expression-id base (see
+``expr_id_setter``), masks what differs from run to run or checkout to
+checkout (see ``mask``), and writes ``plans/digests.json``: one sha256
+per masked plan, plus ``all``, the sha256 of the per-plan digests in
+that order. Two runs of one commit write the same file, so "plans
+unchanged" is an empty diff of it.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from sarfile_analyzer_ng_spark.queries import REGISTRY, memo_builders
-from sarfile_analyzer_ng_spark.session import get_spark
+# (pattern, replacement), applied in order. Each number masked here is
+# a counter of the JVM or the session, not a property of the plan.
+MASKS = [
+    (re.compile(r"#\d+L?"), "#N"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    # AQE query-stage ids: the stage node's "Arguments: 3" line
+    (re.compile(r"(QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+"), r"\1N"),
+    (re.compile(r"\b(lambda \w+?)_\d+"), r"\1_N"),  # lambda variables
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+]
 
 
-def main() -> None:
-    outdir, suffix, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
+def mask(plan: str) -> str:
+    """The plan text with the checkout root and every run-local id
+    replaced by a fixed token."""
+    plan = plan.replace(ROOT, "<ROOT>")
+    for pattern, repl in MASKS:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def expr_id_setter(spark):
+    """A function that moves Catalyst's expression-id counter
+    (``NamedExpression.curId``) to a given value. Some plan choices
+    follow the hash codes of expression ids — q191's two
+    distinct-aggregate groups come out of Spark's rewrite in either
+    order — so a build must not inherit ids from whatever ran before
+    it. Only ever move the counter forward: ids must stay unique."""
+    jvm = spark._jvm
+    handles = jvm.java.lang.invoke.MethodHandles
+    named = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.NamedExpression$")
+    atomic = jvm.java.lang.Class.forName(
+        "java.util.concurrent.atomic.AtomicLong")
+    getter = handles.privateLookupIn(named, handles.lookup()) \
+        .findStaticGetter(named, "curId", atomic)
+    setter = handles.publicLookup().findVirtual(
+        atomic, "set", jvm.java.lang.invoke.MethodType.methodType(
+            jvm.java.lang.Void.TYPE, jvm.java.lang.Long.TYPE))
+    set_counter = handles.collectArguments(setter, 0, getter)
+    gateway = spark.sparkContext._gateway
+
+    def set_to(value: int) -> None:
+        args = gateway.new_array(jvm.java.lang.Object, 1)
+        args[0] = jvm.java.lang.Long.valueOf(value)
+        set_counter.invokeWithArguments(args)
+
+    return set_to
+
+
+def dump(outdir: str, suffix: str, keys: list[str]) -> None:
+    from sarfile_analyzer_ng_spark.queries import REGISTRY, memo_builders
+    from sarfile_analyzer_ng_spark.session import get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("dump_plans")
@@ -29,14 +98,47 @@ def main() -> None:
     memos = memo_builders()
     for key in keys:
         fn = memos[key] if key in memos else REGISTRY[key][0]
-        df = fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain(fn(spark, sf_dir))
         path = os.path.join(outdir, f"{key}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} bytes)", file=sys.stderr)
+
+
+def digest(sf_dir: str) -> None:
+    # Partition counts appear in plans; pin them to one core count.
+    os.environ["SPARK_GRAFT_CPUS"] = "4"
+    from sarfile_analyzer_ng_spark.queries import REGISTRY, memo_builders
+    from sarfile_analyzer_ng_spark.session import get_spark
+
+    spark = get_spark("dump_plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    builds = [*memo_builders().items(),
+              *((key, fn) for key, (fn, _) in REGISTRY.items())]
+    set_expr_id = expr_id_setter(spark)
+    digests = {}
+    for i, (key, fn) in enumerate(builds, 1):
+        set_expr_id(i << 32)  # far above anything the last build took
+        plan = mask(explain(fn(spark, sf_dir)))
+        digests[key] = hashlib.sha256(plan.encode()).hexdigest()
+    every = "".join(f"{k} {d}\n" for k, d in digests.items())
+    out = {"sf_dir": sf_dir, "plans": len(digests),
+           "all": hashlib.sha256(every.encode()).hexdigest(),
+           "digests": digests}
+    path = os.path.join(ROOT, "plans", "digests.json")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as fh:
+        json.dump(out, fh, indent=1)
+        fh.write("\n")
+    print(f"wrote {path}: {len(digests)} plans, all={out['all']}",
+          file=sys.stderr)
+
+
+def main() -> None:
+    if sys.argv[1:2] == ["--digest"]:
+        digest(sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001")
+    else:
+        dump(sys.argv[1], sys.argv[2], sys.argv[3:])
 
 
 if __name__ == "__main__":
