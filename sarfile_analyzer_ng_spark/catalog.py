@@ -118,9 +118,13 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     every operator, CSV format option, and oracle compare in this
     engine is written against the zoned type.
 
-    Fallback only: :func:`load_table` disables NTZ inference at the
-    scan (a cast on top of the scan blocks parquet filter pushdown on
-    the column), so this fires just for frames read outside it.
+    :func:`load_table` turns NTZ inference off at the scan, which makes
+    pyarrow-written tz-less columns read as TIMESTAMP directly (a cast
+    on top of the scan blocks parquet filter pushdown on the column).
+    That conf does not reach a TIMESTAMP_NTZ column that Spark itself
+    wrote, top-level or nested: Spark takes that type from its own
+    schema in the parquet footer. Such columns, and frames read
+    outside :func:`load_table`, are cast here.
     Recurses through struct/array/map types (one struct-level cast per
     affected top-level column — Spark casts nested types elementwise),
     and column references are backtick-escaped so dotted names resolve
@@ -148,8 +152,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Surface tz-less parquet timestamps as session-zoned LTZ at
         # the scan itself (conf scoped to this read, like the nanos
         # conf below): casting NTZ→LTZ on top of the scan would stop
-        # parquet filter pushdown on those columns. _normalize_ntz
-        # stays as a belt-and-braces fallback.
+        # parquet filter pushdown on those columns. The conf does not
+        # apply to TIMESTAMP_NTZ columns that Spark wrote (their type
+        # comes from Spark's footer schema); _normalize_ntz casts
+        # those.
         ntz_key = "spark.sql.parquet.inferTimestampNTZ.enabled"
         prev_ntz = spark.conf.get(ntz_key, None)
         spark.conf.set(ntz_key, "false")

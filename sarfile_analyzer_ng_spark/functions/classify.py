@@ -62,24 +62,22 @@ def quality_features(docs: DataFrame, text_col: str, id_col: str,
     )
 
 
-def logreg_margin(xs: list[Column], weights: list[float],
-                  sig_round: int = 8) -> Column:
-    """``rnd(w·x, sig_round)`` with the dot product evaluated strictly
+def logreg_margin(xs: list[Column], weights: list[float]) -> Column:
+    """``rnd(w·x, 8)`` with the dot product evaluated strictly
     left-to-right — the summand order is part of the cross-engine
     contract (the oracle writes the same literal order)."""
     z: Column = F.lit(0.0)
     for w_j, x_j in zip(weights, xs):
         z = z + F.lit(w_j) * x_j
-    return rnd(z, sig_round)
+    return rnd(z, 8)
 
 
-def logreg_sigmoid(z: Column, sig_round: int = 8) -> Column:
-    return rnd(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), sig_round)
+def logreg_sigmoid(z: Column) -> Column:
+    return rnd(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 8)
 
 
 def logreg_train(df: DataFrame, feature_cols: list[str], label_col: str,
-                 iters: int = 4, lr: float = 0.5,
-                 round_to: int = 6, sig_round: int = 8) -> list[float]:
+                 iters: int = 4, lr: float = 0.5) -> list[float]:
     """Full-batch gradient descent from ``w = 0``; returns the weight
     vector ``[bias, w_1, ...]`` after exactly ``iters`` updates (fixed
     iteration count, not convergence — determinism is the contract,
@@ -98,7 +96,7 @@ def logreg_train(df: DataFrame, feature_cols: list[str], label_col: str,
     x_aliases = [x_j.alias(f"_x{j}") for j, x_j in enumerate(xs)]
     grad_cols = [
         rnd(F.sum(F.col("_r") * F.col(f"_x{j}")) / F.lit(float(n)),
-            round_to)
+            6)
         .alias(f"g{j}")
         for j in range(len(xs))
     ]
@@ -107,36 +105,33 @@ def logreg_train(df: DataFrame, feature_cols: list[str], label_col: str,
         # fix applied to the binary chain): inlining it into every
         # gradient column re-evaluated the exp per column. Same
         # doubles, same summation order — value-identical.
-        resid = logreg_sigmoid(logreg_margin(xs, w, sig_round), sig_round) - y
+        resid = logreg_sigmoid(logreg_margin(xs, w)) - y
         proj = df.select(resid.alias("_r"), *x_aliases)
         grads = proj.agg(*grad_cols).first()
         # rnd_np expects an array (its half-boundary repair indexes)
         w = [
-            float(rnd_np([w_j - lr * float(grads[f"g{j}"])], round_to)[0])
+            float(rnd_np([w_j - lr * float(grads[f"g{j}"])], 6)[0])
             for j, w_j in enumerate(w)
         ]
     return w
 
 
 def logreg_score(df: DataFrame, feature_cols: list[str],
-                 weights: list[float], out_col: str = "p_good",
-                 round_to: int = 4, sig_round: int = 8) -> DataFrame:
+                 weights: list[float]) -> DataFrame:
     """Score every row with a trained weight vector: ``p = σ(w·x)``
     (rounded for the verdict) plus the 0.5-threshold class. One
     codegen map stage, model as literals — no join, no shuffle."""
     xs = [F.lit(1.0)] + [F.col(c).cast("double") for c in feature_cols]
-    p = logreg_sigmoid(logreg_margin(xs, weights, sig_round), sig_round)
+    p = logreg_sigmoid(logreg_margin(xs, weights))
     return df.withColumns(
         {
-            out_col: rnd(p, round_to),
-            "pred": (rnd(p, round_to) >= 0.5).cast("int"),
+            "p_good": rnd(p, 4),
+            "pred": (rnd(p, 4) >= 0.5).cast("int"),
         }
     )
 
 
-def calibration_report(scored: DataFrame, p_col: str = "p_good",
-                       label_col: str = "label", bins: int = 10,
-                       round_to: int = 4) -> DataFrame:
+def calibration_report(scored: DataFrame, bins: int = 10) -> DataFrame:
     """Classifier reliability table — the check a curator runs BEFORE
     trusting a quality classifier's threshold (Guo et al. 2017, "On
     Calibration of Modern Neural Networks", here for the logreg
@@ -157,13 +152,13 @@ def calibration_report(scored: DataFrame, p_col: str = "p_good",
     passthrough values; both engines floor identical doubles). No
     ntile, no global sort — two linear passes."""
     ext = scored.agg(
-        F.min(F.col(p_col)).alias("_pmin"),
-        F.max(F.col(p_col)).alias("_pmax"),
+        F.min(F.col("p_good")).alias("_pmin"),
+        F.max(F.col("p_good")).alias("_pmax"),
     )
     span = F.col("_pmax") - F.col("_pmin")
     b = F.when(span <= 0, F.lit(0)).otherwise(
         F.least(
-            F.floor((F.col(p_col) - F.col("_pmin")) / span * bins),
+            F.floor((F.col("p_good") - F.col("_pmin")) / span * bins),
             F.lit(bins - 1),
         )
     ).cast("long")
@@ -172,20 +167,19 @@ def calibration_report(scored: DataFrame, p_col: str = "p_good",
         .groupBy(b.alias("bin"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            rnd(F.avg(p_col), round_to).alias("mean_p"),
-            rnd(F.avg(F.col(label_col).cast("double")), round_to)
+            rnd(F.avg("p_good"), 4).alias("mean_p"),
+            rnd(F.avg(F.col("label").cast("double")), 4)
             .alias("frac_good"),
         )
         .withColumn(
-            "gap", rnd(F.col("mean_p") - F.col("frac_good"), round_to)
+            "gap", rnd(F.col("mean_p") - F.col("frac_good"), 4)
         )
     )
 
 
 def hashed_gram_features(docs: DataFrame, text_col: str, id_col: str,
                          source_col: str, pos_sources: tuple[str, ...],
-                         buckets: int = 8,
-                         round_to: int = 6) -> DataFrame:
+                         buckets: int = 8) -> DataFrame:
     """fastText-style hashed bag-of-ngrams features (Joulin et al.
     2017, "Bag of Tricks for Efficient Text Classification"): unigrams
     AND word bigrams hashed into ``buckets`` feature buckets, per-doc
@@ -214,7 +208,7 @@ def hashed_gram_features(docs: DataFrame, text_col: str, id_col: str,
         F.when(F.col("_carry").isin(*pos_sources), 1).otherwise(0)
         .alias("label"),
         *[
-            rnd(F.col(f"c{j}") / F.col("total"), round_to).alias(f"x{j}")
+            rnd(F.col(f"c{j}") / F.col("total"), 6).alias(f"x{j}")
             for j in range(buckets)
         ],
     )
@@ -259,8 +253,7 @@ def _hashed_gram_agg(docs: DataFrame, text_col: str, id_col: str,
 
 def hashed_gram_features_labeled(docs: DataFrame, text_col: str,
                                  id_col: str, label_col: str,
-                                 buckets: int = 8,
-                                 round_to: int = 6) -> DataFrame:
+                                 buckets: int = 8) -> DataFrame:
     """:func:`hashed_gram_features` with a caller-supplied INTEGER
     class label (multi-class: langid, domain routing) instead of the
     binary provenance rule — the feature map :func:`softmax_train`
@@ -270,14 +263,13 @@ def hashed_gram_features_labeled(docs: DataFrame, text_col: str,
         F.col("doc").alias(id_col),
         F.col("_carry").cast("int").alias("label"),
         *[
-            rnd(F.col(f"c{j}") / F.col("total"), round_to).alias(f"x{j}")
+            rnd(F.col(f"c{j}") / F.col("total"), 6).alias(f"x{j}")
             for j in range(buckets)
         ],
     )
 
 
-def auc_score(scored: DataFrame, score_col: str, label_col: str,
-              round_to: int = 6) -> DataFrame:
+def auc_score(scored: DataFrame, score_col: str, label_col: str) -> DataFrame:
     """ROC-AUC as the Mann–Whitney rank statistic with average ranks
     for ties — the one-number discrimination audit of a quality
     classifier ("does p_good actually order good above bad?"),
@@ -332,15 +324,14 @@ def auc_score(scored: DataFrame, score_col: str, label_col: str,
             rnd(
                 (F.col("_rsum") - F.col("np") * (F.col("np") + 1) / F.lit(2.0))
                 / (F.col("np") * F.col("nn")),
-                round_to,
+                6,
             ),
         ).alias("auc"),
     )
 
 
 def kappa_agreement(a: DataFrame, b: DataFrame, id_col: str,
-                    a_col: str, b_col: str,
-                    round_to: int = 6) -> DataFrame:
+                    a_col: str, b_col: str) -> DataFrame:
     """Cohen's kappa between two binary verdict frames (Cohen 1960):
     chance-corrected agreement ``κ = (p_o − p_e)/(1 − p_e)`` — the
     audit that answers "do my rule-based and learned quality filters
@@ -382,8 +373,8 @@ def kappa_agreement(a: DataFrame, b: DataFrame, id_col: str,
         F.col("n00").cast("long").alias("both_drop"),
         F.col("n10").cast("long").alias("only_rules"),
         F.col("n01").cast("long").alias("only_classifier"),
-        rnd(po, round_to).alias("observed_agreement"),
-        F.when(pe < 1.0, rnd((po - pe) / (F.lit(1.0) - pe), round_to))
+        rnd(po, 6).alias("observed_agreement"),
+        F.when(pe < 1.0, rnd((po - pe) / (F.lit(1.0) - pe), 6))
          .alias("kappa"),
     )
 
@@ -391,8 +382,8 @@ def kappa_agreement(a: DataFrame, b: DataFrame, id_col: str,
 def threshold_sweep(scored: DataFrame, p_col: str = "p_good",
                     label_col: str = "label",
                     taus: tuple[float, ...] = tuple(
-                        round(t * 0.05, 2) for t in range(1, 20)),
-                    round_to: int = 6) -> DataFrame:
+                        round(t * 0.05, 2) for t in range(1, 20))
+                    ) -> DataFrame:
     """Operating-point table for a score-vs-label classifier: for each
     decision threshold τ, the confusion counts and precision / recall
     / F1. This is the table a curator actually PICKS the filter
@@ -404,7 +395,7 @@ def threshold_sweep(scored: DataFrame, p_col: str = "p_good",
     Thresholds are exact 2-digit literals and scores arrive already
     rounded (4 digits upstream), so ``p ≥ τ`` can never straddle an
     ulp across engines. P/R/F1 divide BIGINT counts and round at
-    ``round_to``; F1 is computed from the two already-rounded ratios
+    6 digits; F1 is computed from the two already-rounded ratios
     (the q84 derived-value contract). Empty cells yield NULL via
     nullif, identically on both sides.
 
@@ -429,9 +420,9 @@ def threshold_sweep(scored: DataFrame, p_col: str = "p_good",
         F.sum((1 - pos) * (1 - F.col("y"))).alias("tn"),
     )
     prec = rnd(F.col("tp") / F.nullif(F.col("tp") + F.col("fp"), F.lit(0)),
-               round_to)
+               6)
     rec = rnd(F.col("tp") / F.nullif(F.col("tp") + F.col("fn"), F.lit(0)),
-              round_to)
+              6)
     out = agg.select(
         "tau", "tp", "fp", "fn", "tn",
         prec.alias("precision"), rec.alias("recall"),
@@ -439,7 +430,7 @@ def threshold_sweep(scored: DataFrame, p_col: str = "p_good",
     f1 = rnd(
         2 * F.col("precision") * F.col("recall")
         / F.nullif(F.col("precision") + F.col("recall"), F.lit(0.0)),
-        round_to,
+        6,
     )
     return out.select(
         "tau", "tp", "fp", "fn", "tn", "precision", "recall",
@@ -447,24 +438,22 @@ def threshold_sweep(scored: DataFrame, p_col: str = "p_good",
     )
 
 
-def softmax_probs(xs: list[Column], W: list[list[float]],
-                  sig_round: int = 8) -> list[Column]:
+def softmax_probs(xs: list[Column], W: list[list[float]]) -> list[Column]:
     """Per-class softmax probabilities ``p_k = exp(z_k) / Σ exp(z_j)``
-    with each margin z_k pre-rounded at ``sig_round`` (the q104
+    with each margin z_k pre-rounded at 8 digits (the q104
     sigmoid contract generalized: identical rounded doubles enter
-    both engines' exp, and the quotient re-rounds at ``sig_round``,
+    both engines' exp, and the quotient re-rounds at 8 digits,
     collapsing JVM-vs-DuckDB exp ulp skew)."""
-    es = [F.exp(logreg_margin(xs, w_k, sig_round)) for w_k in W]
+    es = [F.exp(logreg_margin(xs, w_k)) for w_k in W]
     denom: Column = es[0]
     for e in es[1:]:
         denom = denom + e
-    return [rnd(e / denom, sig_round) for e in es]
+    return [rnd(e / denom, 8) for e in es]
 
 
 def softmax_train(df: DataFrame, feature_cols: list[str], label_col: str,
-                  n_classes: int, iters: int = 3, lr: float = 0.5,
-                  round_to: int = 6,
-                  sig_round: int = 8) -> list[list[float]]:
+                  n_classes: int, iters: int = 3,
+                  lr: float = 0.5) -> list[list[float]]:
     """Multinomial logistic regression (softmax) by full-batch
     gradient descent from ``W = 0`` — :func:`logreg_train`
     generalized to K one-vs-all-coupled heads (Bishop PRML §4.3.4:
@@ -495,11 +484,11 @@ def softmax_train(df: DataFrame, feature_cols: list[str], label_col: str,
             F.col("_y") == k, F.lit(1.0)).otherwise(F.lit(0.0))
         aggs.extend(
             rnd(F.sum(resid * F.col(f"_x{j}")) / F.lit(float(n)),
-                round_to).alias(f"g{k}_{j}")
+                6).alias(f"g{k}_{j}")
             for j in range(len(xs))
         )
     for _ in range(iters):
-        ps = softmax_probs(xs, W, sig_round)
+        ps = softmax_probs(xs, W)
         # project each class's probability ONCE per row, then
         # aggregate plain products: inlining ps[k] into every one of
         # the K·(F+1) gradient columns made the agg re-evaluate the
@@ -515,7 +504,7 @@ def softmax_train(df: DataFrame, feature_cols: list[str], label_col: str,
         W = [
             [
                 float(rnd_np([W[k][j] - lr * float(g[f"g{k}_{j}"])],
-                             round_to)[0])
+                             6)[0])
                 for j in range(len(xs))
             ]
             for k in range(n_classes)
@@ -524,11 +513,10 @@ def softmax_train(df: DataFrame, feature_cols: list[str], label_col: str,
 
 
 def softmax_score(df: DataFrame, feature_cols: list[str],
-                  W: list[list[float]], round_to: int = 4,
-                  sig_round: int = 8) -> DataFrame:
+                  W: list[list[float]]) -> DataFrame:
     """Score every row with a trained weight matrix: per-class
     probabilities (rounded for the verdict) and ``pred`` = argmax
-    with FIRST-class tie-break (argmax runs over the ``sig_round``-
+    with FIRST-class tie-break (argmax runs over the 8-digit-
     rounded probabilities both engines share, so ties break
     identically). One codegen map stage, model as literals."""
     xs = [F.lit(1.0)] + [F.col(c).cast("double") for c in feature_cols]
@@ -536,26 +524,25 @@ def softmax_score(df: DataFrame, feature_cols: list[str],
     # softmax_train fix): building every p_k and the argmax array from
     # inlined softmax_probs re-evaluated the K-exp chain K² times per
     # row. Same doubles, same rounding — value-identical.
-    es = [F.exp(logreg_margin(xs, w_k, sig_round)) for w_k in W]
+    es = [F.exp(logreg_margin(xs, w_k)) for w_k in W]
     staged = df.withColumns({f"_e{k}": e for k, e in enumerate(es)})
     denom: Column = F.col("_e0")
     for k in range(1, len(W)):
         denom = denom + F.col(f"_e{k}")
     staged = staged.withColumn("_ed", denom)
-    ps = [rnd(F.col(f"_e{k}") / F.col("_ed"), sig_round)
+    ps = [rnd(F.col(f"_e{k}") / F.col("_ed"), 8)
           for k in range(len(W))]
     arr = F.array(*ps)
     pred = (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
     return staged.withColumns(
         {
-            **{f"p{k}": rnd(p, round_to) for k, p in enumerate(ps)},
+            **{f"p{k}": rnd(p, 4) for k, p in enumerate(ps)},
             "pred": pred,
         }
     ).drop(*[f"_e{k}" for k in range(len(W))], "_ed")
 
 
-def standardize_features(df: DataFrame, feature_cols: list[str],
-                         round_to: int = 6) -> DataFrame:
+def standardize_features(df: DataFrame, feature_cols: list[str]) -> DataFrame:
     """Per-feature z-scoring with oracle-replayable stats — the
     preconditioning that lets full-batch GD converge in a handful of
     scans (raw hashed-gram frequencies are tiny and offset-dominated;
@@ -567,17 +554,17 @@ def standardize_features(df: DataFrame, feature_cols: list[str],
     broadcast 1-row frame (no collect, no shuffle beyond the agg)."""
     aggs = []
     for c in feature_cols:
-        aggs.append(rnd(F.avg(F.col(c)), round_to).alias(f"_m_{c}"))
+        aggs.append(rnd(F.avg(F.col(c)), 6).alias(f"_m_{c}"))
         aggs.append(
-            rnd(F.avg(F.col(c) * F.col(c)), round_to).alias(f"_q_{c}"))
+            rnd(F.avg(F.col(c) * F.col(c)), 6).alias(f"_q_{c}"))
     stats = df.agg(*aggs)
     out = df.crossJoin(F.broadcast(stats))
     newcols = {}
     for c in feature_cols:
         m, q = F.col(f"_m_{c}"), F.col(f"_q_{c}")
-        sd = rnd(F.sqrt(F.greatest(q - m * m, F.lit(0.0))), round_to)
+        sd = rnd(F.sqrt(F.greatest(q - m * m, F.lit(0.0))), 6)
         sd = F.when(sd == 0.0, F.lit(1.0)).otherwise(sd)
-        newcols[c] = rnd((F.col(c) - m) / sd, round_to)
+        newcols[c] = rnd((F.col(c) - m) / sd, 6)
     drop = [f"_m_{c}" for c in feature_cols] + \
         [f"_q_{c}" for c in feature_cols]
     return out.withColumns(newcols).drop(*drop)

@@ -91,12 +91,12 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int = 3,
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       shingle_n: int = 3, num_hashes: int = 64,
+                       shingle_n: int = 3,
                        shingles: DataFrame | None = None) -> DataFrame:
     """MinHash signatures as (doc, sig array<bigint>).
 
     Shape matters for scale: shingles are EXPLODED first, then each of
-    the ``num_hashes`` seeds becomes one ``min(xxhash64(shingle, i))``
+    the 64 seeds becomes one ``min(xxhash64(shingle, i))``
     aggregate. The explode materializes the shingle once (computing the
     64 mins over an array column instead would re-inline — and
     re-evaluate — the whole shingle expression per hash), and the
@@ -114,7 +114,7 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
         else shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
     )
     # Collapse the shingle to a 64-bit fingerprint ONCE, then seed the
-    # num_hashes family over the fixed-width long: re-hashing the
+    # 64-hash family over the fixed-width long: re-hashing the
     # ~25-byte string per seed costs ~1.5x the whole aggregation
     # (measured 2.6 s -> 1.7 s at sf0.1). Hash-of-hash with distinct
     # seeds is still a uniform family over shingles.
@@ -122,11 +122,11 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     mins = exploded.groupBy("doc").agg(
         *[
             F.min(F.xxhash64(F.col("_fp"), F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
+            for i in range(64)
         ]
     )
     return mins.select(
-        "doc", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
+        "doc", F.array(*[F.col(f"h{i}") for i in range(64)]).alias("sig")
     )
 
 
@@ -169,8 +169,7 @@ def _drop_hot_bands(banded: DataFrame, max_df: int) -> DataFrame:
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
-                      shingle_n: int = 3, num_hashes: int = 64,
-                      bands: int = 16,
+                      shingle_n: int = 3, bands: int = 16,
                       shingles: DataFrame | None = None,
                       max_df: int | None = None) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash banding with the
@@ -184,8 +183,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     size itself (see :func:`_drop_hot_bands`) — without it a templated
     corpus where every doc shares all band keys is quadratic.
     """
-    rows = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, shingle_n, num_hashes,
+    rows = 64 // bands
+    sig = minhash_signatures(df, text_col, id_col, shingle_n,
                              shingles=shingles)
     banded = sig.select(
         "doc", "sig", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("band")
@@ -209,7 +208,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                                lambda x, y: F.when(x == y, 1).otherwise(0)),
                     F.lit(0),
                     lambda acc, v: acc + v,
-                ).cast("double") / F.lit(float(num_hashes)),
+                ).cast("double") / F.lit(64.0),
                 4,
             ).alias("est_jaccard"),
         )
@@ -260,15 +259,14 @@ def fp32_expr(col: Column) -> Column:
 
 
 def minhash_signatures_portable(df: DataFrame, text_col: str, id_col: str,
-                                shingle_n: int = 3, num_hashes: int = 32,
-                                ) -> DataFrame:
+                                num_hashes: int = 32) -> DataFrame:
     """Portable-family twin of :func:`minhash_signatures`: identical
     explode→min-aggregate shape (map-side partial mins, the shuffle
     carries ``num_hashes`` longs per doc), but hashes every shingle
     with the md5+affine family so the signature VALUES replay in SQL.
     One md5 per shingle row + ``num_hashes`` multiplies — comparable
     cost to the xxhash64 family's hash-of-hash chain."""
-    exploded = shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
+    exploded = shingle_rows(df, text_col, id_col, distinct=False)
     exploded = exploded.select("doc", fp32_expr(F.col("shingle")).alias("_fp"))
     params = affine_params(num_hashes)
     mins = exploded.groupBy("doc").agg(
@@ -315,8 +313,7 @@ def sig_agreement(sig_a, sig_b, num_hashes: int) -> Column:
 
 
 def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
-                               shingle_n: int = 3, num_hashes: int = 32,
-                               bands: int = 16,
+                               num_hashes: int = 32, bands: int = 16,
                                max_df: int | None = None,
                                sigs: DataFrame | None = None) -> DataFrame:
     """Portable-family twin of :func:`minhash_lsh_pairs` — same
@@ -332,7 +329,7 @@ def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
     :func:`minhash_signatures_portable`) to share one signature build
     across consumers — value-identical by construction."""
     sig = sigs if sigs is not None else minhash_signatures_portable(
-        df, text_col, id_col, shingle_n, num_hashes)
+        df, text_col, id_col, num_hashes=num_hashes)
     banded = sig.select(
         "doc", "sig",
         F.explode(portable_band_keys("sig", num_hashes, bands)).alias("band"),
@@ -357,9 +354,8 @@ def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
 
 
 def incremental_near_dups(batch: DataFrame, ref: DataFrame, text_col: str,
-                          id_col: str, shingle_n: int = 3,
+                          id_col: str,
                           num_hashes: int = 32, bands: int = 16,
-                          threshold: float = 0.5,
                           max_df: int | None = None,
                           sig_batch: DataFrame | None = None,
                           sig_ref: DataFrame | None = None) -> DataFrame:
@@ -395,11 +391,11 @@ def incremental_near_dups(batch: DataFrame, ref: DataFrame, text_col: str,
     # from the checkpointed (doc, sig) leaf. Production persists
     # signatures next to the corpus anyway (see Shape at scale below).
     sb = sig_batch if sig_batch is not None else \
-        minhash_signatures_portable(batch, text_col, id_col, shingle_n,
-                                    num_hashes)
+        minhash_signatures_portable(batch, text_col, id_col,
+                                    num_hashes=num_hashes)
     sr = sig_ref if sig_ref is not None else \
-        minhash_signatures_portable(ref, text_col, id_col, shingle_n,
-                                    num_hashes)
+        minhash_signatures_portable(ref, text_col, id_col,
+                                    num_hashes=num_hashes)
     sig_all = (
         sb.select("doc", "sig").withColumn("_b", F.lit(True))
         .unionByName(
@@ -444,7 +440,7 @@ def incremental_near_dups(batch: DataFrame, ref: DataFrame, text_col: str,
             .alias("n_candidates"),
             F.coalesce("max_est_jaccard", F.lit(0.0))
             .alias("max_est_jaccard"),
-            (F.coalesce("max_est_jaccard", F.lit(0.0)) >= threshold)
+            (F.coalesce("max_est_jaccard", F.lit(0.0)) >= 0.5)
             .cast("int").alias("is_dup"),
         )
     )
@@ -613,10 +609,8 @@ def decontaminate(train: DataFrame, eval_df: DataFrame, text_col: str,
 
 def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                       shingle_n: int = 3, threshold: float = 0.5,
-                      num_hashes: int = 64, bands: int = 16,
                       shingles: DataFrame | None = None,
-                      candidates: DataFrame | None = None,
-                      max_df: int | None = None) -> DataFrame:
+                      candidates: DataFrame | None = None) -> DataFrame:
     """LSH-prefiltered exact Jaccard: the 100 TB composition.
 
     :func:`ngram_jaccard_pairs` alone joins on shared shingles, which
@@ -658,8 +652,7 @@ def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     # ``candidates`` — the prefilter stage then costs nothing here.
     owns_raw = candidates is None
     raw = (
-        minhash_lsh_pairs(df, text_col, id_col, shingle_n, num_hashes,
-                          bands, shingles=sh, max_df=max_df)
+        minhash_lsh_pairs(df, text_col, id_col, shingle_n, shingles=sh)
         if owns_raw
         else candidates
     )
@@ -1316,7 +1309,7 @@ def dedup_apply(df: DataFrame, clusters: DataFrame, id_col: str) -> DataFrame:
 
 
 def soft_dedup_weights(df: DataFrame, clusters: DataFrame,
-                       id_col: str, round_to: int = 6) -> DataFrame:
+                       id_col: str) -> DataFrame:
     """Soft deduplication: instead of DROPPING near-duplicate cluster
     members (:func:`dedup_apply`), DOWNWEIGHT them — every member of a
     k-document cluster gets sampling weight 1/k, unclustered documents
@@ -1350,7 +1343,7 @@ def soft_dedup_weights(df: DataFrame, clusters: DataFrame,
         .withColumn(
             "sample_weight",
             rnd(F.lit(1.0) / F.col("cluster_size").cast("double"),
-                round_to),
+                6),
         )
     )
 
@@ -1480,8 +1473,7 @@ def dedup_apply_best(df: DataFrame, clusters: DataFrame, scores: DataFrame,
 
 
 def eval_containment(train: DataFrame, eval_df: DataFrame, text_col: str,
-                     id_col: str, shingle_n: int = 3,
-                     round_to: int = 4) -> DataFrame:
+                     id_col: str, shingle_n: int = 3) -> DataFrame:
     """Graded train/eval contamination: for EVERY training document,
     the fraction of its distinct word shingles found anywhere in the
     eval suite — the GPT-3-style n-gram overlap fraction (Brown et
@@ -1514,7 +1506,7 @@ def eval_containment(train: DataFrame, eval_df: DataFrame, text_col: str,
             F.col("doc").alias(id_col),
             "n_shingles",
             "n_hits",
-            rnd(F.col("n_hits") / F.col("n_shingles"), round_to).alias(
+            rnd(F.col("n_hits") / F.col("n_shingles"), 4).alias(
                 "containment"
             ),
         )
@@ -1522,9 +1514,7 @@ def eval_containment(train: DataFrame, eval_df: DataFrame, text_col: str,
 
 
 def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
-                   tau: float = 0.8, shingle_n: int = 3,
-                   num_hashes: int = 64, bands: int = 32,
-                   round_to: int = 4) -> DataFrame:
+                   tau: float = 0.8) -> DataFrame:
     """Character-level near-duplicate pairs: MinHash-LSH banding
     proposes candidates, EXACT Levenshtein verifies — the fuzzy-verify
     complement of q56's exact-Jaccard path for edits Jaccard shingles
@@ -1545,7 +1535,7 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     s50 ≈ 0.18, vs ≈ 0.55 for the 64/16 near-dup default), which
     recalls any pair sharing a modest shingle fraction; on corpora
     where near-tau pairs have edits spread across most words, lower
-    ``tau``, use smaller ``shingle_n``, or fall back to the
+    ``tau``, or fall back to the
     brute-force form the oracle replays. The q111 gate data has a
     wide observed gap (background ≤ 0.45 vs dups ≥ 0.93 edit_sim),
     so equality with the brute-force oracle holds there by margin."""
@@ -1555,8 +1545,7 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     # returns a fresh DataFrame without the duck-typed _cached_inputs,
     # so reading the attribute off `cands` would always see [] and
     # release() would leak the banded-signature cache every call.
-    pairs = minhash_lsh_pairs(df, text_col, id_col, shingle_n=shingle_n,
-                              num_hashes=num_hashes, bands=bands)
+    pairs = minhash_lsh_pairs(df, text_col, id_col, bands=32)
     cands = pairs.select("doc_a", "doc_b")
     ta = df.select(F.col(id_col).alias("doc_a"), F.col(text_col).alias("_ta"))
     tb = df.select(F.col(id_col).alias("doc_b"), F.col(text_col).alias("_tb"))
@@ -1564,14 +1553,14 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     maxlen = F.greatest(la, lb).cast("double")
     sim = rnd(
         F.lit(1.0) - F.levenshtein("_ta", "_tb") / maxlen,
-        round_to,
+        4,
     )
     # |len_a − len_b| lower-bounds the edit distance, so
     # 1 − |Δlen|/maxlen upper-bounds edit_sim: any pair failing it by
     # more than the rounding step cannot survive the tau filter —
     # prune it BEFORE paying the O(len²) Levenshtein DP (r13,
     # guide §2.3: shed rows before the expensive operator). The 1e-3
-    # slack is > 20× the largest value movement rnd(·, round_to≥4)
+    # slack is > 20× the largest value movement rnd(·, 4)
     # can apply, so the prune is strictly conservative.
     len_ok = (
         F.lit(1.0) - F.abs(la - lb).cast("double") / maxlen
@@ -1597,10 +1586,9 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     return out
 
 
-def ngram_novelty(df: DataFrame, text_col: str, id_col: str,
-                  n: int = 3, round_to: int = 4) -> DataFrame:
+def ngram_novelty(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Cross-document n-gram novelty: the fraction of a document's
-    DISTINCT word n-grams that appear in no other document — the
+    DISTINCT word 3-grams that appear in no other document — the
     corpus-level diversity signal complementing q61's WITHIN-document
     repetition ratios. Templated/boilerplate mass reads near 0 (all
     its grams are corpus-common), genuinely novel writing reads near
@@ -1620,7 +1608,7 @@ def ngram_novelty(df: DataFrame, text_col: str, id_col: str,
     is LINEAR in corpus grams where the pair families are bucketed-
     quadratic.
     """
-    grams = shingle_rows(df, text_col, id_col, n, distinct=True)
+    grams = shingle_rows(df, text_col, id_col, distinct=True)
     df_tbl = grams.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("gram_df")
     )
@@ -1641,7 +1629,7 @@ def ngram_novelty(df: DataFrame, text_col: str, id_col: str,
         rnd(
             F.col("n_novel").cast("double")
             / F.col("n_shingles").cast("double"),
-            round_to,
+            4,
         ).alias("novelty"),
     )
 
@@ -1733,7 +1721,7 @@ def boilerplate_cut(df: DataFrame, text_col: str, id_col: str,
 
 
 def pair_pagerank(pairs: DataFrame, iters: int = 3,
-                  damping: float = 0.85, round_to: int = 6) -> DataFrame:
+                  damping: float = 0.85) -> DataFrame:
     """PageRank over the near-duplicate pair graph — "which documents
     are template HUBS?": a doc tied to many well-connected near-dups
     ranks far above one in an isolated pair, which cluster size alone
@@ -1805,7 +1793,7 @@ def pair_pagerank(pairs: DataFrame, iters: int = 3,
                 ).alias("pr"),
             )
         ).localCheckpoint()
-    return pr.select("doc_id", rnd(F.col("pr"), round_to).alias("pagerank"))
+    return pr.select("doc_id", rnd(F.col("pr"), 6).alias("pagerank"))
 
 
 def split_leakage(df: DataFrame, text_col: str, id_col: str,
@@ -1979,7 +1967,6 @@ def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
 
 def passage_containment_pairs(df: DataFrame, text_col: str, id_col: str,
                               passage_words: int = 8,
-                              threshold: float = 0.5,
                               max_df: int | None = None) -> DataFrame:
     """Sub-document CONTAINMENT by exact passage overlap (Broder 1997
     distinguishes resemblance from containment; Lee et al. 2021's
@@ -2033,7 +2020,7 @@ def passage_containment_pairs(df: DataFrame, text_col: str, id_col: str,
         shared.join(na, "doc_a").join(nb, "doc_b")
         .select("doc_a", "doc_b", "n_shared", "n_pass_a", "n_pass_b",
                 cont.alias("containment"))
-        .where(F.col("containment") >= float(threshold))
+        .where(F.col("containment") >= 0.5)
     )
 
 

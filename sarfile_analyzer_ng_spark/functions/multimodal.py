@@ -974,8 +974,7 @@ def _phash64(lum) -> int:
     return int(np.int64(np.uint64(bits)))
 
 
-def image_phash(media: DataFrame, id_col: str = "media_id",
-                payload_col: str = "payload") -> DataFrame:
+def image_phash(media: DataFrame) -> DataFrame:
     """64-bit perceptual hash per image payload — the missing dedup
     story for the multimodal column: re-encoded copies (same pixels
     in PNG vs BMP vs netpbm) hash IDENTICALLY by construction (every
@@ -989,7 +988,7 @@ def image_phash(media: DataFrame, id_col: str = "media_id",
 
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("media_id", T.LongType()),
             T.StructField("phash", T.LongType()),
             T.StructField("width", T.IntegerType()),
             T.StructField("height", T.IntegerType()),
@@ -1000,7 +999,7 @@ def image_phash(media: DataFrame, id_col: str = "media_id",
     def kernel(it):
         for pdf in it:
             rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 if payload is None or len(payload) == 0:
                     rows.append((int(mid), None, None, None))
                     continue
@@ -1017,18 +1016,17 @@ def image_phash(media: DataFrame, id_col: str = "media_id",
             # 64-bit hash above 2^53 (caught by the q117 oracle gate)
             yield pd.DataFrame(
                 {
-                    id_col: pd.array([r[0] for r in rows], dtype="int64"),
+                    "media_id": pd.array([r[0] for r in rows], dtype="int64"),
                     "phash": pd.array([r[1] for r in rows], dtype="Int64"),
                     "width": pd.array([r[2] for r in rows], dtype="Int32"),
                     "height": pd.array([r[3] for r in rows], dtype="Int32"),
                 }
             )
 
-    return media.select(id_col, payload_col).mapInPandas(kernel, schema)
+    return media.select("media_id", "payload").mapInPandas(kernel, schema)
 
 
-def phash_dup_pairs(hashes: DataFrame, id_col: str = "media_id",
-                    hash_col: str = "phash",
+def phash_dup_pairs(hashes: DataFrame,
                     max_hamming: int = 7,
                     max_df: int | None = 10_000) -> DataFrame:
     """Near-duplicate image pairs from :func:`image_phash` hashes —
@@ -1052,8 +1050,8 @@ def phash_dup_pairs(hashes: DataFrame, id_col: str = "media_id",
     uncapped band; pairs ALL of whose bands are corpus-hot are the
     documented trade (they are overwhelmingly boilerplate↔boilerplate
     pairs a curator caps on purpose). ``None`` disables."""
-    h = hashes.where(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("mid"), F.col(hash_col).alias("ph")
+    h = hashes.where(F.col("phash").isNotNull()).select(
+        F.col("media_id").alias("mid"), F.col("phash").alias("ph")
     )
     banded = h.select(
         "mid", "ph",

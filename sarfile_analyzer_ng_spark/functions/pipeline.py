@@ -29,9 +29,7 @@ from .text import (
 
 
 def curate_funnel(train: DataFrame, eval_df: DataFrame, text_col: str,
-                  id_col: str, source_col: str,
-                  winnow_k: int = 3, winnow_w: int = 4,
-                  **quality_kwargs) -> DataFrame:
+                  id_col: str, source_col: str) -> DataFrame:
     """Attribute every training document to its curation outcome:
 
     - ``quality``      — rejected by the composed C4/Gopher gate
@@ -69,7 +67,7 @@ def curate_funnel(train: DataFrame, eval_df: DataFrame, text_col: str,
     corpus. Call ``dedup.release`` on the result after the consuming
     action to unpersist the verdict cache.
     """
-    qf = quality_filter(train, text_col, id_col, **quality_kwargs).select(
+    qf = quality_filter(train, text_col, id_col).select(
         id_col, "n_words", "keep"
     )
     qf = qf.cache()
@@ -88,7 +86,7 @@ def curate_funnel(train: DataFrame, eval_df: DataFrame, text_col: str,
         qpass.where(F.col("_rn") == 1).select(id_col), id_col
     )
     flagged = decontaminate_winnow(
-        dpass, eval_df, text_col, id_col, winnow_k, winnow_w
+        dpass, eval_df, text_col, id_col
     ).select(id_col, F.lit(True).alias("_flag"))
     out = (
         base.join(qpass.select(id_col, "_rn"), id_col, "left")
@@ -230,7 +228,7 @@ def assemble_training_data(docs: DataFrame, text_col: str, id_col: str,
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str,
-                  text_col: str, source_col: str = "source") -> DataFrame:
+                  text_col: str) -> DataFrame:
     """Corpus snapshot diff: classify every document across two corpus
     versions as added / removed / changed / unchanged and roll the
     verdicts up per source — the audit a pipeline runs between crawl
@@ -250,7 +248,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str,
         t = F.coalesce(F.col(text_col), F.lit(""))
         return df.select(
             F.col(id_col).alias("_id"),
-            F.col(source_col).alias(f"{prefix}_source"),
+            F.col("source").alias(f"{prefix}_source"),
             F.md5(t).alias(f"{prefix}_h"),
             F.length(t).cast("long").alias(f"{prefix}_len"),
         )

@@ -96,14 +96,13 @@ def _index_frames(corpus: DataFrame, text_col: str, id_col: str,
     return postings, doclen, df_tbl, n_avg
 
 
-def _qterms(queries: DataFrame, query_id_col: str,
-            query_col: str) -> DataFrame:
+def _qterms(queries: DataFrame) -> DataFrame:
     return (
         fan_out(queries)
         .select(
-            F.col(query_id_col).alias("qid"),
+            F.col("query_id").alias("qid"),
             F.explode(
-                F.split(F.lower(F.trim(F.col(query_col))), r"\s+")
+                F.split(F.lower(F.trim(F.col("query"))), r"\s+")
             ).alias("w"),
         )
         .distinct()
@@ -113,8 +112,7 @@ def _qterms(queries: DataFrame, query_id_col: str,
 def _score_and_rank(postings: DataFrame, doclen: DataFrame,
                     df_tbl: DataFrame, n_avg: DataFrame,
                     qterms: DataFrame, k: int,
-                    champions: int | None,
-                    k1: float, b: float, round_to: int) -> DataFrame:
+                    champions: int | None, round_to: int) -> DataFrame:
     """The shared scoring core: (optionally champion-cut) postings ⨝
     broadcast query terms ⨝ broadcast per-term idf inputs ⨝ doc
     lengths → per-(query, doc) sum → rank window cut at k."""
@@ -144,13 +142,13 @@ def _score_and_rank(postings: DataFrame, doclen: DataFrame,
                     + (F.col("n_docs") - F.col("df") + F.lit(0.5))
                     / (F.col("df") + F.lit(0.5))
                 )
-                * (F.col("tf") * F.lit(k1 + 1.0))
+                * (F.col("tf") * F.lit(BM25_K1 + 1.0))
                 / (
                     F.col("tf")
-                    + F.lit(k1)
+                    + F.lit(BM25_K1)
                     * (
-                        F.lit(1.0 - b)
-                        + F.lit(b) * F.col("dl") / F.col("avgdl")
+                        F.lit(1.0 - BM25_B)
+                        + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")
                     )
                 ),
                 8,
@@ -178,15 +176,13 @@ def _score_and_rank(postings: DataFrame, doclen: DataFrame,
 
 
 def bm25_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
-              id_col: str, query_id_col: str = "query_id",
-              query_col: str = "query", k: int = 5,
-              k1: float = BM25_K1, b: float = BM25_B,
+              id_col: str, k: int = 5,
               round_to: int = 4,
               postings: DataFrame | None = None) -> DataFrame:
     """Top-``k`` corpus documents per query under BM25.
 
     ``corpus``: (id_col, text_col, …) — the big side.
-    ``queries``: (query_id_col, query_col) — bounded eval suite.
+    ``queries``: (query_id, query) — bounded eval suite.
 
     Returns (query_id, rank, doc_id, score, n_terms_hit) with exactly
     the documents sharing ≥1 query term, ranked by (score DESC,
@@ -195,17 +191,12 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
     postings, doclen, df_tbl, n_avg = _index_frames(corpus, text_col,
                                                     id_col, postings)
     return _score_and_rank(postings, doclen, df_tbl, n_avg,
-                           _qterms(queries, query_id_col, query_col),
-                           k, None, k1, b, round_to)
+                           _qterms(queries), k, None, round_to)
 
 
 def bm25_topk_champions(corpus: DataFrame, queries: DataFrame,
-                        text_col: str, id_col: str,
-                        query_id_col: str = "query_id",
-                        query_col: str = "query", k: int = 5,
+                        text_col: str, id_col: str, k: int = 5,
                         champions: int = 64,
-                        k1: float = BM25_K1, b: float = BM25_B,
-                        round_to: int = 4,
                         postings: DataFrame | None = None) -> DataFrame:
     """Champion-list BM25 (Manning/Raghavan/Schütze IIR §7.1.3) — the
     scale path beside :func:`bm25_topk`'s exact scoring. Exact BM25
@@ -233,15 +224,14 @@ def bm25_topk_champions(corpus: DataFrame, queries: DataFrame,
     postings, doclen, df_tbl, n_avg = _index_frames(corpus, text_col,
                                                     id_col, postings)
     return _score_and_rank(postings, doclen, df_tbl, n_avg,
-                           _qterms(queries, query_id_col, query_col),
-                           k, champions, k1, b, round_to)
+                           _qterms(queries), k, champions, 4)
 
 
 RRF_K = 60
 
 
 def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 10,
-             rrf_k: int = RRF_K, round_to: int = 8) -> DataFrame:
+             rrf_k: int = RRF_K) -> DataFrame:
     """Reciprocal-rank fusion of a lexical and a semantic ranking
     (Cormack et al. 2009): ``score = Σ 1/(rrf_k + rank)`` over the
     rankers that retrieved the document. The standard hybrid-retrieval
@@ -269,7 +259,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 10,
     ).otherwise(F.lit(0.0))
     fused = j.select(
         "query_id", "doc_id",
-        rnd(contrib("_lr") + contrib("_sr"), round_to).alias("rrf"),
+        rnd(contrib("_lr") + contrib("_sr"), 8).alias("rrf"),
         F.coalesce("_lr", F.lit(0)).cast("long").alias("lex_rank"),
         F.coalesce("_sr", F.lit(0)).cast("long").alias("sem_rank"),
     )
@@ -285,7 +275,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 10,
 
 
 def mmr_rerank(pool: DataFrame, vecs: DataFrame, k: int = 3,
-               lam: float = 0.7, round_to: int = 8) -> DataFrame:
+               lam: float = 0.7) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein
     1998): greedily pick ``k`` documents from each query's candidate
     pool maximizing ``λ·relevance − (1−λ)·max-similarity-to-already-
@@ -345,7 +335,7 @@ def mmr_rerank(pool: DataFrame, vecs: DataFrame, k: int = 3,
         if selected is None:
             scored = p.select(
                 "query_id", "doc_id",
-                rnd(lam_c * F.col("rel"), round_to).alias("mmr"),
+                rnd(lam_c * F.col("rel"), 8).alias("mmr"),
             )
         else:
             pen = (
@@ -371,7 +361,7 @@ def mmr_rerank(pool: DataFrame, vecs: DataFrame, k: int = 3,
                     rnd(
                         lam_c * F.col("rel")
                         - one_m * F.coalesce("_pen", F.lit(0.0)),
-                        round_to,
+                        8,
                     ).alias("mmr"),
                 )
             )
@@ -415,7 +405,7 @@ def ndcg_discounts(k: int) -> list[float]:
 
 
 def ndcg_audit(approx: DataFrame, exact: DataFrame,
-               k: int, round_to: int = 6) -> DataFrame:
+               k: int) -> DataFrame:
     """Approximation-quality audit for a top-k retrieval scale path:
     per-query nDCG@k of the ``approx`` ranking against the ``exact``
     ranking as ground truth (graded gain k−rank+1 for the exact top-k,
@@ -452,7 +442,7 @@ def ndcg_audit(approx: DataFrame, exact: DataFrame,
             ).alias("_ic"),
         )
         .groupBy("query_id")
-        .agg(rnd(F.sum("_ic"), round_to).alias("idcg"))
+        .agg(rnd(F.sum("_ic"), 6).alias("idcg"))
     )
     dcg = (
         approx.join(
@@ -473,7 +463,7 @@ def ndcg_audit(approx: DataFrame, exact: DataFrame,
         )
         .groupBy("query_id")
         .agg(
-            rnd(F.sum("_c"), round_to).alias("dcg"),
+            rnd(F.sum("_c"), 6).alias("dcg"),
             F.sum("_hit").cast("long").alias("n_hits"),
         )
     )
@@ -485,14 +475,13 @@ def ndcg_audit(approx: DataFrame, exact: DataFrame,
         rnd(
             F.when(F.col("idcg") > 0, F.col("dcg") / F.col("idcg"))
              .otherwise(F.lit(0.0)),
-            round_to,
+            6,
         ).alias("ndcg"),
     )
 
 
 def rm3_expansion(corpus: DataFrame, queries: DataFrame, text_col: str,
                   id_col: str, k: int = 5, m: int = 5,
-                  round_to: int = 6,
                   postings: DataFrame | None = None) -> DataFrame:
     """RM3 pseudo-relevance-feedback query expansion (Lavrenko &
     Croft 2001 relevance models; Abdul-Jaleel et al. 2004 RM3): the
@@ -507,7 +496,7 @@ def rm3_expansion(corpus: DataFrame, queries: DataFrame, text_col: str,
 
     Cross-engine: score shares, ``tf/dl`` term likelihoods and their
     products all pre-round at 8 digits; the final per-(query, term)
-    sum rounds at ``round_to``; the top-m cut ranks (weight DESC,
+    sum rounds at 6 digits; the top-m cut ranks (weight DESC,
     term ASC).
 
     Shape at scale: the feedback frame is |queries|·k rows (broadcast
@@ -534,9 +523,9 @@ def rm3_expansion(corpus: DataFrame, queries: DataFrame, text_col: str,
         rnd(F.col("_wd") * F.col("_pwd"), 8).alias("_c"),
     )
     rm = contrib.groupBy("query_id", "w").agg(
-        rnd(F.sum("_c"), round_to).alias("rm_weight")
+        rnd(F.sum("_c"), 6).alias("rm_weight")
     )
-    qt = _qterms(queries, "query_id", "query").select(
+    qt = _qterms(queries).select(
         F.col("qid").alias("query_id"), "w"
     )
     cand = rm.join(qt, ["query_id", "w"], "left_anti")
@@ -559,10 +548,8 @@ QL_MU = 300.0
 
 
 def ql_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
-            id_col: str, query_id_col: str = "query_id",
-            query_col: str = "query", mu: float = QL_MU,
+            id_col: str,
             k: int = 10, champions: int | None = None,
-            round_to: int = 4,
             postings: DataFrame | None = None) -> DataFrame:
     """Dirichlet-smoothed query-likelihood retrieval (Ponte & Croft
     1998's LM approach with Zhai & Lafferty 2001's Dirichlet prior) —
@@ -582,7 +569,7 @@ def ql_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
     construction.
 
     Determinism: per-term logs pre-round at 8, the assembled score at
-    ``round_to``; rank ties break on doc id. Shape at scale: the
+    4 digits; rank ties break on doc id. Shape at scale: the
     q124 shape exactly — postings ⨝ broadcast query model ⨝ doc
     lengths → per-(q, doc) combinable agg → per-query rank window cut
     at k. cf/|C| are one term-keyed agg + one scalar agg over the
@@ -595,9 +582,9 @@ def ql_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
     qtf = (
         fan_out(queries)
         .select(
-            F.col(query_id_col).alias("qid"),
+            F.col("query_id").alias("qid"),
             F.explode(
-                F.split(F.lower(F.trim(F.col(query_col))), r"\s+")
+                F.split(F.lower(F.trim(F.col("query"))), r"\s+")
             ).alias("w"),
         )
         .groupBy("qid", "w")
@@ -614,7 +601,6 @@ def ql_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
         F.sum("qtf").alias("nq"),
         rnd(F.sum(F.col("qtf") * F.col("lp_bg")), 6).alias("cq"),
     )
-    m = float(mu)
     # champion cut (IIR §7.1.3, the q131 pattern): the matched-term
     # contribution log(1 + tf·|C|/(μ·cf)) is increasing in tf, so the
     # per-term highest-impact postings are exactly the top-tf ones.
@@ -640,7 +626,7 @@ def ql_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
                 * rnd(
                     F.log(
                         F.lit(1.0)
-                        + F.col("tf") * F.col("ct") / (F.lit(m) * F.col("cf"))
+                        + F.col("tf") * F.col("ct") / (F.lit(QL_MU) * F.col("cf"))
                     ),
                     8,
                 )
@@ -660,9 +646,9 @@ def ql_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
             rnd(
                 F.col("msum")
                 + F.col("nq")
-                * rnd(F.log(F.lit(m) / (F.col("dl") + F.lit(m))), 8)
+                * rnd(F.log(F.lit(QL_MU) / (F.col("dl") + F.lit(QL_MU))), 8)
                 + F.col("cq"),
-                round_to,
+                4,
             ).alias("score"),
         )
     )

@@ -78,9 +78,7 @@ def cosine_arrow(a, b) -> Column:
 
 
 def cosine_to_queries_arrow(corpus: DataFrame, queries: DataFrame,
-                            pairs: list[tuple[str, str, str]],
-                            corpus_id: str = "neighbor_id",
-                            query_id: str = "query_id") -> DataFrame:
+                            pairs: list[tuple[str, str, str]]) -> DataFrame:
     """Score every corpus row against EVERY query vector — one
     map-side Arrow pass over the CORPUS, queries held as a local
     matrix (model-sized: the collect is the query set, never the
@@ -109,25 +107,25 @@ def cosine_to_queries_arrow(corpus: DataFrame, queries: DataFrame,
     # id dtypes follow the INPUT schemas (r12 ADVICE): hardcoding
     # LongType silently overflowed int32/string callers
     out_schema = T.StructType(
-        [T.StructField(query_id, queries.schema[query_id].dataType),
-         T.StructField(corpus_id, corpus.schema[corpus_id].dataType)]
+        [T.StructField("query_id", queries.schema["query_id"].dataType),
+         T.StructField("neighbor_id", corpus.schema["neighbor_id"].dataType)]
         + [T.StructField(out, T.DoubleType()) for _, _, out in pairs]
     )
     qrows = queries.select(
-        query_id, *sorted({p[1] for p in pairs})
+        "query_id", *sorted({p[1] for p in pairs})
     ).collect()
     if not qrows:
         # np.stack over an empty list raises; an empty query set
         # scores nothing (r12 ADVICE guard)
         return corpus.sparkSession.createDataFrame([], out_schema)
-    qids = np.array([r[query_id] for r in qrows])
+    qids = np.array([r["query_id"] for r in qrows])
     qmats = {
         qc: np.stack([np.asarray(r[qc], dtype=np.float64) for r in qrows])
         for qc in {p[1] for p in pairs}
     }
     qnorms = {qc: np.linalg.norm(m, axis=1) for qc, m in qmats.items()}
     nq = len(qids)
-    src = corpus.select(corpus_id, *sorted({p[0] for p in pairs}))
+    src = corpus.select("neighbor_id", *sorted({p[0] for p in pairs}))
 
     @worker_task
     def score(batches):
@@ -135,10 +133,10 @@ def cosine_to_queries_arrow(corpus: DataFrame, queries: DataFrame,
             n = len(pdf)
             if n == 0 or nq == 0:
                 continue
-            nid = pdf[corpus_id].to_numpy()
+            nid = pdf["neighbor_id"].to_numpy()
             cols = {
-                query_id: np.tile(qids, n),
-                corpus_id: np.repeat(nid, nq),
+                "query_id": np.tile(qids, n),
+                "neighbor_id": np.repeat(nid, nq),
             }
             for cvec, qvec, out in pairs:
                 m = np.stack(pdf[cvec].to_numpy()).astype(np.float64)
@@ -146,13 +144,13 @@ def cosine_to_queries_arrow(corpus: DataFrame, queries: DataFrame,
                 den = np.linalg.norm(m, axis=1)[:, None] * qnorms[qvec][None, :]
                 cols[out] = (num / den).reshape(-1)
             out_pdf = pd.DataFrame(cols)
-            yield out_pdf[out_pdf[corpus_id] != out_pdf[query_id]]
+            yield out_pdf[out_pdf["neighbor_id"] != out_pdf["query_id"]]
 
     return src.mapInPandas(score, out_schema)
 
 
 def cosine_dup_pairs(emb: DataFrame, id_col: str, vec_col: str,
-                     threshold: float, round_to: int = 4,
+                     threshold: float,
                      rows_per_block: int = 4096) -> DataFrame:
     """All pairs (a<b) with cosine ≥ threshold — embedding near-dup,
     as a distributed block-matrix self-join (nothing ever collects to
@@ -173,7 +171,7 @@ def cosine_dup_pairs(emb: DataFrame, id_col: str, vec_col: str,
 
     n = emb.count()  # scalar aggregate, not a collect
     num_blocks = max(1, -(-n // rows_per_block))
-    thr_raw = rnd_threshold(threshold, round_to)
+    thr_raw = rnd_threshold(threshold)
 
     src = emb.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
@@ -224,7 +222,7 @@ def cosine_dup_pairs(emb: DataFrame, id_col: str, vec_col: str,
         # full-matrix rounded copy was ~10 matrix-sized temporaries
         # per block pair and dominated the task; r13, guide §4.2)
         kr, kc = np.where(sims >= thr_raw)
-        emit_cos = rnd_np(sims[kr, kc], round_to)
+        emit_cos = rnd_np(sims[kr, kc], 4)
         a, b = ids_l[kr], ids_r[kc]
         # orient a<b; the diagonal pair (i,i) sees each unordered pair
         # twice (x,y)/(y,x) and self-pairs once — a<b keeps one copy
@@ -243,8 +241,7 @@ def cosine_dup_pairs(emb: DataFrame, id_col: str, vec_col: str,
 
 
 def decontaminate_semantic(train: DataFrame, eval_df: DataFrame,
-                           id_col: str, vec_col: str, tau: float,
-                           round_to: int = 4) -> DataFrame:
+                           id_col: str, vec_col: str, tau: float) -> DataFrame:
     """Embedding-level train/eval decontamination — the semantic
     complement of the n-gram (dedup.decontaminate) and winnowing
     (dedup.decontaminate_winnow) passes: an eval item paraphrased into
@@ -272,7 +269,7 @@ def decontaminate_semantic(train: DataFrame, eval_df: DataFrame,
     scored = tr.join(F.broadcast(ev)).select(
         id_col,
         "eval_id",
-        rnd(cosine_arrow("tvec", "evec"), round_to).alias("sim"),
+        rnd(cosine_arrow("tvec", "evec"), 4).alias("sim"),
     )
     m = scored.groupBy(id_col).agg(
         F.max(
@@ -288,7 +285,7 @@ def decontaminate_semantic(train: DataFrame, eval_df: DataFrame,
 
 
 def ann_topk_bruteforce(emb: DataFrame, queries: DataFrame, id_col: str,
-                        vec_col: str, k: int, round_to: int = 4) -> DataFrame:
+                        vec_col: str, k: int) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The (small) query set is broadcast; the corpus streams past it once
@@ -309,7 +306,7 @@ def ann_topk_bruteforce(emb: DataFrame, queries: DataFrame, id_col: str,
         .select(
             "query_id",
             "neighbor_id",
-            rnd(cosine_arrow("qvec", "cvec"), round_to).alias("cosine"),
+            rnd(cosine_arrow("qvec", "cvec"), 4).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -355,7 +352,6 @@ def lsh_buckets(emb: DataFrame, id_col: str, vec_col: str, dim: int,
 
 def ann_topk_lsh(emb: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
                  dim: int, k: int, num_planes: int = 8,
-                 round_to: int = 4,
                  planes: list[Column] | None = None) -> DataFrame:
     """Scale-path ANN: join query and corpus on LSH bucket, exact
     re-rank inside buckets. Recall < 1 by construction (that's the
@@ -373,7 +369,7 @@ def ann_topk_lsh(emb: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id", "neighbor_id",
-            rnd(cosine_arrow("qvec", "cvec"), round_to).alias("cosine"),
+            rnd(cosine_arrow("qvec", "cvec"), 4).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -501,7 +497,7 @@ def _ivf_assign(src: DataFrame, centroids) -> DataFrame:
 
 def ann_topk_ivf(emb: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
                  k: int, centroids, nprobe: int = 4,
-                 round_to: int = 4, assigned: DataFrame | None = None) -> DataFrame:
+                 assigned: DataFrame | None = None) -> DataFrame:
     """IVF search: corpus vectors live in their centroid's list; each
     query probes its ``nprobe`` nearest lists and re-ranks exactly
     inside them. Work per query drops from O(n) to O(n·nprobe/K);
@@ -563,7 +559,7 @@ def ann_topk_ivf(emb: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id", "neighbor_id",
-            rnd(cosine_arrow("qvec", "cvec"), round_to).alias("cosine"),
+            rnd(cosine_arrow("qvec", "cvec"), 4).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -616,8 +612,7 @@ def knn_classify(emb: DataFrame, queries: DataFrame, id_col: str,
 
 
 def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
-                     k: int = 8, iters: int = 2,
-                     round_to: int = 4, cent_round: int = 6) -> DataFrame:
+                     k: int = 8, iters: int = 2) -> DataFrame:
     """The centroid frame ``(cluster, c)`` after ``iters`` Lloyd
     updates — the model half of :func:`kmeans_lloyd_exact`, exposed so
     consumers that assign OUTSIDE the batch plan (index builders) rank
@@ -640,7 +635,7 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
         )
     )
     for _ in range(iters):
-        cos = rnd(cosine(F.col("e"), F.col("c")), round_to)
+        cos = rnd(cosine(F.col("e"), F.col("c")), 4)
         # argmax as a combinable max_by instead of a row_number window
         # (r13, guide §2.3/§2.4): the crossJoin emits every id's k
         # candidate rows in ONE partition, so partial aggregation
@@ -665,7 +660,7 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
                 "cluster", F.posexplode(F.col("e")).alias("d", "val")
             )
             .groupBy("cluster", "d")
-            .agg(rnd(F.avg("val"), cent_round).alias("m"))
+            .agg(rnd(F.avg("val"), 6).alias("m"))
             .groupBy("cluster")
             .agg(
                 F.transform(
@@ -687,7 +682,6 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
 
 def kmeans_lloyd_exact(emb: DataFrame, id_col: str, vec_col: str,
                        k: int = 8, iters: int = 2,
-                       round_to: int = 4, cent_round: int = 6,
                        centroids: DataFrame | None = None) -> DataFrame:
     """Engine-reproducible Lloyd k-means — the oracled correctness
     twin of :func:`ivf_train` (same deterministic smallest-id init,
@@ -721,10 +715,8 @@ def kmeans_lloyd_exact(emb: DataFrame, id_col: str, vec_col: str,
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("e"),
     )
     cent = centroids if centroids is not None else kmeans_centroids(
-        emb, id_col, vec_col, k=k, iters=iters,
-        round_to=round_to, cent_round=cent_round,
-    )
-    cos = rnd(cosine(F.col("e"), F.col("c")), round_to)
+        emb, id_col, vec_col, k=k, iters=iters)
+    cos = rnd(cosine(F.col("e"), F.col("c")), 4)
     # same combinable-argmax shape as the update loop (see
     # kmeans_centroids): map-side collapse of the k candidate rows,
     # no per-id Sort; (cos, −cluster) is unique per id so the winner
@@ -810,7 +802,7 @@ def _pca_dot_c(vec_col_, arr):
 
 def pca_power_topd_train(
     emb: DataFrame, id_col: str, vec_col: str, dim: int,
-    n_components: int = 2, iters: int = 3, round_to: int = 6,
+    n_components: int = 2, iters: int = 3,
 ) -> tuple[list[list[float]], list[float], DataFrame]:
     """Top-D principal components of an embedding corpus by
     distributed power iteration WITH DEFLATION, the full
@@ -821,7 +813,7 @@ def pca_power_topd_train(
     in the plan itself), then u = Σ s_i c_i as ONE map-combinable agg
     keyed by the ``dim`` dimension indices. Deterministic
     cross-engine contract (the q104 rounding-ladder scheme): μ and
-    each u_d round at ``round_to``; dot products and the norm
+    each u_d round at 6 digits; dot products and the norm
     pre-round at 8; v re-normalizes and rounds each iteration,
     sign-fixed so v[0] ≥ 0 — the DuckDB twin unrolls the same chain.
 
@@ -858,7 +850,7 @@ def pca_power_topd_train(
     mu_rows = (
         src.select(F.posexplode("e").alias("d", "x"))
         .groupBy("d")
-        .agg(rnd(F.avg("x"), round_to).alias("mu"))
+        .agg(rnd(F.avg("x"), 6).alias("mu"))
         .collect()
     )
     mu = [0.0] * dim
@@ -902,7 +894,7 @@ def pca_power_topd_train(
                 u_rows = (
                     work.select(s.alias("s"), F.posexplode("c").alias("d", "cd"))
                     .groupBy("d")
-                    .agg(rnd(F.sum(F.col("s") * F.col("cd")), round_to).alias("u"))
+                    .agg(rnd(F.sum(F.col("s") * F.col("cd")), 6).alias("u"))
                     .collect()
                 )
                 u = np.zeros(dim)
@@ -915,7 +907,7 @@ def pca_power_topd_train(
                         "along the iterate — degenerate input or "
                         "n_components > rank"
                     )
-                v = rnd_np(u / nrm, round_to)
+                v = rnd_np(u / nrm, 6)
                 if v[0] < 0:
                     v = -v
             components.append([float(x) for x in v])
@@ -946,8 +938,7 @@ def pca_power_topd_train(
 
 
 def pca_topd_project(centered: DataFrame, id_col: str,
-                     components: list[list[float]],
-                     round_to: int = 6) -> DataFrame:
+                     components: list[list[float]]) -> DataFrame:
     """The pc1..pcD projection ladder over a centered (vid, c) frame
     from :func:`pca_power_topd_train`.
     Reading the CHECKPOINTED centered frame (its c IS x − μ,
@@ -959,15 +950,14 @@ def pca_topd_project(centered: DataFrame, id_col: str,
     proj_cols = []
     for k, v in enumerate(components):
         proj_cols.append(
-            rnd(_pca_dot_c(cexpr, v), round_to).alias(f"pc{k + 1}_proj"))
+            rnd(_pca_dot_c(cexpr, v), 6).alias(f"pc{k + 1}_proj"))
         pk = rnd(_pca_dot_c(cexpr, v), 8)
         cexpr = F.zip_with(cexpr, _pca_lit_arr(v), lambda x, y: x - pk * y)
     return centered.select(F.col("vid").alias(id_col), *proj_cols)
 
 
 def apply_top1_removal(emb: DataFrame, id_col: str, vec_col: str,
-                       v: list[float], mu: list[float],
-                       round_to: int = 6) -> DataFrame:
+                       v: list[float], mu: list[float]) -> DataFrame:
     """Apply a trained All-but-the-Top model (component ``v`` and
     mean ``mu``) without retraining: the residual
     ``r = (x − μ) − p·v`` is a batch matvec + rank-1 update per Arrow
@@ -995,8 +985,8 @@ def apply_top1_removal(emb: DataFrame, id_col: str, vec_col: str,
                 continue
             E = np.stack(pdf["_e"].to_numpy()).astype(np.float64)
             C = E - mm
-            p = rnd_np(C @ vv, round_to)
-            R = rnd_np(C - p[:, None] * vv, round_to)
+            p = rnd_np(C @ vv, 6)
+            R = rnd_np(C - p[:, None] * vv, 6)
             yield pd.DataFrame({id_col: pdf["_id"], "resid": list(R)})
 
     src = emb.select(
@@ -1008,7 +998,7 @@ def apply_top1_removal(emb: DataFrame, id_col: str, vec_col: str,
 
 def semdedup(emb: DataFrame, id_col: str, vec_col: str,
              tau: float = 0.8, k: int = 8, iters: int = 2,
-             round_to: int = 4, rows_per_chunk: int = 4096,
+             rows_per_chunk: int = 4096,
              assigned: DataFrame | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering the embedding space and pruning
@@ -1034,7 +1024,7 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     (``rows_per_chunk`` columns at a time) so peak memory is
     |cluster| × rows_per_chunk doubles, never |cluster|² — the same
     bounded-block contract as :func:`cosine_dup_pairs`. Rounding
-    matches ``util.rnd`` (8 digits then ``round_to``) so the verdict
+    matches ``util.rnd`` (8 digits then 4) so the verdict
     is cross-engine reproducible.
 
     Pass ``assigned`` (``(id, cluster)``) to reuse an existing
@@ -1047,7 +1037,7 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
 
     if assigned is None:
         assigned = kmeans_lloyd_exact(
-            emb, id_col, vec_col, k=k, iters=iters, round_to=round_to
+            emb, id_col, vec_col, k=k, iters=iters
         )
     v = emb.select(
         F.col(id_col).alias("_id"),
@@ -1065,7 +1055,7 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
         ]
     )
 
-    tau_raw = rnd_threshold(tau, round_to)
+    tau_raw = rnd_threshold(tau)
 
     @worker_task
     def prune(key, pdf):
@@ -1108,7 +1098,6 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
 
 def cluster_top_terms(labels: DataFrame, docs: DataFrame, id_col: str,
                       text_col: str, top_k: int = 3,
-                      round_to: int = 4,
                       num_clusters: int | None = None) -> DataFrame:
     """Cluster profiling: the ``top_k`` most DISTINCTIVE terms per
     embedding cluster — what a curator reads to decide which semantic
@@ -1155,7 +1144,7 @@ def cluster_top_terms(labels: DataFrame, docs: DataFrame, id_col: str,
         "term",
         rnd(
             F.col("tf") * F.log(F.lit(float(k_clusters)) / F.col("df")),
-            round_to,
+            4,
         ).alias("score"),
     )
     w = Window.partitionBy("cluster").orderBy(
@@ -1213,8 +1202,7 @@ def _subspaces(emb: DataFrame, id_col: str, vec_col: str,
 
 
 def pq_train_exact(emb: DataFrame, id_col: str, vec_col: str, dim: int,
-                   m: int = 4, k: int = 8, iters: int = 2,
-                   dist_round: int = 6, cent_round: int = 6) -> DataFrame:
+                   m: int = 4, k: int = 8, iters: int = 2) -> DataFrame:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
     Quantization for Nearest Neighbor Search"): split each vector into
     ``m`` subvectors and k-means each subspace independently — m
@@ -1245,7 +1233,7 @@ def pq_train_exact(emb: DataFrame, id_col: str, vec_col: str, dim: int,
     )
 
     def assign(cent_df):
-        dist = rnd(l2sq(F.col("e"), F.col("c")), dist_round)
+        dist = rnd(l2sq(F.col("e"), F.col("c")), 6)
         w = Window.partitionBy("vid", "sub").orderBy(
             F.col("dist").asc(), F.col("cluster").asc()
         )
@@ -1264,7 +1252,7 @@ def pq_train_exact(emb: DataFrame, id_col: str, vec_col: str, dim: int,
                 "sub", "cluster", F.posexplode(F.col("e")).alias("d", "val")
             )
             .groupBy("sub", "cluster", "d")
-            .agg(rnd(F.avg("val"), cent_round).alias("mu"))
+            .agg(rnd(F.avg("val"), 6).alias("mu"))
             .groupBy("sub", "cluster")
             .agg(
                 F.transform(
@@ -1285,8 +1273,7 @@ def pq_train_exact(emb: DataFrame, id_col: str, vec_col: str, dim: int,
 
 
 def pq_codes(emb: DataFrame, id_col: str, vec_col: str,
-             codebooks: DataFrame, dim: int, m: int = 4,
-             dist_round: int = 6) -> DataFrame:
+             codebooks: DataFrame, dim: int, m: int = 4) -> DataFrame:
     """PQ encoding: each vector's nearest codeword per subspace —
     ``(id, sub, code)``, m small integers replacing dim floats (a
     ``m·log2(k)``-bit representation; 64 float32 dims at m=4, k=8 is
@@ -1297,7 +1284,7 @@ def pq_codes(emb: DataFrame, id_col: str, vec_col: str,
     (vid, sub)-keyed window. Map-side except the window shuffle, which
     is keyed by the uniform (vid, sub)."""
     v = _subspaces(emb, id_col, vec_col, dim, m)
-    dist = rnd(l2sq(F.col("e"), F.col("c")), dist_round)
+    dist = rnd(l2sq(F.col("e"), F.col("c")), 6)
     w = Window.partitionBy("vid", "sub").orderBy(
         F.col("dist").asc(), F.col("cluster").asc()
     )
@@ -1317,10 +1304,7 @@ def pq_codes(emb: DataFrame, id_col: str, vec_col: str,
 def ann_topk_pq(emb: DataFrame, queries: DataFrame, id_col: str,
                 vec_col: str, dim: int, m: int = 4, k: int = 5,
                 codebooks: DataFrame | None = None,
-                codes: DataFrame | None = None,
-                n_codewords: int = 8, iters: int = 2,
-                dist_round: int = 6, rerank: int = 0,
-                cos_round: int = 4) -> DataFrame:
+                codes: DataFrame | None = None, rerank: int = 0) -> DataFrame:
     """ANN retrieval over PQ codes with Asymmetric Distance
     Computation (Jégou et al. 2011 §III): the query stays exact; each
     corpus vector's distance is approximated as the sum over subspaces
@@ -1356,13 +1340,9 @@ def ann_topk_pq(emb: DataFrame, queries: DataFrame, id_col: str,
     practice); tools/ivfpq_recall.py measures both regimes.
     """
     if codebooks is None:
-        codebooks = pq_train_exact(
-            emb, id_col, vec_col, dim, m, n_codewords, iters,
-            dist_round=dist_round,
-        )
+        codebooks = pq_train_exact(emb, id_col, vec_col, dim, m)
     if codes is None:
-        codes = pq_codes(emb, id_col, vec_col, codebooks, dim, m,
-                         dist_round=dist_round)
+        codes = pq_codes(emb, id_col, vec_col, codebooks, dim, m)
     qsub = _subspaces(queries, id_col, vec_col, dim, m).select(
         F.col("vid").alias("query_id"), "sub", F.col("e").alias("qe")
     )
@@ -1370,7 +1350,7 @@ def ann_topk_pq(emb: DataFrame, queries: DataFrame, id_col: str,
         qsub.join(F.broadcast(codebooks), "sub")
         .select(
             "query_id", "sub", F.col("cluster").alias("code"),
-            rnd(l2sq(F.col("qe"), F.col("c")), dist_round).alias("dsub"),
+            rnd(l2sq(F.col("qe"), F.col("c")), 6).alias("dsub"),
         )
     )
     scored = (
@@ -1378,7 +1358,7 @@ def ann_topk_pq(emb: DataFrame, queries: DataFrame, id_col: str,
         .join(F.broadcast(dtab), ["sub", "code"])
         .where(F.col("neighbor_id") != F.col("query_id"))
         .groupBy("query_id", "neighbor_id")
-        .agg(rnd(F.sum("dsub"), dist_round).alias("adc"))
+        .agg(rnd(F.sum("dsub"), 6).alias("adc"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id").asc()
@@ -1400,7 +1380,7 @@ def ann_topk_pq(emb: DataFrame, queries: DataFrame, id_col: str,
         .join(cv, "neighbor_id")
         .select(
             "query_id", "neighbor_id",
-            rnd(cosine_arrow("qvec", "cvec"), cos_round).alias("cosine"),
+            rnd(cosine_arrow("qvec", "cvec"), 4).alias("cosine"),
         )
     )
     w2 = Window.partitionBy("query_id").orderBy(
@@ -1415,8 +1395,8 @@ def ann_topk_pq(emb: DataFrame, queries: DataFrame, id_col: str,
 def ann_topk_ivfpq(emb: DataFrame, queries: DataFrame, id_col: str,
                    vec_col: str, dim: int, centroids, codebooks: DataFrame,
                    codes: DataFrame, m: int = 4, k: int = 5,
-                   nprobe: int = 4, dist_round: int = 6,
-                   rerank: int = 0, cos_round: int = 4,
+                   nprobe: int = 4,
+                   rerank: int = 0,
                    assigned: DataFrame | None = None) -> DataFrame:
     """IVFADC (Jégou et al. 2011 §IV — the architecture behind every
     billion-vector store): an IVF coarse quantizer routes each query
@@ -1489,14 +1469,14 @@ def ann_topk_ivfpq(emb: DataFrame, queries: DataFrame, id_col: str,
     )
     dtab = qsub.join(F.broadcast(codebooks), "sub").select(
         "query_id", "sub", F.col("cluster").alias("code"),
-        rnd(l2sq(F.col("qe"), F.col("c")), dist_round).alias("dsub"),
+        rnd(l2sq(F.col("qe"), F.col("c")), 6).alias("dsub"),
     )
     scored = (
         cand.join(codes.withColumnRenamed(id_col, "neighbor_id"),
                   "neighbor_id")
         .join(F.broadcast(dtab), ["query_id", "sub", "code"])
         .groupBy("query_id", "neighbor_id")
-        .agg(rnd(F.sum("dsub"), dist_round).alias("adc"))
+        .agg(rnd(F.sum("dsub"), 6).alias("adc"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id").asc()
@@ -1518,7 +1498,7 @@ def ann_topk_ivfpq(emb: DataFrame, queries: DataFrame, id_col: str,
         .join(cv, "neighbor_id")
         .select(
             "query_id", "neighbor_id",
-            rnd(cosine_arrow("qvec", "cvec"), cos_round).alias("cosine"),
+            rnd(cosine_arrow("qvec", "cvec"), 4).alias("cosine"),
         )
     )
     w2 = Window.partitionBy("query_id").orderBy(
@@ -1534,7 +1514,6 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
                           query_max_id: int, k: int = 5,
                           k_lists: int = 8, iters: int = 2,
                           nprobe: int = 2,
-                          round_to: int = 4,
                           centroids: DataFrame | None = None) -> DataFrame:
     """SUB-exhaustive IVF search on the engine-portable rounding
     ladder — the oracle-replayable twin of :func:`ann_topk_ivf`'s
@@ -1565,7 +1544,7 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
     )
     cent = centroids if centroids is not None else kmeans_centroids(
         emb, id_col, vec_col, k=k_lists, iters=iters)
-    cosc = rnd(cosine(F.col("e"), F.col("c")), round_to)
+    cosc = rnd(cosine(F.col("e"), F.col("c")), 4)
     wa = Window.partitionBy(id_col).orderBy(
         F.col("_cos").desc(), F.col("cluster").asc()
     )
@@ -1585,7 +1564,7 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
     )
     route = (
         qv.crossJoin(F.broadcast(cent))
-        .withColumn("_cos", rnd(cosine(F.col("qe"), F.col("c")), round_to))
+        .withColumn("_cos", rnd(cosine(F.col("qe"), F.col("c")), 4))
         .withColumn("_rk", F.row_number().over(wr))
         .where(F.col("_rk") <= nprobe)
         .select("query_id", "qe", "cluster")
@@ -1598,7 +1577,7 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id", "neighbor_id",
-            rnd(cosine(F.col("qe"), F.col("ce")), round_to).alias("cosine"),
+            rnd(cosine(F.col("qe"), F.col("ce")), 4).alias("cosine"),
         )
         .withColumn("rank", F.row_number().over(wk).cast("long"))
         .where(F.col("rank") <= k)
@@ -1607,8 +1586,6 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
 
 def cluster_silhouette(emb: DataFrame, id_col: str, vec_col: str,
                        k: int = 8, iters: int = 2,
-                       round_to: int = 6,
-                       assign_round: int = 4,
                        centroids: DataFrame | None = None) -> DataFrame:
     """Per-cluster simplified silhouette over the oracled Lloyd
     k-means geometry — the cluster-quality report a curator reads
@@ -1638,7 +1615,7 @@ def cluster_silhouette(emb: DataFrame, id_col: str, vec_col: str,
     )
     cent = centroids if centroids is not None else kmeans_centroids(
         emb, id_col, vec_col, k=k, iters=iters)
-    cos = rnd(cosine(F.col("e"), F.col("c")), assign_round)
+    cos = rnd(cosine(F.col("e"), F.col("c")), 4)
     w = Window.partitionBy(id_col).orderBy(
         F.col("cos").desc(), F.col("cluster").asc()
     )
@@ -1665,7 +1642,7 @@ def cluster_silhouette(emb: DataFrame, id_col: str, vec_col: str,
         .groupBy(F.col("cluster").cast("long").alias("cluster"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_members"),
-            rnd(F.avg("_s"), round_to).alias("mean_silhouette"),
+            rnd(F.avg("_s"), 6).alias("mean_silhouette"),
             F.min("_s").alias("min_silhouette"),
         )
     )
@@ -1730,8 +1707,7 @@ def jl_project(emb: DataFrame, id_col: str, vec_col: str,
 
 
 def jl_distortion_audit(emb: DataFrame, id_col: str, vec_col: str,
-                        out_dim: int = 16, max_id: int = 20,
-                        round_to: int = 6) -> DataFrame:
+                        out_dim: int = 16, max_id: int = 20) -> DataFrame:
     """Distortion audit for :func:`jl_project`: for every pair in a
     bounded id-sample, the ratio of projected to original squared
     Euclidean distance — the number that decides whether out_dim is
@@ -1742,7 +1718,7 @@ def jl_distortion_audit(emb: DataFrame, id_col: str, vec_col: str,
 
     Pairwise ON PURPOSE and bounded by the ``max_id`` literal — the
     audit is sample²-sized, the projection itself stays linear.
-    Squared-diff terms pre-round at 8; sums round at ``round_to``;
+    Squared-diff terms pre-round at 8; sums round at 6 digits;
     zero-distance pairs report NULL distortion.
     """
     from ..util import rnd
@@ -1764,7 +1740,7 @@ def jl_distortion_audit(emb: DataFrame, id_col: str, vec_col: str,
                 * (F.col("a._x") - F.col("b._x")), 8).alias("_d"),
         )
         .groupBy("id_a", "id_b")
-        .agg(rnd(F.sum("_d"), round_to).alias("orig_d2"))
+        .agg(rnd(F.sum("_d"), 6).alias("orig_d2"))
     )
     y = jl_project(sample, id_col, vec_col, out_dim=out_dim)
     ya, yb = y.alias("ya"), y.alias("yb")
@@ -1778,19 +1754,18 @@ def jl_distortion_audit(emb: DataFrame, id_col: str, vec_col: str,
                 * (F.col("ya.y") - F.col("yb.y")), 8).alias("_d"),
         )
         .groupBy("id_a", "id_b")
-        .agg(rnd(F.sum("_d"), round_to).alias("proj_d2"))
+        .agg(rnd(F.sum("_d"), 6).alias("proj_d2"))
     )
     return orig.join(proj, ["id_a", "id_b"]).select(
         "id_a", "id_b", "orig_d2", "proj_d2",
         F.when(
             F.col("orig_d2") > 0,
-            rnd(F.col("proj_d2") / F.col("orig_d2"), round_to),
+            rnd(F.col("proj_d2") / F.col("orig_d2"), 6),
         ).alias("distortion"),
     )
 
 
-def embedding_card(emb: DataFrame, id_col: str, vec_col: str,
-                   round_to: int = 6) -> DataFrame:
+def embedding_card(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """One-row embedding-corpus card — the sanity audit run before
     ANY vector stage (ANN, SemDeDup, PCA, quantization) trusts the
     table: vector count, NULL rows, dimension envelope (min ≠ max ⇒
@@ -1827,12 +1802,12 @@ def embedding_card(emb: DataFrame, id_col: str, vec_col: str,
          .cast("long").alias("n_zero_norm"),
         F.min("_nrm").alias("min_norm"),
         F.max("_nrm").alias("max_norm"),
-        rnd(F.avg("_nrm"), round_to).alias("mean_norm"),
+        rnd(F.avg("_nrm"), 6).alias("mean_norm"),
     )
 
 
 def kcenter_select(df: DataFrame, id_col: str, vec_col: str,
-                   k: int = 6, round_to: int = 6) -> DataFrame:
+                   k: int = 6) -> DataFrame:
     """Greedy k-center coreset selection (Gonzalez 1985 farthest-point
     traversal — the 2-approximation; the active-learning coreset of
     Sener & Savarese 2018): seed with the vector of largest norm, then
@@ -1850,7 +1825,7 @@ def kcenter_select(df: DataFrame, id_col: str, vec_col: str,
     center's vector (dim floats, model-sized — the Lloyd-iteration
     contract). d² uses the dot-product identity
     ``⟨a,a⟩ + ⟨b,b⟩ − 2⟨a,b⟩`` with the self-products computed once,
-    rounded at ``round_to`` so IEEE summation-order skew cannot flip
+    rounded at 6 digits so IEEE summation-order skew cannot flip
     an argmax; ties break on (rounded d² DESC, id ASC).
 
     Returns the selection trace: (sel_round, id, d2) with d2 = the
@@ -1872,7 +1847,7 @@ def kcenter_select(df: DataFrame, id_col: str, vec_col: str,
     spark = df.sparkSession
     out_schema = f"sel_round long, {id_col} {id_type}, d2 double"
     seed_rows = (
-        base.select("vid", "e", rnd(F.col("n2"), round_to).alias("r"))
+        base.select("vid", "e", rnd(F.col("n2"), 6).alias("r"))
         .orderBy(F.col("r").desc(), F.col("vid").asc())
         .limit(1)
         .collect()
@@ -1894,7 +1869,7 @@ def kcenter_select(df: DataFrame, id_col: str, vec_col: str,
         d2 = rnd(
             F.col("n2") + dot(lit_arr(cvec), lit_arr(cvec))
             - 2.0 * dot(F.col("e"), lit_arr(cvec)),
-            round_to,
+            6,
         )
         cur = cur.select(
             "vid", "e", "n2",
@@ -1925,7 +1900,7 @@ def kcenter_select(df: DataFrame, id_col: str, vec_col: str,
 
 
 def embedding_outliers(df: DataFrame, id_col: str, vec_col: str,
-                       top_k: int = 20, round_to: int = 6) -> DataFrame:
+                       top_k: int = 20) -> DataFrame:
     """Per-dimension standardized outlier score over an embedding
     corpus — diagonal Mahalanobis: fit per-dim (μ_d, σ_d) in one
     explode-agg (D rows — model-sized), then score every vector by
@@ -1937,7 +1912,7 @@ def embedding_outliers(df: DataFrame, id_col: str, vec_col: str,
 
     Degenerate dims (σ_d = 0 — a constant coordinate) contribute 0 by
     definition. μ/σ are pre-rounded at 8, each per-dim term at 8, the
-    final score at ``round_to`` (the rnd parity contract). Shape at
+    final score at 6 digits (the rnd parity contract). Shape at
     scale: one N·D explode feeding a D-group agg, one broadcast join
     back, one per-id agg, one top-k TakeOrdered — no window, no
     Python, no driver state.
@@ -1957,7 +1932,7 @@ def embedding_outliers(df: DataFrame, id_col: str, vec_col: str,
         ex.join(F.broadcast(stats), "d")
         .select("vid", term.alias("t"))
         .groupBy("vid")
-        .agg(rnd(F.sqrt(F.avg("t")), round_to).alias("mah"))
+        .agg(rnd(F.sqrt(F.avg("t")), 6).alias("mah"))
     )
     return (
         scored.orderBy(F.col("mah").desc(), F.col("vid").asc())
@@ -1966,8 +1941,8 @@ def embedding_outliers(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def fisher_separation(df: DataFrame, label_col: str, vec_col: str,
-                      round_to: int = 6) -> DataFrame:
+def fisher_separation(df: DataFrame, label_col: str,
+                      vec_col: str) -> DataFrame:
     """Per-dimension Fisher discriminant ratio over a labeled
     embedding corpus: between-class variance / within-class variance
     for every coordinate — the "are these labels even separable in
@@ -1982,7 +1957,7 @@ def fisher_separation(df: DataFrame, label_col: str, vec_col: str,
     into an (L·D)-group combinable agg (model-sized output), one
     D-row overall-mean frame broadcast back, one D-group reduction.
     No window, no Python, no driver state. Per-(label,dim) moments
-    pre-round at 8, the ratio at ``round_to``; within = 0 (constant
+    pre-round at 8, the ratio at 6 digits; within = 0 (constant
     dim inside every class) yields NULL, identically on both sides.
     """
     ex = df.where(
@@ -2014,13 +1989,13 @@ def fisher_separation(df: DataFrame, label_col: str, vec_col: str,
         "n_classes", "var_between", "var_within",
         rnd(
             F.col("var_between") / F.nullif(F.col("var_within"), F.lit(0.0)),
-            round_to,
+            6,
         ).alias("fisher"),
     )
 
 
 def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
-                          tau: float = 0.6, round_to: int = 4,
+                          tau: float = 0.6,
                           max_df_ratio: float | None = 0.5) -> DataFrame:
     """All-pairs similarity search over sparse TF-IDF vectors with
     prefix filtering (Bayardo, Ma & Srikant, WWW 2007 — THE exact
@@ -2062,7 +2037,7 @@ def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
     cost degrades to q67's max_df-style bound, never to N².
 
     Returns (doc_a, doc_b, n_shared, cosine ≥ tau), cosine rounded at
-    ``round_to``.
+    4 digits.
     """
     toks = df.select(
         F.col(id_col).alias("doc"),
@@ -2137,7 +2112,7 @@ def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shared"),
-            rnd(F.sum(rnd(F.col("ua") * F.col("ub"), 8)), round_to)
+            rnd(F.sum(rnd(F.col("ua") * F.col("ub"), 8)), 4)
             .alias("cosine"),
         )
         .where(F.col("cosine") >= float(tau))

@@ -56,7 +56,7 @@ def lang_scores(text: Column) -> dict[str, Column]:
     return {lang: F.regexp_count(low, F.lit(pat)) for lang, pat in LANG_PATTERNS.items()}
 
 
-def lang_id(df: DataFrame, text_col: str, out_col: str = "pred_lang") -> DataFrame:
+def lang_id(df: DataFrame, text_col: str) -> DataFrame:
     """Predict language by stopword-hit argmax, deterministic tie order."""
     df = fan_out(df)  # regexp-bound map stage: parallelism = scan splits
 
@@ -71,7 +71,7 @@ def lang_id(df: DataFrame, text_col: str, out_col: str = "pred_lang") -> DataFra
         )
 
     pred = memo_cols(("lang_id", text_col), build)
-    return df.withColumn(out_col, pred)
+    return df.withColumn("pred_lang", pred)
 
 
 def token_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -85,7 +85,7 @@ def token_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str, round_to: int = 4) -> DataFrame:
+def quality_score(df: DataFrame, text_col: str) -> DataFrame:
     """Deterministic quality features + a composite score.
 
     Features: length, word count, mean word length, punctuation ratio,
@@ -123,15 +123,15 @@ def quality_score(df: DataFrame, text_col: str, round_to: int = 4) -> DataFrame:
         )
         return counts, {
             "n_words": n_words.cast("long"),
-            "mean_word_len": F.round(mean_word_len, round_to),
-            "punct_ratio": F.round(punct_ratio, round_to),
-            "stopword_ratio": F.round(stop_ratio, round_to),
-            "quality": F.round(score, round_to),
+            "mean_word_len": F.round(mean_word_len, 4),
+            "punct_ratio": F.round(punct_ratio, 4),
+            "stopword_ratio": F.round(stop_ratio, 4),
+            "quality": F.round(score, 4),
         }
 
-    # static per (text_col, round_to): see util.memo_cols — rebuilding
+    # static per text_col: see util.memo_cols — rebuilding
     # this tree per call was pure py4j latency
-    counts, features = memo_cols(("quality_score", text_col, round_to), build)
+    counts, features = memo_cols(("quality_score", text_col), build)
     # CollapseProject keeps the counts projection apart from the
     # features because they read each non-cheap count more than once;
     # inlined, q38 evaluated the \S+ count 8 times a row
@@ -166,8 +166,7 @@ PII_PATTERNS: dict[str, tuple[str, str]] = {
 }
 
 
-def pii_scan(df: DataFrame, text_col: str,
-             out_col: str = "pii_redacted") -> DataFrame:
+def pii_scan(df: DataFrame, text_col: str) -> DataFrame:
     """Per-document PII audit for a training corpus: count emails,
     phone numbers, IPv4 addresses, and SSN-shaped ids, flag documents
     that contain any, and emit a redacted copy of the text.
@@ -188,12 +187,11 @@ def pii_scan(df: DataFrame, text_col: str,
     for _, (pat, token) in PII_PATTERNS.items():
         red = F.regexp_replace(red, pat, token)
     return df.withColumn("has_pii", (total > 0).cast("long")).withColumn(
-        out_col, red
+        "pii_redacted", red
     )
 
 
-def repetition_signals(df: DataFrame, text_col: str, id_col: str,
-                       round_to: int = 4) -> DataFrame:
+def repetition_signals(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Gopher-style within-document repetition features — the classic
     quality gate that drops boilerplate and spam from a training mix
     (Rae et al. 2021, "Scaling Language Models", §A1.1):
@@ -214,7 +212,7 @@ def repetition_signals(df: DataFrame, text_col: str, id_col: str,
     """
     from pyspark.sql import Window
 
-    # static Column/agg trees per (text_col, id_col, round_to) — see
+    # static Column/agg trees per (text_col, id_col) — see
     # util.memo_cols (the whole function is name-based once built)
     def build():
         win = Window.partitionBy(id_col).orderBy("pos")
@@ -239,21 +237,21 @@ def repetition_signals(df: DataFrame, text_col: str, id_col: str,
             "out": (
                 F.col(id_col),
                 F.col("n_words").cast("long").alias("n_words"),
-                rnd(F.col("n_uniq") / nw, round_to).alias("uniq_word_ratio"),
-                rnd(F.col("top_cnt") / nw, round_to).alias("top_word_frac"),
-                rnd(F.col("dup_cnt") / nw, round_to).alias("dup_word_frac"),
+                rnd(F.col("n_uniq") / nw, 4).alias("uniq_word_ratio"),
+                rnd(F.col("top_cnt") / nw, 4).alias("top_word_frac"),
+                rnd(F.col("dup_cnt") / nw, 4).alias("dup_word_frac"),
                 rnd(
                     F.coalesce(
                         F.col("top_big_cnt")
                         / F.col("n_bigrams").cast("double"),
                         F.lit(0.0),
                     ),
-                    round_to,
+                    4,
                 ).alias("top_bigram_frac"),
             ),
         }
 
-    c = memo_cols(("repetition_signals", text_col, id_col, round_to), build)
+    c = memo_cols(("repetition_signals", text_col, id_col), build)
     words = (
         fan_out(df)
         .select(F.col(id_col), c["explode"])
@@ -271,16 +269,17 @@ def repetition_signals(df: DataFrame, text_col: str, id_col: str,
     return per_doc.join(per_big, id_col, "left").select(*c["out"])
 
 
-def quality_filter(df: DataFrame, text_col: str, id_col: str,
-                   min_words: int = 20, max_words: int = 100_000,
-                   min_mean_word_len: float = 2.0,
-                   max_mean_word_len: float = 12.0,
-                   min_stop_ratio: float = 0.02,
-                   max_punct_ratio: float = 0.3,
-                   max_dup_word_frac: float = 0.85,
-                   max_top_bigram_frac: float = 0.25,
-                   langs: tuple[str, ...] = ("en", "de", "es", "fr"),
-                   round_to: int = 4) -> DataFrame:
+# quality_filter's rule thresholds and the languages it keeps
+QF_MIN_WORDS, QF_MAX_WORDS = 20, 100_000
+QF_MIN_MEAN_WORD_LEN, QF_MAX_MEAN_WORD_LEN = 2.0, 12.0
+QF_MIN_STOP_RATIO = 0.02
+QF_MAX_PUNCT_RATIO = 0.3
+QF_MAX_DUP_WORD_FRAC = 0.85
+QF_MAX_TOP_BIGRAM_FRAC = 0.25
+QF_LANGS = ("en", "de", "es", "fr")
+
+
+def quality_filter(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """The composed C4/Gopher-style document gate a training pipeline
     actually runs: length, word-shape, punctuation, stopword-fluency,
     repetition, and language rules evaluated together into one
@@ -306,7 +305,7 @@ def quality_filter(df: DataFrame, text_col: str, id_col: str,
     df = df.select(
         id_col, F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
     )
-    base = quality_score(df.select(id_col, text_col), text_col, round_to)
+    base = quality_score(df.select(id_col, text_col), text_col)
     base = lang_id(base, text_col)
     n_pii = memo_cols(
         ("qf_n_pii", text_col),
@@ -322,7 +321,7 @@ def quality_filter(df: DataFrame, text_col: str, id_col: str,
     # the final select.
     base = base.withColumn("n_pii", n_pii.cast("long")).drop(text_col)
     rep = repetition_signals(
-        df.select(id_col, text_col), text_col, id_col, round_to
+        df.select(id_col, text_col), text_col, id_col
     ).select(id_col, "dup_word_frac", "top_bigram_frac")
     # LEFT join: empty/whitespace-only/null documents emit no
     # repetition rows (every token filtered) but must still get a
@@ -335,18 +334,18 @@ def quality_filter(df: DataFrame, text_col: str, id_col: str,
         }
     )
     def build_rules():
-        ok_words = F.col("n_words").between(min_words, max_words)
+        ok_words = F.col("n_words").between(QF_MIN_WORDS, QF_MAX_WORDS)
         ok_wlen = F.col("mean_word_len").between(
-            min_mean_word_len, max_mean_word_len
+            QF_MIN_MEAN_WORD_LEN, QF_MAX_MEAN_WORD_LEN
         )
-        ok_punct = F.col("punct_ratio") <= max_punct_ratio
+        ok_punct = F.col("punct_ratio") <= QF_MAX_PUNCT_RATIO
         ok_stop = (F.col("pred_lang") != "en") | (
-            F.col("stopword_ratio") >= min_stop_ratio
+            F.col("stopword_ratio") >= QF_MIN_STOP_RATIO
         )
-        ok_rep = (F.col("dup_word_frac") <= max_dup_word_frac) & (
-            F.col("top_bigram_frac") <= max_top_bigram_frac
+        ok_rep = (F.col("dup_word_frac") <= QF_MAX_DUP_WORD_FRAC) & (
+            F.col("top_bigram_frac") <= QF_MAX_TOP_BIGRAM_FRAC
         )
-        ok_lang = F.col("pred_lang").isin(list(langs))
+        ok_lang = F.col("pred_lang").isin(list(QF_LANGS))
         keep = ok_words & ok_wlen & ok_punct & ok_stop & ok_rep & ok_lang
         return (
             ok_words.cast("long").alias("ok_words"),
@@ -355,12 +354,7 @@ def quality_filter(df: DataFrame, text_col: str, id_col: str,
             keep.cast("long").alias("keep"),
         )
 
-    rule_cols = memo_cols(
-        ("qf_rules", min_words, max_words, min_mean_word_len,
-         max_mean_word_len, min_stop_ratio, max_punct_ratio,
-         max_dup_word_frac, max_top_bigram_frac, langs),
-        build_rules,
-    )
+    rule_cols = memo_cols(("qf_rules",), build_rules)
     return j.select(
         id_col,
         "n_words",
@@ -376,7 +370,7 @@ def quality_filter(df: DataFrame, text_col: str, id_col: str,
 
 
 def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str,
-                    k: int = 3, round_to: int = 4) -> DataFrame:
+                    k: int = 3) -> DataFrame:
     """Top-``k`` TF-IDF terms per document — the classic keyword /
     topic signal used to slice and inspect a training mix.
 
@@ -414,7 +408,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str,
             rnd(
                 F.col("tf")
                 * F.log(F.col("n_docs").cast("double") / F.col("df")),
-                round_to,
+                4,
             ),
         )
     )
@@ -430,8 +424,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str,
 
 
 def source_mix_weights(df: DataFrame, source_col: str, text_col: str,
-                       targets: dict[str, float],
-                       round_to: int = 6) -> DataFrame:
+                       targets: dict[str, float]) -> DataFrame:
     """Per-source sampling weights that rebalance a corpus toward a
     target mixture — the knob a training-data pipeline turns to hit
     e.g. 40% web / 30% books without materializing a new corpus.
@@ -479,9 +472,9 @@ def source_mix_weights(df: DataFrame, source_col: str, text_col: str,
         "source",
         "n_docs",
         "n_tokens",
-        rnd(share, round_to).alias("token_share"),
+        rnd(share, 6).alias("token_share"),
         tgt.alias("target_share"),
-        rnd(ratio / F.max(ratio).over(everything), round_to).alias(
+        rnd(ratio / F.max(ratio).over(everything), 6).alias(
             "sample_weight"
         ),
     )
@@ -489,8 +482,7 @@ def source_mix_weights(df: DataFrame, source_col: str, text_col: str,
 
 
 def temperature_mix_weights(df: DataFrame, source_col: str, text_col: str,
-                            alpha: float = 0.5,
-                            round_to: int = 6) -> DataFrame:
+                            alpha: float = 0.5) -> DataFrame:
     """Temperature-flattened source mixture — the α-sampling scheme of
     multilingual pretraining (exponentiated-share sampling: mBERT's
     0.7-power smoothing, XLM-R's α=0.3; Conneau & Lample 2019 §3.1):
@@ -540,16 +532,15 @@ def temperature_mix_weights(df: DataFrame, source_col: str, text_col: str,
         "source",
         "n_docs",
         "n_tokens",
-        rnd(share, round_to).alias("token_share"),
-        rnd(q, round_to).alias("temp_share"),
-        rnd(ratio / F.max(ratio).over(everything), round_to).alias(
+        rnd(share, 6).alias("token_share"),
+        rnd(q, 6).alias("temp_share"),
+        rnd(ratio / F.max(ratio).over(everything), 6).alias(
             "sample_weight"
         ),
     )
 
 
-def corpus_card(df: DataFrame, text_col: str, source_col: str,
-                round_to: int = 4) -> DataFrame:
+def corpus_card(df: DataFrame, text_col: str, source_col: str) -> DataFrame:
     """Per-(source, language) datasheet summary (Gebru et al. 2021
     "Datasheets for Datasets", summary-table variant): doc/token
     counts, mean quality, mean punctuation ratio per cell — ONE
@@ -561,15 +552,14 @@ def corpus_card(df: DataFrame, text_col: str, source_col: str,
     ).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_words").cast("bigint").alias("n_tokens"),
-        rnd(F.avg("quality"), round_to).alias("avg_quality"),
-        rnd(F.avg("punct_ratio"), round_to).alias("avg_punct_ratio"),
+        rnd(F.avg("quality"), 4).alias("avg_quality"),
+        rnd(F.avg("punct_ratio"), 4).alias("avg_punct_ratio"),
     )
 
 
 def repeat_schedule(df: DataFrame, source_col: str, text_col: str,
                     targets: dict[str, float], token_budget: int,
-                    max_epochs: float = 4.0,
-                    round_to: int = 6) -> DataFrame:
+                    max_epochs: float = 4.0) -> DataFrame:
     """Data-constrained repeat schedule (Muennighoff et al. 2023,
     "Scaling Data-Constrained Language Models", arXiv:2305.16264 —
     repeating data up to ~4 epochs costs little): given a total token
@@ -612,7 +602,7 @@ def repeat_schedule(df: DataFrame, source_col: str, text_col: str,
         "n_tokens",
         tgt.alias("target_share"),
         rnd(desired, 2).alias("desired_tokens"),
-        rnd(epochs, round_to).alias("epochs"),
+        rnd(epochs, 6).alias("epochs"),
         effective.alias("effective_tokens"),
         rnd(
             F.greatest(F.lit(0.0), rnd(desired, 2) - effective), 2
@@ -718,8 +708,7 @@ def pack_sequences(chunks: DataFrame, id_cols: list[str], tokens_col: str,
 
 
 def apply_mix_weights(df: DataFrame, source_col: str, id_col: str,
-                      text_col: str, targets: dict[str, float],
-                      round_to: int = 6) -> DataFrame:
+                      text_col: str, targets: dict[str, float]) -> DataFrame:
     """End-to-end mix rebalancing: compute per-source keep
     probabilities (:func:`source_mix_weights`), apply them with the
     deterministic hash sampler (:func:`stratified_sample`'s bucket
@@ -742,7 +731,7 @@ def apply_mix_weights(df: DataFrame, source_col: str, id_col: str,
     """
     from pyspark.sql import Window
 
-    weights = source_mix_weights(df, source_col, text_col, targets, round_to)
+    weights = source_mix_weights(df, source_col, text_col, targets)
     w = F.broadcast(
         weights.select(
             F.col("source").alias(source_col),
@@ -773,8 +762,8 @@ def apply_mix_weights(df: DataFrame, source_col: str, id_col: str,
         "n_docs_kept",
         "n_tokens_kept",
         "target_share",
-        rnd(share, round_to).alias("achieved_share"),
-        rnd(share - F.col("target_share"), round_to).alias("share_err"),
+        rnd(share, 6).alias("achieved_share"),
+        rnd(share - F.col("target_share"), 6).alias("share_err"),
     )
 
 
@@ -815,8 +804,7 @@ def top_ngrams(df: DataFrame, text_col: str, id_col: str,
     return top.withColumn("rank", F.row_number().over(win).cast("long"))
 
 
-def clean_text(df: DataFrame, text_col: str,
-               out_col: str = "clean_text") -> DataFrame:
+def clean_text(df: DataFrame, text_col: str) -> DataFrame:
     """Training-corpus text normalization, all JVM regexp built-ins:
     redact emails and URLs, drop control characters, collapse runs of
     whitespace, trim. Order matters (URLs can contain '@')."""
@@ -825,11 +813,11 @@ def clean_text(df: DataFrame, text_col: str,
     t = F.regexp_replace(t, EMAIL_PATTERN, "<EMAIL>")
     t = F.regexp_replace(t, r"[\x00-\x1F\x7F]", " ")
     t = F.regexp_replace(t, r"\s+", " ")
-    return df.withColumn(out_col, F.trim(t))
+    return df.withColumn("clean_text", F.trim(t))
 
 
-def hash_split(df: DataFrame, id_col: str, weights: dict[str, int],
-               out_col: str = "split") -> DataFrame:
+def hash_split(df: DataFrame, id_col: str,
+               weights: dict[str, int]) -> DataFrame:
     """Deterministic train/val/test assignment by multiplicative hash
     of the id — stable across runs, engines, partitionings (the
     property random() sampling can't give a reproducible pipeline).
@@ -846,12 +834,11 @@ def hash_split(df: DataFrame, id_col: str, weights: dict[str, int],
         cond = (bucket >= lo) & (bucket < lo + pct)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
         lo += pct
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_sample(df: DataFrame, strata_col: str, id_col: str,
-                      fractions: dict[str, float],
-                      out_col: str | None = None) -> DataFrame:
+                      fractions: dict[str, float]) -> DataFrame:
     """Deterministic per-stratum sampling — how a training mix is
     actually built (e.g. keep 10% of crawl, 100% of curated sources).
 
@@ -872,10 +859,7 @@ def stratified_sample(df: DataFrame, strata_col: str, id_col: str,
     for name, frac in fractions.items():
         cond = (F.col(strata_col) == name) & (bucket < int(round(frac * 10000)))
         expr = cond if expr is None else expr | cond
-    out = df.where(expr)
-    if out_col:
-        out = out.withColumn(out_col, bucket)
-    return out
+    return df.where(expr)
 
 
 def hashed_ngram_buckets(df: DataFrame, text_col: str, id_col: str,
@@ -928,7 +912,6 @@ def hashed_ngram_buckets(df: DataFrame, text_col: str, id_col: str,
 
 def dsir_weights(raw: DataFrame, target: DataFrame | None, text_col: str,
                  id_col: str, n_buckets: int = 1024,
-                 round_to: int = 4,
                  target_pred: Column | None = None) -> DataFrame:
     """DSIR-style importance weights (Data Selection via Importance
     Resampling; Xie et al. 2023, arXiv:2302.03169): score every raw
@@ -1009,7 +992,7 @@ def dsir_weights(raw: DataFrame, target: DataFrame | None, text_col: str,
     logw = (
         db.join(F.broadcast(wt), "b")
         .groupBy("doc")
-        .agg(rnd(F.sum(F.col("c") * F.col("w")), round_to).alias("logw"))
+        .agg(rnd(F.sum(F.col("c") * F.col("w")), 4).alias("logw"))
     )
     out = (
         raw.select(F.col(id_col).alias("doc"))
@@ -1024,7 +1007,7 @@ def dsir_weights(raw: DataFrame, target: DataFrame | None, text_col: str,
 
 
 def unigram_logprob(df: DataFrame, text_col: str, id_col: str,
-                    vocab_size: int = 20, round_to: int = 4) -> DataFrame:
+                    vocab_size: int = 20) -> DataFrame:
     """Unigram-LM fluency scoring — the KenLM-perplexity stand-in of
     CCNet-style quality filtering (Wenzek et al. 2020), trainable on
     the corpus itself with no external model: take the top
@@ -1075,30 +1058,28 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str,
     )
     agg = scored.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_tokens"),
-        rnd(F.avg("lp"), round_to).alias("avg_logp"),
+        rnd(F.avg("lp"), 4).alias("avg_logp"),
     )
     return agg.select(
         F.col("doc").alias(id_col),
         "n_tokens",
         "avg_logp",
-        rnd(F.exp(-F.col("avg_logp")), round_to).alias("ppl"),
+        rnd(F.exp(-F.col("avg_logp")), 4).alias("ppl"),
     )
 
 
-def bigram_logprob(df: DataFrame, text_col: str, id_col: str,
-                   backoff: float = 0.4, min_bigram_count: int = 2,
-                   round_to: int = 4) -> DataFrame:
+def bigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Bigram-LM fluency scoring with Stupid Backoff (Brants et al.
     2007, "Large Language Models in Machine Translation" §4 — the
     smoothing designed FOR distributed LMs: no normalization pass, so
     counts shard freely). Each token is scored
     ``S(w|prev) = c(prev,w)/c(prev)`` when the bigram survives the
-    count cutoff, else ``backoff · c(w)/N``; a document's first token
+    count cutoff, else ``0.4 · c(w)/N``; a document's first token
     falls back to its unigram score. Sharper than
     :func:`unigram_logprob` at separating shuffled/garbled text from
     fluent text, since it scores word ORDER, not just vocabulary.
 
-    ``min_bigram_count`` is the Brants-style count cutoff: bigrams
+    The count cutoff of 2 is Brants-style: bigrams
     seen fewer times are PRUNED from the model (at web scale the
     singleton tail is most of the bigram table) and score through the
     backoff. It also keeps the backoff path genuinely live when — as
@@ -1148,7 +1129,7 @@ def bigram_logprob(df: DataFrame, text_col: str, id_col: str,
         stream.where(F.col("prev").isNotNull())
         .groupBy("prev", "w")
         .agg(F.count(F.lit(1)).cast("double").alias("cb"))
-        .where(F.col("cb") >= float(min_bigram_count))
+        .where(F.col("cb") >= 2.0)
     )
     prev_cnt = uni.select(F.col("w").alias("prev"), F.col("cw").alias("cprev"))
     scored = (
@@ -1167,7 +1148,7 @@ def bigram_logprob(df: DataFrame, text_col: str, id_col: str,
                     F.log(F.col("cb") / F.col("cprev")),
                 )
                 .otherwise(
-                    F.log(F.lit(float(backoff)) * F.col("cw") / F.col("n"))
+                    F.log(F.lit(0.4) * F.col("cw") / F.col("n"))
                 ),
                 8,
             ).alias("lp"),
@@ -1175,13 +1156,13 @@ def bigram_logprob(df: DataFrame, text_col: str, id_col: str,
     )
     agg = scored.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_tokens"),
-        rnd(F.avg("lp"), round_to).alias("avg_logp"),
+        rnd(F.avg("lp"), 4).alias("avg_logp"),
     )
     return agg.select(
         F.col("doc").alias(id_col),
         "n_tokens",
         "avg_logp",
-        rnd(F.exp(-F.col("avg_logp")), round_to).alias("ppl"),
+        rnd(F.exp(-F.col("avg_logp")), 4).alias("ppl"),
     )
 
 
@@ -1285,9 +1266,10 @@ def bpe_train(df: DataFrame, text_col: str, num_merges: int = 10,
             chosen.append((a, b, int(row["c"])))
             used.update((a, b, a + b))
         merges.extend(chosen)
+        table = tuple((a, b) for a, b, _ in chosen)
 
         @worker_task
-        def rewrite(it, table=tuple((a, b) for a, b, _ in chosen)):
+        def rewrite(it):
             for pdf in it:
                 out = []
                 for syms in pdf["syms"]:
@@ -1316,8 +1298,7 @@ def bpe_train(df: DataFrame, text_col: str, num_merges: int = 10,
 
 def budget_select(df: DataFrame, text_col: str, id_col: str,
                   source_col: str, budget_tokens: int,
-                  approx: bool = False,
-                  approx_accuracy: int = 10_000) -> DataFrame:
+                  approx: bool = False) -> DataFrame:
     """Quality-ordered token-budget trimming — the complement of
     :func:`repeat_schedule`: that operator plans EPOCHS when a source
     is too small for its mixture share; this one trims a source that
@@ -1352,7 +1333,7 @@ def budget_select(df: DataFrame, text_col: str, id_col: str,
         grid = [i / 1000.0 for i in range(1, 1000)]
         sk = qs.groupBy(source_col).agg(
             F.sum("n_words").alias("_tot"),
-            F.percentile_approx("quality", grid, approx_accuracy)
+            F.percentile_approx("quality", grid, 10_000)
             .alias("_qgrid"),
         ).collect()  # one row per SOURCE — bounded like the mixture ops
         thr_rows = []
@@ -1399,8 +1380,7 @@ def budget_select(df: DataFrame, text_col: str, id_col: str,
 
 
 def vocab_coverage(df: DataFrame, text_col: str, id_col: str,
-                   vocab_size: int = 1000,
-                   round_to: int = 4) -> DataFrame:
+                   vocab_size: int = 1000) -> DataFrame:
     """Vocabulary-coverage / OOV audit: build the corpus top-``V``
     word vocabulary (count DESC, word ASC on ties) and measure, per
     document, how much of it falls outside that vocabulary — the
@@ -1449,7 +1429,7 @@ def vocab_coverage(df: DataFrame, text_col: str, id_col: str,
             F.coalesce(
                 rnd(
                     F.col("n_oov") / F.col("n_tokens").cast("double"),
-                    round_to,
+                    4,
                 ),
                 F.lit(0.0),
             ).alias("oov_rate"),
@@ -1501,8 +1481,7 @@ def epoch_shuffle(df: DataFrame, id_col: str, epochs: int = 3,
 
 
 def source_divergence(df: DataFrame, text_col: str, source_col: str,
-                      vocab_size: int = 20, alpha: float = 0.5,
-                      round_to: int = 4) -> DataFrame:
+                      vocab_size: int = 20, alpha: float = 0.5) -> DataFrame:
     """Pairwise Jensen–Shannon divergence between per-source unigram
     distributions — the mixture-design diagnostic that tells a
     curation run WHICH sources actually differ (a near-zero pair is
@@ -1569,13 +1548,12 @@ def source_divergence(df: DataFrame, text_col: str, source_col: str,
         a.join(b, "w")
         .where(F.col("source_a") < F.col("source_b"))
         .groupBy("source_a", "source_b")
-        .agg(rnd(F.sum(term), round_to).alias("js_div"))
+        .agg(rnd(F.sum(term), 4).alias("js_div"))
     )
 
 
 def weighted_sample(df: DataFrame, id_col: str, strata_col: str,
                     weight_col, k: int,
-                    round_to: int = 8,
                     k_overrides: DataFrame | None = None) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k per stratum —
     Efraimidis & Spirakis 2006 (IPL 97(5)): rank rows by
@@ -1589,7 +1567,7 @@ def weighted_sample(df: DataFrame, id_col: str, strata_col: str,
     ``u`` comes from the engine-portable multiplicative hash of the id
     (the :func:`~..util.shard_hash` scheme) mapped into (0, 1), so the
     sample replays in plain SQL and across runs/partitionings; the
-    key pre-rounds at ``round_to`` (ties then break on id ASC, total
+    key pre-rounds at 8 digits (ties then break on id ASC, total
     order). Zero/negative weights raise upstream questions — here
     they are clamped to a floor of 1e-9 so the row ranks last rather
     than poisoning ``pow``.
@@ -1608,7 +1586,7 @@ def weighted_sample(df: DataFrame, id_col: str, strata_col: str,
     bucket = shard_hash(F.col(id_col), 1_000_003)
     u = (bucket + F.lit(1.0)) / F.lit(1_000_004.0)  # in (0, 1)
     w = F.greatest(F.col(weight_col).cast("double"), F.lit(1e-9))
-    key = rnd(F.pow(u, F.lit(1.0) / w), round_to)
+    key = rnd(F.pow(u, F.lit(1.0) / w), 8)
     win = Window.partitionBy(strata_col).orderBy(
         F.col("es_key").desc(), F.col(id_col).asc()
     )
@@ -1723,7 +1701,7 @@ def doremi_weights(docs: DataFrame, id_col: str, source_col: str,
 
 
 def zipf_stats(df: DataFrame, text_col: str, id_col: str,
-               top_ranks: int = 500, round_to: int = 4) -> DataFrame:
+               top_ranks: int = 500) -> DataFrame:
     """Corpus-level Zipf diagnostics in one row: vocabulary size,
     total token count, the head share, and a log-log OLS fit of
     frequency against rank over the top ``top_ranks`` ranks. Natural
@@ -1781,11 +1759,11 @@ def zipf_stats(df: DataFrame, text_col: str, id_col: str,
         .select(
             F.col("vocab_size").cast("long").alias("vocab_size"),
             F.col("n_tokens").cast("long").alias("n_tokens"),
-            rnd(F.col("top1") / F.col("n_tokens"), round_to).alias("top1_share"),
+            rnd(F.col("top1") / F.col("n_tokens"), 4).alias("top1_share"),
             rnd(
                 (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("m"))
                 / (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("m")),
-                round_to,
+                4,
             ).alias("zipf_slope"),
             rnd(
                 F.col("sy") / F.col("m")
@@ -1794,7 +1772,7 @@ def zipf_stats(df: DataFrame, text_col: str, id_col: str,
                     / (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("m"))
                 )
                 * F.col("sx") / F.col("m"),
-                round_to,
+                4,
             ).alias("zipf_intercept"),
         )
     )
@@ -1811,8 +1789,7 @@ def _ws_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def kn_bigram_logprob(df: DataFrame, text_col: str, id_col: str,
-                      discount: float = 0.75,
-                      round_to: int = 4) -> DataFrame:
+                      discount: float = 0.75) -> DataFrame:
     """Interpolated Kneser–Ney bigram scoring (Kneser & Ney 1995;
     Chen & Goodman 1999 eq. 4.25) — the third rung of the LM-quality
     ladder after q84's unigram MLE and q95's Stupid Backoff:
@@ -1901,19 +1878,18 @@ def kn_bigram_logprob(df: DataFrame, text_col: str, id_col: str,
     )
     agg = scored.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_tokens"),
-        rnd(F.avg("lp"), round_to).alias("avg_logp"),
+        rnd(F.avg("lp"), 4).alias("avg_logp"),
     )
     return agg.select(
         F.col("doc").alias(id_col),
         "n_tokens",
         "avg_logp",
-        rnd(F.exp(-F.col("avg_logp")), round_to).alias("ppl"),
+        rnd(F.exp(-F.col("avg_logp")), 4).alias("ppl"),
     )
 
 
 def quantile_normalize(df: DataFrame, value_col: str, by: list[str],
-                       keep_frac: float | None = None,
-                       round_to: int = 4) -> DataFrame:
+                       keep_frac: float | None = None) -> DataFrame:
     """Per-group quantile (rank) normalization of a score column —
     the standard fix for cross-source score-scale mismatch: a quality
     classifier calibrated on web text scores news systematically
@@ -1941,7 +1917,7 @@ def quantile_normalize(df: DataFrame, value_col: str, by: list[str],
 
     w = Window.partitionBy(*by).orderBy(F.col(value_col).asc())
     out = df.withColumn(
-        "pct_rank", rnd(F.percent_rank().over(w), round_to)
+        "pct_rank", rnd(F.percent_rank().over(w), 4)
     )
     if keep_frac is not None:
         thr = round(1.0 - keep_frac, 8)
@@ -1953,8 +1929,7 @@ def quantile_normalize(df: DataFrame, value_col: str, by: list[str],
 
 def chunk_ppl_cut(df: DataFrame, text_col: str, id_col: str,
                   chunk_words: int = 16, vocab_size: int = 20,
-                  ppl_quantile: float = 0.9,
-                  round_to: int = 4) -> DataFrame:
+                  ppl_quantile: float = 0.9) -> DataFrame:
     """CCNet-style SUB-document perplexity filtering (Wenzek et al.
     2020 §4.3 score paragraphs, not documents): documents split into
     fixed ``chunk_words`` windows, each chunk scored by the corpus
@@ -2030,10 +2005,10 @@ def chunk_ppl_cut(df: DataFrame, text_col: str, id_col: str,
     )
     cppl = (
         scored.groupBy("doc", "idx")
-        .agg(rnd(F.avg("lp"), round_to).alias("avg_logp"))
+        .agg(rnd(F.avg("lp"), 4).alias("avg_logp"))
         .select(
             "doc", "idx",
-            rnd(F.exp(-F.col("avg_logp")), round_to).alias("ppl"),
+            rnd(F.exp(-F.col("avg_logp")), 4).alias("ppl"),
         )
         # narrow (doc, idx, ppl) cache (r12, guide §1.2): the frame
         # feeds BOTH the corpus-percentile branch and the verdict
@@ -2149,8 +2124,7 @@ def budget_allocation(weights: DataFrame, key_col: str, weight_col: str,
     return alloc.select(*cols)
 
 
-def word_entropy(df: DataFrame, text_col: str, id_col: str,
-                 round_to: int = 4) -> DataFrame:
+def word_entropy(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-document unigram word entropy (nats) + type/token ratio —
     the smooth repetitiveness signal beside the hard ratios of
     repetition_signals: templated or looping text collapses toward 0,
@@ -2186,7 +2160,7 @@ def word_entropy(df: DataFrame, text_col: str, id_col: str,
         wc.join(per.select("doc", "_n"), "doc")
         .select("doc", rnd(-p * F.log(p), 8).alias("_term"))
         .groupBy("doc")
-        .agg(rnd(F.sum("_term"), round_to).alias("word_entropy"))
+        .agg(rnd(F.sum("_term"), 4).alias("word_entropy"))
     )
     out = (
         base.select("doc")
@@ -2199,7 +2173,7 @@ def word_entropy(df: DataFrame, text_col: str, id_col: str,
             F.coalesce(F.col("n_types"), F.lit(0)).cast("long")
              .alias("n_types"),
             F.coalesce(
-                rnd(F.col("n_types") / F.col("_n"), round_to), F.lit(0.0)
+                rnd(F.col("n_types") / F.col("_n"), 4), F.lit(0.0)
             ).alias("ttr"),
             F.coalesce(F.col("word_entropy"), F.lit(0.0))
              .alias("word_entropy"),
@@ -2209,7 +2183,7 @@ def word_entropy(df: DataFrame, text_col: str, id_col: str,
 
 
 def heaps_law(df: DataFrame, text_col: str, id_col: str,
-              buckets: int = 10, round_to: int = 6) -> DataFrame:
+              buckets: int = 10) -> DataFrame:
     """Heaps'-law vocabulary growth curve V(N) ≈ k·N^b — the companion
     diagnostic to :func:`zipf_stats`: how fast does the vocabulary
     grow as the corpus grows? A curation stage that collapses b
@@ -2280,8 +2254,8 @@ def heaps_law(df: DataFrame, text_col: str, id_col: str,
                    (F.col("mxy") - F.col("mx") * F.col("my")) / varx
                    ).otherwise(F.lit(0.0))
     fit = m.select(
-        rnd(slope, round_to).alias("heaps_b"),
-        rnd(F.col("my") - slope * F.col("mx"), round_to)
+        rnd(slope, 6).alias("heaps_b"),
+        rnd(F.col("my") - slope * F.col("mx"), 6)
         .alias("heaps_logk"),
     )
     return pts.select("bucket", "cum_docs", "cum_tokens", "cum_vocab") \
@@ -2289,7 +2263,7 @@ def heaps_law(df: DataFrame, text_col: str, id_col: str,
 
 
 def bigram_entropy(df: DataFrame, text_col: str, id_col: str,
-                   source_col: str, round_to: int = 4) -> DataFrame:
+                   source_col: str) -> DataFrame:
     """Per-source bigram CONDITIONAL entropy H(w₂|w₁) in nats — the
     one-number predictability diagnostic per corpus slice: templated
     or machine-generated sources collapse toward 0 (the next word is
@@ -2343,7 +2317,7 @@ def bigram_entropy(df: DataFrame, text_col: str, id_col: str,
         .select("src", rnd(-share * F.log(ratio), 8).alias("_t"))
     )
     ent = terms.groupBy("src").agg(
-        rnd(F.sum("_t"), round_to).alias("cond_entropy")
+        rnd(F.sum("_t"), 4).alias("cond_entropy")
     )
     return tot.join(ent, "src").select(
         F.col("src").alias(source_col),
@@ -2355,8 +2329,8 @@ def bigram_entropy(df: DataFrame, text_col: str, id_col: str,
 
 
 def coverage_curve(df: DataFrame, text_col: str, id_col: str,
-                   cutoffs: tuple[int, ...] = (100, 300, 1000, 3000),
-                   round_to: int = 6) -> DataFrame:
+                   cutoffs: tuple[int, ...] = (100, 300, 1000, 3000)
+                   ) -> DataFrame:
     """Token-coverage curve: for each vocabulary-size cutoff K, the
     fraction of all token OCCURRENCES covered by the K most frequent
     types — the tokenizer-sizing diagnostic ("is a 32k vocab enough
@@ -2407,7 +2381,7 @@ def coverage_curve(df: DataFrame, text_col: str, id_col: str,
             "cutoff",
             F.col("_rk").cast("long").alias("vocab_used"),
             F.col("cumc").cast("long").alias("covered_tokens"),
-            rnd(F.col("cumc").cast("double") / F.col("_n"), round_to)
+            rnd(F.col("cumc").cast("double") / F.col("_n"), 6)
             .alias("coverage"),
         )
         .orderBy("cutoff")
@@ -2474,7 +2448,7 @@ def curriculum_order(df: DataFrame, text_col: str, id_col: str,
 
 def moore_lewis(df: DataFrame, text_col: str, id_col: str,
                 in_domain_col: str, vocab_size: int = 20,
-                delta: float = 0.5, round_to: int = 4) -> DataFrame:
+                delta: float = 0.5) -> DataFrame:
     """Cross-entropy difference selection (Moore & Lewis 2010,
     "Intelligent Selection of Language Model Training Data"): train
     one unigram LM on the in-domain slice and one on its complement,
@@ -2492,7 +2466,7 @@ def moore_lewis(df: DataFrame, text_col: str, id_col: str,
     ``lp = ln((c + δ) / (N + δ·(V+1)))`` with V+1 event classes
     (V vocabulary types + <unk>). δ and the thresholds live on BOTH
     engines as exact literals; per-token lps are pre-rounded at 8, the
-    per-doc means at ``round_to``, and ``ce_diff`` is a difference of
+    per-doc means at 4 digits, and ``ce_diff`` is a difference of
     the two already-rounded means — identical across engines by the
     rnd contract.
 
@@ -2559,10 +2533,10 @@ def moore_lewis(df: DataFrame, text_col: str, id_col: str,
     )
     agg = scored.groupBy("doc").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        rnd(F.avg("lpi"), round_to).alias("avg_lp_in"),
-        rnd(F.avg("lpg"), round_to).alias("avg_lp_gen"),
+        rnd(F.avg("lpi"), 4).alias("avg_lp_in"),
+        rnd(F.avg("lpg"), 4).alias("avg_lp_gen"),
     )
-    ce = rnd(F.col("avg_lp_in") - F.col("avg_lp_gen"), round_to)
+    ce = rnd(F.col("avg_lp_in") - F.col("avg_lp_gen"), 4)
     out = agg.select(
         F.col("doc").alias(id_col),
         "n_tokens", "avg_lp_in", "avg_lp_gen",
@@ -2574,8 +2548,7 @@ def moore_lewis(df: DataFrame, text_col: str, id_col: str,
 
 
 def unimax_allocation(inv: DataFrame, key_col: str, avail_col: str,
-                      budget: int, max_epochs: int = 4,
-                      round_to: int = 4) -> DataFrame:
+                      budget: int, max_epochs: int = 4) -> DataFrame:
     """UniMax budget allocation (Chung et al. 2023, "UniMax: Fairer
     and More Effective Language Sampling for Large-Scale Multilingual
     Pretraining"): split a token budget as UNIFORMLY as possible
@@ -2644,15 +2617,14 @@ def unimax_allocation(inv: DataFrame, key_col: str, avail_col: str,
     out = flagged.select(
         key_col,
         avail_col,
-        rnd(alloc, round_to).alias("alloc_tokens"),
+        rnd(alloc, 4).alias("alloc_tokens"),
         rnd(alloc / F.col(avail_col), 6).alias("epochs"),
         F.col("_capped").cast("long").alias("capped"),
     )
     return out
 
 
-def hapax_density(df: DataFrame, text_col: str, id_col: str,
-                  round_to: int = 4) -> DataFrame:
+def hapax_density(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-document hapax-legomena density: the share of a document's
     token occurrences whose CORPUS frequency is exactly 1 — the
     other tail of :func:`vocab_coverage`'s top-V audit. High hapax
@@ -2690,7 +2662,7 @@ def hapax_density(df: DataFrame, text_col: str, id_col: str,
         F.col("doc").alias(id_col),
         "n_tokens",
         "n_hapax",
-        rnd(F.col("n_hapax") / F.col("n_tokens"), round_to)
+        rnd(F.col("n_hapax") / F.col("n_tokens"), 4)
         .alias("hapax_share"),
     )
 

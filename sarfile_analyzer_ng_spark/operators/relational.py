@@ -15,10 +15,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
+def dim_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
     """Join a fact table to a small dimension — dimension broadcast,
     no shuffle of the fact side."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
 def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
@@ -36,11 +36,10 @@ def intersect_keys(dfs: list[DataFrame], col: str) -> DataFrame:
     return out
 
 
-def union_with_source(named: list[tuple[str, DataFrame]],
-                      source_col: str = "source_file") -> DataFrame:
+def union_with_source(named: list[tuple[str, DataFrame]]) -> DataFrame:
     """Union N sources tagging each row with its origin — the
     multi-file combined frame of display_averages."""
-    parts = [df.withColumn(source_col, F.lit(name)) for name, df in named]
+    parts = [df.withColumn("source_file", F.lit(name)) for name, df in named]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -22,7 +22,7 @@ melt = unpivot
 
 def pivot_wide(df: DataFrame, key_cols: list[str], pivot_col: str,
                value_col: str, pivot_values: list[str],
-               agg: str = "avg", round_to: int = 4) -> DataFrame:
+               agg: str = "avg") -> DataFrame:
     """Long→wide. ``pivot_values`` is explicit, which removes the extra
     distinct-values job Spark otherwise runs — at 100 TB that job is a
     full scan. Implemented as conditional aggregation so the plan is a
@@ -30,7 +30,7 @@ def pivot_wide(df: DataFrame, key_cols: list[str], pivot_col: str,
     agg_fn = getattr(F, agg)
     aggs = [
         rnd(
-            agg_fn(F.when(F.col(pivot_col) == v, F.col(value_col))), round_to
+            agg_fn(F.when(F.col(pivot_col) == v, F.col(value_col))), 4
         ).alias(v)
         for v in pivot_values
     ]

@@ -30,13 +30,13 @@ def approx_distinct(df: DataFrame, col: str, by: list[str],
 
 
 def approx_percentiles(df: DataFrame, value_col: str, by: list[str],
-                       probs: tuple[float, ...] = (0.25, 0.5, 0.75),
-                       accuracy: int = 10_000) -> DataFrame:
+                       probs: tuple[float, ...] = (0.25, 0.5, 0.75)
+                       ) -> DataFrame:
     """Mergeable quantile sketch per group — bounded memory, one pass;
-    rank error ≤ 1/accuracy (vs stats.percentiles' exact sort)."""
+    rank error ≤ 1/10000 (vs stats.percentiles' exact sort)."""
     probs_sql = ", ".join(str(p) for p in probs)
     agg = F.expr(
-        f"percentile_approx(`{value_col}`, array({probs_sql}), {accuracy})"
+        f"percentile_approx(`{value_col}`, array({probs_sql}), 10000)"
     ).alias("_q")
     out = df.groupBy(*by).agg(agg)
     return out.select(
@@ -121,9 +121,8 @@ def _bloom_positions(key_col: str, m_bits: int,
 
 
 def bloom_probe(df: DataFrame, key_col: str, bloom: DataFrame,
-                m_bits: int = 1 << 16, k_hashes: int = 4,
-                out_col: str = "in_bloom") -> DataFrame:
-    """Probe a :func:`bloom_build` bitmap: appends ``out_col`` = true
+                m_bits: int = 1 << 16, k_hashes: int = 4) -> DataFrame:
+    """Probe a :func:`bloom_build` bitmap: appends ``in_bloom`` = true
     iff every hash position of the key is set. The 1-row bitmap frame
     cross-joins in as a broadcast; the probe is a pure codegen map
     stage over the scan (no shuffle, no Python)."""
@@ -138,7 +137,7 @@ def bloom_probe(df: DataFrame, key_col: str, bloom: DataFrame,
         f" CAST(pmod({pc}, 64) AS INT)) & CAST(1 AS BIGINT)) = 1)"
         for pc in pcols
     )
-    return out.withColumn(out_col, F.expr(cond)).drop("bloom", *pcols)
+    return out.withColumn("in_bloom", F.expr(cond)).drop("bloom", *pcols)
 
 
 def cms_build(df: DataFrame, key_col: str, width: int = 256,
@@ -181,8 +180,7 @@ def cms_build(df: DataFrame, key_col: str, width: int = 256,
 
 
 def cms_estimate(counters: DataFrame, probes: DataFrame, key_col: str,
-                 width: int = 256, depth: int = 4,
-                 out_col: str = "est_cnt") -> DataFrame:
+                 width: int = 256, depth: int = 4) -> DataFrame:
     """Point-query a :func:`cms_build` sketch: estimate = min over the
     ``depth`` rows of ``counters[j][h_j(key)]`` (0 if a bucket is
     empty). The counter frame is ``depth·width`` rows, so it
@@ -203,7 +201,7 @@ def cms_estimate(counters: DataFrame, probes: DataFrame, key_col: str,
     ).select(key_col, F.col("_p.j").alias("j"), F.col("_p.b").alias("b"))
     joined = pos.join(F.broadcast(counters), ["j", "b"], "left")
     return joined.groupBy(key_col).agg(
-        F.min(F.coalesce("cnt", F.lit(0))).cast("long").alias(out_col)
+        F.min(F.coalesce("cnt", F.lit(0))).cast("long").alias("est_cnt")
     )
 
 

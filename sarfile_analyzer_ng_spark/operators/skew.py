@@ -31,21 +31,17 @@ _MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 
 
 def salted_agg(df: DataFrame, keys: list[str], aggs: list[SaltedAgg],
-               num_salts: int = 16, salt_on: list[str] | None = None) -> DataFrame:
+               num_salts: int = 16) -> DataFrame:
     """Two-stage skew-proof aggregation.
 
-    ``salt_on`` names columns whose hash spreads a hot key's rows over
-    shards (default: all non-key columns). Stage 1 groups by
-    (keys, salt) — each shard small; stage 2 merges shards per key.
+    The hash of every non-key column spreads a hot key's rows over
+    shards. Stage 1 groups by (keys, salt) — each shard small; stage 2
+    merges shards per key.
     """
-    salt_cols = (
-        salt_on if salt_on is not None
-        else [c for c in df.columns if c not in keys]
-    )
+    salt_cols = [c for c in df.columns if c not in keys]
     if not salt_cols:
         raise ValueError(
-            "salted_agg: no non-key columns to derive a salt from — "
-            "pass salt_on explicitly"
+            "salted_agg: no non-key columns to derive a salt from"
         )
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(num_salts))
     partial = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(

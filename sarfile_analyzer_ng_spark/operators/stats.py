@@ -17,9 +17,10 @@ from pyspark.sql import functions as F
 from ..util import rnd
 
 
-def unpivot(df: DataFrame, id_cols: list[str], value_cols: list[str],
-            var_name: str = "metric", value_name: str = "value") -> DataFrame:
-    """Wide→long with a single ``stack`` expression (no shuffle).
+def unpivot(df: DataFrame, id_cols: list[str],
+            value_cols: list[str]) -> DataFrame:
+    """Wide→long with a single ``stack`` expression (no shuffle) into
+    ``metric``/``value`` columns.
     Column names are escaped into the generated SQL (pivoted metric
     names are data-derived and may contain quotes/backticks)."""
     if not value_cols:
@@ -33,12 +34,12 @@ def unpivot(df: DataFrame, id_cols: list[str], value_cols: list[str],
 
     pairs = ", ".join(f"{_q(c)}, {_i(c)}" for c in value_cols)
     stack = F.expr(
-        f"stack({len(value_cols)}, {pairs}) as ({_i(var_name)}, {_i(value_name)})"
+        f"stack({len(value_cols)}, {pairs}) as (`metric`, `value`)"
     )
     return df.select(*[F.col(c) for c in id_cols], stack)
 
 
-def describe(df: DataFrame, value_cols: list[str], round_to: int = 4) -> DataFrame:
+def describe(df: DataFrame, value_cols: list[str]) -> DataFrame:
     """count/mean/std/min/max per metric column, one row per metric.
 
     Mirrors polars ``DataFrame.describe`` as used in
@@ -50,16 +51,15 @@ def describe(df: DataFrame, value_cols: list[str], round_to: int = 4) -> DataFra
     return long.groupBy("metric").agg(
         F.count("value").alias("cnt"),
         (F.count(F.lit(1)) - F.count("value")).alias("null_cnt"),
-        rnd(F.avg("value"), round_to).alias("mean"),
-        rnd(F.stddev_samp("value"), round_to).alias("stddev"),
-        F.round(F.min("value"), round_to).alias("min"),
-        F.round(F.max("value"), round_to).alias("max"),
+        rnd(F.avg("value"), 4).alias("mean"),
+        rnd(F.stddev_samp("value"), 4).alias("stddev"),
+        F.round(F.min("value"), 4).alias("min"),
+        F.round(F.max("value"), 4).alias("max"),
     )
 
 
 def percentiles(df: DataFrame, value_col: str, by: list[str],
-                probs: tuple[float, ...] = (0.25, 0.5, 0.75),
-                round_to: int = 4) -> DataFrame:
+                probs: tuple[float, ...] = (0.25, 0.5, 0.75)) -> DataFrame:
     """Exact interpolated percentiles per group (polars describe shows
     25/50/75%), quantile_cont semantics — as a fully distributed rank
     with ONE full-data shuffle.
@@ -154,7 +154,7 @@ def percentiles(df: DataFrame, value_col: str, by: list[str],
             .when(F.col("_rn") == hi, F.col(value_col) * frac)
         )
         aggs.append(
-            rnd(F.sum(share), round_to)
+            rnd(F.sum(share), 4)
             .alias("p" + f"{p * 100:g}".replace(".", "_"))
         )
     out = ranked.groupBy(*by).agg(*aggs)
@@ -163,7 +163,7 @@ def percentiles(df: DataFrame, value_col: str, by: list[str],
 
 
 def minmax_argmax(df: DataFrame, key_cols: list[str], value_col: str,
-                  ts_col: str, round_to: int = 4) -> DataFrame:
+                  ts_col: str) -> DataFrame:
     """Min/max per group plus the timestamp where the max occurred —
     the distributed form of the reference's min/max cell highlighting
     (helpers_pl.py:320 ``highlight_max_ind``/``highlight_min_ind``).
@@ -173,19 +173,19 @@ def minmax_argmax(df: DataFrame, key_cols: list[str], value_col: str,
     """
     vc, tc = F.col(value_col), F.col(ts_col)
     return df.groupBy(*key_cols).agg(
-        F.round(F.min(vc), round_to).alias("min_value"),
-        F.round(F.max(vc), round_to).alias("max_value"),
+        F.round(F.min(vc), 4).alias("min_value"),
+        F.round(F.max(vc), 4).alias("max_value"),
         F.max(F.struct(vc.alias("v"), tc.alias("t")))["t"].alias("max_at"),
     )
 
 
-def correlation(df: DataFrame, col_x: str, col_y: str, by: list[str],
-                round_to: int = 4) -> DataFrame:
+def correlation(df: DataFrame, col_x: str, col_y: str,
+                by: list[str]) -> DataFrame:
     """Pearson correlation between two metrics per group — the compare-
     different-metrics page (code/handle_metrics_pl.py) reduced to its
     analytical core."""
     return df.groupBy(*by).agg(
-        rnd(F.corr(col_x, col_y), round_to).alias("corr_xy"),
+        rnd(F.corr(col_x, col_y), 4).alias("corr_xy"),
         F.count(F.lit(1)).alias("cnt"),
     )
 
@@ -222,7 +222,7 @@ def zscore_outliers(df: DataFrame, value_col: str, by: list[str],
 
 
 def mad_outliers(df: DataFrame, value_col: str, by: list[str],
-                 threshold: float = 3.5, round_to: int = 4) -> DataFrame:
+                 threshold: float = 3.5) -> DataFrame:
     """Robust outliers by modified z-score (Iglewicz & Hoaglin 1993):
     ``0.6745 · (v − median) / MAD`` with MAD = median absolute
     deviation — the monitoring-grade complement of
@@ -232,7 +232,7 @@ def mad_outliers(df: DataFrame, value_col: str, by: list[str],
 
     Both medians are EXACT distributed percentiles (:func:`percentiles`
     — range-exchange rank, no single-task group), rounded at
-    ``round_to`` so the flag boundary is engine-stable; deviations are
+    4 digits so the flag boundary is engine-stable; deviations are
     derived from the rounded medians with identical scalar arithmetic.
     Groups with MAD = 0 (over half the samples identical) flag nothing
     — the standard convention, guarded identically in both engines.
@@ -241,20 +241,19 @@ def mad_outliers(df: DataFrame, value_col: str, by: list[str],
     two broadcast joins of the one-row-per-group stats — the fact
     table never wide-shuffles.
     """
-    med = percentiles(df, value_col, by, probs=(0.5,), round_to=round_to)
+    med = percentiles(df, value_col, by, probs=(0.5,))
     med = med.select(*by, F.col("p50").alias("_med"))
     with_dev = df.join(F.broadcast(med), by).withColumn(
         "_adev", F.abs(F.col(value_col) - F.col("_med"))
     )
-    mad = percentiles(with_dev, "_adev", by, probs=(0.5,),
-                      round_to=round_to)
+    mad = percentiles(with_dev, "_adev", by, probs=(0.5,))
     mad = mad.select(*by, F.col("p50").alias("_mad"))
     scored = with_dev.join(F.broadcast(mad), by).withColumn(
         "robust_z",
         rnd(
             F.lit(0.6745) * (F.col(value_col) - F.col("_med"))
             / F.col("_mad"),
-            round_to,
+            4,
         ),
     )
     out = scored.where(
@@ -268,7 +267,7 @@ def mad_outliers(df: DataFrame, value_col: str, by: list[str],
 
 
 def moments_merge(old: DataFrame, new: DataFrame, value_col: str,
-                  by: list[str], round_to: int = 4) -> DataFrame:
+                  by: list[str]) -> DataFrame:
     """Incremental corpus statistics: merge per-partition moment
     summaries into exact combined mean/variance WITHOUT rescanning the
     old data — Chan et al. 1979's parallel-variance merge, the update
@@ -313,13 +312,12 @@ def moments_merge(old: DataFrame, new: DataFrame, value_col: str,
         na.cast("long").alias("n_old"),
         nb.cast("long").alias("n_new"),
         n.cast("long").alias("n_total"),
-        rnd(mean, round_to).alias("mean_merged"),
-        rnd(var_samp, round_to).alias("var_merged"),
+        rnd(mean, 4).alias("mean_merged"),
+        rnd(var_samp, 4).alias("var_merged"),
     )
 
 
-def ks_two_sample(a: DataFrame, b: DataFrame, value_col: str,
-                  round_to: int = 6) -> DataFrame:
+def ks_two_sample(a: DataFrame, b: DataFrame, value_col: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic D = max_v |ECDF_a(v) −
     ECDF_b(v)| — the distribution-drift gate between a corpus
     snapshot and an arriving batch ("does the new crawl's length
@@ -334,7 +332,7 @@ def ks_two_sample(a: DataFrame, b: DataFrame, value_col: str,
     accumulate over that frame, and D is one max. No corpus-wide
     sort, no single-task group. ECDF fractions pre-round at 8 digits
     (counts are exact integers; only the division is float), D
-    rounds at ``round_to``.
+    rounds at 6 digits.
 
     Returns one row: (n_old, n_new, ks_d).
     """
@@ -368,7 +366,7 @@ def ks_two_sample(a: DataFrame, b: DataFrame, value_col: str,
         "_ta", "_tb",
     )
     return ecdf.groupBy("_ta", "_tb").agg(
-        rnd(F.max(F.abs(F.col("_fa") - F.col("_fb"))), round_to)
+        rnd(F.max(F.abs(F.col("_fa") - F.col("_fb"))), 6)
         .alias("ks_d")
     ).select(
         F.col("_ta").cast("long").alias("n_old"),
@@ -378,8 +376,7 @@ def ks_two_sample(a: DataFrame, b: DataFrame, value_col: str,
 
 
 def winsorized_stats(df: DataFrame, value_col: str, by: list[str],
-                     lo: float = 0.05, hi: float = 0.95,
-                     round_to: int = 4) -> DataFrame:
+                     lo: float = 0.05, hi: float = 0.95) -> DataFrame:
     """Winsorized per-group moments: clamp values at the group's
     exact (lo, hi) percentiles, then take mean/stddev — the robust
     location/scale estimate that, unlike trimming or MAD (q140),
@@ -392,7 +389,7 @@ def winsorized_stats(df: DataFrame, value_col: str, by: list[str],
     buffering), broadcast back onto the facts, then ONE combinable
     agg over the clamped column. Clamping uses the already-rounded
     percentile values, so both engines clamp identically; moments
-    round at ``round_to``. The raw mean rides along for the
+    round at 4 digits. The raw mean rides along for the
     "how much did the tail move me" delta.
     """
     pct = percentiles(df, value_col, by, probs=(lo, hi))
@@ -407,10 +404,10 @@ def winsorized_stats(df: DataFrame, value_col: str, by: list[str],
         F.count(F.lit(1)).cast("long").alias("n"),
         F.min(lo_c).alias(lo_c),
         F.max(hi_c).alias(hi_c),
-        rnd(F.avg(F.col(value_col).cast("double")), round_to)
+        rnd(F.avg(F.col(value_col).cast("double")), 4)
         .alias("raw_mean"),
-        rnd(F.avg(xw), round_to).alias("win_mean"),
-        rnd(F.stddev_pop(xw), round_to).alias("win_std"),
+        rnd(F.avg(xw), 4).alias("win_mean"),
+        rnd(F.stddev_pop(xw), 4).alias("win_std"),
     )
     out._cached_inputs = getattr(pct, "_cached_inputs", [])
     return out

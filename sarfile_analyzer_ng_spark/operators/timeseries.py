@@ -51,7 +51,7 @@ def resample(df: DataFrame, ts_col: str, every: str, by: list[str],
 
 
 def rolling_mean(df: DataFrame, ts_col: str, value_col: str, by: list[str],
-                 preceding: int, round_to: int = 4) -> DataFrame:
+                 preceding: int) -> DataFrame:
     """Moving average over the last ``preceding``+1 rows per series —
     chart smoothing as a window aggregate (state stays partitioned by
     series key)."""
@@ -60,11 +60,11 @@ def rolling_mean(df: DataFrame, ts_col: str, value_col: str, by: list[str],
         .orderBy(ts_col)
         .rowsBetween(-preceding, Window.currentRow)
     )
-    return df.withColumn("rolling_mean", rnd(F.avg(value_col).over(w), round_to))
+    return df.withColumn("rolling_mean", rnd(F.avg(value_col).over(w), 4))
 
 
-def running_sum(df: DataFrame, ts_col: str, value_col: str, by: list[str],
-                round_to: int = 4) -> DataFrame:
+def running_sum(df: DataFrame, ts_col: str, value_col: str,
+                by: list[str]) -> DataFrame:
     """Cumulative total per series (sar counters are cumulative by
     nature; the reference renders their deltas/averages)."""
     w = (
@@ -72,7 +72,7 @@ def running_sum(df: DataFrame, ts_col: str, value_col: str, by: list[str],
         .orderBy(ts_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return df.withColumn("running_sum", rnd(F.sum(value_col).over(w), round_to))
+    return df.withColumn("running_sum", rnd(F.sum(value_col).over(w), 4))
 
 
 def insert_restarts(df: DataFrame, restarts: DataFrame, ts_col: str,
@@ -186,8 +186,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str], ts_col: str,
     )
 
 
-def delta_rate(df: DataFrame, ts_col: str, value_col: str, by: list[str],
-               round_to: int = 4) -> DataFrame:
+def delta_rate(df: DataFrame, ts_col: str, value_col: str,
+               by: list[str]) -> DataFrame:
     """Counter→rate conversion: per-second rate between consecutive
     samples of a series — how sysstat itself derives every ``.../s``
     metric from kernel counters. ``lag`` window per series key; first
@@ -197,12 +197,11 @@ def delta_rate(df: DataFrame, ts_col: str, value_col: str, by: list[str],
     prev_t = F.lag(ts_col).over(w)
     dt = F.col(ts_col).cast("long") - prev_t.cast("long")
     rate = F.when(dt > 0, (F.col(value_col) - prev_v) / dt)
-    return df.withColumn("rate", rnd(rate, round_to))
+    return df.withColumn("rate", rnd(rate, 4))
 
 
 def resample_filled(df: DataFrame, ts_col: str, every_seconds: int,
                     by: list[str], value_col: str,
-                    round_to: int = 4,
                     max_buckets: int = 1_000_000) -> DataFrame:
     """Gap-filled resample: aggregate into fixed buckets AND emit
     zero-count rows for empty buckets, so downstream charts/windows see
@@ -222,7 +221,7 @@ def resample_filled(df: DataFrame, ts_col: str, every_seconds: int,
     ).cast("timestamp")
     aggs = df.groupBy(*by, bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("cnt"),
-        rnd(F.sum(value_col), round_to).alias("sum_value"),
+        rnd(F.sum(value_col), 4).alias("sum_value"),
     )
     spans = df.groupBy(*by).agg(
         F.min(F.col(ts_col).cast("long")).alias("_lo"),
@@ -275,8 +274,7 @@ def top_n_per_group(df: DataFrame, by: list[str], order_cols, n: int) -> DataFra
     )
 
 
-def overlay_align(df: DataFrame, ts_col: str, by: list[str],
-                  out_col: str = "ts_aligned") -> DataFrame:
+def overlay_align(df: DataFrame, ts_col: str, by: list[str]) -> DataFrame:
     """Rebase each group's timestamps onto one shared day axis,
     preserving time-of-day — the Spark form of the reference's
     ``replace_ymt`` (dataframe_funcs_pl.py:81), which swaps the
@@ -311,7 +309,7 @@ def overlay_align(df: DataFrame, ts_col: str, by: list[str],
         df.join(F.broadcast(a), cond)
         .drop(*[f"_k{i}" for i in range(len(by))])
         .withColumn(
-            out_col,
+            "ts_aligned",
             F.timestamp_micros(F.unix_micros(F.col(ts_col)) - F.col("_day0_us")),
         )
         .drop("_day0_us")
@@ -319,8 +317,7 @@ def overlay_align(df: DataFrame, ts_col: str, by: list[str],
 
 
 def seasonal_outliers(df: DataFrame, ts_col: str, value_col: str,
-                      by: list[str], threshold: float = 3.0,
-                      round_to: int = 4) -> DataFrame:
+                      by: list[str], threshold: float = 3.0) -> DataFrame:
     """Hour-of-day seasonal anomaly detection — the server-metrics
     question the reference's charts answer by eye ("is this 3am CPU
     spike normal FOR 3am?"): a global z-score (stats.zscore_outliers)
@@ -335,7 +332,7 @@ def seasonal_outliers(df: DataFrame, ts_col: str, value_col: str,
     """
     return seasonal_score(
         df, seasonal_baseline(df, ts_col, value_col, by),
-        ts_col, value_col, by, threshold, round_to,
+        ts_col, value_col, by, threshold,
     )
 
 
@@ -353,8 +350,7 @@ def seasonal_baseline(df: DataFrame, ts_col: str, value_col: str,
 
 def seasonal_score(df: DataFrame, baseline: DataFrame, ts_col: str,
                    value_col: str, by: list[str],
-                   threshold: float = 3.0,
-                   round_to: int = 4) -> DataFrame:
+                   threshold: float = 3.0) -> DataFrame:
     """Score rows against a FROZEN seasonal baseline — a stateless
     broadcast join + filter."""
     from functools import reduce as _reduce
@@ -378,7 +374,7 @@ def seasonal_score(df: DataFrame, baseline: DataFrame, ts_col: str,
     z = (F.col(value_col) - F.col("_mean")) / F.col("_std")
     return (
         joined.where(F.abs(z) > threshold)
-        .withColumn("season_z", rnd(z, round_to))
+        .withColumn("season_z", rnd(z, 4))
         .withColumn("hour", F.col("_hr").cast("long"))
         .drop("_mean", "_std", "_hr")
     )
@@ -386,8 +382,7 @@ def seasonal_score(df: DataFrame, baseline: DataFrame, ts_col: str,
 
 def ewma_smooth(df: DataFrame, ts_col: str, value_col: str, by: list[str],
                 order_tiebreak: list[str] | None = None,
-                alpha: float = 0.3, window: int = 16,
-                round_to: int = 4) -> DataFrame:
+                alpha: float = 0.3, window: int = 16) -> DataFrame:
     """Truncated exponentially-weighted moving average + one-step-ahead
     forecast per series — the EWMA control chart (Roberts 1959; NIST
     §6.3.2.4) the sar world uses for "is THIS sample off its recent
@@ -447,20 +442,20 @@ def ewma_smooth(df: DataFrame, ts_col: str, value_col: str, by: list[str],
 
     num_s, den_s = wmean(list(zip(wts, lags)))
     num_f, den_f = wmean(list(zip(wts, lag_chain)))
-    ewma = rnd(num_s / den_s, round_to)
-    forecast = F.when(den_f > 0, rnd(num_f / den_f, round_to))
+    ewma = rnd(num_s / den_s, 4)
+    forecast = F.when(den_f > 0, rnd(num_f / den_f, 4))
     return df.select(
         *by, ts_col, *(order_tiebreak or []), F.col(value_col),
         ewma.alias("ewma"),
         forecast.alias("forecast"),
         F.when(
-            den_f > 0, rnd(F.col(value_col) - (num_f / den_f), round_to)
+            den_f > 0, rnd(F.col(value_col) - (num_f / den_f), 4)
         ).alias("resid"),
     )
 
 
 def trend_fit(df: DataFrame, ts_col: str, value_col: str,
-              by: list[str], round_to: int = 6) -> DataFrame:
+              by: list[str]) -> DataFrame:
     """Per-series OLS linear trend: slope (value units per DAY),
     intercept, and R² of ``value`` against time — "which disk is
     trending toward full / which error rate is drifting up", the
@@ -514,9 +509,9 @@ def trend_fit(df: DataFrame, ts_col: str, value_col: str,
     return m.select(
         *by,
         "n_samples",
-        rnd(slope, round_to).alias("slope_per_day"),
-        rnd(intercept, round_to).alias("intercept"),
-        rnd(r2, round_to).alias("r2"),
+        rnd(slope, 6).alias("slope_per_day"),
+        rnd(intercept, 6).alias("intercept"),
+        rnd(r2, 6).alias("r2"),
     )
 
 
@@ -558,8 +553,8 @@ def threshold_runs(df: DataFrame, ts_col: str, value_col: str,
 
 def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
                  by: list[str], slack_sigmas: float = 0.5,
-                 h_sigmas: float = 4.0, tiebreak: str | None = None,
-                 round_to: int = 4) -> DataFrame:
+                 h_sigmas: float = 4.0,
+                 tiebreak: str | None = None) -> DataFrame:
     """One-sided CUSUM drift detection (Page 1954): alarm when the
     cumulative excess over ``mean + slack·σ`` exceeds ``h·σ`` — the
     sequential test that catches a SMALL persistent shift long before
@@ -570,7 +565,7 @@ def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
     fully declarative, no stateful recursion.
 
     Determinism: per-series mean/σ are rounded scalars; each deviation
-    term pre-rounds at 8; the running sum re-rounds at ``round_to``
+    term pre-rounds at 8; the running sum re-rounds at 4 digits
     BEFORE the prefix-min window, so both engines take mins over
     identical values regardless of how their window aggregation trees
     associate the float sums (the q24 running-sum contract).
@@ -579,8 +574,8 @@ def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
     the series-keyed exchange. Alarm rows only leave the shuffle.
     """
     stats = df.groupBy(*by).agg(
-        rnd(F.avg(value_col), round_to).alias("_mu"),
-        rnd(F.stddev_samp(value_col), round_to).alias("_sd"),
+        rnd(F.avg(value_col), 4).alias("_mu"),
+        rnd(F.stddev_samp(value_col), 4).alias("_sd"),
     )
     order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
     w_cum = (
@@ -594,7 +589,7 @@ def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
     )
     cummed = (
         df.join(F.broadcast(stats), by)
-        .withColumn("_cum", rnd(F.sum(dev).over(w_cum), round_to))
+        .withColumn("_cum", rnd(F.sum(dev).over(w_cum), 4))
     )
     w_min = (
         Window.partitionBy(*by).orderBy(*order)
@@ -605,18 +600,17 @@ def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
         rnd(
             F.col("_cum")
             - F.least(F.lit(0.0), F.min("_cum").over(w_min)),
-            round_to,
+            4,
         ),
     )
     return scored.where(
         F.col("cusum") > rnd(F.lit(float(h_sigmas)) * F.col("_sd"),
-                             round_to)
+                             4)
     ).drop("_mu", "_sd", "_cum")
 
 
 def capacity_forecast(df: DataFrame, ts_col: str, value_col: str,
-                      by: list[str], limit: float,
-                      round_to: int = 6) -> DataFrame:
+                      by: list[str], limit: float) -> DataFrame:
     """Time-to-threshold forecast: per series, extrapolate the
     :func:`trend_fit` OLS line to the point it crosses ``limit`` —
     "this filesystem fills in 12 days", the question the reference's
@@ -665,8 +659,8 @@ def capacity_forecast(df: DataFrame, ts_col: str, value_col: str,
     scored = m.select(
         *by,
         "n_samples",
-        rnd(slope, round_to).alias("slope_per_day"),
-        rnd(fit_now, round_to).alias("fit_now"),
+        rnd(slope, 6).alias("slope_per_day"),
+        rnd(fit_now, 6).alias("fit_now"),
     )
     rising = (F.col("fit_now") < lim) & (F.col("slope_per_day") > 0)
     return scored.select(
@@ -685,17 +679,16 @@ def capacity_forecast(df: DataFrame, ts_col: str, value_col: str,
 
 def lag_correlation(df: DataFrame, ts_col: str, value_col: str,
                     series_col: str, series_a: str, series_b: str,
-                    max_lag: int = 6, bucket_seconds: int = 3600,
-                    round_to: int = 6) -> DataFrame:
+                    max_lag: int = 6) -> DataFrame:
     """Lead/lag cross-correlation between two metric series:
     corr(A(t), B(t − k·bucket)) for k = 0..max_lag — "does I/O wait
     lead CPU steal by two hours?", the causal-direction question the
     reference's overlay charts (multi_files_pl.py stacks the series
     visually) leave to the eye.
 
-    Both series first resample to a shared integer bucket grid
+    Both series first resample to a shared hourly bucket grid
     (mean per bucket, pre-rounded at 8 digits), so the join key is
-    exact BIGINT arithmetic: A.bucket − k·bucket_seconds = B.bucket.
+    exact BIGINT arithmetic: A.bucket − k·3600 = B.bucket.
     The per-lag correlation derives from rnd-ladder moments exactly
     like :func:`trend_fit` (sqrt is IEEE-exact, so corr's operands
     are engine-identical).  Lags with < 2 grid pairs or a
@@ -707,7 +700,7 @@ def lag_correlation(df: DataFrame, ts_col: str, value_col: str,
     the facts, and the self-join is an equi-join on the bucket int.
     Output is max_lag+1 rows.
     """
-    bsec = F.lit(int(bucket_seconds))
+    bsec = F.lit(3600)
     grid = (
         df.where(F.col(series_col).isin([series_a, series_b]))
         .groupBy(
@@ -743,7 +736,7 @@ def lag_correlation(df: DataFrame, ts_col: str, value_col: str,
     return m.select(
         "lag",
         "n_pairs",
-        F.when(ok, rnd(cov / F.sqrt(varx * vary), round_to))
+        F.when(ok, rnd(cov / F.sqrt(varx * vary), 6))
          .otherwise(F.lit(None).cast("double")).alias("lag_corr"),
     ).orderBy("lag")
 

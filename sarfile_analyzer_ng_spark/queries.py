@@ -2419,8 +2419,7 @@ GROUP BY e.query_id
 ANN_LSH_NUM_PLANES = 6
 
 
-def _portable_planes(num_planes: int = ANN_LSH_NUM_PLANES,
-                     dim: int = 64) -> list[list[float]]:
+def _portable_planes() -> list[list[float]]:
     """Deterministic hyperplanes with EXACTLY-representable dyadic
     components (k/64, k ∈ [−32, 32]) from the same fixed LCG as the
     portable MinHash family: the identical float literals appear in
@@ -2428,9 +2427,9 @@ def _portable_planes(num_planes: int = ANN_LSH_NUM_PLANES,
     per-component product bit-identical across engines — so sign
     agreement of the bucket bits is exact, not probabilistic."""
     planes, state = [], 0x5DEECE66D ^ 0x2545F491
-    for _ in range(num_planes):
+    for _ in range(ANN_LSH_NUM_PLANES):
         row = []
-        for _ in range(dim):
+        for _ in range(64):
             state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
             row.append(((state % 65) - 32) / 64.0)
         planes.append(row)
@@ -4577,25 +4576,25 @@ def q109_pca_projection(spark, sf_dir):
     return S.pca_topd_project(w0, "vec_id", comps[:1])
 
 
-def _sql_pca(iters: int = PCA_ITERS, dim: int = PCA_DIM) -> str:
+def _sql_pca() -> str:
     """The power iteration as one CTE chain — the exact arithmetic
     pca_power_topd_train runs for its first component: μ rnd6; per
     iteration s rnd8, u rnd6, norm rnd8, v rnd6 with a v[0] ≥ 0 sign
     fix applied AFTER rounding."""
     import math
 
-    v0 = repr(round(1.0 / math.sqrt(dim), 8))
+    v0 = repr(round(1.0 / math.sqrt(PCA_DIM), 8))
     parts = [f"""v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings),
 ex AS (
   SELECT vec_id, i - 1 AS d, e[i] AS x
-  FROM v, unnest(range(1, {dim + 1})) t(i)),
+  FROM v, unnest(range(1, {PCA_DIM + 1})) t(i)),
 mu AS (SELECT d, {sql_rnd('avg(x)', 6)} AS mu FROM ex GROUP BY d),
 cx AS (SELECT ex.vec_id, ex.d, ex.x - mu.mu AS c
        FROM ex JOIN mu USING (d)),
 v0 AS (SELECT d, {v0} AS vv FROM mu)"""]
-    for t in range(1, iters + 1):
+    for t in range(1, PCA_ITERS + 1):
         parts.append(f"""s{t} AS (
   SELECT cx.vec_id, {sql_rnd(f'sum(cx.c * v{t - 1}.vv)', 8)} AS s
   FROM cx JOIN v{t - 1} USING (d) GROUP BY cx.vec_id)""")
@@ -4612,8 +4611,8 @@ v0 AS (SELECT d, {v0} AS vv FROM mu)"""]
                  THEN -vv ELSE vv END AS vv FROM w{t})""")
     return (
         "WITH " + ",\n".join(parts) + f"""
-SELECT cx.vec_id, {sql_rnd(f'sum(cx.c * v{iters}.vv)', 6)} AS pc1_proj
-FROM cx JOIN v{iters} USING (d) GROUP BY cx.vec_id
+SELECT cx.vec_id, {sql_rnd(f'sum(cx.c * v{PCA_ITERS}.vv)', 6)} AS pc1_proj
+FROM cx JOIN v{PCA_ITERS} USING (d) GROUP BY cx.vec_id
 """
     )
 
@@ -4647,23 +4646,23 @@ def q112_remove_top_direction(spark, sf_dir):
     )
 
 
-def _sql_pca_resid(iters: int = PCA_ITERS, dim: int = PCA_DIM) -> str:
+def _sql_pca_resid() -> str:
     """q109's unrolled chain, extended two CTEs: the per-vector
     projection p, then the ordered residual list rnd6(c − p·v_d)."""
-    base = _sql_pca(iters, dim)
+    base = _sql_pca()
     head = base[: base.rindex("\nSELECT")]
     return (
         head
         + f""",
 pj AS (
-  SELECT cx.vec_id, {sql_rnd(f'sum(cx.c * v{iters}.vv)', 6)} AS p
-  FROM cx JOIN v{iters} USING (d) GROUP BY cx.vec_id)
+  SELECT cx.vec_id, {sql_rnd(f'sum(cx.c * v{PCA_ITERS}.vv)', 6)} AS p
+  FROM cx JOIN v{PCA_ITERS} USING (d) GROUP BY cx.vec_id)
 SELECT cx.vec_id,
        array_to_string(
-         list(CAST(round(({sql_rnd(f'cx.c - pj.p * v{iters}.vv', 6)})
+         list(CAST(round(({sql_rnd(f'cx.c - pj.p * v{PCA_ITERS}.vv', 6)})
                          * 1000000) AS BIGINT) ORDER BY cx.d),
          ',') AS resid_micro
-FROM cx JOIN v{iters} USING (d) JOIN pj USING (vec_id)
+FROM cx JOIN v{PCA_ITERS} USING (d) JOIN pj USING (vec_id)
 GROUP BY cx.vec_id
 """
     )
@@ -4690,8 +4689,7 @@ def q118_pca_topd(spark, sf_dir):
     return S.pca_topd_project(w0, "vec_id", comps)
 
 
-def _sql_pca_topd(n_components: int = PCA_TOPD, iters: int = PCA_ITERS,
-                  dim: int = PCA_DIM) -> str:
+def _sql_pca_topd() -> str:
     """The deflated power iteration as one CTE chain: per component k,
     q109's (score rnd8, update rnd6, norm rnd8, v rnd6, sign-fix)
     iterate over cx{k−1}, then the rnd8 deflation projection builds
@@ -4699,7 +4697,7 @@ def _sql_pca_topd(n_components: int = PCA_TOPD, iters: int = PCA_ITERS,
     deflated input — exactly pca_topd_project's output arithmetic."""
     import math
 
-    v0 = repr(round(1.0 / math.sqrt(dim), 8))
+    v0 = repr(round(1.0 / math.sqrt(PCA_DIM), 8))
     # AS MATERIALIZED: DuckDB inlines plain CTEs per reference — a
     # D-component chain references cx{k} dozens of times, which
     # re-plans (and re-opens) the base parquet each time and trips
@@ -4709,14 +4707,14 @@ def _sql_pca_topd(n_components: int = PCA_TOPD, iters: int = PCA_ITERS,
   FROM embeddings),
 ex AS MATERIALIZED (
   SELECT vec_id, i - 1 AS d, e[i] AS x
-  FROM v, unnest(range(1, {dim + 1})) t(i)),
+  FROM v, unnest(range(1, {PCA_DIM + 1})) t(i)),
 mu AS MATERIALIZED (SELECT d, {sql_rnd('avg(x)', 6)} AS mu FROM ex GROUP BY d),
 cx0 AS MATERIALIZED (SELECT ex.vec_id, ex.d, ex.x - mu.mu AS c
         FROM ex JOIN mu USING (d))"""]
-    for k in range(1, n_components + 1):
+    for k in range(1, PCA_TOPD + 1):
         src = f"cx{k - 1}"
         parts.append(f"""c{k}v0 AS (SELECT d, {v0} AS vv FROM mu)""")
-        for t in range(1, iters + 1):
+        for t in range(1, PCA_ITERS + 1):
             parts.append(f"""c{k}s{t} AS (
   SELECT {src}.vec_id, {sql_rnd(f'sum({src}.c * c{k}v{t - 1}.vv)', 8)} AS s
   FROM {src} JOIN c{k}v{t - 1} USING (d) GROUP BY {src}.vec_id)""")
@@ -4733,16 +4731,16 @@ cx0 AS MATERIALIZED (SELECT ex.vec_id, ex.d, ex.x - mu.mu AS c
                  THEN -vv ELSE vv END AS vv FROM c{k}w{t})""")
         parts.append(f"""pj{k} AS (
   SELECT {src}.vec_id,
-         {sql_rnd(f'sum({src}.c * c{k}v{iters}.vv)', 6)} AS pc{k}_proj,
-         {sql_rnd(f'sum({src}.c * c{k}v{iters}.vv)', 8)} AS p8
-  FROM {src} JOIN c{k}v{iters} USING (d) GROUP BY {src}.vec_id)""")
-        if k < n_components:
+         {sql_rnd(f'sum({src}.c * c{k}v{PCA_ITERS}.vv)', 6)} AS pc{k}_proj,
+         {sql_rnd(f'sum({src}.c * c{k}v{PCA_ITERS}.vv)', 8)} AS p8
+  FROM {src} JOIN c{k}v{PCA_ITERS} USING (d) GROUP BY {src}.vec_id)""")
+        if k < PCA_TOPD:
             parts.append(f"""cx{k} AS MATERIALIZED (
-  SELECT {src}.vec_id, {src}.d, {src}.c - pj{k}.p8 * c{k}v{iters}.vv AS c
-  FROM {src} JOIN c{k}v{iters} USING (d) JOIN pj{k} USING (vec_id))""")
-    proj_list = ", ".join(f"pc{k}_proj" for k in range(1, n_components + 1))
+  SELECT {src}.vec_id, {src}.d, {src}.c - pj{k}.p8 * c{k}v{PCA_ITERS}.vv AS c
+  FROM {src} JOIN c{k}v{PCA_ITERS} USING (d) JOIN pj{k} USING (vec_id))""")
+    proj_list = ", ".join(f"pc{k}_proj" for k in range(1, PCA_TOPD + 1))
     joins = " ".join(
-        f"JOIN pj{k} USING (vec_id)" for k in range(2, n_components + 1)
+        f"JOIN pj{k} USING (vec_id)" for k in range(2, PCA_TOPD + 1)
     )
     return (
         "WITH " + ",\n".join(parts)
@@ -5017,7 +5015,7 @@ def q104_quality_classifier(spark, sf_dir):
     return _qc_scored_shared(spark, sf_dir)
 
 
-def _sql_logreg(iters: int = QC_ITERS, lr: float = QC_LR) -> str:
+def _sql_logreg() -> str:
     """The training loop as one CTE chain: w0 = 0; per iteration a
     sigmoid CTE (per-row, 8-digit rnd — collapsing JVM/DuckDB exp ulp
     skew), a gradient CTE (5 sums / n, 6-digit rnd) and a weight CTE
@@ -5047,7 +5045,7 @@ w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3, 0.0 AS w4)"""]
         return (f"{prefix_w}.w0 * 1.0 + {prefix_w}.w1 * {prefix_x}.x1 + "
                 f"{prefix_w}.w2 * {prefix_x}.x2 + {prefix_w}.w3 * {prefix_x}.x3 + "
                 f"{prefix_w}.w4 * {prefix_x}.x4")
-    for i in range(1, iters + 1):
+    for i in range(1, QC_ITERS + 1):
         sig = sql_rnd(f"1.0 / (1.0 + exp(-({sql_rnd(zexpr('w', 'f'), 8)})))", 8)
         parts.append(f"""s{i} AS (
   SELECT f.y, f.x1, f.x2, f.x3, f.x4, {sig} AS sig
@@ -5060,11 +5058,11 @@ w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3, 0.0 AS w4)"""]
          {sql_rnd('sum((sig - y) * x4) / any_value(c.n)', 6)} AS g4
   FROM s{i}, cnt c)""")
         parts.append(f"""w{i} AS (
-  SELECT {sql_rnd(f'w.w0 - {lr} * g.g0', 6)} AS w0,
-         {sql_rnd(f'w.w1 - {lr} * g.g1', 6)} AS w1,
-         {sql_rnd(f'w.w2 - {lr} * g.g2', 6)} AS w2,
-         {sql_rnd(f'w.w3 - {lr} * g.g3', 6)} AS w3,
-         {sql_rnd(f'w.w4 - {lr} * g.g4', 6)} AS w4
+  SELECT {sql_rnd(f'w.w0 - {QC_LR} * g.g0', 6)} AS w0,
+         {sql_rnd(f'w.w1 - {QC_LR} * g.g1', 6)} AS w1,
+         {sql_rnd(f'w.w2 - {QC_LR} * g.g2', 6)} AS w2,
+         {sql_rnd(f'w.w3 - {QC_LR} * g.g3', 6)} AS w3,
+         {sql_rnd(f'w.w4 - {QC_LR} * g.g4', 6)} AS w4
   FROM w{i - 1} w, g{i} g)""")
     final_sig = sql_rnd(
         f"1.0 / (1.0 + exp(-({sql_rnd(zexpr('w', 'f'), 8)})))", 8
@@ -5074,7 +5072,7 @@ SELECT f.doc_id, f.y::BIGINT AS label,
        {sql_rnd(final_sig, 4)} AS p_good,
        (CASE WHEN {sql_rnd(final_sig, 4)} >= 0.5 THEN 1 ELSE 0 END)::INTEGER
          AS pred
-FROM feat f, w{iters} w""")
+FROM feat f, w{QC_ITERS} w""")
 
 
 SQL_Q104 = _sql_logreg()
@@ -5101,7 +5099,7 @@ def q120_classifier_calibration(spark, sf_dir):
                                 bins=CAL_BINS)
 
 
-def _sql_calibration(bins: int = CAL_BINS) -> str:
+def _sql_calibration() -> str:
     """q104's unrolled gradient chain, final SELECT swapped for the
     fixed-width-bin reliability aggregation."""
     base = _sql_logreg()
@@ -5121,7 +5119,7 @@ ext AS (SELECT min(p) AS pmin, max(p) AS pmax FROM scored),
 binned AS (
   SELECT (CASE WHEN e.pmax - e.pmin <= 0 THEN 0
                ELSE least(floor((s.p - e.pmin) / (e.pmax - e.pmin)
-                                * {bins}), {bins - 1}) END)::BIGINT AS bin,
+                                * {CAL_BINS}), {CAL_BINS - 1}) END)::BIGINT AS bin,
          count(*)::BIGINT AS n,
          {sql_rnd('avg(s.p)', 4)} AS mean_p,
          {sql_rnd('avg(s.y)', 4)} AS frac_good
@@ -6344,13 +6342,12 @@ def q130_hashed_gram_classifier(spark, sf_dir):
     return out
 
 
-def _sql_hashed_logreg(buckets: int = HG_BUCKETS, iters: int = HG_ITERS,
-                       lr: float = HG_LR) -> str:
+def _sql_hashed_logreg() -> str:
     """q130's oracle: the hashed-gram feature map (portable md5
     fingerprint mod buckets — the dedup family's hash) and the q104
     logreg unroll generalized to B+1 weights."""
     pos = ", ".join(f"'{s}'" for s in QC_POS_SOURCES)
-    B = buckets
+    B = HG_BUCKETS
     xcols = ",\n         ".join(
         f"{sql_rnd(f'sum(CASE WHEN b = {j} THEN 1.0 ELSE 0.0 END) / count(*)', 6)} AS x{j}"
         for j in range(B)
@@ -6385,7 +6382,7 @@ w0 AS (SELECT {w0_cols})"""]
         ]
         return " + ".join(terms)
 
-    for i in range(1, iters + 1):
+    for i in range(1, HG_ITERS + 1):
         sig = sql_rnd(
             f"1.0 / (1.0 + exp(-({sql_rnd(zexpr(), 8)})))", 8
         )
@@ -6404,7 +6401,7 @@ w0 AS (SELECT {w0_cols})"""]
   SELECT {gcols}
   FROM s{i}, cnt c)""")
         wcols = ",\n         ".join(
-            f"{sql_rnd(f'w.w{j} - {lr} * g.g{j}', 6)} AS w{j}"
+            f"{sql_rnd(f'w.w{j} - {HG_LR} * g.g{j}', 6)} AS w{j}"
             for j in range(B + 1)
         )
         parts.append(f"""w{i} AS (
@@ -6418,7 +6415,7 @@ SELECT f.doc_id, f.y::BIGINT AS label,
        {sql_rnd(final_sig, 4)} AS p_good,
        (CASE WHEN {sql_rnd(final_sig, 4)} >= 0.5 THEN 1 ELSE 0 END)::INTEGER
          AS pred
-FROM feat f, w{iters} w""")
+FROM feat f, w{HG_ITERS} w""")
 
 
 SQL_Q130 = _sql_hashed_logreg()
@@ -7064,7 +7061,8 @@ def q138_trend_fit(spark, sf_dir):
                         ["event_type"])
 
 
-_TF_SLOPE = "CASE WHEN mx2 - mx*mx > 0 THEN (mxy - mx*my)/(mx2 - mx*mx) ELSE 0.0 END"
+# least-squares slope from the means mx, my, mx2 (of x²) and mxy (of x·y)
+_LSQ_SLOPE = "CASE WHEN mx2 - mx*mx > 0 THEN (mxy - mx*my)/(mx2 - mx*mx) ELSE 0.0 END"
 
 SQL_Q138 = f"""
 WITH base AS (
@@ -7081,8 +7079,8 @@ m AS (
          {sql_rnd('avg(y*y)', 8)} AS my2
   FROM base GROUP BY event_type)
 SELECT event_type, n_samples,
-       {sql_rnd(_TF_SLOPE, 6)} AS slope_per_day,
-       {sql_rnd(f'my - ({_TF_SLOPE}) * mx', 6)} AS intercept,
+       {sql_rnd(_LSQ_SLOPE, 6)} AS slope_per_day,
+       {sql_rnd(f'my - ({_LSQ_SLOPE}) * mx', 6)} AS intercept,
        {sql_rnd(
            'CASE WHEN mx2 - mx*mx > 0 AND my2 - my*my > 0 THEN '
            '((mxy - mx*my)/(mx2 - mx*mx)) * ((mxy - mx*my)/(my2 - my*my)) '
@@ -7348,8 +7346,7 @@ def q147_capacity_forecast(spark, sf_dir):
                                 limit=CAP_LIMIT)
 
 
-_CF_SLOPE = "CASE WHEN mx2 - mx*mx > 0 THEN (mxy - mx*my)/(mx2 - mx*mx) ELSE 0.0 END"
-_CF_FIT = f"(my - ({_CF_SLOPE}) * mx) + ({_CF_SLOPE}) * xmax"
+_CF_FIT = f"(my - ({_LSQ_SLOPE}) * mx) + ({_LSQ_SLOPE}) * xmax"
 
 SQL_Q147 = f"""
 WITH base AS (
@@ -7367,7 +7364,7 @@ m AS (
   FROM base GROUP BY event_type),
 d AS (
   SELECT event_type, n_samples,
-         {sql_rnd(_CF_SLOPE, 6)} AS slope_per_day,
+         {sql_rnd(_LSQ_SLOPE, 6)} AS slope_per_day,
          {sql_rnd(_CF_FIT, 6)} AS fit_now
   FROM m)
 SELECT event_type, n_samples, slope_per_day, fit_now,
@@ -7585,8 +7582,6 @@ def q163_heaps_law(spark, sf_dir):
     return TX.heaps_law(docs, "text", "doc_id", buckets=HEAPS_BUCKETS)
 
 
-_HL_SLOPE = "CASE WHEN mx2 - mx*mx > 0 THEN (mxy - mx*my)/(mx2 - mx*mx) ELSE 0.0 END"
-
 SQL_Q163 = rf"""
 WITH toks AS (
   SELECT doc_id,
@@ -7624,8 +7619,8 @@ m AS (
          {sql_rnd('avg(x*y)', 8)} AS mxy, {sql_rnd('avg(x*x)', 8)} AS mx2
   FROM pts),
 fit AS (
-  SELECT {sql_rnd(_HL_SLOPE, 6)} AS heaps_b,
-         {sql_rnd(f'my - ({_HL_SLOPE}) * mx', 6)} AS heaps_logk
+  SELECT {sql_rnd(_LSQ_SLOPE, 6)} AS heaps_b,
+         {sql_rnd(f'my - ({_LSQ_SLOPE}) * mx', 6)} AS heaps_logk
   FROM m)
 SELECT bucket, cum_docs, cum_tokens, cum_vocab, heaps_b, heaps_logk
 FROM pts, fit
@@ -8140,9 +8135,6 @@ FROM pr
 """
 
 
-SPLIT_WEIGHTS = {"train": 80, "val": 10, "test": 10}
-
-
 def q175_split_leakage(spark, sf_dir):
     """Cross-split contamination audit: assign the deterministic X6
     hash split, fingerprint content (md5), and count exact-duplicate
@@ -8278,12 +8270,9 @@ def q177_ql_topk(spark, sf_dir):
     return _retrieval_shared(spark, sf_dir, "ql")
 
 
-def _sql_ql(k: int | None = None,
-            champions: int | None = None) -> str:
+def _sql_ql(champions: int | None = None) -> str:
     from .functions.retrieval import QL_MU
 
-    if k is None:
-        k = BM25_TOPK
     mu = f"{QL_MU!r}"
     if champions is None:
         champ_cte = ""
@@ -8340,7 +8329,7 @@ ranked AS (
   FROM scored)
 SELECT qid AS query_id, rnk::BIGINT AS "rank", doc AS doc_id, score,
        n_terms_hit
-FROM ranked WHERE rnk <= {k}
+FROM ranked WHERE rnk <= {BM25_TOPK}
 """
 
 
@@ -11092,14 +11081,13 @@ def q204_softmax_classifier(spark, sf_dir):
     return out
 
 
-def _sql_softmax(buckets: int = SMX_BUCKETS, iters: int = SMX_ITERS,
-                 lr: float = SMX_LR) -> str:
+def _sql_softmax() -> str:
     """q204's oracle: the q130 hashed-gram unroll generalized to a
     K-class weight MATRIX — per iteration one margin/exp CTE, one
     softmax CTE, one K·(B+1)-column gradient CTE, one weight CTE;
     every visible number rides the same rnd ladder as the Spark
     chain (margins/probs at 8, gradients/weights at 6)."""
-    B, K = buckets, len(SMX_LANGS)
+    B, K = SMX_BUCKETS, len(SMX_LANGS)
     lbl_case = ("CASE lang " + " ".join(
         f"WHEN '{lang}' THEN {i}" for i, lang in enumerate(SMX_LANGS))
         + " END")
@@ -11171,7 +11159,7 @@ w0 AS (SELECT {w0_cols})"""]
     fxcols = ", ".join(f"f.x{j}" for j in range(B))
     esum = " + ".join(f"e{k}" for k in range(K))
 
-    for i in range(1, iters + 1):
+    for i in range(1, SMX_ITERS + 1):
         ecols = ", ".join(
             f"exp({sql_rnd(zexpr(k), 8)}) AS e{k}" for k in range(K))
         parts.append(f"""z{i} AS (
@@ -11191,7 +11179,7 @@ w0 AS (SELECT {w0_cols})"""]
   SELECT {gcols}
   FROM s{i}, cnt c)""")
         wcols = ",\n         ".join(
-            f"{sql_rnd(f'w.w{k}_{j} - {lr} * g.g{k}_{j}', 6)} AS w{k}_{j}"
+            f"{sql_rnd(f'w.w{k}_{j} - {SMX_LR} * g.g{k}_{j}', 6)} AS w{k}_{j}"
             for k in range(K) for j in range(B + 1)
         )
         parts.append(f"""w{i} AS (
@@ -11201,7 +11189,7 @@ w0 AS (SELECT {w0_cols})"""]
         f"exp({sql_rnd(zexpr(k), 8)}) AS e{k}" for k in range(K))
     parts.append(f"""zf AS (
   SELECT f.doc_id, f.y, {fecols}
-  FROM feat f, w{iters} w)""")
+  FROM feat f, w{SMX_ITERS} w)""")
     fpcols = ", ".join(
         f"{sql_rnd(f'e{k} / ({esum})', 8)} AS pp{k}" for k in range(K))
     parts.append(f"""sf AS (

@@ -250,22 +250,22 @@ def session_memo(*names: str, view=None, **variants):
     return wrap
 
 
-def rnd_threshold(tau: float, digits: int = 4) -> float:
-    """The smallest float64 ``x`` with ``rnd_np(x, digits) >= tau``.
+def rnd_threshold(tau: float) -> float:
+    """The smallest float64 ``x`` with ``rnd_np(x, 4) >= tau``.
 
     :func:`rnd_np` composes two HALF_UP decimal roundings, each
     monotone non-decreasing in the real value (shortest-repr decimal
     order agrees with double order), so for any ``tau`` there is an
-    exact double boundary and ``x >= rnd_threshold(tau, digits)``
-    decides ``rnd_np(x, digits) >= tau`` — which lets Arrow kernels
+    exact double boundary and ``x >= rnd_threshold(tau)``
+    decides ``rnd_np(x, 4) >= tau`` — which lets Arrow kernels
     that only need the BOOLEAN verdict (SemDeDup's prune, the
     block-matrix pair filter) threshold the RAW similarity matrix
     with one vectorized compare instead of materializing a rounded
     copy (~10 matrix-sized temporaries per block)."""
     def ge(x: float) -> bool:
-        return float(rnd_np([x], digits)[0]) >= tau
+        return float(rnd_np([x], 4)[0]) >= tau
 
-    step = 10.0 ** (-digits)
+    step = 1e-4
     lo, hi = tau - 2.0 * step, tau + step
     while ge(lo):
         lo -= step

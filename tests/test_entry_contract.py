@@ -1,6 +1,7 @@
 """The driver contract: entry() returns rows, every queries() key has a
 callable, oracle keys are a subset, and results carry stable schemas;
-and no engine name is reached only from tests."""
+no engine name is reached only from tests, and no engine option is
+left at its default by every caller."""
 
 from __future__ import annotations
 
@@ -35,6 +36,12 @@ def test_registry_shape(spark):
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "sarfile_analyzer_ng_spark"
+# Every module that may use engine code: the package, tools/,
+# perfbench/ (its own test module aside), bench.py and the entry.
+USERS = [*PKG.rglob("*.py"), *(ROOT / "tools").rglob("*.py"),
+         *(p for p in (ROOT / "perfbench").rglob("*.py")
+           if p.name != "test_perfbench.py"),
+         ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 
 # Engine names that only tests reach, each with the reason a test
 # keeps it. The set may only shrink, and holds at most five names.
@@ -89,11 +96,7 @@ def test_no_engine_code_is_reached_only_from_tests():
     tests/: in the package, tools/, perfbench/ (its own test module
     aside), bench.py or __spark_entry__.py. The facade modules are
     entry points and are not scanned."""
-    users = [*PKG.rglob("*.py"), *(ROOT / "tools").rglob("*.py"),
-             *(p for p in (ROOT / "perfbench").rglob("*.py")
-               if p.name != "test_perfbench.py"),
-             ROOT / "bench.py", ROOT / "__spark_entry__.py"]
-    referenced = set().union(*map(_referenced_names, users))
+    referenced = set().union(*map(_referenced_names, USERS))
     engine = [*(PKG / "operators").glob("*.py"),
               *(PKG / "functions").glob("*.py"),
               *(PKG / "sources").glob("*.py"),
@@ -108,3 +111,92 @@ def test_no_engine_code_is_reached_only_from_tests():
     }
     assert only_tests == set(ONLY_TESTS_REACH)
     assert len(ONLY_TESTS_REACH) <= 5
+
+
+# Keyword options of engine functions that only tests set, each with
+# the reason a test sets it. The set may only shrink.
+OPTIONS_ONLY_TESTS_SET = {
+    "functions/similarity.py:cosine_dup_pairs.rows_per_block":
+        "a small block forces the multi-block path on test-sized data",
+    "functions/similarity.py:semdedup.rows_per_chunk":
+        "a small chunk forces the multi-chunk path on test-sized data",
+    "functions/similarity.py:semdedup.assigned":
+        "tests hand in an explicit or an IVF cluster assignment",
+    "operators/timeseries.py:resample_filled.max_buckets":
+        "a low cap checks that a runaway bucket grid is refused",
+    "functions/dedup.py:dup_clusters.max_iter":
+        "a low cap checks that non-convergence logs a warning",
+    "functions/text.py:budget_select.approx":
+        "tests compare the approximate cut with the exact one",
+    "operators/reshape.py:pivot_wide.agg":
+        "test_unpivot_roundtrip names the aggregate it pivots with",
+    "operators/sketches.py:approx_distinct.rsd":
+        "test_approx_distinct_within_rsd sets the error bound it checks",
+    "functions/similarity.py:jl_project.seed_tag":
+        "tests check that another seed gives another projection",
+    "functions/pipeline.py:assemble_training_data.source_weights":
+        "tests check the optional mixture-weighting stage",
+    "queries.py:_sql_kcenter.k":
+        "the degenerate-input parity tests replay the oracle at small k",
+    "functions/dedup.py:minhash_lsh_pairs.max_df":
+        "test_minhash_lsh_pairs_max_df_caps_hot_bands checks the hot-band cap",
+}
+
+
+def _passed_options(paths: list[Path]) -> tuple[dict, dict, set]:
+    """For every callee name: the keywords passed to it, the largest
+    number of positional arguments passed to it, and whether any call
+    passes ``*args`` or ``**kwargs`` (which may set any option)."""
+    keywords, positional, splat = {}, {}, set()
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name is None:
+                continue
+            if (any(isinstance(a, ast.Starred) for a in node.args)
+                    or any(k.arg is None for k in node.keywords)):
+                splat.add(name)
+            keywords.setdefault(name, set()).update(
+                k.arg for k in node.keywords)
+            positional[name] = max(positional.get(name, 0), len(node.args))
+    return keywords, positional, splat
+
+
+def test_no_engine_option_is_left_at_its_default():
+    """Every parameter with a default of a function in operators/,
+    functions/, queries.py, util.py or catalog.py is passed — by
+    keyword, by position or through ``*``/``**`` — at one or more call
+    sites outside tests/. An option that every caller leaves at its
+    default is a constant: write the value where it is used. Calls
+    match by the callee's name, so a name two functions share counts
+    the calls of both."""
+    keywords, positional, splat = _passed_options(USERS)
+    engine = [*(PKG / "operators").glob("*.py"),
+              *(PKG / "functions").glob("*.py"),
+              PKG / "queries.py", PKG / "util.py", PKG / "catalog.py"]
+    unset = set()
+    for path in engine:
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef | ast.AsyncFunctionDef):
+                continue
+            args = fn.args
+            params = [*args.posonlyargs, *args.args]
+            first = len(params) - len(args.defaults)
+            options = [(i, p.arg) for i, p in enumerate(params)
+                       if i >= first]
+            options += [(None, p.arg) for p, d in zip(args.kwonlyargs,
+                                                      args.kw_defaults)
+                        if d is not None]
+            for index, option in options:
+                if (fn.name in splat
+                        or option in keywords.get(fn.name, ())
+                        or (index is not None
+                            and index < positional.get(fn.name, 0))):
+                    continue
+                unset.add(f"{path.relative_to(PKG).as_posix()}:"
+                          f"{fn.name}.{option}")
+    assert unset == set(OPTIONS_ONLY_TESTS_SET)
+    assert len(OPTIONS_ONLY_TESTS_SET) <= 12

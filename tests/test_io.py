@@ -72,3 +72,38 @@ def test_normalize_ntz_nested_and_dotted(spark, tmp_path):
     assert row["plain"] == 3
 
 
+
+
+def test_load_table_casts_spark_written_ntz(spark, tmp_path):
+    """A TIMESTAMP_NTZ column that Spark wrote, top-level or inside a
+    struct, still reads as timestamp_ntz with NTZ inference off: Spark
+    takes the type from its own schema in the parquet footer. So
+    load_table reaches _normalize_ntz for such a table, and returns the
+    zoned TIMESTAMP type with the same wall-clock values."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    spark.sql(
+        "SELECT TIMESTAMP_NTZ '2024-01-05 12:30:00' AS t, "
+        "named_struct('t', TIMESTAMP_NTZ '1969-12-31 23:59:59.5', "
+        "'n', 7L) AS s"
+    ).write.parquet(str(tmp_path / "ntz.parquet"))
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        raw = spark.read.parquet(str(tmp_path / "ntz.parquet"))
+        raw.schema
+    finally:
+        spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    assert isinstance(raw.schema["t"].dataType, T.TimestampNTZType)
+
+    df = load_table(spark, str(tmp_path), "ntz")
+    assert isinstance(df.schema["t"].dataType, T.TimestampType)
+    assert isinstance(df.schema["s"].dataType["t"].dataType, T.TimestampType)
+    row = df.collect()[0]
+    assert row["t"] == datetime.datetime(2024, 1, 5, 12, 30, 0)
+    assert row["s"]["t"] == datetime.datetime(1969, 12, 31, 23, 59, 59, 500000)
+    assert row["s"]["n"] == 7

@@ -15,8 +15,10 @@ order) and then every registry key (in registry order) at ``sf_dir``
 ``expr_id_setter``), masks what differs from run to run or checkout to
 checkout (see ``mask``), and writes ``plans/digests.json``: one sha256
 per masked plan, plus ``all``, the sha256 of the per-plan digests in
-that order. Two runs of one commit write the same file, so "plans
-unchanged" is an empty diff of it.
+that order. It also writes one sha256 per ``oracle_sql()`` string, with
+the checkout root masked, plus ``oracles_all`` over them in registry
+order. Two runs of one commit write the same file, so "plans and
+oracles unchanged" is an empty diff of it.
 """
 
 from __future__ import annotations
@@ -105,10 +107,16 @@ def dump(outdir: str, suffix: str, keys: list[str]) -> None:
         print(f"wrote {path} ({len(plan)} bytes)", file=sys.stderr)
 
 
+def _sha_all(digests: dict[str, str]) -> str:
+    every = "".join(f"{k} {d}\n" for k, d in digests.items())
+    return hashlib.sha256(every.encode()).hexdigest()
+
+
 def digest(sf_dir: str) -> None:
     # Partition counts appear in plans; pin them to one core count.
     os.environ["SPARK_GRAFT_CPUS"] = "4"
-    from sarfile_analyzer_ng_spark.queries import REGISTRY, memo_builders
+    from sarfile_analyzer_ng_spark.queries import (
+        REGISTRY, memo_builders, oracle_sql)
     from sarfile_analyzer_ng_spark.session import get_spark
 
     spark = get_spark("dump_plans")
@@ -121,16 +129,19 @@ def digest(sf_dir: str) -> None:
         set_expr_id(i << 32)  # far above anything the last build took
         plan = mask(explain(fn(spark, sf_dir)))
         digests[key] = hashlib.sha256(plan.encode()).hexdigest()
-    every = "".join(f"{k} {d}\n" for k, d in digests.items())
+    oracles = {key: hashlib.sha256(sql.replace(ROOT, "<ROOT>").encode())
+               .hexdigest() for key, sql in oracle_sql().items()}
     out = {"sf_dir": sf_dir, "plans": len(digests),
-           "all": hashlib.sha256(every.encode()).hexdigest(),
-           "digests": digests}
+           "all": _sha_all(digests), "digests": digests,
+           "oracles": len(oracles), "oracles_all": _sha_all(oracles),
+           "oracle_digests": oracles}
     path = os.path.join(ROOT, "plans", "digests.json")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1)
         fh.write("\n")
-    print(f"wrote {path}: {len(digests)} plans, all={out['all']}",
+    print(f"wrote {path}: {len(digests)} plans, all={out['all']}; "
+          f"{len(oracles)} oracles, all={out['oracles_all']}",
           file=sys.stderr)
 
 
