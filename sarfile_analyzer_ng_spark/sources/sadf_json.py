@@ -3,19 +3,20 @@
 The reference converts sadf JSON back into sar *text* and re-parses it
 (sar_ingest.py:413 ``sadf_json_to_sar_text``) so one parser owns the
 format. Here a generic traversal of the sysstat statistics tree fills
-the text source's parallel column lists directly — no text round-trip,
-no row dicts — and one decode path owns the rest: ``sar_text.decode_file``
+the text source's line columns directly — no text round-trip, no row
+dicts — and one decode path owns the rest: ``sar_text.decode_file``
 unpacks xz (the reference does the same in sar_ingest.py:333), sniffs
 the format, calls :func:`parse_sadf_columns` and turns the columns into
-one Arrow batch per file; :func:`read_sadf_json` is that module's
-distributed read restricted to sadf JSON files.
+one Arrow batch of line rows per file; :func:`read_sadf_json` is that
+module's distributed read restricted to sadf JSON files.
 
 Traversal rules (sysstat's public JSON layout):
 - each ``statistics`` entry is one timestamp; sections are its keys
 - list-valued sections carry a per-device axis; the device key is the
   one string-valued field (cpu, disk-device, iface, line, filesystem)
-- numeric fields become (metric, value) rows; nested dicts (the io
-  section's io-reads/io-writes) are flattened with dotted names
+- the numeric fields of an entry become one line of (metric, value)
+  pairs; nested dicts (the io section's io-reads/io-writes) are
+  flattened with dotted names
 - ``restarts``/boot entries become restart=True rows
 - ``os_details`` is set on the first row of each host block only, like
   the text parser and the reference layout (parse_into_polars.py:154)
@@ -24,6 +25,7 @@ Traversal rules (sysstat's public JSON layout):
 from __future__ import annotations
 
 import json
+from array import array
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,22 +55,32 @@ def _epoch_us(stamp: str) -> int:
 
 
 def parse_sadf_columns(file_name: str, content: bytes,
-                       skipped: set[str] | None = None) -> dict[str, list]:
+                       skipped: set[str] | None = None) -> dict:
     """Pure per-file parser of plain (already unpacked) sadf JSON bytes
-    into parallel column lists, one per SAR_SCHEMA field, ``ts`` as int
-    epoch microseconds — the same shape as
-    ``sar_text.parse_sar_columns``. Pass a ``skipped`` set to collect
-    unknown-field warnings (upload path only — the distributed read
-    skips the bookkeeping)."""
+    into line columns, the shape ``sar_text.parse_sar_columns``
+    returns: one line per statistics entry (and per device of a
+    list-valued section) that has a numeric field, naming its values in
+    ``metrics``. Pass a ``skipped`` set to collect unknown-field
+    warnings (upload path only — the distributed read skips the
+    bookkeeping)."""
     data = json.loads(content)
     c_host: list = []
     c_os: list = []
     c_section: list = []
-    c_ts: list = []
+    c_ts = array("q")
     c_device: list = []
-    c_metric: list = []
-    c_value: list = []
+    c_metrics: list = []
     c_restart: list = []
+    values = array("d")
+    offsets = array("i", [0])
+
+    def add_line(section, ts, device, metrics, restart=False) -> None:
+        c_section.append(section)
+        c_ts.append(ts)
+        c_device.append(device)
+        c_metrics.append(metrics)
+        offsets.append(len(values))
+        c_restart.append(restart)
 
     def add_section(section: str, payload, ts: int) -> None:
         entries = payload if isinstance(payload, list) else [payload]
@@ -81,7 +93,7 @@ def parse_sadf_columns(file_name: str, content: bytes,
                 if isinstance(flat.get(dk), (str, int)) and dk in entry:
                     device = str(flat.pop(dk))
                     break
-            k = len(c_value)
+            metrics = []
             for metric, value in flat.items():
                 if isinstance(value, bool) or not isinstance(value, (int, float)):
                     # non-numeric, non-device field the generic traversal
@@ -91,18 +103,15 @@ def parse_sadf_columns(file_name: str, content: bytes,
                     if skipped is not None:
                         skipped.add(f"unknown field skipped: {section}.{metric}")
                     continue
-                c_metric.append(metric)
-                c_value.append(float(value))
-            k = len(c_value) - k
-            c_section.extend([section] * k)
-            c_ts.extend([ts] * k)
-            c_device.extend([device] * k)
-            c_restart.extend([False] * k)
+                metrics.append(metric)
+                values.append(value)
+            if metrics:
+                add_line(section, ts, device, metrics)
 
     for host in data.get("sysstat", {}).get("hosts", []):
         host_name = host.get("nodename")
         file_date = host.get("file-date", "2000-01-01")
-        first = len(c_value)
+        first = len(c_ts)
         for entry in host.get("statistics", []):
             stamp = entry.get("timestamp", {})
             time_str = stamp.get("time")
@@ -121,13 +130,11 @@ def parse_sadf_columns(file_name: str, content: bytes,
             boot = restart.get("boot", restart) if isinstance(restart, dict) else {}
             time_str = boot.get("time")
             if time_str:
-                c_section.append("LINUX RESTART")
-                c_ts.append(_epoch_us(f"{boot.get('date') or file_date}T{time_str}"))
-                c_device.append(None)
-                c_metric.append("restart")
-                c_value.append(1.0)
-                c_restart.append(True)
-        n_host = len(c_value) - first
+                values.append(1.0)
+                add_line("LINUX RESTART",
+                         _epoch_us(f"{boot.get('date') or file_date}T{time_str}"),
+                         None, ["restart"], True)
+        n_host = len(c_ts) - first
         c_host.extend([host_name] * n_host)
         c_os.extend([None] * n_host)
         if n_host:
@@ -135,14 +142,15 @@ def parse_sadf_columns(file_name: str, content: bytes,
                 f"Linux {host.get('release', 'unknown')} ({host_name}) {file_date}"
             )
     return {
-        "file": [file_name] * len(c_value),
+        "file": [file_name] * len(c_ts),
         "host": c_host,
         "os_details": c_os,
         "section": c_section,
         "ts": c_ts,
         "device": c_device,
-        "metric": c_metric,
-        "value": c_value,
+        "metrics": c_metrics,
+        "values": values,
+        "offsets": offsets,
         "restart": c_restart,
     }
 

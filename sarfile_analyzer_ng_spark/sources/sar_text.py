@@ -7,7 +7,8 @@ sequentially on one core and builds a long (header, data, date) frame;
 code/pl_helpers2.py then splits the value strings into typed metric
 columns. Here one *file* is the unit of parallelism: 100k sar files fan
 out across executors (``binaryFile`` read → ``mapInArrow``), each parsed
-in one pass, and the output is immediately the fully-typed long frame:
+in one pass into typed sample lines that the JVM explodes into the
+fully-typed long frame:
 
     (file, host, os_details, section, ts, device, metric, value, restart)
 
@@ -21,9 +22,19 @@ per scan partition. PySpark's worker refreshes its cached zip finders
 before every task, re-reading ``pyspark.zip`` once per finder; the
 scan body is wrapped in ``util.worker_task``, which drops them, like
 every other function the package ships to a Python worker.
-The parse is pandas-free: both parsers fill parallel column lists
-(``ts`` as epoch microseconds) and each file leaves the Python worker
-as one Arrow record batch, with no per-row object boxing.
+
+The worker hands the JVM one row per sample *line*, not per value:
+``(file, host, os_details, section, ts, device, metrics, values,
+restart)`` with ``values`` an ``array<double>`` (:data:`LINE_SCHEMA`),
+and :func:`explode_lines` turns those rows into the long frame in one
+JVM projection. The repeated strings then cross the Arrow channel once
+per line instead of once per value. The parse is pandas-free: both
+parsers fill per-line lists plus typed ``array`` buffers (values, epoch
+microseconds, line offsets), and :func:`line_batch` wraps those buffers
+into one Arrow record batch per file with ``pa.Array.from_buffers``.
+The rule for every batch a worker builds: build it from buffers, never
+with ``pa.array`` / ``pa.scalar`` / ``pa.repeat``, because pyarrow
+imports pandas on their first call (about 30 MB per worker).
 
 :func:`decode_file` is the single place a file is sniffed (sadf JSON or
 sar text, from its first plain bytes), unpacked (xz, reference
@@ -53,7 +64,9 @@ from __future__ import annotations
 
 import lzma
 import re
+from array import array
 from datetime import datetime, timedelta
+from itertools import accumulate
 from typing import NamedTuple
 
 import pyarrow as pa
@@ -79,8 +92,22 @@ SAR_SCHEMA = T.StructType(
     ]
 )
 SAR_FIELDS = [f.name for f in SAR_SCHEMA.fields]
+# What a Python worker hands the JVM: one row per sample line.
+# ``metrics`` names the line's values; it is null when the names are
+# the space-split section (a sar line that kept every value, or a
+# prefix of them), so only sadf entries, restart markers and a sar line
+# that lost a value carry it. ``os_details`` belongs to the line's
+# first value.
+LINE_SCHEMA = T.StructType(
+    [
+        *SAR_SCHEMA.fields[:6],
+        T.StructField("metrics", T.ArrayType(T.StringType())),
+        T.StructField("values", T.ArrayType(T.DoubleType())),
+        T.StructField("restart", T.BooleanType()),
+    ]
+)
 # ts is timestamp[us, tz=UTC]: the parsers' epoch microseconds as is
-ARROW_SCHEMA = to_arrow_schema(SAR_SCHEMA)
+LINE_ARROW = to_arrow_schema(LINE_SCHEMA)
 EPOCH = datetime(1970, 1, 1)
 
 DEVICE_COLUMNS = {"CPU", "DEV", "IFACE", "TTY", "FCHOST", "FILESYSTEM"}
@@ -151,17 +178,19 @@ def _parse_clock_seconds(token: str, ampm: str | None) -> int:
 
 
 def parse_sar_columns(file_name: str, content: str,
-                      drop_unwanted: bool = True) -> dict[str, list]:
-    """Parse one sar ASCII report into parallel column lists, one per
-    SAR_SCHEMA field, with ``ts`` as int epoch microseconds (pure
-    function — the executor-side body of the distributed read;
-    :func:`decode_file` turns the result into one Arrow batch).
+                      drop_unwanted: bool = True) -> dict:
+    """Parse one sar ASCII report into line columns (pure function —
+    the executor-side body of the distributed read; :func:`line_batch`
+    turns the result into one Arrow batch).
 
-    Columnar accumulation instead of one dict per value row: the hot
-    loop appends to six parallel lists and tries ``float(raw)``
-    directly (the decimal-comma regex only runs when the fast path
-    fails) — ~3× the throughput of the dict-per-row form on 1 MB
-    host-day reports.
+    Line columns: one entry per sample line for each LINE_SCHEMA field
+    but ``values``, with ``ts`` an ``array('q')`` of epoch
+    microseconds; ``values`` is one flat ``array('d')`` of every parsed
+    value and ``offsets`` an ``array('i')`` of the line boundaries in
+    it (one more entry than lines). A line with no parsed value is not
+    kept. The hot loop appends each value to the typed array and tries
+    ``float(raw)`` directly (the decimal-comma regex only runs when the
+    fast path fails).
     """
     lines = content.splitlines()
     os_details = _extract_os_line(lines)
@@ -177,11 +206,12 @@ def parse_sar_columns(file_name: str, content: str,
     base_us = int((base_dt - EPOCH).total_seconds()) * 1_000_000
 
     c_section: list = []
-    c_ts: list = []
+    c_ts = array("q")
     c_device: list = []
-    c_metric: list = []
-    c_value: list = []
+    c_metrics: list = []
     c_restart: list = []
+    values = array("d")
+    offsets = array("i", [0])
 
     header_cols: list[str] | None = None
     section_key: str | None = None
@@ -228,8 +258,9 @@ def parse_sar_columns(file_name: str, content: str,
             c_section.append("LINUX RESTART")
             c_ts.append(base_us + (clock + off * 86400) * 1_000_000)
             c_device.append(None)
-            c_metric.append("restart")
-            c_value.append(1.0)
+            c_metrics.append(["restart"])
+            values.append(1.0)
+            offsets.append(len(values))
             c_restart.append(True)
             continue
         if ignore_section:
@@ -257,12 +288,14 @@ def parse_sar_columns(file_name: str, content: str,
         ts = section_ts(section_key or "", clock)
         if device_section:
             if device_last:
-                device, values = rest[-1], rest[:-1]
+                device, raws = rest[-1], rest[:-1]
             else:
-                device, values = rest[0], rest[1:]
+                device, raws = rest[0], rest[1:]
         else:
-            device, values = None, rest
-        for metric, raw in zip(header_cols or (), values):
+            device, raws = None, rest
+        start = len(values)
+        kept = None  # the kept names, once a value is lost
+        for metric, raw in zip(header_cols or (), raws):
             try:
                 value = float(raw)
             except ValueError:
@@ -270,19 +303,26 @@ def parse_sar_columns(file_name: str, content: str,
                 try:
                     value = float(raw2)
                 except ValueError:
+                    if kept is None:
+                        kept = header_cols[: len(values) - start]
                     continue
-            c_section.append(section_key)
-            c_ts.append(ts)
-            c_device.append(device)
-            c_metric.append(metric)
-            c_value.append(value)
-            c_restart.append(False)
+            values.append(value)
+            if kept is not None:
+                kept.append(metric)
+        if len(values) == start:
+            continue
+        c_section.append(section_key)
+        c_ts.append(ts)
+        c_device.append(device)
+        c_metrics.append(kept)
+        offsets.append(len(values))
+        c_restart.append(False)
 
-    n = len(c_value)
-    # os_details only on the first row per file — exactly the
+    n = len(c_ts)
+    # os_details only on the first value row per file — exactly the
     # reference's layout (parse_into_polars.py:154 puts it in row 0)
     # and it keeps the long frame from repeating a ~100-char string
-    # millions of times through the Arrow channel.
+    # through the Arrow channel.
     os_col = [None] * n
     if n and os_details:
         os_col[0] = os_details
@@ -293,26 +333,116 @@ def parse_sar_columns(file_name: str, content: str,
         "section": c_section,
         "ts": c_ts,
         "device": c_device,
-        "metric": c_metric,
-        "value": c_value,
+        "metrics": c_metrics,
+        "values": values,
+        "offsets": offsets,
         "restart": c_restart,
     }
 
 
-def rows_of(cols: dict[str, list]) -> list[dict]:
-    """Row dicts of one parser's columns, ``ts`` as a naive UTC
-    datetime (test/inspection view; the reads use the columns)."""
-    # every value of a sample shares its stamp: convert each once
+def rows_of(cols: dict) -> list[dict]:
+    """Row dicts of one parser's line columns, one per value, ``ts`` as
+    a naive UTC datetime: the long frame :func:`explode_lines` makes of
+    the same lines, in Python (test/inspection view; the reads use the
+    line batch)."""
+    # every value of a line shares its stamp: convert each once
     stamps = {us: EPOCH + timedelta(microseconds=us) for us in set(cols["ts"])}
-    cols = {**cols, "ts": [stamps[us] for us in cols["ts"]]}
-    return [dict(zip(SAR_FIELDS, row))
-            for row in zip(*(cols[f] for f in SAR_FIELDS))]
+    values, offsets = cols["values"], cols["offsets"]
+    rows = []
+    for i, section in enumerate(cols["section"]):
+        names = cols["metrics"][i] or section.split(" ")
+        line = values[offsets[i]:offsets[i + 1]]
+        for pos, (metric, value) in enumerate(zip(names, line)):
+            rows.append({
+                "file": cols["file"][i],
+                "host": cols["host"][i],
+                "os_details": cols["os_details"][i] if pos == 0 else None,
+                "section": section,
+                "ts": stamps[cols["ts"][i]],
+                "device": cols["device"][i],
+                "metric": metric,
+                "value": value,
+                "restart": cols["restart"][i],
+            })
+    return rows
 
 
 def parse_sar_text(file_name: str, content: str,
                    drop_unwanted: bool = True) -> list[dict]:
     """Row-dict view of :func:`parse_sar_columns`."""
     return rows_of(parse_sar_columns(file_name, content, drop_unwanted))
+
+
+_BITS = bytes.maketrans(b"\x00\x01", b"01")
+
+
+def _bitmap(flags: bytes) -> pa.Buffer:
+    """An Arrow bitmap of one 0/1 byte per slot: bit ``i`` (least
+    significant first) is ``flags[i]``."""
+    bits = int(flags[::-1].translate(_BITS) or b"0", 2)
+    return pa.py_buffer(bits.to_bytes((len(flags) + 7) // 8, "little"))
+
+
+def _validity(values: list) -> pa.Buffer | None:
+    """The validity bitmap of ``values``; None when no value is None."""
+    if None not in values:
+        return None
+    return _bitmap(bytes(v is not None for v in values))
+
+
+def string_array(values: list) -> pa.Array:
+    """A string array of ``values`` (``str`` or None) built from its
+    buffers."""
+    # a column repeats few distinct strings: encode each once
+    enc = {v: b"" if v is None else v.encode() for v in set(values)}
+    data = list(map(enc.__getitem__, values))
+    offsets = array("i", accumulate(map(len, data), initial=0))
+    return pa.Array.from_buffers(
+        pa.string(), len(values),
+        [_validity(values), pa.py_buffer(offsets), pa.py_buffer(b"".join(data))])
+
+
+def line_batch(cols: dict) -> pa.RecordBatch:
+    """One Arrow record batch with :data:`LINE_ARROW` of a parser's line
+    columns, built only from buffers (see the module docstring)."""
+    n, values, metrics = len(cols["ts"]), cols["values"], cols["metrics"]
+    ends = array("i", accumulate((len(m) if m else 0 for m in metrics), initial=0))
+    names = [name for m in metrics if m for name in m]
+    typ = LINE_ARROW.field
+    arrays = [
+        *(string_array(cols[f]) for f in ("file", "host", "os_details", "section")),
+        pa.Array.from_buffers(typ("ts").type, n, [None, pa.py_buffer(cols["ts"])]),
+        string_array(cols["device"]),
+        pa.Array.from_buffers(typ("metrics").type, n,
+                              [_validity(metrics), pa.py_buffer(ends)],
+                              children=[string_array(names)]),
+        pa.Array.from_buffers(
+            typ("values").type, n, [None, pa.py_buffer(cols["offsets"])],
+            children=[pa.Array.from_buffers(pa.float64(), len(values),
+                                            [None, pa.py_buffer(values)])]),
+        pa.Array.from_buffers(pa.bool_(), n, [None, _bitmap(bytes(cols["restart"]))]),
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=LINE_ARROW)
+
+
+def explode_lines(lines: DataFrame) -> DataFrame:
+    """The long SAR_SCHEMA frame of a LINE_SCHEMA frame: one row per
+    value, named by ``metrics`` or else by the space-split section,
+    with ``os_details`` kept on each line's first value only. The one
+    place line rows become value rows (the distributed read and the
+    store's upload both call it)."""
+    names = F.coalesce(F.col("metrics"), F.split("section", " "))
+    pos = F.col("pos")
+    return lines.select(
+        *SAR_FIELDS[:6], names.alias("names"), "restart",
+        F.posexplode("values").alias("pos", "value"),
+    ).select(
+        "file", "host",
+        F.when(pos == 0, F.col("os_details")).alias("os_details"),
+        "section", "ts", "device",
+        F.col("names")[pos].alias("metric"),
+        "value", "restart",
+    )
 
 
 XZ_MAGIC = b"\xfd7zXZ\x00"
@@ -338,7 +468,7 @@ class Decoded(NamedTuple):
     kind: str | None
     unxz: bool  # the input was an xz archive
     data: bytes | None  # the plain bytes; None if the sniff dropped it
-    batch: pa.RecordBatch | None  # ARROW_SCHEMA rows; None if kind not wanted
+    batch: pa.RecordBatch | None  # LINE_ARROW rows; None if kind not wanted
 
 
 def _xz_head(content: bytes) -> bytes:
@@ -360,8 +490,8 @@ def decode_file(file_name: str, content: bytes, kinds=KINDS,
     upload: sniff the format from the first plain bytes (unpacking an
     xz archive only that far), and only when ``kinds`` may want it,
     unpack the file, tell sar text from binary, and parse it into one
-    Arrow record batch with ``to_arrow_schema(SAR_SCHEMA)`` when its
-    kind is one of ``kinds``.
+    Arrow record batch of line rows (:func:`line_batch`) when its kind
+    is one of ``kinds``.
     ``skipped`` collects the sadf fields the JSON traversal drops.
     Raises one of :data:`DECODE_ERRORS` on input it cannot decode; the
     caller decides whether that skips the file or fails the upload.
@@ -388,20 +518,17 @@ def decode_file(file_name: str, content: bytes, kinds=KINDS,
         cols = parse_sadf_columns(file_name, data, skipped)
     else:
         cols = parse_sar_columns(file_name, text, drop_unwanted)
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array(cols[f.name], f.type) for f in ARROW_SCHEMA],
-        schema=ARROW_SCHEMA,
-    )
-    return Decoded(kind, unxz, data, batch)
+    return Decoded(kind, unxz, data, line_batch(cols))
 
 
 def read_files(spark: SparkSession, path: str, kinds=KINDS,
                drop_unwanted: bool = True) -> DataFrame:
     """The one distributed read: every file under ``path`` whose kind
     is in ``kinds`` goes through :func:`decode_file` (``binaryFile``
-    source → ``mapInArrow``, long typed SAR_SCHEMA output, one record
-    batch per file). Files it cannot decode (truncated xz, broken JSON)
-    are skipped, like the reference UI skips broken uploads."""
+    source → ``mapInArrow``, one record batch of line rows per file,
+    then :func:`explode_lines` to the long typed SAR_SCHEMA frame).
+    Files it cannot decode (truncated xz, broken JSON) are skipped, like
+    the reference UI skips broken uploads."""
     raw = (
         spark.read.format("binaryFile")
         .load(path)
@@ -428,7 +555,7 @@ def read_files(spark: SparkSession, path: str, kinds=KINDS,
     # yields one Arrow batch per file, bounding python memory within a
     # partition, and the plan stays lazy (no eager listing job at
     # construction time).
-    return raw.mapInArrow(parse_batches, SAR_SCHEMA)
+    return explode_lines(raw.mapInArrow(parse_batches, LINE_SCHEMA))
 
 
 def read_sar(spark: SparkSession, path: str,

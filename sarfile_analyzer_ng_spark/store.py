@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.sar_text import (
-    BINARY, EPOCH, SADF_JSON, SAR_SCHEMA, SAR_TEXT, decode_file,
+    BINARY, EPOCH, LINE_SCHEMA, SADF_JSON, SAR_TEXT, decode_file,
+    explode_lines, string_array,
 )
 
 
@@ -124,8 +125,9 @@ class SarStore:
         mng_sar rename flow), store raw + parquet eagerly.
 
         The upload is parsed once, on the driver, by the same
-        ``decode_file`` the distributed readers run per file; the only
-        Spark job is the parquet write.
+        ``decode_file`` the distributed readers run per file, and its
+        line rows become the long frame through the same
+        ``explode_lines``; the only Spark job is the parquet write.
 
         Binary ``sa`` datafiles convert through the host's ``sar``
         binary when one is on PATH (:func:`convert_binary_sa`); without
@@ -158,7 +160,7 @@ class SarStore:
 
         # rename to host_YYYY-MM-DD from the parsed content, like the
         # reference's rename_sar_file: the host of the earliest sample
-        batch = dec.batch
+        batch = dec.batch  # one row per sample line
         host = first_us = None
         if batch.num_rows:
             ts = batch.column("ts").cast(pa.int64())
@@ -181,16 +183,16 @@ class SarStore:
         # fix the file column to the stored name; one partition, so
         # the write leaves one file per section directory (partitioned
         # by section so per-section reads prune at directory level)
-        table = pa.Table.from_batches([batch]).set_column(
-            0, "file", pa.repeat(name, batch.num_rows)
+        lines = pa.Table.from_batches([batch]).set_column(
+            0, "file", string_array([name] * batch.num_rows)
         )
-        out = self.spark.createDataFrame(table, SAR_SCHEMA)
+        out = explode_lines(self.spark.createDataFrame(lines, LINE_SCHEMA))
         out.coalesce(1).write.mode("overwrite").partitionBy("section").parquet(
             str(d / f"{name}.parquet")
         )
         return {
             "name": name,
-            "rows": batch.num_rows,
+            "rows": len(batch.column("values").flatten()),
             "headers": pc.count_distinct(batch.column("section")).as_py(),
             "warnings": warnings,
         }

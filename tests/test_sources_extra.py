@@ -7,6 +7,8 @@ import json
 import lzma
 import math
 import os
+import subprocess
+import sys
 from datetime import timedelta
 
 import pytest
@@ -129,6 +131,42 @@ def test_decode_file_unpacks_xz_only_for_wanted_kinds(monkeypatch):
                        (ST.SADF_JSON,))
 
 
+def test_decode_path_never_imports_pandas(tmp_path):
+    """decode_file builds its Arrow batch from buffers: a fresh
+    interpreter that decodes every golden fixture kind has not imported
+    pandas (``pa.array`` would import it, about 30 MB per Python
+    worker)."""
+    from .test_sar_source import SAR_24H, SAR_AMPM, SAR_RESTART_EARLY
+
+    sadf = json.dumps(SADF).encode()
+    inputs = {
+        "a_24h.txt": SAR_24H.encode(),
+        "b_ampm.txt": SAR_AMPM.encode(),
+        "c_comma.txt": SAR_AMPM.replace(".00", ",00").encode(),
+        "d_restart.txt": SAR_RESTART_EARLY.encode(),
+        "e_24h.txt.xz": lzma.compress(SAR_24H.encode()),
+        "f.json": sadf,
+        "g.json.xz": lzma.compress(sadf),
+    }
+    for name, data in inputs.items():
+        (tmp_path / name).write_bytes(data)
+    script = (
+        "import os, sys\n"
+        "from sarfile_analyzer_ng_spark.sources.sar_text import decode_file\n"
+        "for name in sorted(os.listdir(sys.argv[1])):\n"
+        "    with open(os.path.join(sys.argv[1], name), 'rb') as fh:\n"
+        "        print(name, decode_file(name, fh.read()).batch.num_rows)\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", script, str(tmp_path)],
+                         cwd=root, capture_output=True, text=True, check=True)
+    *decoded, pandas = out.stdout.splitlines()
+    assert [d.split()[0] for d in decoded] == sorted(inputs)
+    assert all(int(d.split()[1]) > 0 for d in decoded)
+    assert pandas == "False"
+
+
 def test_cli_files_over_mixed_directory(spark, tmp_path, capsys, monkeypatch):
     """`files` over a directory mixing every input kind lists each
     well-formed file once, from one scan that sniffs each file's
@@ -203,10 +241,14 @@ def test_os_details_only_on_first_row_of_each_host_block():
 
 
 def test_read_files_matches_row_views(spark, tmp_path):
-    """The Arrow read (one batch per file) gives exactly the rows of
-    the pure row views over every golden fixture kind, every column
-    compared: ts to the microsecond as UTC epoch micros, null devices,
-    restart as a bool, NaN values. Malformed files leave nothing."""
+    """The Arrow read (one batch of line rows per file, exploded in the
+    JVM) gives exactly the rows of the pure row views over every golden
+    fixture kind, every column compared: ts to the microsecond as UTC
+    epoch micros, null devices, restart as a bool, NaN values. Edge
+    lines: a first line that loses its first value (os_details moves
+    to the next value), more values than header columns, a line with
+    no parsable value, a sadf entry with no numeric field and a restart
+    marker as a file's first row. Malformed files leave nothing."""
     from sarfile_analyzer_ng_spark.sources.sar_text import (
         EPOCH, SAR_FIELDS, parse_sar_text, read_files,
     )
@@ -217,14 +259,38 @@ def test_read_files_matches_row_views(spark, tmp_path):
     sadf_nan = json.dumps(_two_host_sadf()).replace("75.5", "NaN").encode()
     sadf = json.dumps(SADF).encode()
     trunc = lzma.compress(SAR_24H.encode())
+    sar_edge = (
+        "Linux 5.x (h7) \t2024-03-01 \t_x86_64_\t(2 CPU)\n\n"
+        "00:00:01        CPU     %user   %system     %idle\n"
+        "00:10:01        all      n/a      1.00     99.00\n"
+        "00:20:01        all     1.00     2.00     98.00    7.00\n"
+        "00:30:01        all        -        -         -\n"
+    )
+    sar_restart_first = (
+        "Linux 5.x (h8) \t2024-03-01 \t_x86_64_\t(2 CPU)\n\n"
+        "05:30:01 LINUX RESTART\t(2 CPU)\n\n"
+        "06:00:01    proc/s   cswch/s\n"
+        "06:10:01      1.20    250.00\n"
+    )
+    doc = copy.deepcopy(SADF)
+    stat = doc["sysstat"]["hosts"][0]["statistics"][0]
+    doc["sysstat"]["hosts"][0]["statistics"][0] = {
+        "timestamp": stat.pop("timestamp"),
+        "kernel": {"release": "5.14"},
+        "cpu-load": [{"cpu": "9", "state": "offline"}, *stat.pop("cpu-load")],
+        **stat,
+    }
     texts = {
         "a_24h.txt": SAR_24H,
         "b_ampm.txt": SAR_AMPM,
         "c_restart_early.txt": SAR_RESTART_EARLY,
         "d_nan.txt": sar_nan,
         "e_24h.txt.xz": SAR_24H,
+        "i_edge.txt": sar_edge,
+        "j_restart_first.txt": sar_restart_first,
     }
-    docs = {"f.json": sadf, "g_nan.json": sadf_nan, "h.json.xz": sadf}
+    docs = {"f.json": sadf, "g_nan.json": sadf_nan, "h.json.xz": sadf,
+            "k_edge.json": json.dumps(doc).encode()}
     for name, text in texts.items():
         data = text.encode()
         (tmp_path / name).write_bytes(lzma.compress(data) if name.endswith(".xz") else data)
@@ -238,6 +304,14 @@ def test_read_files_matches_row_views(spark, tmp_path):
     assert any(r["device"] is None for r in want)
     assert any(r["restart"] for r in want)
     assert sum(isinstance(r["value"], float) and math.isnan(r["value"]) for r in want) == 3
+    edge = [(r["metric"], r["value"], r["os_details"] is not None)
+            for r in want if r["file"] == "i_edge.txt"]
+    assert edge == [("%system", 1.0, True), ("%idle", 99.0, False),
+                    ("%user", 1.0, False), ("%system", 2.0, False),
+                    ("%idle", 98.0, False)]
+    assert [r["restart"] for r in want if r["os_details"] is not None
+            and r["file"] == "j_restart_first.txt"] == [True]
+    assert not any(r["device"] == "9" or r["section"] == "kernel" for r in want)
     want = sorted(
         repr(tuple((r["ts"] - EPOCH) // timedelta(microseconds=1) if f == "ts" else r[f]
                    for f in SAR_FIELDS))

@@ -17,8 +17,10 @@ checkout (see ``mask``), and writes ``plans/digests.json``: one sha256
 per masked plan, plus ``all``, the sha256 of the per-plan digests in
 that order. It also writes one sha256 per ``oracle_sql()`` string, with
 the checkout root masked, plus ``oracles_all`` over them in registry
-order. Two runs of one commit write the same file, so "plans and
-oracles unchanged" is an empty diff of it.
+order, and ``ingest_digests`` (see ``ingest_digests``): the rows the SAR
+ingest gives for the benchmark's fleet corpus. Two runs of one commit
+write the same file, so "plans, oracles and ingested rows unchanged" is
+an empty diff of it.
 """
 
 from __future__ import annotations
@@ -112,6 +114,52 @@ def _sha_all(digests: dict[str, str]) -> str:
     return hashlib.sha256(every.encode()).hexdigest()
 
 
+def _sha_rows(df) -> str:
+    """sha256 of a frame's rows, sorted, with ``file`` cut to its base
+    name and ``ts`` as epoch microseconds."""
+    from pyspark.sql import functions as F
+
+    cols = [F.regexp_extract("file", r"[^/]+$", 0).alias("file") if c == "file"
+            else F.unix_micros("ts").alias("ts") if c == "ts" else c
+            for c in df.columns]
+    table = df.select(*cols).toArrow().to_pydict()
+    rows = sorted(map(repr, zip(*table.values())))
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def ingest_digests(spark) -> dict[str, str]:
+    """One sha256 of the rows ``read_files`` gives over the benchmark's
+    fleet corpus (``perfbench.corpus``, malformed files included) per
+    seed 1-3, and one of each ``SarStore.upload`` result plus the rows
+    ``SarStore.load`` then gives, per seed-1 file in name order (a file
+    the store refuses hashes its error)."""
+    import tempfile
+
+    from perfbench import corpus as C
+    from perfbench.workloads import FLEET_FILES, write_files
+    from sarfile_analyzer_ng_spark.sources.sar_text import read_files
+    from sarfile_analyzer_ng_spark.store import SarStore, StoreError
+
+    out = {}
+    with tempfile.TemporaryDirectory() as tmp:
+        fleets = {}
+        for seed in (1, 2, 3):
+            files, _ = C.generate_fleet(seed, FLEET_FILES)
+            fleets[seed] = {**files, **C.malformed(seed)}
+            path = os.path.join(tmp, f"fleet{seed}")
+            write_files(path, fleets[seed])
+            out[f"read_files/seed{seed}"] = _sha_rows(read_files(spark, path))
+        store = SarStore(spark, os.path.join(tmp, "store"))
+        for name, data in sorted(fleets[1].items()):
+            try:
+                res = store.upload("user", name, data)
+                got = repr(res) + _sha_rows(store.load("user", res["name"]))
+            except StoreError as exc:
+                got = repr(exc)
+            out[f"upload/{name}"] = hashlib.sha256(got.encode()).hexdigest()
+    return out
+
+
 def digest(sf_dir: str) -> None:
     # Partition counts appear in plans; pin them to one core count.
     os.environ["SPARK_GRAFT_CPUS"] = "4"
@@ -134,7 +182,8 @@ def digest(sf_dir: str) -> None:
     out = {"sf_dir": sf_dir, "plans": len(digests),
            "all": _sha_all(digests), "digests": digests,
            "oracles": len(oracles), "oracles_all": _sha_all(oracles),
-           "oracle_digests": oracles}
+           "oracle_digests": oracles,
+           "ingest_digests": ingest_digests(spark)}
     path = os.path.join(ROOT, "plans", "digests.json")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as fh:
