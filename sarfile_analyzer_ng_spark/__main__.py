@@ -41,7 +41,8 @@ def _first_file(df, file: str | None) -> str:
     from pyspark.sql import functions as F
 
     if file:
-        match = df.where(F.col("file").contains(file)).select("file").first()
+        match = (df.where(F.col("file").contains(file)).select("file")
+                 .orderBy("file").first())
         if not match:
             sys.exit(f"no ingested file matches {file!r}")
         return match["file"]

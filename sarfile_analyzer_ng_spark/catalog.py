@@ -148,70 +148,50 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = table_path(sf_dir, name)
     nanos = _nanos_ts_cols(path)
-    if not nanos:
-        # Surface tz-less parquet timestamps as session-zoned LTZ at
-        # the scan itself (conf scoped to this read, like the nanos
-        # conf below): casting NTZ→LTZ on top of the scan would stop
-        # parquet filter pushdown on those columns. The conf does not
-        # apply to TIMESTAMP_NTZ columns that Spark wrote (their type
-        # comes from Spark's footer schema); _normalize_ntz casts
-        # those.
-        ntz_key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-        prev_ntz = spark.conf.get(ntz_key, None)
-        spark.conf.set(ntz_key, "false")
-        try:
-            df = spark.read.parquet(path)
-            # schema access resolves the scan while the conf is set
-            df.schema
-        finally:
-            if prev_ntz is None:
-                spark.conf.unset(ntz_key)
-            else:
-                spark.conf.set(ntz_key, prev_ntz)
-        return _normalize_ntz(df)
-    # Scope the legacy-nanos conf to this read: the plan captures the
-    # conf at analysis time, so restoring it afterwards keeps later
-    # parquet reads in the same session on normal timestamp behavior.
-    # The NTZ-inference conf is scoped too — a table can hold BOTH a
-    # nanos column and a tz-less micros column, and the latter would
-    # otherwise fall into the pushdown-blocking cast fallback.
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    ntz_key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    prev = spark.conf.get(key, None)
-    prev_ntz = spark.conf.get(ntz_key, None)
-    spark.conf.set(key, "true")
-    spark.conf.set(ntz_key, "false")
+    # Both confs are scoped to this read: the plan captures them at
+    # analysis time, so restoring them afterwards keeps later parquet
+    # reads in the same session on the default behavior.
+    # - nanosAsLong reads TIMESTAMP(NANOS) columns as longs (converted
+    #   below); it changes nothing in a table without such columns.
+    # - NTZ inference off surfaces tz-less parquet timestamps as
+    #   session-zoned LTZ at the scan itself: casting NTZ→LTZ on top
+    #   of the scan would stop parquet filter pushdown on those
+    #   columns. It does not reach TIMESTAMP_NTZ columns that Spark
+    #   wrote (their type comes from Spark's footer schema);
+    #   _normalize_ntz casts those.
+    confs = {"spark.sql.legacy.parquet.nanosAsLong": "true",
+             "spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
         df = spark.read.parquet(path)
-        # pyarrow reports INT96 timestamps as ns too, but Spark reads
-        # those as timestamps directly — only columns that actually
-        # surface as longs went through the legacy-nanos path.
-        long_cols = {f.name for f in df.schema.fields if f.dataType.typeName() == "long"}
-        for c in nanos:
-            if c in long_cols:
-                # FLOOR division, not `div` (truncate-toward-zero):
-                # pre-1970 nanos would otherwise shift up to 999 ns
-                # late; subtracting pmod first makes the quotient exact
-                # at full integer precision
-                df = df.withColumn(
-                    c,
-                    F.timestamp_micros(
-                        F.expr(
-                            f"(`{c}` - pmod(`{c}`, 1000)) div 1000"
-                        )
-                    ),
-                )
+        if nanos:
+            # pyarrow reports INT96 timestamps as ns too, but Spark
+            # reads those as timestamps directly — only columns that
+            # actually surface as longs went through the legacy-nanos
+            # path.
+            long_cols = {f.name for f in df.schema.fields
+                         if f.dataType.typeName() == "long"}
+            for c in nanos:
+                if c in long_cols:
+                    # FLOOR division, not `div` (truncate-toward-zero):
+                    # pre-1970 nanos would otherwise shift up to 999 ns
+                    # late; subtracting pmod first makes the quotient
+                    # exact at full integer precision
+                    df = df.withColumn(
+                        c,
+                        F.timestamp_micros(
+                            F.expr(f"(`{c}` - pmod(`{c}`, 1000)) div 1000")
+                        ),
+                    )
         df = _normalize_ntz(df)
-        # Force analysis while the conf is set so the scan is resolved
-        # against the legacy read path before we restore the conf.
+        # resolve the scan while the confs are set
         df.schema
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-        if prev_ntz is None:
-            spark.conf.unset(ntz_key)
-        else:
-            spark.conf.set(ntz_key, prev_ntz)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
     return df

@@ -131,7 +131,11 @@ def logreg_score(df: DataFrame, feature_cols: list[str],
     )
 
 
-def calibration_report(scored: DataFrame, bins: int = 10) -> DataFrame:
+# number of fixed-width score bins of calibration_report
+CAL_BINS = 10
+
+
+def calibration_report(scored: DataFrame) -> DataFrame:
     """Classifier reliability table — the check a curator runs BEFORE
     trusting a quality classifier's threshold (Guo et al. 2017, "On
     Calibration of Modern Neural Networks", here for the logreg
@@ -143,7 +147,7 @@ def calibration_report(scored: DataFrame, bins: int = 10) -> DataFrame:
 
     Returns ``(bin, n, mean_p, frac_good, gap)``. Bins are fixed-width
     over the OBSERVED score range (min/max from one exact
-    map-combinable agg, broadcast back; bin = floor((p−min)/span·bins)
+    map-combinable agg, broadcast back; bin = floor((p−min)/span·CAL_BINS)
     clipped) — a shallow model's scores can occupy a narrow band
     (measured 0.007 wide on the gate corpus), where absolute-[0,1]
     bins collapse the whole report into one row. Range-adaptive bins
@@ -158,8 +162,8 @@ def calibration_report(scored: DataFrame, bins: int = 10) -> DataFrame:
     span = F.col("_pmax") - F.col("_pmin")
     b = F.when(span <= 0, F.lit(0)).otherwise(
         F.least(
-            F.floor((F.col("p_good") - F.col("_pmin")) / span * bins),
-            F.lit(bins - 1),
+            F.floor((F.col("p_good") - F.col("_pmin")) / span * CAL_BINS),
+            F.lit(CAL_BINS - 1),
         )
     ).cast("long")
     return (
@@ -177,12 +181,16 @@ def calibration_report(scored: DataFrame, bins: int = 10) -> DataFrame:
     )
 
 
+# feature buckets of hashed_gram_features
+HG_BUCKETS = 8
+
+
 def hashed_gram_features(docs: DataFrame, text_col: str, id_col: str,
-                         source_col: str, pos_sources: tuple[str, ...],
-                         buckets: int = 8) -> DataFrame:
+                         source_col: str,
+                         pos_sources: tuple[str, ...]) -> DataFrame:
     """fastText-style hashed bag-of-ngrams features (Joulin et al.
     2017, "Bag of Tricks for Efficient Text Classification"): unigrams
-    AND word bigrams hashed into ``buckets`` feature buckets, per-doc
+    AND word bigrams hashed into ``HG_BUCKETS`` feature buckets, per-doc
     normalized counts as the feature vector — the content-based
     complement of :func:`quality_features`' shape statistics (THOSE
     say "does this look like prose?"; these say "does this use the
@@ -191,8 +199,8 @@ def hashed_gram_features(docs: DataFrame, text_col: str, id_col: str,
     cross-engine.
 
     The hash is the dedup family's portable fingerprint (first 8 md5
-    hex digits as a non-negative int) mod ``buckets`` — engine-
-    reproducible, unlike murmur3/xxhash built-ins. ``buckets`` is
+    hex digits as a non-negative int) mod ``HG_BUCKETS`` — engine-
+    reproducible, unlike murmur3/xxhash built-ins. ``HG_BUCKETS`` is
     deliberately small: each extra bucket adds one weight CTE column
     to the oracle unroll; at production scale you'd raise it to 2^20
     and skip the oracle, nothing else changes.
@@ -201,7 +209,7 @@ def hashed_gram_features(docs: DataFrame, text_col: str, id_col: str,
     pivot is B conditional sums inside that agg — no pivot shuffle,
     no join); features are O(B) per doc. Fully codegen, no Python.
     """
-    agg = _hashed_gram_agg(docs, text_col, id_col, source_col, buckets)
+    agg = _hashed_gram_agg(docs, text_col, id_col, source_col, HG_BUCKETS)
     return agg.select(
         F.col("doc").alias(id_col),
         F.col("_carry").alias(source_col),
@@ -209,7 +217,7 @@ def hashed_gram_features(docs: DataFrame, text_col: str, id_col: str,
         .alias("label"),
         *[
             rnd(F.col(f"c{j}") / F.col("total"), 6).alias(f"x{j}")
-            for j in range(buckets)
+            for j in range(HG_BUCKETS)
         ],
     )
 
@@ -379,12 +387,12 @@ def kappa_agreement(a: DataFrame, b: DataFrame, id_col: str,
     )
 
 
-def threshold_sweep(scored: DataFrame, p_col: str = "p_good",
-                    label_col: str = "label",
+def threshold_sweep(scored: DataFrame,
                     taus: tuple[float, ...] = tuple(
                         round(t * 0.05, 2) for t in range(1, 20))
                     ) -> DataFrame:
-    """Operating-point table for a score-vs-label classifier: for each
+    """Operating-point table for a score-vs-label classifier (``p_good``
+    against ``label``): for each
     decision threshold τ, the confusion counts and precision / recall
     / F1. This is the table a curator actually PICKS the filter
     threshold from — q161's AUC says "the ranking discriminates",
@@ -408,8 +416,8 @@ def threshold_sweep(scored: DataFrame, p_col: str = "p_good",
         F.array(*[F.lit(float(x)) for x in taus])
     ).alias("tau")
     j = scored.select(
-        F.col(label_col).cast("long").alias("y"),
-        F.col(p_col).alias("p"),
+        F.col("label").cast("long").alias("y"),
+        F.col("p_good").alias("p"),
         t,
     )
     pos = (F.col("p") >= F.col("tau")).cast("long")

@@ -91,9 +91,8 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int = 3,
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       shingle_n: int = 3,
                        shingles: DataFrame | None = None) -> DataFrame:
-    """MinHash signatures as (doc, sig array<bigint>).
+    """MinHash signatures of word 3-grams as (doc, sig array<bigint>).
 
     Shape matters for scale: shingles are EXPLODED first, then each of
     the 64 seeds becomes one ``min(xxhash64(shingle, i))``
@@ -111,7 +110,7 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     exploded = (
         shingles
         if shingles is not None
-        else shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
+        else shingle_rows(df, text_col, id_col, distinct=False)
     )
     # Collapse the shingle to a 64-bit fingerprint ONCE, then seed the
     # 64-hash family over the fixed-width long: re-hashing the
@@ -169,11 +168,12 @@ def _drop_hot_bands(banded: DataFrame, max_df: int) -> DataFrame:
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
-                      shingle_n: int = 3, bands: int = 16,
+                      bands: int = 16,
                       shingles: DataFrame | None = None,
                       max_df: int | None = None) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash banding with the
-    estimated Jaccard from signature agreement.
+    """Candidate near-duplicate pairs via MinHash banding of word
+    3-gram signatures with the estimated Jaccard from signature
+    agreement.
 
     Plan shape: signature scan (narrow) → explode band keys → shuffle
     on band key (uniform hash) → per-bucket self-join. The quadratic
@@ -184,8 +184,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     corpus where every doc shares all band keys is quadratic.
     """
     rows = 64 // bands
-    sig = minhash_signatures(df, text_col, id_col, shingle_n,
-                             shingles=shingles)
+    sig = minhash_signatures(df, text_col, id_col, shingles=shingles)
     banded = sig.select(
         "doc", "sig", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("band")
     )
@@ -281,6 +280,11 @@ def minhash_signatures_portable(df: DataFrame, text_col: str, id_col: str,
     )
 
 
+# LSH bands of the portable pair functions: 32-hash signatures make
+# 16 bands of 2 rows; ``num_hashes`` must be a multiple of it
+MINHASH_PORT_BANDS = 16
+
+
 def portable_band_keys(sig_col: str, num_hashes: int, bands: int) -> Column:
     """LSH band keys for the portable family: the PLAIN string of each
     contiguous signature slice prefixed by the band index — no hash,
@@ -313,7 +317,7 @@ def sig_agreement(sig_a, sig_b, num_hashes: int) -> Column:
 
 
 def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
-                               num_hashes: int = 32, bands: int = 16,
+                               num_hashes: int = 32,
                                max_df: int | None = None,
                                sigs: DataFrame | None = None) -> DataFrame:
     """Portable-family twin of :func:`minhash_lsh_pairs` — same
@@ -332,7 +336,8 @@ def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
         df, text_col, id_col, num_hashes=num_hashes)
     banded = sig.select(
         "doc", "sig",
-        F.explode(portable_band_keys("sig", num_hashes, bands)).alias("band"),
+        F.explode(portable_band_keys("sig", num_hashes,
+                                     MINHASH_PORT_BANDS)).alias("band"),
     )
     if max_df is not None:
         banded = _drop_hot_bands(banded, max_df)
@@ -355,7 +360,7 @@ def minhash_lsh_pairs_portable(df: DataFrame, text_col: str, id_col: str,
 
 def incremental_near_dups(batch: DataFrame, ref: DataFrame, text_col: str,
                           id_col: str,
-                          num_hashes: int = 32, bands: int = 16,
+                          num_hashes: int = 32,
                           max_df: int | None = None,
                           sig_batch: DataFrame | None = None,
                           sig_ref: DataFrame | None = None) -> DataFrame:
@@ -405,7 +410,7 @@ def incremental_near_dups(batch: DataFrame, ref: DataFrame, text_col: str,
     )
     sig_b = sig_all.where(F.col("_b")).select("doc", "sig")
     sig_r = sig_all.where(~F.col("_b")).select("doc", "sig")
-    keys = portable_band_keys("sig", num_hashes, bands)
+    keys = portable_band_keys("sig", num_hashes, MINHASH_PORT_BANDS)
     bb = sig_b.select(F.col("doc").alias("bid"), F.col("sig").alias("bsig"),
                       F.explode(keys).alias("band"))
     rb = sig_r.select(F.col("doc").alias("rid"), F.col("sig").alias("rsig"),
@@ -490,25 +495,27 @@ def simhash32_portable(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return sigs.select("doc", packed.alias("simhash"))
 
 
-def shingle_hash_rows(df: DataFrame, text_col: str, id_col: str,
-                      shingle_n: int = 3) -> DataFrame:
-    """Distinct (doc, 64-bit shingle hash) rows — the candidate-join
-    input of the exact-jaccard family. Hashes (xxhash64) instead of
-    strings: smaller shuffle, cheaper sort, same pairs (collision odds
-    ~n²/2⁶⁴). Exposed so callers running several jaccard variants
-    (plain + max_df-capped) can build and cache it once."""
+def shingle_hash_rows(df: DataFrame, text_col: str,
+                      id_col: str) -> DataFrame:
+    """Distinct (doc, 64-bit word 3-gram shingle hash) rows — the
+    candidate-join input of the exact-jaccard family. Hashes
+    (xxhash64) instead of strings: smaller shuffle, cheaper sort, same
+    pairs (collision odds ~n²/2⁶⁴). Exposed so callers running several
+    jaccard variants (plain + max_df-capped) can build and cache it
+    once."""
     return (
-        shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
+        shingle_rows(df, text_col, id_col, distinct=False)
         .select("doc", F.xxhash64("shingle").alias("shingle"))
         .distinct()
     )
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
-                        shingle_n: int = 3, threshold: float = 0.5,
+                        threshold: float = 0.5,
                         max_df: int | None = None,
                         shingles: DataFrame | None = None) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
+    """Exact word 3-gram Jaccard similarity for pairs sharing ≥1
+    shingle.
 
     explode(shingles) → self-join on shingle → |∩| per pair, then
     |A∪B| = |A|+|B|−|∩|. The shingle join is the candidate generator;
@@ -521,7 +528,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     """
     owns_cache = shingles is None
     cached = (
-        shingle_hash_rows(df, text_col, id_col, shingle_n).cache()
+        shingle_hash_rows(df, text_col, id_col).cache()
         if owns_cache
         else shingles
     )  # reused three times (two join sides + sizes)
@@ -575,9 +582,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
 
 
 def decontaminate(train: DataFrame, eval_df: DataFrame, text_col: str,
-                  id_col: str, shingle_n: int = 3) -> DataFrame:
+                  id_col: str) -> DataFrame:
     """Train/eval decontamination: find training documents that share
-    any word ``shingle_n``-gram with an evaluation/benchmark set, so
+    any word 3-gram with an evaluation/benchmark set, so
     they can be dropped before training (the standard n-gram-overlap
     decontamination of GPT-3 appendix C / PaLM §7).
 
@@ -593,9 +600,9 @@ def decontaminate(train: DataFrame, eval_df: DataFrame, text_col: str,
     of an all-pairs join). Joins on the shingle STRING, not a hash —
     exactness is the point of decontamination.
     """
-    tr = shingle_rows(train, text_col, id_col, shingle_n)
+    tr = shingle_rows(train, text_col, id_col)
     ev = (
-        shingle_rows(eval_df, text_col, id_col, shingle_n)
+        shingle_rows(eval_df, text_col, id_col)
         .select("shingle")
         .distinct()
     )
@@ -607,11 +614,15 @@ def decontaminate(train: DataFrame, eval_df: DataFrame, text_col: str,
     )
 
 
+# the Jaccard cut of lsh_jaccard_pairs
+JACCARD_TAU = 0.5
+
+
 def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
-                      shingle_n: int = 3, threshold: float = 0.5,
                       shingles: DataFrame | None = None,
                       candidates: DataFrame | None = None) -> DataFrame:
-    """LSH-prefiltered exact Jaccard: the 100 TB composition.
+    """LSH-prefiltered exact Jaccard of word 3-grams, pairs at
+    ≥ ``JACCARD_TAU``: the 100 TB composition.
 
     :func:`ngram_jaccard_pairs` alone joins on shared shingles, which
     is quadratic when the shingle vocabulary saturates (every shingle
@@ -641,7 +652,7 @@ def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     # — and shares the one explode across the whole dedup family.
     owns_cache = shingles is None
     sh = (
-        shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
+        shingle_rows(df, text_col, id_col, distinct=False)
         .select("doc", F.xxhash64("shingle").alias("shingle"))
         .cache()
         if owns_cache
@@ -652,7 +663,7 @@ def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     # ``candidates`` — the prefilter stage then costs nothing here.
     owns_raw = candidates is None
     raw = (
-        minhash_lsh_pairs(df, text_col, id_col, shingle_n, shingles=sh)
+        minhash_lsh_pairs(df, text_col, id_col, shingles=sh)
         if owns_raw
         else candidates
     )
@@ -683,7 +694,7 @@ def lsh_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                 4,
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_TAU)
         .select("doc_a", "doc_b", "inter", "jaccard")
     )
     out._cached_inputs = [  # see release()
@@ -950,8 +961,12 @@ def repeated_spans(df: DataFrame, text_col: str, id_col: str,
     )
 
 
+# shortest repeated span, in tokens, that repeated_spans_cut cuts
+RS_MIN_TOKENS = 16
+
+
 def repeated_spans_cut(df: DataFrame, text_col: str, id_col: str,
-                       k: int = 8, min_tokens: int = 16,
+                       k: int = 8,
                        dup: DataFrame | None = None) -> DataFrame:
     """The APPLY step of ExactSubstr dedup (Lee et al. 2022 cut the
     duplicated bytes, not the documents): every repeated span found by
@@ -964,7 +979,7 @@ def repeated_spans_cut(df: DataFrame, text_col: str, id_col: str,
     opening gram's global first occurrence: that raw-gram argmin can
     land mid-run in another document (adjacent repeats merged into one
     longer run) or in a document whose duplicated run is below
-    ``min_tokens`` (a partial copy emits no span at all), in which
+    ``RS_MIN_TOKENS`` (a partial copy emits no span at all), in which
     case no span would match it and EVERY occurrence of the
     boilerplate would be cut — including the first. Grouping over the
     emitted spans guarantees exactly one survivor per span family.
@@ -1003,7 +1018,7 @@ def repeated_spans_cut(df: DataFrame, text_col: str, id_col: str,
             (F.max("pos") - F.min("pos") + k).alias("span_tokens"),
             F.min_by("h", "pos").alias("h_start"),
         )
-        .where(F.col("span_tokens") >= min_tokens)
+        .where(F.col("span_tokens") >= RS_MIN_TOKENS)
     )
     keepers = spans.groupBy("h_start").agg(
         F.min(F.struct("doc", "span_start")).alias("keep")
@@ -1143,17 +1158,22 @@ def decontaminate_spans(train: DataFrame, eval_df: DataFrame,
     return _cut_ranges_and_rebuild(train, text_col, id_col, cut)
 
 
-def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
-                        k: int = 3, window: int = 4) -> DataFrame:
+# word k-gram and window of the winnowing fingerprints
+WINNOW_K = 3
+WINNOW_W = 4
+
+
+def winnow_fingerprints(df: DataFrame, text_col: str,
+                        id_col: str) -> DataFrame:
     """MOSS-style winnowing fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03): hash every word ``k``-gram, slide a ``window`` of
-    consecutive gram hashes per document, keep the minimum of each
-    window, distinct. Guarantee: any substring match of at least
-    ``k + window - 1`` words between two documents shares at least one
-    fingerprint — a POSITIONAL detection contract MinHash (whole-doc
-    set similarity) does not give. Expected density is 2/(window+1) of
-    the gram count (the winnowing bound), so the fingerprint index is
-    a ~60% reduction at the defaults.
+    SIGMOD'03): hash every word ``WINNOW_K``-gram, slide a window of
+    ``WINNOW_W`` consecutive gram hashes per document, keep the
+    minimum of each window, distinct. Guarantee: any substring match
+    of at least ``WINNOW_K + WINNOW_W - 1`` words between two
+    documents shares at least one fingerprint — a POSITIONAL detection
+    contract MinHash (whole-doc set similarity) does not give.
+    Expected density is 2/(WINNOW_W+1) of the gram count (the
+    winnowing bound), so the fingerprint index is a ~60% reduction.
 
     Cross-engine hash: the first 8 hex chars of md5 parsed as a long
     (Spark ``conv(substr(md5 …),16,10)`` ≡ DuckDB
@@ -1163,16 +1183,16 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
 
     Shape at scale: posexplode + per-doc windows — the shuffle is
     keyed by doc id (uniform), windows never span documents, no global
-    ordering. Documents with fewer than ``k + window - 1`` words have
-    no complete window and produce no fingerprints (callers needing
-    every doc can left-join).
+    ordering. Documents with fewer than ``WINNOW_K + WINNOW_W - 1``
+    words have no complete window and produce no fingerprints (callers
+    needing every doc can left-join).
     """
-    hashed = _pos_gram_hashes(df, text_col, id_col, k)
+    hashed = _pos_gram_hashes(df, text_col, id_col, WINNOW_K)
 
     def build():
         owin = Window.partitionBy("doc").orderBy("pos")
         fwin = Window.partitionBy("doc").orderBy("pos").rowsBetween(
-            0, window - 1)
+            0, WINNOW_W - 1)
         return (
             F.min("h").over(fwin).alias("fp"),
             F.row_number().over(owin).alias("_rk"),
@@ -1180,35 +1200,34 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
                 Window.partitionBy("doc")).alias("_n"),
         )
 
-    fp_c, rk_c, n_c = memo_cols(("winnow_fp", window), build)
+    fp_c, rk_c, n_c = memo_cols(("winnow_fp", WINNOW_W), build)
     return (
         hashed.select("doc", fp_c, rk_c, n_c)
         # only COMPLETE windows fingerprint (the guarantee is stated
         # over full windows; incomplete tails would over-select)
-        .where(F.col("_rk") <= F.col("_n") - (window - 1))
+        .where(F.col("_rk") <= F.col("_n") - (WINNOW_W - 1))
         .select("doc", "fp")
         .distinct()
     )
 
 
 def decontaminate_winnow(train: DataFrame, eval_df: DataFrame,
-                         text_col: str, id_col: str,
-                         k: int = 3, window: int = 4) -> DataFrame:
+                         text_col: str, id_col: str) -> DataFrame:
     """Positional train/eval decontamination via winnowing: flag
     training documents sharing any fingerprint with the eval suite.
 
     The winnowing guarantee makes this a CONTIGUOUS-copy detector —
-    any verbatim run of ``k + window - 1`` words shared with an eval
+    any verbatim run of ``WINNOW_K + WINNOW_W - 1`` words shared with an eval
     document always shares a fingerprint — whereas
     :func:`decontaminate`'s shingle-set overlap also fires on
     scattered vocabulary overlap. At scale the broadcast side is the
-    eval FINGERPRINT set, ~2/(window+1) the size of the full shingle
+    eval FINGERPRINT set, ~2/(WINNOW_W+1) the size of the full shingle
     set, and the train side is the same broadcast-join-streams-scan
     shape. Returns ``(id_col, n_shared_fps)`` for flagged docs.
     """
-    tr = winnow_fingerprints(train, text_col, id_col, k, window)
+    tr = winnow_fingerprints(train, text_col, id_col)
     ev = (
-        winnow_fingerprints(eval_df, text_col, id_col, k, window)
+        winnow_fingerprints(eval_df, text_col, id_col)
         .select("fp")
         .distinct()
     )
@@ -1473,9 +1492,9 @@ def dedup_apply_best(df: DataFrame, clusters: DataFrame, scores: DataFrame,
 
 
 def eval_containment(train: DataFrame, eval_df: DataFrame, text_col: str,
-                     id_col: str, shingle_n: int = 3) -> DataFrame:
+                     id_col: str) -> DataFrame:
     """Graded train/eval contamination: for EVERY training document,
-    the fraction of its distinct word shingles found anywhere in the
+    the fraction of its distinct word 3-gram shingles found anywhere in the
     eval suite — the GPT-3-style n-gram overlap fraction (Brown et
     al. 2020, App. C) that curators threshold and report, where
     :func:`decontaminate` only surfaces the binary flag set.
@@ -1488,9 +1507,9 @@ def eval_containment(train: DataFrame, eval_df: DataFrame, text_col: str,
     DISTINCT shingle set broadcasts, the train side streams through
     one left join + per-doc agg keyed by doc id. No pairwise work.
     """
-    tr = shingle_rows(train, text_col, id_col, shingle_n, distinct=True)
+    tr = shingle_rows(train, text_col, id_col, distinct=True)
     ev = (
-        shingle_rows(eval_df, text_col, id_col, shingle_n, distinct=True)
+        shingle_rows(eval_df, text_col, id_col, distinct=True)
         .select("shingle")
         .distinct()
         .withColumn("_hit", F.lit(1))
@@ -1513,30 +1532,32 @@ def eval_containment(train: DataFrame, eval_df: DataFrame, text_col: str,
     )
 
 
-def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
-                   tau: float = 0.8) -> DataFrame:
+# edit-similarity cut of edit_dup_pairs
+EDIT_SIM_TAU = 0.8
+
+
+def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Character-level near-duplicate pairs: MinHash-LSH banding
     proposes candidates, EXACT Levenshtein verifies — the fuzzy-verify
     complement of q56's exact-Jaccard path for edits Jaccard shingles
     blur (in-word typos, small insertions that shift every shingle).
 
     ``edit_sim = 1 − lev(a, b) / max(len(a), len(b))``; pairs with
-    edit_sim ≥ ``tau`` survive. Levenshtein runs as the JVM built-in
+    edit_sim ≥ ``EDIT_SIM_TAU`` survive. Levenshtein runs as the JVM built-in
     on CANDIDATE pairs only — the quadratic DP (O(len_a·len_b) per
     pair) is confined to same-band buckets exactly like the Jaccard
     verifier, which is what keeps it off the all-pairs cliff at scale.
 
     Recall contract — DATA-DEPENDENT, not guaranteed by the operator:
     banding recalls a pair only if its word-shingle Jaccard clears the
-    LSH threshold. A pair at edit_sim just above ``tau`` whose edits
+    LSH threshold. A pair at edit_sim just above the cut whose edits
     are SPREAD (one typo per word shifts every 3-shingle) can blur
     Jaccard toward 0 and miss every band. The default banding is
     therefore the AGGRESSIVE 64/32 configuration (2 rows/band →
     s50 ≈ 0.18, vs ≈ 0.55 for the 64/16 near-dup default), which
     recalls any pair sharing a modest shingle fraction; on corpora
-    where near-tau pairs have edits spread across most words, lower
-    ``tau``, or fall back to the
-    brute-force form the oracle replays. The q111 gate data has a
+    where near-cut pairs have edits spread across most words, fall
+    back to the brute-force form the oracle replays. The q111 gate data has a
     wide observed gap (background ≤ 0.45 vs dups ≥ 0.93 edit_sim),
     so equality with the brute-force oracle holds there by margin."""
     from ..util import rnd
@@ -1557,14 +1578,14 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     )
     # |len_a − len_b| lower-bounds the edit distance, so
     # 1 − |Δlen|/maxlen upper-bounds edit_sim: any pair failing it by
-    # more than the rounding step cannot survive the tau filter —
+    # more than the rounding step cannot survive the cut —
     # prune it BEFORE paying the O(len²) Levenshtein DP (r13,
     # guide §2.3: shed rows before the expensive operator). The 1e-3
     # slack is > 20× the largest value movement rnd(·, 4)
     # can apply, so the prune is strictly conservative.
     len_ok = (
         F.lit(1.0) - F.abs(la - lb).cast("double") / maxlen
-        >= F.lit(tau - 1e-3)
+        >= F.lit(EDIT_SIM_TAU - 1e-3)
     )
     # The verify stage's INPUT is a few bytes per pair while its CPU
     # is the quadratic DP — exactly the shape AQE's byte-based
@@ -1580,7 +1601,7 @@ def edit_dup_pairs(df: DataFrame, text_col: str, id_col: str,
         .where(len_ok)
         .repartition(par)
         .select("doc_a", "doc_b", sim.alias("edit_sim"))
-        .where(F.col("edit_sim") >= tau)
+        .where(F.col("edit_sim") >= EDIT_SIM_TAU)
     )
     out._cached_inputs = getattr(pairs, "_cached_inputs", [])
     return out
@@ -1720,8 +1741,11 @@ def boilerplate_cut(df: DataFrame, text_col: str, id_col: str,
     )
 
 
-def pair_pagerank(pairs: DataFrame, iters: int = 3,
-                  damping: float = 0.85) -> DataFrame:
+# pair_pagerank's power-iteration rounds and damping factor
+PR_ITERS, PR_DAMPING = 3, 0.85
+
+
+def pair_pagerank(pairs: DataFrame) -> DataFrame:
     """PageRank over the near-duplicate pair graph — "which documents
     are template HUBS?": a doc tied to many well-connected near-dups
     ranks far above one in an isolated pair, which cluster size alone
@@ -1731,8 +1755,8 @@ def pair_pagerank(pairs: DataFrame, iters: int = 3,
     ``pairs`` is any (doc_a, doc_b) frame (q33/q31 output). The walk
     runs on the symmetrized edge set, restricted to documents that
     appear in pairs (the dup graph — the corpus complement has no
-    edges and would uniformly hold 1/N). A fixed ``iters`` unrolls
-    declaratively — each step is one edge-keyed join + one dst-keyed
+    edges and would uniformly hold 1/N). The fixed ``PR_ITERS`` rounds
+    unroll declaratively — each step is one edge-keyed join + one dst-keyed
     combinable agg, the exact shape of the oracle's CTE chain and of
     a 100 TB Pregel round. Every rank pre-rounds at 8 digits per
     step, so both engines iterate from identical inputs (the q72
@@ -1769,8 +1793,8 @@ def pair_pagerank(pairs: DataFrame, iters: int = 3,
     pr = nodes.crossJoin(F.broadcast(ncnt)).select(
         "doc_id", rnd(F.lit(1.0) / F.col("_n"), 8).alias("pr")
     )
-    d = float(damping)
-    for _ in range(int(iters)):
+    d = PR_DAMPING
+    for _ in range(PR_ITERS):
         contrib = (
             edges.join(pr.withColumnRenamed("doc_id", "src"), "src")
             .join(deg, "src")
@@ -1884,9 +1908,14 @@ def passage_rows(df: DataFrame, text_col: str, id_col: str,
     )
 
 
+# passage_near_dup_pairs: passage length in words, and the portable
+# MinHash hashes and bands its word 3-gram signatures use
+PNDP_WORDS = 8
+PNDP_HASHES = 16
+PNDP_BANDS = 8
+
+
 def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
-                           passage_words: int = 8, shingle_n: int = 3,
-                           num_hashes: int = 16, bands: int = 8,
                            threshold: float = 0.5,
                            max_df: int | None = None) -> DataFrame:
     """Paragraph-granularity MinHash near-dup (Dolma §2.3 and
@@ -1903,15 +1932,15 @@ def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     hash sees nothing.
 
     Shape at scale: passage explode is linear; shingles are per-
-    passage array HOFs (≤ passage_words rows each, no window); the
+    passage array HOFs (≤ PNDP_WORDS rows each, no window); the
     band self-join shuffles on uniform string keys with the standard
     two-sided ``max_df`` hot-band cap — template passages repeated
     across millions of pages are exactly the keys the cap drops, so
     candidate volume stays bounded by ``max_df²`` per surviving band.
     """
-    pas = passage_rows(df, text_col, id_col, passage_words)
+    pas = passage_rows(df, text_col, id_col, PNDP_WORDS)
     w = F.split(F.lower(F.trim(F.col("passage"))), r"\s+")
-    n = int(shingle_n)
+    n = 3
     grams = F.when(
         F.size(w) >= n,
         F.transform(
@@ -1925,7 +1954,7 @@ def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
         pas.select("doc", "idx", F.explode(grams).alias("shingle"))
         .select("doc", "idx", fp32_expr(F.col("shingle")).alias("_fp"))
     )
-    params = affine_params(num_hashes)
+    params = affine_params(PNDP_HASHES)
     sig = fp.groupBy("doc", "idx").agg(
         *[
             F.min((F.col("_fp") * F.lit(a) + F.lit(b)) % F.lit(PORTABLE_P))
@@ -1934,11 +1963,12 @@ def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
         ]
     ).select(
         "doc", "idx",
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"),
+        F.array(*[F.col(f"h{i}") for i in range(PNDP_HASHES)]).alias("sig"),
     )
     banded = sig.select(
         "doc", "idx", "sig",
-        F.explode(portable_band_keys("sig", num_hashes, bands)).alias("band"),
+        F.explode(portable_band_keys("sig", PNDP_HASHES, PNDP_BANDS))
+        .alias("band"),
     )
     if max_df is not None:
         banded = _drop_hot_bands(banded, max_df)
@@ -1956,7 +1986,7 @@ def passage_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
             F.col("b.doc").alias("doc_b"),
             F.col("b.idx").alias("idx_b"),
             sig_agreement(F.col("a.sig"), F.col("b.sig"),
-                          num_hashes).alias("est_jaccard"),
+                          PNDP_HASHES).alias("est_jaccard"),
         )
         .dropDuplicates(["doc_a", "idx_a", "doc_b", "idx_b"])
         .where(F.col("est_jaccard") >= threshold)

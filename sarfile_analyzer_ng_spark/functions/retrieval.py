@@ -112,7 +112,7 @@ def _qterms(queries: DataFrame) -> DataFrame:
 def _score_and_rank(postings: DataFrame, doclen: DataFrame,
                     df_tbl: DataFrame, n_avg: DataFrame,
                     qterms: DataFrame, k: int,
-                    champions: int | None, round_to: int) -> DataFrame:
+                    champions: int | None) -> DataFrame:
     """The shared scoring core: (optionally champion-cut) postings ⨝
     broadcast query terms ⨝ broadcast per-term idf inputs ⨝ doc
     lengths → per-(query, doc) sum → rank window cut at k."""
@@ -156,7 +156,7 @@ def _score_and_rank(postings: DataFrame, doclen: DataFrame,
         )
     )
     agg = scored.groupBy("qid", "doc").agg(
-        rnd(F.sum("contrib"), round_to).alias("score"),
+        rnd(F.sum("contrib"), 4).alias("score"),
         F.count(F.lit(1)).alias("n_terms_hit"),
     )
     win = Window.partitionBy("qid").orderBy(
@@ -177,7 +177,6 @@ def _score_and_rank(postings: DataFrame, doclen: DataFrame,
 
 def bm25_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
               id_col: str, k: int = 5,
-              round_to: int = 4,
               postings: DataFrame | None = None) -> DataFrame:
     """Top-``k`` corpus documents per query under BM25.
 
@@ -186,12 +185,12 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, text_col: str,
 
     Returns (query_id, rank, doc_id, score, n_terms_hit) with exactly
     the documents sharing ≥1 query term, ranked by (score DESC,
-    doc ASC), cut at k.
+    doc ASC), cut at k; scores round at 4 digits.
     """
     postings, doclen, df_tbl, n_avg = _index_frames(corpus, text_col,
                                                     id_col, postings)
     return _score_and_rank(postings, doclen, df_tbl, n_avg,
-                           _qterms(queries), k, None, round_to)
+                           _qterms(queries), k, None)
 
 
 def bm25_topk_champions(corpus: DataFrame, queries: DataFrame,
@@ -224,16 +223,16 @@ def bm25_topk_champions(corpus: DataFrame, queries: DataFrame,
     postings, doclen, df_tbl, n_avg = _index_frames(corpus, text_col,
                                                     id_col, postings)
     return _score_and_rank(postings, doclen, df_tbl, n_avg,
-                           _qterms(queries), k, champions, 4)
+                           _qterms(queries), k, champions)
 
 
+# rank offset of reciprocal-rank fusion
 RRF_K = 60
 
 
-def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 10,
-             rrf_k: int = RRF_K) -> DataFrame:
+def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 10) -> DataFrame:
     """Reciprocal-rank fusion of a lexical and a semantic ranking
-    (Cormack et al. 2009): ``score = Σ 1/(rrf_k + rank)`` over the
+    (Cormack et al. 2009): ``score = Σ 1/(RRF_K + rank)`` over the
     rankers that retrieved the document. The standard hybrid-retrieval
     combiner — rank-based, so the incomparable BM25 and cosine scales
     never need calibration.
@@ -255,7 +254,7 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 10,
     j = l.join(s, ["query_id", "doc_id"], "full_outer")
     contrib = lambda c: F.when(  # noqa: E731
         F.col(c).isNotNull(),
-        rnd(F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(c)), 8),
+        rnd(F.lit(1.0) / (F.lit(float(RRF_K)) + F.col(c)), 8),
     ).otherwise(F.lit(0.0))
     fused = j.select(
         "query_id", "doc_id",
@@ -274,10 +273,14 @@ def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int = 10,
     )
 
 
-def mmr_rerank(pool: DataFrame, vecs: DataFrame, k: int = 3,
+# documents mmr_rerank selects per query
+MMR_K = 3
+
+
+def mmr_rerank(pool: DataFrame, vecs: DataFrame,
                lam: float = 0.7) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein
-    1998): greedily pick ``k`` documents from each query's candidate
+    1998): greedily pick ``MMR_K`` documents from each query's candidate
     pool maximizing ``λ·relevance − (1−λ)·max-similarity-to-already-
     selected`` — the diversity-aware context selection a RAG pipeline
     runs on its retrieval pool so the k passages aren't k near-copies
@@ -331,7 +334,7 @@ def mmr_rerank(pool: DataFrame, vecs: DataFrame, k: int = 3,
     lam_c, one_m = F.lit(float(lam)), F.lit(1.0 - lam)
     selected = None
     out_parts = []
-    for step in range(1, k + 1):
+    for step in range(1, MMR_K + 1):
         if selected is None:
             scored = p.select(
                 "query_id", "doc_id",
@@ -506,7 +509,7 @@ def rm3_expansion(corpus: DataFrame, queries: DataFrame, text_col: str,
     as plain BM25.
     """
     topk = bm25_topk(corpus, queries, text_col, id_col, k=k,
-                     round_to=4, postings=postings)
+                     postings=postings)
     postings, doclen, _, _ = _index_frames(corpus, text_col, id_col,
                                            postings)
     wsum = Window.partitionBy("query_id")

@@ -612,8 +612,8 @@ def knn_classify(emb: DataFrame, queries: DataFrame, id_col: str,
 
 
 def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
-                     k: int = 8, iters: int = 2) -> DataFrame:
-    """The centroid frame ``(cluster, c)`` after ``iters`` Lloyd
+                     k: int = 8) -> DataFrame:
+    """The centroid frame ``(cluster, c)`` after 2 Lloyd
     updates — the model half of :func:`kmeans_lloyd_exact`, exposed so
     consumers that assign OUTSIDE the batch plan (index builders) rank
     against the exact centroids the batch assignment uses."""
@@ -634,7 +634,7 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
             F.col("e").alias("c"),
         )
     )
-    for _ in range(iters):
+    for _ in range(2):
         cos = rnd(cosine(F.col("e"), F.col("c")), 4)
         # argmax as a combinable max_by instead of a row_number window
         # (r13, guide §2.3/§2.4): the crossJoin emits every id's k
@@ -681,7 +681,7 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
 
 
 def kmeans_lloyd_exact(emb: DataFrame, id_col: str, vec_col: str,
-                       k: int = 8, iters: int = 2,
+                       k: int = 8,
                        centroids: DataFrame | None = None) -> DataFrame:
     """Engine-reproducible Lloyd k-means — the oracled correctness
     twin of :func:`ivf_train` (same deterministic smallest-id init,
@@ -702,7 +702,7 @@ def kmeans_lloyd_exact(emb: DataFrame, id_col: str, vec_col: str,
     the gate that pins its geometry, not its replacement.
 
     Returns the final assignment ``(id, cluster, cos)`` — ranked
-    against the :func:`kmeans_centroids` frame after ``iters``
+    against the :func:`kmeans_centroids` frame after 2 Lloyd
     updates, so model and assignment stay one code path. Pass a
     prebuilt (cached) ``centroids`` frame to share one Lloyd training
     across the family's consumers — value-identical by construction
@@ -715,7 +715,7 @@ def kmeans_lloyd_exact(emb: DataFrame, id_col: str, vec_col: str,
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("e"),
     )
     cent = centroids if centroids is not None else kmeans_centroids(
-        emb, id_col, vec_col, k=k, iters=iters)
+        emb, id_col, vec_col, k=k)
     cos = rnd(cosine(F.col("e"), F.col("c")), 4)
     # same combinable-argmax shape as the update loop (see
     # kmeans_centroids): map-side collapse of the k candidate rows,
@@ -737,15 +737,19 @@ def kmeans_lloyd_exact(emb: DataFrame, id_col: str, vec_col: str,
     )
 
 
+# quantize_embeddings' code range: 8-bit codes 0..255
+QUANT_LEVELS = 255
+
+
 def quantize_embeddings(emb: DataFrame, id_col: str, vec_col: str,
-                        bits: int = 8, keep_vec: bool = False) -> DataFrame:
+                        keep_vec: bool = False) -> DataFrame:
     """Per-vector affine int quantization of an embedding column — the
     standard vector-store compression (float32 → int8 is a 4× memory /
     bandwidth cut that barely moves cosine recall). Each vector
     carries its own (scale, zero) so dequantization is local:
     ``x ≈ q · scale + zero``.
 
-    Quantized code = round((x − min) / scale) in [0, 2^bits − 1], with
+    Quantized code = round((x − min) / scale) in [0, QUANT_LEVELS], with
     the cross-engine ``rnd`` collapse applied before the final round
     so an ulp at a .5 boundary can't flip a code between engines; a
     constant vector (max = min) quantizes to all zeros with scale 0.
@@ -757,10 +761,9 @@ def quantize_embeddings(emb: DataFrame, id_col: str, vec_col: str,
     """
     from ..util import rnd
 
-    levels = (1 << bits) - 1
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     vmin, vmax = F.array_min(v), F.array_max(v)
-    scale = (vmax - vmin) / F.lit(float(levels))
+    scale = (vmax - vmin) / F.lit(float(QUANT_LEVELS))
     q = F.when(
         vmax == vmin,
         F.transform(v, lambda x: F.lit(0).cast("int")),
@@ -996,8 +999,12 @@ def apply_top1_removal(emb: DataFrame, id_col: str, vec_col: str,
     return src.mapInPandas(kernel, schema)
 
 
+# k-means clusters semdedup prunes within (2 Lloyd iterations)
+SEMDEDUP_K = 8
+
+
 def semdedup(emb: DataFrame, id_col: str, vec_col: str,
-             tau: float = 0.8, k: int = 8, iters: int = 2,
+             tau: float = 0.8,
              rows_per_chunk: int = 4096,
              assigned: DataFrame | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -1036,9 +1043,7 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     from pyspark.sql import types as T
 
     if assigned is None:
-        assigned = kmeans_lloyd_exact(
-            emb, id_col, vec_col, k=k, iters=iters
-        )
+        assigned = kmeans_lloyd_exact(emb, id_col, vec_col, k=SEMDEDUP_K)
     v = emb.select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("e"),
@@ -1510,14 +1515,19 @@ def ann_topk_ivfpq(emb: DataFrame, queries: DataFrame, id_col: str,
     )
 
 
+# ann_topk_ivf_portable: neighbors returned and lists probed per query
+ANN_K = 5
+IVF_NPROBE = 2
+
+
 def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
-                          query_max_id: int, k: int = 5,
-                          k_lists: int = 8, iters: int = 2,
-                          nprobe: int = 2,
+                          query_max_id: int, k_lists: int = 8,
                           centroids: DataFrame | None = None) -> DataFrame:
     """SUB-exhaustive IVF search on the engine-portable rounding
     ladder — the oracle-replayable twin of :func:`ann_topk_ivf`'s
-    Arrow production path at ``nprobe < k_lists``. The exhaustive
+    Arrow production path at ``IVF_NPROBE < k_lists``; ``centroids``,
+    when given, is a :func:`kmeans_centroids` frame of ``k_lists``
+    rows, otherwise one is trained here (2 Lloyd iterations). The exhaustive
     configurations are hash-gated elsewhere (q41/q100 probe all
     lists, reducing to the exact ranking); THIS operator pins the
     actual production regime — partial probing, where recall < 1 is
@@ -1527,12 +1537,12 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
 
     Routing and assignment both rank by the ROUNDED cosine with
     cluster-ascending tie order (the :func:`kmeans_lloyd_exact`
-    contract), so an ulp at the nprobe cut cannot flip engines.
+    contract), so an ulp at the IVF_NPROBE cut cannot flip engines.
 
     Shape at scale: the k_lists-row centroid frame broadcasts into
     both the corpus assignment and the query routing; in-list search
-    touches ~n·nprobe/k_lists corpus rows per query — the IVF
-    contract — and the rank window emits k rows per query.
+    touches ~n·IVF_NPROBE/k_lists corpus rows per query — the IVF
+    contract — and the rank window emits ANN_K rows per query.
     """
     from pyspark.sql import Window
 
@@ -1543,7 +1553,7 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("e"),
     )
     cent = centroids if centroids is not None else kmeans_centroids(
-        emb, id_col, vec_col, k=k_lists, iters=iters)
+        emb, id_col, vec_col, k=k_lists)
     cosc = rnd(cosine(F.col("e"), F.col("c")), 4)
     wa = Window.partitionBy(id_col).orderBy(
         F.col("_cos").desc(), F.col("cluster").asc()
@@ -1566,7 +1576,7 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
         qv.crossJoin(F.broadcast(cent))
         .withColumn("_cos", rnd(cosine(F.col("qe"), F.col("c")), 4))
         .withColumn("_rk", F.row_number().over(wr))
-        .where(F.col("_rk") <= nprobe)
+        .where(F.col("_rk") <= IVF_NPROBE)
         .select("query_id", "qe", "cluster")
     )
     wk = Window.partitionBy("query_id").orderBy(
@@ -1580,12 +1590,12 @@ def ann_topk_ivf_portable(emb: DataFrame, id_col: str, vec_col: str,
             rnd(cosine(F.col("qe"), F.col("ce")), 4).alias("cosine"),
         )
         .withColumn("rank", F.row_number().over(wk).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
     )
 
 
 def cluster_silhouette(emb: DataFrame, id_col: str, vec_col: str,
-                       k: int = 8, iters: int = 2,
+                       k: int = 8,
                        centroids: DataFrame | None = None) -> DataFrame:
     """Per-cluster simplified silhouette over the oracled Lloyd
     k-means geometry — the cluster-quality report a curator reads
@@ -1614,7 +1624,7 @@ def cluster_silhouette(emb: DataFrame, id_col: str, vec_col: str,
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("e"),
     )
     cent = centroids if centroids is not None else kmeans_centroids(
-        emb, id_col, vec_col, k=k, iters=iters)
+        emb, id_col, vec_col, k=k)
     cos = rnd(cosine(F.col("e"), F.col("c")), 4)
     w = Window.partitionBy(id_col).orderBy(
         F.col("cos").desc(), F.col("cluster").asc()
@@ -1994,9 +2004,13 @@ def fisher_separation(df: DataFrame, label_col: str,
     )
 
 
+# allpairs_cosine_tfidf's stopword cut: the largest kept fraction of
+# documents a term may appear in
+APSS_MAX_DF_RATIO = 0.5
+
+
 def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
-                          tau: float = 0.6,
-                          max_df_ratio: float | None = 0.5) -> DataFrame:
+                          tau: float = 0.6) -> DataFrame:
     """All-pairs similarity search over sparse TF-IDF vectors with
     prefix filtering (Bayardo, Ma & Srikant, WWW 2007 — THE exact
     all-pairs algorithm at web scale): every document pair whose
@@ -2020,8 +2034,8 @@ def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
          (either orientation, deduped unordered); verify = exact
          cosine from the shared-term dot product.
 
-    ``max_df_ratio`` drops terms present in more than that fraction
-    of documents from the vectors entirely BEFORE weighting — the
+    Terms present in more than ``APSS_MAX_DF_RATIO`` of the
+    documents drop from the vectors entirely BEFORE weighting — the
     standard APSS stopword cut (Bayardo §5 observes the hottest
     postings dominate candidate volume; their tf-idf weight is
     near-zero anyway, so the cosine barely moves while the posting
@@ -2050,9 +2064,8 @@ def allpairs_cosine_tfidf(df: DataFrame, text_col: str, id_col: str,
     n_docs = df.select(F.col(id_col)).distinct().count()
     dfreq = tf.groupBy("t").agg(
         F.count(F.lit(1)).cast("long").alias("df_"))
-    if max_df_ratio is not None:
-        dfreq = dfreq.where(
-            F.col("df_") <= float(max_df_ratio) * float(n_docs))
+    dfreq = dfreq.where(
+        F.col("df_") <= APSS_MAX_DF_RATIO * float(n_docs))
     w = (
         tf.join(dfreq, "t")
         .withColumn(

@@ -369,9 +369,13 @@ def quality_filter(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str,
-                    k: int = 3) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document — the classic keyword /
+# terms per document tfidf_top_terms keeps
+TFIDF_TOP_K = 3
+
+
+def tfidf_top_terms(df: DataFrame, text_col: str,
+                    id_col: str) -> DataFrame:
+    """Top-``TFIDF_TOP_K`` TF-IDF terms per document — the classic keyword /
     topic signal used to slice and inspect a training mix.
 
     score = tf · ln(N / df), ranked per document by (rounded score
@@ -417,7 +421,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str,
     )
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_TOP_K)
         .select(id_col, "term", F.col("tf").cast("long").alias("tf"),
                 "score", F.col("rank").cast("long").alias("rank"))
     )
@@ -557,14 +561,19 @@ def corpus_card(df: DataFrame, text_col: str, source_col: str) -> DataFrame:
     )
 
 
+# repeat_schedule's epoch cap per source
+REPEAT_MAX_EPOCHS = 4.0
+
+
 def repeat_schedule(df: DataFrame, source_col: str, text_col: str,
-                    targets: dict[str, float], token_budget: int,
-                    max_epochs: float = 4.0) -> DataFrame:
+                    targets: dict[str, float],
+                    token_budget: int) -> DataFrame:
     """Data-constrained repeat schedule (Muennighoff et al. 2023,
     "Scaling Data-Constrained Language Models", arXiv:2305.16264 —
     repeating data up to ~4 epochs costs little): given a total token
     budget and a target mixture, how many EPOCHS of each source to
-    run. ``epochs_s = min(max_epochs, budget·target_s / tokens_s)``
+    run. ``epochs_s = min(REPEAT_MAX_EPOCHS, budget·target_s /
+    tokens_s)``
     (fractional epochs = a partial pass via the deterministic
     sampler); ``effective_tokens`` is what the schedule actually
     yields and ``shortfall`` what the epoch cap leaves unfilled — the
@@ -592,7 +601,7 @@ def repeat_schedule(df: DataFrame, source_col: str, text_col: str,
     )[F.col("source")]
     desired = tgt * F.lit(float(token_budget))
     epochs = F.least(
-        F.lit(float(max_epochs)),
+        F.lit(REPEAT_MAX_EPOCHS),
         rnd(desired / F.col("n_tokens").cast("double"), 8),
     )
     effective = rnd(epochs * F.col("n_tokens").cast("double"), 2)
@@ -768,8 +777,8 @@ def apply_mix_weights(df: DataFrame, source_col: str, id_col: str,
 
 
 def top_ngrams(df: DataFrame, text_col: str, id_col: str,
-               n: int = 5, k: int = 20) -> DataFrame:
-    """Most-repeated word ``n``-grams corpus-wide, with occurrence and
+               k: int = 20) -> DataFrame:
+    """Most-repeated word 5-grams corpus-wide, with occurrence and
     document counts — the memorization-risk / boilerplate report run
     before training (sequences repeated across many documents are the
     ones a model memorizes verbatim).
@@ -787,7 +796,7 @@ def top_ngrams(df: DataFrame, text_col: str, id_col: str,
     # short_fallback=False: a report of top n-GRAMS must not surface a
     # 2-word doc's whole text as a pseudo n-gram (the fallback exists
     # for dedup participation, not for this report)
-    grams = shingle_rows(df, text_col, id_col, n, distinct=False,
+    grams = shingle_rows(df, text_col, id_col, 5, distinct=False,
                          short_fallback=False)
     counts = grams.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("n_occurrences"),
@@ -1480,8 +1489,12 @@ def epoch_shuffle(df: DataFrame, id_col: str, epochs: int = 3,
     )
 
 
+# additive smoothing of source_divergence's unigram distributions
+SD_ALPHA = 0.5
+
+
 def source_divergence(df: DataFrame, text_col: str, source_col: str,
-                      vocab_size: int = 20, alpha: float = 0.5) -> DataFrame:
+                      vocab_size: int = 20) -> DataFrame:
     """Pairwise Jensen–Shannon divergence between per-source unigram
     distributions — the mixture-design diagnostic that tells a
     curation run WHICH sources actually differ (a near-zero pair is
@@ -1490,7 +1503,7 @@ def source_divergence(df: DataFrame, text_col: str, source_col: str,
     HOW MUCH of each source to take).
 
     Distributions live on the corpus top-``vocab_size`` vocabulary
-    (count DESC, word ASC ties — deterministic cut), add-``alpha``
+    (count DESC, word ASC ties — deterministic cut), add-``SD_ALPHA``
     smoothed so every probability is strictly positive; OOV mass is
     excluded by design (:func:`vocab_coverage` is the OOV audit). Per
     the unigram-LM determinism scheme, probabilities and each log
@@ -1528,8 +1541,8 @@ def source_divergence(df: DataFrame, text_col: str, source_col: str,
         "_s",
         "w",
         rnd(
-            (F.col("c") + F.lit(float(alpha)))
-            / (F.col("tot") + F.lit(float(alpha * vocab_size))),
+            (F.col("c") + F.lit(SD_ALPHA))
+            / (F.col("tot") + F.lit(float(SD_ALPHA * vocab_size))),
             8,
         ).alias("p"),
     )
@@ -1603,10 +1616,13 @@ def weighted_sample(df: DataFrame, id_col: str, strata_col: str,
     )
 
 
+# doremi_weights' step size η and uniform-smoothing weight c
+DOREMI_ETA, DOREMI_SMOOTH = 1.0, 0.1
+
+
 def doremi_weights(docs: DataFrame, id_col: str, source_col: str,
                    ref_lp: DataFrame, proxy_lp: DataFrame,
-                   iters: int = 5, eta: float = 1.0,
-                   smooth: float = 0.1) -> DataFrame:
+                   iters: int = 5) -> DataFrame:
     """DoReMi-style domain reweighting (Xie et al. 2023,
     arXiv:2305.10429): the ITERATIVE complement of the static q64/q93
     mixtures, closing the mixture tool chain (weights → schedule →
@@ -1631,7 +1647,7 @@ def doremi_weights(docs: DataFrame, id_col: str, source_col: str,
         w_s   ← rnd8((1−c)·α''_s + c/S)
 
     — renormalize then uniform-smooth with mixing weight ``c =
-    smooth``, exactly the paper's update with a STATIC excess loss
+    DOREMI_SMOOTH``, exactly the paper's update with a STATIC excess loss
     (the data-engine setting scores the corpus once; the paper
     re-trains the proxy per step, which is a training-loop concern,
     not a query-engine one). Every step rides the rnd ladder at 8
@@ -1680,14 +1696,14 @@ def doremi_weights(docs: DataFrame, id_col: str, source_col: str,
     srcs = [r[source_col] for r in rows]
     e = {r[source_col]: float(r["excess_loss"]) for r in rows}
     sf = float(len(srcs))
-    keep = 1.0 - smooth
-    m = {s: r8(math.exp(eta * e[s])) for s in srcs}
+    keep = 1.0 - DOREMI_SMOOTH
+    m = {s: r8(math.exp(DOREMI_ETA * e[s])) for s in srcs}
     w = {s: r8(1.0 / sf) for s in srcs}
     traj = [(s, 0, w[s]) for s in srcs]
     for t in range(1, iters + 1):
         u = {s: r8(w[s] * m[s]) for s in srcs}
         z = r8(sum(u[s] for s in srcs))
-        w = {s: r8(keep * r8(u[s] / z) + smooth / sf) for s in srcs}
+        w = {s: r8(keep * r8(u[s] / z) + DOREMI_SMOOTH / sf) for s in srcs}
         traj.extend((s, t, w[s]) for s in srcs)
     spark = docs.sparkSession
     tdf = spark.createDataFrame(
@@ -1700,11 +1716,14 @@ def doremi_weights(docs: DataFrame, id_col: str, source_col: str,
     return out
 
 
-def zipf_stats(df: DataFrame, text_col: str, id_col: str,
-               top_ranks: int = 500) -> DataFrame:
+# ranks zipf_stats fits
+ZIPF_TOP_RANKS = 500
+
+
+def zipf_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Corpus-level Zipf diagnostics in one row: vocabulary size,
     total token count, the head share, and a log-log OLS fit of
-    frequency against rank over the top ``top_ranks`` ranks. Natural
+    frequency against rank over the top ``ZIPF_TOP_RANKS`` ranks. Natural
     corpora fit ``slope ≈ −1`` (Zipf 1949); a pipeline that suddenly
     reads −0.5 (flattened head — boilerplate dedup gone wrong) or −2
     (template explosion — one page stamped millions of times) has a
@@ -1718,7 +1737,7 @@ def zipf_stats(df: DataFrame, text_col: str, id_col: str,
     form OLS moments are rounded again before the divide.
 
     Shape at scale: one token-count agg (token-keyed combinable
-    shuffle), a ``top_ranks``-row TakeOrdered (driver-bounded,
+    shuffle), a ``ZIPF_TOP_RANKS``-row TakeOrdered (driver-bounded,
     model-sized), and a single-row reduce over those rows. The
     corpus never moves; the vocabulary table never sorts globally —
     only the bounded head does.
@@ -1734,7 +1753,7 @@ def zipf_stats(df: DataFrame, text_col: str, id_col: str,
     )
     head = (
         cnts.orderBy(F.col("c").desc(), F.col("w").asc())
-        .limit(top_ranks)
+        .limit(ZIPF_TOP_RANKS)
         .select(
             "c",
             F.row_number()
@@ -1788,8 +1807,12 @@ def _ws_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def kn_bigram_logprob(df: DataFrame, text_col: str, id_col: str,
-                      discount: float = 0.75) -> DataFrame:
+# absolute discount of kn_bigram_logprob (Chen & Goodman's 0.75)
+KN_DISCOUNT = 0.75
+
+
+def kn_bigram_logprob(df: DataFrame, text_col: str,
+                      id_col: str) -> DataFrame:
     """Interpolated Kneser–Ney bigram scoring (Kneser & Ney 1995;
     Chen & Goodman 1999 eq. 4.25) — the third rung of the LM-quality
     ladder after q84's unigram MLE and q95's Stupid Backoff:
@@ -1845,7 +1868,7 @@ def kn_bigram_logprob(df: DataFrame, text_col: str, id_col: str,
         F.count(F.lit(1)).cast("double").alias("n1p_bwd")
     )
     btypes = bi.agg(F.count(F.lit(1)).cast("double").alias("bt"))
-    d = float(discount)
+    d = KN_DISCOUNT
     scored = (
         stream.join(bi, ["prev", "w"], "left")
         .join(ctx, "prev", "left")
@@ -1927,15 +1950,19 @@ def quantile_normalize(df: DataFrame, value_col: str, by: list[str],
     return out
 
 
+# corpus quantile of chunk perplexity above which chunk_ppl_cut cuts
+CPPL_Q = 0.9
+
+
 def chunk_ppl_cut(df: DataFrame, text_col: str, id_col: str,
-                  chunk_words: int = 16, vocab_size: int = 20,
-                  ppl_quantile: float = 0.9) -> DataFrame:
+                  chunk_words: int = 16,
+                  vocab_size: int = 20) -> DataFrame:
     """CCNet-style SUB-document perplexity filtering (Wenzek et al.
     2020 §4.3 score paragraphs, not documents): documents split into
     fixed ``chunk_words`` windows, each chunk scored by the corpus
     unigram LM (:func:`unigram_logprob`'s exact model — top-V vocab,
     pooled <unk> mass, 8-digit pre-rounded token log-probs), and
-    chunks whose perplexity lands above the corpus ``ppl_quantile``
+    chunks whose perplexity lands above the corpus ``CPPL_Q``
     are cut while the rest of the document survives — the quality
     twin of :func:`dedup.boilerplate_cut`'s df rule and the missing
     granularity between q70's whole-doc verdict and nothing (one
@@ -2016,7 +2043,7 @@ def chunk_ppl_cut(df: DataFrame, text_col: str, id_col: str,
         # ran twice per execution
         .cache()
     )
-    thr = percentiles(cppl, "ppl", [], probs=(ppl_quantile,))
+    thr = percentiles(cppl, "ppl", [], probs=(CPPL_Q,))
     thr_col = thr.columns[-1]
     verd = (
         cppl.crossJoin(F.broadcast(thr))
@@ -2388,9 +2415,12 @@ def coverage_curve(df: DataFrame, text_col: str, id_col: str,
     )
 
 
+# training phases of curriculum_order
+CURR_PHASES = 3
+
+
 def curriculum_order(df: DataFrame, text_col: str, id_col: str,
-                     source_col: str, phases: int = 3,
-                     num_shards: int = 8) -> DataFrame:
+                     source_col: str, num_shards: int = 8) -> DataFrame:
     """Curriculum data ordering (Bengio et al. 2009 applied to LLM
     curation): assign every document a training PHASE by its
     per-source quality percentile — cleanest third first, noisiest
@@ -2404,8 +2434,8 @@ def curriculum_order(df: DataFrame, text_col: str, id_col: str,
     mixed into the order key exactly like the epoch was).
 
     Phase boundary arithmetic runs on the ROUNDED percentile
-    (engine-stable); phase = floor((1 − pct) · phases) clamped to
-    phases−1, so percentile 1.0 (best) → phase 0.
+    (engine-stable); phase = floor((1 − pct) · CURR_PHASES) clamped
+    to CURR_PHASES−1, so percentile 1.0 (best) → phase 0.
 
     Shape at scale: the q129 source-keyed rank window + one
     (phase, shard)-keyed row_number window — the q113 shape with
@@ -2419,7 +2449,7 @@ def curriculum_order(df: DataFrame, text_col: str, id_col: str,
         df.select(id_col, source_col, text_col), text_col
     ).select(id_col, source_col, "quality")
     qn = quantile_normalize(scored, "quality", [source_col])
-    p = F.lit(int(phases))
+    p = F.lit(CURR_PHASES)
     phase = F.least(
         F.floor((F.lit(1.0) - F.col("pct_rank")) * p).cast("long"),
         (p - 1).cast("long"),
@@ -2446,9 +2476,12 @@ def curriculum_order(df: DataFrame, text_col: str, id_col: str,
     )
 
 
+# add-delta smoothing of moore_lewis' unigram models
+ML_DELTA = 0.5
+
+
 def moore_lewis(df: DataFrame, text_col: str, id_col: str,
-                in_domain_col: str, vocab_size: int = 20,
-                delta: float = 0.5) -> DataFrame:
+                in_domain_col: str, vocab_size: int = 20) -> DataFrame:
     """Cross-entropy difference selection (Moore & Lewis 2010,
     "Intelligent Selection of Language Model Training Data"): train
     one unigram LM on the in-domain slice and one on its complement,
@@ -2509,7 +2542,7 @@ def moore_lewis(df: DataFrame, text_col: str, id_col: str,
 
     v_in, u_in, t_in = model("c_in")
     v_gen, u_gen, t_gen = model("c_gen")
-    d = float(delta)
+    d = ML_DELTA
     vp1 = float(vocab_size + 1)
 
     def lp(c, cu, n):

@@ -21,16 +21,16 @@ melt = unpivot
 
 
 def pivot_wide(df: DataFrame, key_cols: list[str], pivot_col: str,
-               value_col: str, pivot_values: list[str],
-               agg: str = "avg") -> DataFrame:
-    """Long→wide. ``pivot_values`` is explicit, which removes the extra
-    distinct-values job Spark otherwise runs — at 100 TB that job is a
-    full scan. Implemented as conditional aggregation so the plan is a
-    single groupBy (identical semantics to ``.pivot`` with values)."""
-    agg_fn = getattr(F, agg)
+               value_col: str, pivot_values: list[str]) -> DataFrame:
+    """Long→wide: the average of ``value_col`` per key and pivot
+    value, rounded at 4 digits. ``pivot_values`` is explicit, which
+    removes the extra distinct-values job Spark otherwise runs — at
+    100 TB that job is a full scan. Implemented as conditional
+    aggregation so the plan is a single groupBy (identical semantics
+    to ``.pivot`` with values)."""
     aggs = [
         rnd(
-            agg_fn(F.when(F.col(pivot_col) == v, F.col(value_col))), 4
+            F.avg(F.when(F.col(pivot_col) == v, F.col(value_col))), 4
         ).alias(v)
         for v in pivot_values
     ]

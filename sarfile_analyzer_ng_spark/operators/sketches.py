@@ -20,12 +20,17 @@ from pyspark.sql import functions as F
 _MAX_SUMMARY_ROWS = 1_000_000
 
 
-def approx_distinct(df: DataFrame, col: str, by: list[str],
-                    rsd: float = 0.05) -> DataFrame:
+# HLL++ relative standard deviation of approx_distinct
+APPROX_DISTINCT_RSD = 0.05
+
+
+def approx_distinct(df: DataFrame, col: str, by: list[str]) -> DataFrame:
     """HLL++ distinct count per group: constant memory per group vs
-    countDistinct's exact-but-shuffled set. rsd = relative std dev."""
+    countDistinct's exact-but-shuffled set, relative std dev
+    ``APPROX_DISTINCT_RSD``."""
     return df.groupBy(*by).agg(
-        F.approx_count_distinct(col, rsd).alias(f"approx_distinct_{col}")
+        F.approx_count_distinct(col, APPROX_DISTINCT_RSD)
+        .alias(f"approx_distinct_{col}")
     )
 
 

@@ -30,11 +30,11 @@ _PARTIAL = {
 _MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 
 
-def salted_agg(df: DataFrame, keys: list[str], aggs: list[SaltedAgg],
-               num_salts: int = 16) -> DataFrame:
+def salted_agg(df: DataFrame, keys: list[str],
+               aggs: list[SaltedAgg]) -> DataFrame:
     """Two-stage skew-proof aggregation.
 
-    The hash of every non-key column spreads a hot key's rows over
+    The hash of every non-key column spreads a hot key's rows over 16
     shards. Stage 1 groups by (keys, salt) — each shard small; stage 2
     merges shards per key.
     """
@@ -43,7 +43,7 @@ def salted_agg(df: DataFrame, keys: list[str], aggs: list[SaltedAgg],
         raise ValueError(
             "salted_agg: no non-key columns to derive a salt from"
         )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(num_salts))
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(16))
     partial = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(
         *[_PARTIAL[kind](col).alias(alias) for kind, col, alias in aggs]
     )

@@ -221,10 +221,14 @@ def zscore_outliers(df: DataFrame, value_col: str, by: list[str],
     )
 
 
-def mad_outliers(df: DataFrame, value_col: str, by: list[str],
-                 threshold: float = 3.5) -> DataFrame:
+# modified z-score cut of mad_outliers (Iglewicz & Hoaglin's 3.5)
+MAD_TAU = 3.5
+
+
+def mad_outliers(df: DataFrame, value_col: str,
+                 by: list[str]) -> DataFrame:
     """Robust outliers by modified z-score (Iglewicz & Hoaglin 1993):
-    ``0.6745 · (v − median) / MAD`` with MAD = median absolute
+    ``|0.6745 · (v − median) / MAD| > MAD_TAU`` with MAD = median absolute
     deviation — the monitoring-grade complement of
     :func:`zscore_outliers`, whose mean/stddev are themselves dragged
     by the outliers they're hunting (one 100× CPU spike inflates σ
@@ -257,7 +261,7 @@ def mad_outliers(df: DataFrame, value_col: str, by: list[str],
         ),
     )
     out = scored.where(
-        (F.col("_mad") > 0) & (F.abs(F.col("robust_z")) > threshold)
+        (F.col("_mad") > 0) & (F.abs(F.col("robust_z")) > MAD_TAU)
     ).drop("_adev")
     caches = getattr(med, "_cached_inputs", []) + getattr(
         mad, "_cached_inputs", []
@@ -375,12 +379,18 @@ def ks_two_sample(a: DataFrame, b: DataFrame, value_col: str) -> DataFrame:
     )
 
 
-def winsorized_stats(df: DataFrame, value_col: str, by: list[str],
-                     lo: float = 0.05, hi: float = 0.95) -> DataFrame:
+# the percentiles winsorized_stats clamps at
+WINSOR_LO = 0.05
+WINSOR_HI = 0.95
+
+
+def winsorized_stats(df: DataFrame, value_col: str,
+                     by: list[str]) -> DataFrame:
     """Winsorized per-group moments: clamp values at the group's
-    exact (lo, hi) percentiles, then take mean/stddev — the robust
-    location/scale estimate that, unlike trimming or MAD (q140),
-    keeps every row's vote while bounding any single row's leverage
+    exact (``WINSOR_LO``, ``WINSOR_HI``) percentiles, then take
+    mean/stddev — the robust location/scale estimate that, unlike
+    trimming or MAD (q140), keeps every row's vote while bounding any
+    single row's leverage
     (a 10 GB pathological document moves the winsorized mean by one
     clamp width, not by its full length).
 
@@ -392,9 +402,9 @@ def winsorized_stats(df: DataFrame, value_col: str, by: list[str],
     round at 4 digits. The raw mean rides along for the
     "how much did the tail move me" delta.
     """
-    pct = percentiles(df, value_col, by, probs=(lo, hi))
-    lo_c = "p" + f"{lo * 100:g}".replace(".", "_")
-    hi_c = "p" + f"{hi * 100:g}".replace(".", "_")
+    pct = percentiles(df, value_col, by, probs=(WINSOR_LO, WINSOR_HI))
+    lo_c = "p" + f"{WINSOR_LO * 100:g}".replace(".", "_")
+    hi_c = "p" + f"{WINSOR_HI * 100:g}".replace(".", "_")
     j = df.select(*by, value_col).join(F.broadcast(pct), by)
     xw = F.least(
         F.greatest(F.col(value_col).cast("double"), F.col(lo_c)),

@@ -316,8 +316,12 @@ def overlay_align(df: DataFrame, ts_col: str, by: list[str]) -> DataFrame:
     )
 
 
+# |z| against the row's own (series, hour) baseline that flags it
+SEASON_Z_TAU = 3.0
+
+
 def seasonal_outliers(df: DataFrame, ts_col: str, value_col: str,
-                      by: list[str], threshold: float = 3.0) -> DataFrame:
+                      by: list[str]) -> DataFrame:
     """Hour-of-day seasonal anomaly detection — the server-metrics
     question the reference's charts answer by eye ("is this 3am CPU
     spike normal FOR 3am?"): a global z-score (stats.zscore_outliers)
@@ -332,7 +336,7 @@ def seasonal_outliers(df: DataFrame, ts_col: str, value_col: str,
     """
     return seasonal_score(
         df, seasonal_baseline(df, ts_col, value_col, by),
-        ts_col, value_col, by, threshold,
+        ts_col, value_col, by,
     )
 
 
@@ -349,10 +353,9 @@ def seasonal_baseline(df: DataFrame, ts_col: str, value_col: str,
 
 
 def seasonal_score(df: DataFrame, baseline: DataFrame, ts_col: str,
-                   value_col: str, by: list[str],
-                   threshold: float = 3.0) -> DataFrame:
+                   value_col: str, by: list[str]) -> DataFrame:
     """Score rows against a FROZEN seasonal baseline — a stateless
-    broadcast join + filter."""
+    broadcast join + filter keeping ``|z| > SEASON_Z_TAU``."""
     from functools import reduce as _reduce
     from operator import and_ as _and
 
@@ -373,16 +376,19 @@ def seasonal_score(df: DataFrame, baseline: DataFrame, ts_col: str,
     )
     z = (F.col(value_col) - F.col("_mean")) / F.col("_std")
     return (
-        joined.where(F.abs(z) > threshold)
+        joined.where(F.abs(z) > SEASON_Z_TAU)
         .withColumn("season_z", rnd(z, 4))
         .withColumn("hour", F.col("_hr").cast("long"))
         .drop("_mean", "_std", "_hr")
     )
 
 
+# ewma_smooth's smoothing factor α and truncation window W in samples
+EWMA_ALPHA, EWMA_WINDOW = 0.3, 16
+
+
 def ewma_smooth(df: DataFrame, ts_col: str, value_col: str, by: list[str],
-                order_tiebreak: list[str] | None = None,
-                alpha: float = 0.3, window: int = 16) -> DataFrame:
+                order_tiebreak: list[str] | None = None) -> DataFrame:
     """Truncated exponentially-weighted moving average + one-step-ahead
     forecast per series — the EWMA control chart (Roberts 1959; NIST
     §6.3.2.4) the sar world uses for "is THIS sample off its recent
@@ -419,9 +425,10 @@ def ewma_smooth(df: DataFrame, ts_col: str, value_col: str, by: list[str],
     )
     # one extra lag so the forecast's re-anchored ladder spans the
     # SAME W samples as the previous row's ewma: forecast_t == ewma_{t-1}
-    lag_chain = [F.lag(value_col, j).over(w) for j in range(1, window + 1)]
-    lags = [F.col(value_col)] + lag_chain[: window - 1]
-    wts = [(1.0 - alpha) ** j for j in range(window)]
+    lag_chain = [F.lag(value_col, j).over(w)
+                 for j in range(1, EWMA_WINDOW + 1)]
+    lags = [F.col(value_col)] + lag_chain[: EWMA_WINDOW - 1]
+    wts = [(1.0 - EWMA_ALPHA) ** j for j in range(EWMA_WINDOW)]
 
     def wmean(terms):
         num = sum(
@@ -515,12 +522,16 @@ def trend_fit(df: DataFrame, ts_col: str, value_col: str,
     )
 
 
+# shortest run threshold_runs keeps, in samples
+RUN_MIN = 3
+
+
 def threshold_runs(df: DataFrame, ts_col: str, value_col: str,
-                   by: list[str], threshold: float, min_run: int = 3,
+                   by: list[str], threshold: float,
                    tiebreak: str | None = None) -> DataFrame:
     """Sustained-saturation detection: maximal runs of CONSECUTIVE
     samples above ``threshold`` per series, keeping runs of ≥
-    ``min_run`` samples — "the disk was pegged for 40 straight
+    ``RUN_MIN`` samples — "the disk was pegged for 40 straight
     minutes", which a point filter (q20-style) can't distinguish from
     40 scattered spikes. The classic gaps-and-islands shape: island
     id = global row_number − row_number among hot rows (both over the
@@ -545,15 +556,18 @@ def threshold_runs(df: DataFrame, ts_col: str, value_col: str,
             F.count(F.lit(1)).cast("long").alias("n_samples"),
             F.max(value_col).alias("peak_value"),
         )
-        .where(F.col("n_samples") >= min_run)
+        .where(F.col("n_samples") >= RUN_MIN)
         .drop("_grp")
     )
     return runs
 
 
+# cusum_alarms' slack and alarm threshold, in series σ
+CUSUM_SLACK, CUSUM_H = 0.5, 4.0
+
+
 def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
-                 by: list[str], slack_sigmas: float = 0.5,
-                 h_sigmas: float = 4.0,
+                 by: list[str],
                  tiebreak: str | None = None) -> DataFrame:
     """One-sided CUSUM drift detection (Page 1954): alarm when the
     cumulative excess over ``mean + slack·σ`` exceeds ``h·σ`` — the
@@ -584,7 +598,7 @@ def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
     )
     dev = rnd(
         F.col(value_col) - F.col("_mu")
-        - F.lit(float(slack_sigmas)) * F.col("_sd"),
+        - F.lit(CUSUM_SLACK) * F.col("_sd"),
         8,
     )
     cummed = (
@@ -604,7 +618,7 @@ def cusum_alarms(df: DataFrame, ts_col: str, value_col: str,
         ),
     )
     return scored.where(
-        F.col("cusum") > rnd(F.lit(float(h_sigmas)) * F.col("_sd"),
+        F.col("cusum") > rnd(F.lit(CUSUM_H) * F.col("_sd"),
                              4)
     ).drop("_mu", "_sd", "_cum")
 
@@ -787,13 +801,17 @@ def interval_join(points: DataFrame, intervals: DataFrame,
     )
 
 
+# bucket width of burst_intervals: one hour
+BURST_BUCKET_SECONDS = 3600
+
+
 def burst_intervals(df: DataFrame, ts_col: str,
-                    bucket_seconds: int = 3600,
                     min_count: int = 4) -> DataFrame:
     """Hot-bucket burst windows from an event stream: bucket the
-    stream (one combinable count agg — the only corpus-sized pass),
-    keep buckets with ≥ ``min_count`` events, and merge CONTIGUOUS
-    hot buckets into intervals via gaps-and-islands over the BUCKET
+    stream into ``BURST_BUCKET_SECONDS`` buckets (one combinable count
+    agg — the only corpus-sized pass), keep buckets with
+    ≥ ``min_count`` events, and merge CONTIGUOUS hot buckets into
+    intervals via gaps-and-islands over the BUCKET
     frame (bounded by the time range, never by event volume — windows
     here are safe at any corpus size). Interval endpoints are the
     actual first/last event timestamps inside the island, not bucket
@@ -801,7 +819,7 @@ def burst_intervals(df: DataFrame, ts_col: str,
 
     Returns (burst_start, burst_end, n_events, n_buckets).
     """
-    b = int(bucket_seconds)
+    b = BURST_BUCKET_SECONDS
     hot = (
         df.groupBy(
             # floor (not cast) for negative-epoch parity with the

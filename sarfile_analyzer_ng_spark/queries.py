@@ -21,6 +21,8 @@ from .util import (MEMO_BUILDERS, fan_out, rnd, session_memo, shard_hash,
                    sql_rnd)
 from .functions import dedup as D
 from .functions import similarity as S
+from .functions.retrieval import MMR_K, RRF_K
+from .functions.similarity import ANN_K
 from .functions import text as TX
 from .functions import html as H
 from .functions import markdown as MD
@@ -37,8 +39,6 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 COSINE_DUP_TAU = 0.4
 ZSCORE_TAU = 3.0
 GAP_SECONDS = 14400
-JACCARD_TAU = 0.5
-ANN_K = 5
 ANN_NUM_QUERIES = 10
 
 
@@ -536,7 +536,6 @@ def q27_salted_agg(spark, sf_dir):
         ev, ["event_type"],
         [("sum", "value", "_s"), ("count", "value", "cnt"),
          ("min", "value", "_mn"), ("max", "value", "_mx")],
-        num_salts=16,
     )
     return merged.select(
         "event_type",
@@ -733,7 +732,6 @@ SELECT doc_id, md5(text) AS md5 FROM (
 # generator, where the tighter 4-row bands keep the verify join
 # small.
 MINHASH_PORT_HASHES = 32
-MINHASH_PORT_BANDS = 16
 # r9: hot-band cap (the q67/Z72 convention, closing the last uncapped
 # band join — VERDICT r8 "What's wrong" #2). Inert at every gate
 # scale (measured max band df: 8 at sf0.001, 6 at sf0.01, 24 at
@@ -762,7 +760,7 @@ def _minhash_pairs_shared(spark, sf_dir) -> DataFrame:
     corpus = _planted_corpus(spark, sf_dir)
     return D.minhash_lsh_pairs_portable(
         corpus, "text", "doc_id",
-        num_hashes=MINHASH_PORT_HASHES, bands=MINHASH_PORT_BANDS,
+        num_hashes=MINHASH_PORT_HASHES,
         max_df=MINHASH_MAX_DF,
         sigs=_minhash_sigs_shared(spark, sf_dir),
     ).cache()
@@ -785,7 +783,7 @@ def _sql_minhash_portable_pairs(threshold: str) -> str:
     corpus: same shingles, same md5 fingerprints, same affine mins,
     same band keys, same matching-fraction estimate."""
     params = D.affine_params(MINHASH_PORT_HASHES)
-    rows = MINHASH_PORT_HASHES // MINHASH_PORT_BANDS
+    rows = MINHASH_PORT_HASHES // D.MINHASH_PORT_BANDS
     hcols = ",\n         ".join(
         f"min((fp * {a} + {b}) % {D.PORTABLE_P})::BIGINT AS h{i}"
         for i, (a, b) in enumerate(params)
@@ -793,7 +791,7 @@ def _sql_minhash_portable_pairs(threshold: str) -> str:
     band_exprs = ", ".join(
         "'" + str(b) + "_' || "
         + " || '_' || ".join(f"h{b * rows + r}" for r in range(rows))
-        for b in range(MINHASH_PORT_BANDS)
+        for b in range(D.MINHASH_PORT_BANDS)
     )
     match_sum = " + ".join(
         f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END"
@@ -950,7 +948,7 @@ inter AS (
 SELECT doc_a, doc_b, inter,
        {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} AS jaccard
 FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
-WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {JACCARD_TAU}
+WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {D.JACCARD_TAU}
 """
 
 
@@ -964,14 +962,14 @@ def _shingles_shared(spark, sf_dir) -> DataFrame:
     family (q33 via the pair memo, the max_df variant q67) — the
     shingle explode is the family's dominant shared cost."""
     corpus = _planted_corpus(spark, sf_dir)
-    return D.shingle_hash_rows(corpus, "text", "doc_id", shingle_n=3).cache()
+    return D.shingle_hash_rows(corpus, "text", "doc_id").cache()
 
 
 @session_memo("_memo_jaccard_pairs")
 def _jaccard_pairs_shared(spark, sf_dir) -> DataFrame:
     corpus = _planted_corpus(spark, sf_dir)
     return D.ngram_jaccard_pairs(
-        corpus, "text", "doc_id", shingle_n=3, threshold=JACCARD_TAU,
+        corpus, "text", "doc_id", threshold=D.JACCARD_TAU,
         shingles=_shingles_shared(spark, sf_dir),
     ).cache()
 
@@ -1009,7 +1007,7 @@ pairs AS (
   SELECT doc_a, doc_b,
          {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} AS jaccard
   FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
-  WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {JACCARD_TAU})
+  WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {D.JACCARD_TAU})
 """
 
 
@@ -1116,9 +1114,6 @@ FROM corpus LEFT JOIN member m ON corpus.doc_id = m.doc_id
 """
 
 
-PR_ITERS, PR_DAMPING = 3, 0.85
-
-
 def q158_dup_pagerank(spark, sf_dir):
     """PageRank over the near-dup pair graph (functions/dedup.py:
     pair_pagerank, r9): which documents are template HUBS — tied to
@@ -1131,14 +1126,14 @@ def q158_dup_pagerank(spark, sf_dir):
     broadcast one-row frame, no driver collect. Fully value-hash
     oracled."""
     pairs = _jaccard_pairs_shared(spark, sf_dir)
-    return D.pair_pagerank(pairs, iters=PR_ITERS, damping=PR_DAMPING)
+    return D.pair_pagerank(pairs)
 
 
 def _sql_pagerank() -> str:
-    d = repr(float(PR_DAMPING))
+    d = repr(float(D.PR_DAMPING))
     steps = []
     prev = "p0"
-    for i in range(1, PR_ITERS + 1):
+    for i in range(1, D.PR_ITERS + 1):
         steps.append(f"""c{i} AS (
   SELECT e.dst AS doc_id,
          {sql_rnd(f"sum({sql_rnd(f'p.pr / d.outdeg', 8)})", 8)} AS inw
@@ -1182,8 +1177,8 @@ def q67_jaccard_maxdf(spark, sf_dir):
     document-frequency cap exactly, driver-checking the contract that
     dedup.py:222-236 previously only documented."""
     corpus = _planted_corpus(spark, sf_dir)
-    return D.ngram_jaccard_pairs(corpus, "text", "doc_id", shingle_n=3,
-                                 threshold=JACCARD_TAU,
+    return D.ngram_jaccard_pairs(corpus, "text", "doc_id",
+                                 threshold=D.JACCARD_TAU,
                                  max_df=JACCARD_MAX_DF,
                                  shingles=_shingles_shared(spark, sf_dir))
 
@@ -1213,7 +1208,7 @@ inter AS (
 SELECT doc_a, doc_b, inter,
        {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} AS jaccard
 FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
-WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {JACCARD_TAU}
+WHERE {sql_rnd('inter::DOUBLE / (sa.sz + sb.sz - inter)', 4)} >= {D.JACCARD_TAU}
 """
 
 
@@ -1228,8 +1223,7 @@ def q56_lsh_jaccard(spark, sf_dir):
     deterministic fixed-seed hashes) reproduces the exact pair set —
     verified equal at sf0.001 and sf0.01."""
     corpus = _planted_corpus(spark, sf_dir)
-    return D.lsh_jaccard_pairs(corpus, "text", "doc_id", shingle_n=3,
-                               threshold=JACCARD_TAU,
+    return D.lsh_jaccard_pairs(corpus, "text", "doc_id",
                                shingles=_shingles_shared(spark, sf_dir),
                                candidates=_minhash_pairs_shared(spark, sf_dir))
 
@@ -1290,10 +1284,6 @@ FROM sel GROUP BY 1, 2
 """
 
 
-WINNOW_K = 3
-WINNOW_W = 4
-
-
 def q79_winnow_fingerprints(spark, sf_dir):
     """Per-document winnowing fingerprint stats (MOSS positional
     fingerprinting — functions/dedup.py:winnow_fingerprints): gram
@@ -1301,12 +1291,11 @@ def q79_winnow_fingerprints(spark, sf_dir):
     md5-derived hashes make this the dedup-family member whose VALUES
     are fully cross-engine (minhash/simhash are rows-only)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    fps = D.winnow_fingerprints(docs, "text", "doc_id",
-                                k=WINNOW_K, window=WINNOW_W)
+    fps = D.winnow_fingerprints(docs, "text", "doc_id")
     grams = (
         docs.select(
             "doc_id",
-            (F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) - (WINNOW_K - 1))
+            (F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) - (D.WINNOW_K - 1))
             .cast("long")
             .alias("n_grams"),
         )
@@ -1335,24 +1324,24 @@ def _sql_winnow(corpus: str, out: str) -> str:
   FROM {corpus}),
 {out}_g AS (
   SELECT doc, i - 1 AS pos,
-         CAST(('0x' || substr(md5(array_to_string(w[i:i+{WINNOW_K - 1}], ' ')), 1, 8)) AS BIGINT) AS h
-  FROM (SELECT doc, w, unnest(range(1, len(w) - {WINNOW_K - 2})) AS i
+         CAST(('0x' || substr(md5(array_to_string(w[i:i+{D.WINNOW_K - 1}], ' ')), 1, 8)) AS BIGINT) AS h
+  FROM (SELECT doc, w, unnest(range(1, len(w) - {D.WINNOW_K - 2})) AS i
         FROM {out}_v)),
 {out}_w AS (
   SELECT doc,
          min(h) OVER (PARTITION BY doc ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp,
+                      ROWS BETWEEN CURRENT ROW AND {D.WINNOW_W - 1} FOLLOWING) AS fp,
          row_number() OVER (PARTITION BY doc ORDER BY pos) AS rk,
          count(*) OVER (PARTITION BY doc) AS n
   FROM {out}_g),
 {out} AS (
-  SELECT DISTINCT doc, fp FROM {out}_w WHERE rk <= n - {WINNOW_W - 1})"""
+  SELECT DISTINCT doc, fp FROM {out}_w WHERE rk <= n - {D.WINNOW_W - 1})"""
 
 
 SQL_Q79 = f"""
 WITH {_sql_winnow('documents', 'fps')},
 grams AS (
-  SELECT doc_id, (len(string_split_regex(lower(trim(text)), '\\s+')) - {WINNOW_K - 1})::BIGINT AS n_grams
+  SELECT doc_id, (len(string_split_regex(lower(trim(text)), '\\s+')) - {D.WINNOW_K - 1})::BIGINT AS n_grams
   FROM documents),
 agg AS (
   SELECT doc, count(*)::BIGINT AS n_fp, min(fp) AS fp_min, max(fp) AS fp_max
@@ -1370,8 +1359,7 @@ def q80_winnow_twin_overlap(spark, sf_dir):
     suffix only perturbs the final windows, so the overlap fraction
     stays near 1 while distinct documents share almost nothing."""
     corpus = _planted_corpus(spark, sf_dir)
-    fps = D.winnow_fingerprints(corpus, "text", "doc_id",
-                                k=WINNOW_K, window=WINNOW_W)
+    fps = D.winnow_fingerprints(corpus, "text", "doc_id")
     base = fps.where(F.col("doc") < PLANT_OFFSET).select(
         F.col("doc").alias("doc_id"), F.col("fp")
     )
@@ -1430,8 +1418,7 @@ def q81_decontaminate_winnow(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = docs.where(F.col("doc_id") % 50 == 0)
     tr = docs.where(F.col("doc_id") % 50 != 0)
-    return D.decontaminate_winnow(tr, ev, "text", "doc_id",
-                                  k=WINNOW_K, window=WINNOW_W)
+    return D.decontaminate_winnow(tr, ev, "text", "doc_id")
 
 
 SQL_Q81 = f"""
@@ -1943,7 +1930,6 @@ WHERE rank <= {ANN_K}
 
 
 KMEANS_K = 8
-KMEANS_ITERS = 2
 EMB_DIM = 64
 
 
@@ -1952,7 +1938,7 @@ EMB_DIM = 64
 # top-terms), q146 (prototype prune), q151 (silhouette — centroids
 # only, it ranks top-2 itself), and the portable IVF route q142/q194
 # (ann_topk_ivf_portable calls kmeans_centroids with the IDENTICAL
-# (k=8, iters=2, rnd4/rnd6) arguments). Before r12 each consumer
+# (k=8, 2 iterations, rnd4/rnd6) arguments). Before r12 each consumer
 # re-ran the full iterative Lloyd chain (guide §1.2: don't compute
 # things you throw away). Bounded state: k rows × dim doubles for the
 # centroids, (id, cluster, cos) per vector for the assignment.
@@ -1969,11 +1955,9 @@ def _kmeans_shared(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
     # plan reads the checkpoint directly and every later consumer
     # reads the cached k rows.
     cent = S.kmeans_centroids(emb, "vec_id", "embedding",
-                              k=KMEANS_K,
-                              iters=KMEANS_ITERS).localCheckpoint()
+                              k=KMEANS_K).localCheckpoint()
     assign = S.kmeans_lloyd_exact(emb, "vec_id", "embedding",
-                                  k=KMEANS_K, iters=KMEANS_ITERS,
-                                  centroids=cent).cache()
+                                  k=KMEANS_K, centroids=cent).cache()
     return cent.cache(), assign
 
 
@@ -2095,8 +2079,7 @@ def q151_cluster_silhouette(spark, sf_dir):
     scoring (the q72 assignment shape), never pairwise. Fully
     value-hash oracled via the unrolled k-means CTE chain."""
     emb = _t(spark, sf_dir, "embeddings")
-    return S.cluster_silhouette(emb, "vec_id", "embedding",
-                                k=KMEANS_K, iters=KMEANS_ITERS,
+    return S.cluster_silhouette(emb, "vec_id", "embedding", k=KMEANS_K,
                                 centroids=_kmeans_shared(spark, sf_dir)[0])
 
 
@@ -2225,10 +2208,7 @@ def q82_semdedup(spark, sf_dir):
     twins that cross a cluster boundary (co-location is the paper's
     known recall limit) stay kept in BOTH engines."""
     corpus = _planted_emb(spark, sf_dir)
-    return S.semdedup(
-        corpus, "vec_id", "e",
-        tau=SEMDEDUP_TAU, k=KMEANS_K, iters=KMEANS_ITERS,
-    )
+    return S.semdedup(corpus, "vec_id", "e", tau=SEMDEDUP_TAU)
 
 
 _SQL_SEMDEDUP_PAIR_COS = sql_rnd(
@@ -2250,7 +2230,7 @@ v AS (
   FROM base),
 cent0 AS (
   SELECT (row_number() OVER (ORDER BY vec_id) - 1) AS cluster, e AS c
-  FROM v ORDER BY vec_id LIMIT {KMEANS_K}),
+  FROM v ORDER BY vec_id LIMIT {S.SEMDEDUP_K}),
 {_sql_kmeans_assign('cent0', 'a1')},
 {_sql_kmeans_update('a1', 'cent0', 'cent1')},
 {_sql_kmeans_assign('cent1', 'a2')},
@@ -2272,7 +2252,7 @@ def q75_quantize_embeddings(spark, sf_dir):
     comma string so the row is hash-comparable; scale/zero carried for
     local dequantization."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = S.quantize_embeddings(emb, "vec_id", "embedding", bits=8)
+    q = S.quantize_embeddings(emb, "vec_id", "embedding")
     return q.select(
         "vec_id",
         F.concat_ws(
@@ -2289,7 +2269,7 @@ WITH v AS (
   FROM embeddings),
 m AS (
   SELECT vec_id, e, list_min(e) AS vmin, list_max(e) AS vmax,
-         (list_max(e) - list_min(e)) / 255.0 AS scale
+         (list_max(e) - list_min(e)) / {S.QUANT_LEVELS}.0 AS scale
   FROM v)
 SELECT vec_id,
        CASE WHEN vmax = vmin
@@ -2392,7 +2372,7 @@ WITH v AS (
   FROM embeddings),
 m AS (
   SELECT vec_id, e, list_min(e) AS vmin, list_max(e) AS vmax,
-         (list_max(e) - list_min(e)) / 255.0 AS scale
+         (list_max(e) - list_min(e)) / {S.QUANT_LEVELS}.0 AS scale
   FROM v),
 dq AS (
   SELECT vec_id,
@@ -3071,7 +3051,7 @@ def q62_decontaminate(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = docs.where(F.col("doc_id") % 50 == 0)
     tr = docs.where(F.col("doc_id") % 50 != 0)
-    return D.decontaminate(tr, ev, "text", "doc_id", shingle_n=3)
+    return D.decontaminate(tr, ev, "text", "doc_id")
 
 
 SQL_Q62 = r"""
@@ -3100,7 +3080,7 @@ def q92_eval_containment(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = docs.where(F.col("doc_id") % 50 == 0)
     tr = docs.where(F.col("doc_id") % 50 != 0)
-    return D.eval_containment(tr, ev, "text", "doc_id", shingle_n=3)
+    return D.eval_containment(tr, ev, "text", "doc_id")
 
 
 SQL_Q92 = fr"""
@@ -3129,7 +3109,7 @@ def q63_tfidf_topterms(spark, sf_dir):
     training mix). Rank key is the ROUNDED score (desc) then term
     (asc), so ordering is reproducible across engines."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return TX.tfidf_top_terms(docs, "text", "doc_id", k=3)
+    return TX.tfidf_top_terms(docs, "text", "doc_id")
 
 
 SQL_Q63 = rf"""
@@ -3150,7 +3130,7 @@ ranked AS (
                                ORDER BY score DESC, term ASC) AS rank
   FROM scored)
 SELECT doc_id, term, tf, score, rank::BIGINT AS rank
-FROM ranked WHERE rank <= 3
+FROM ranked WHERE rank <= {TX.TFIDF_TOP_K}
 """
 
 
@@ -3237,7 +3217,7 @@ def q65_top_ngrams(spark, sf_dir):
     """Corpus-wide most-repeated 5-grams with occurrence and document
     counts — the memorization-risk report run before training."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return TX.top_ngrams(docs, "text", "doc_id", n=5, k=20)
+    return TX.top_ngrams(docs, "text", "doc_id", k=20)
 
 
 SQL_Q65 = r"""
@@ -4122,7 +4102,6 @@ FROM per_doc GROUP BY source, pred_lang
 
 
 REPEAT_BUDGET = 20_000
-REPEAT_MAX_EPOCHS = 4.0
 
 
 def q102_repeat_schedule(spark, sf_dir):
@@ -4136,7 +4115,7 @@ def q102_repeat_schedule(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("source", "text")
     return TX.repeat_schedule(
         docs, "source", "text", MIX_TARGETS,
-        token_budget=REPEAT_BUDGET, max_epochs=REPEAT_MAX_EPOCHS,
+        token_budget=REPEAT_BUDGET,
     )
 
 
@@ -4153,7 +4132,7 @@ tgt(source, target_share) AS (
 j AS (
   SELECT p.source, n_docs, n_tokens, target_share,
          target_share * {REPEAT_BUDGET}.0 AS desired,
-         least({REPEAT_MAX_EPOCHS},
+         least({TX.REPEAT_MAX_EPOCHS},
                {sql_rnd(f'(target_share * {REPEAT_BUDGET}.0)'
                         ' / n_tokens::DOUBLE', 8)}) AS epochs
   FROM per p JOIN tgt USING (source)),
@@ -4266,7 +4245,7 @@ FROM q
 
 
 
-RS_K, RS_MIN_TOKENS = 8, 16
+RS_K = 8
 
 # One duplicated-positional-gram frame serves BOTH span detectors
 # (q106 report, q107 apply) — identical corpus, identical k, identical
@@ -4286,7 +4265,7 @@ def q106_repeated_spans(spark, sf_dir):
     corpus, per document, with its start position and spread."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return D.repeated_spans(docs, "text", "doc_id",
-                            k=RS_K, min_tokens=RS_MIN_TOKENS,
+                            k=RS_K, min_tokens=D.RS_MIN_TOKENS,
                             dup=_span_dup_shared(spark, sf_dir))
 
 
@@ -4316,7 +4295,7 @@ SELECT doc AS doc_id, min(pos)::BIGINT AS span_start,
        (max(pos) - min(pos) + {RS_K})::BIGINT AS span_tokens,
        max(n_occ)::BIGINT AS max_occ
 FROM spans GROUP BY doc, run
-HAVING max(pos) - min(pos) + {RS_K} >= {RS_MIN_TOKENS}
+HAVING max(pos) - min(pos) + {RS_K} >= {D.RS_MIN_TOKENS}
 """
 
 
@@ -4330,8 +4309,7 @@ def q107_span_dedup_apply(spark, sf_dir):
     returning the rewritten text with audit counts (Lee et al. 2022
     "cut the duplicated bytes"), value-hash oracled on the text."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return D.repeated_spans_cut(docs, "text", "doc_id",
-                                k=RS_K, min_tokens=RS_MIN_TOKENS,
+    return D.repeated_spans_cut(docs, "text", "doc_id", k=RS_K,
                                 dup=_span_dup_shared(spark, sf_dir))
 
 
@@ -4364,7 +4342,7 @@ spans AS (
          max(pos) - min(pos) + {RS_K} AS span_tokens,
          min_by(h, pos) AS h_start
   FROM srows GROUP BY doc, run
-  HAVING max(pos) - min(pos) + {RS_K} >= {RS_MIN_TOKENS}),
+  HAVING max(pos) - min(pos) + {RS_K} >= {D.RS_MIN_TOKENS}),
 keep AS (
   SELECT h_start,
          min(struct_pack(doc := doc, span_start := span_start)) AS kp
@@ -4420,7 +4398,7 @@ def q122_decontaminate_spans(spark, sf_dir):
     )
     train = clean.unionByName(leaked)
     return D.decontaminate_spans(train, ev, "text", "doc_id",
-                                 k=RS_K, min_tokens=RS_MIN_TOKENS)
+                                 k=RS_K, min_tokens=D.RS_MIN_TOKENS)
 
 
 SQL_Q122 = rf"""
@@ -4466,7 +4444,7 @@ srows AS (
 cut AS (
   SELECT doc, min(pos) AS cut_start, max(pos) + {RS_K} AS cut_end
   FROM srows GROUP BY doc, run
-  HAVING max(pos) + {RS_K} - min(pos) >= {RS_MIN_TOKENS}),
+  HAVING max(pos) + {RS_K} - min(pos) >= {D.RS_MIN_TOKENS}),
 toks AS (
   SELECT doc, i - 1 AS pos, wo[i] AS w
   FROM (SELECT doc, wo, unnest(range(1, len(wo) + 1)) AS i FROM v)),
@@ -4786,9 +4764,6 @@ FROM documents d LEFT JOIN per ON per.doc = d.doc_id
 """
 
 
-EDIT_SIM_TAU = 0.8  # observed gap at the gates: background ≤0.45, dups ≥0.93
-
-
 def q111_edit_dup_pairs(spark, sf_dir):
     """Character-level near-dup pairs (functions/dedup.py:
     edit_dup_pairs): MinHash-LSH banded candidates verified with EXACT
@@ -4802,7 +4777,7 @@ def q111_edit_dup_pairs(spark, sf_dir):
     surviving pair sharing nearly all shingles, so equality holds by
     margin, not by construction."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return D.edit_dup_pairs(docs, "text", "doc_id", tau=EDIT_SIM_TAU)
+    return D.edit_dup_pairs(docs, "text", "doc_id")
 
 
 _EDIT_SIM_EXPR = (
@@ -4815,7 +4790,7 @@ WITH d AS (SELECT doc_id, text FROM documents)
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        {sql_rnd(_EDIT_SIM_EXPR, 4)} AS edit_sim
 FROM d a JOIN d b ON a.doc_id < b.doc_id
-WHERE {sql_rnd(_EDIT_SIM_EXPR, 4)} >= {EDIT_SIM_TAU}
+WHERE {sql_rnd(_EDIT_SIM_EXPR, 4)} >= {D.EDIT_SIM_TAU}
 """
 
 
@@ -4826,8 +4801,7 @@ def q115_seasonal_outliers(spark, sf_dir):
     q20's global z-score, the question the reference's daily charts
     answer by eye."""
     ev = _t(spark, sf_dir, "events")
-    out = TS.seasonal_outliers(ev, "ts", "value", ["event_type"],
-                               threshold=ZSCORE_TAU)
+    out = TS.seasonal_outliers(ev, "ts", "value", ["event_type"])
     return out.select("event_id", "event_type", "hour", "value",
                       "season_z")
 
@@ -4840,7 +4814,7 @@ WITH s AS (
 SELECT event_id, event_type, hr::BIGINT AS hour, value,
        {sql_rnd('(value - m) / sd', 4)} AS season_z
 FROM events JOIN s ON event_type = et AND extract(hour FROM ts) = hr
-WHERE abs((value - m) / sd) > {ZSCORE_TAU}
+WHERE abs((value - m) / sd) > {TS.SEASON_Z_TAU}
 """
 
 
@@ -4916,7 +4890,7 @@ FROM k
 """
 
 
-SD_V, SD_ALPHA = 20, 0.5
+SD_V = 20
 
 
 def q114_source_divergence(spark, sf_dir):
@@ -4926,7 +4900,7 @@ def q114_source_divergence(spark, sf_dir):
     how-much weights."""
     docs = _t(spark, sf_dir, "documents").select("source", "text")
     return TX.source_divergence(docs, "text", "source",
-                                vocab_size=SD_V, alpha=SD_ALPHA)
+                                vocab_size=SD_V)
 
 
 SQL_Q114 = rf"""
@@ -4945,7 +4919,7 @@ vc AS (SELECT grid.s, grid.w, coalesce(cnts.c, 0.0) AS c
 iv AS (SELECT s, sum(c) AS tot FROM vc GROUP BY s),
 probs AS (
   SELECT vc.s, vc.w,
-         {sql_rnd(f'(vc.c + {SD_ALPHA}) / (iv.tot + {SD_ALPHA * SD_V})', 8)}
+         {sql_rnd(f'(vc.c + {TX.SD_ALPHA}) / (iv.tot + {TX.SD_ALPHA * SD_V})', 8)}
            AS p
   FROM vc JOIN iv USING (s))
 SELECT a.s AS source_a, b.s AS source_b,
@@ -5078,9 +5052,6 @@ FROM feat f, w{QC_ITERS} w""")
 SQL_Q104 = _sql_logreg()
 
 
-CAL_BINS = 10
-
-
 def q120_classifier_calibration(spark, sf_dir):
     """Classifier reliability table (functions/classify.py:
     calibration_report, r8): the q104 classifier's predictions
@@ -5095,13 +5066,14 @@ def q120_classifier_calibration(spark, sf_dir):
     full-batch GD)."""
     from .functions import classify as C
 
-    return C.calibration_report(_qc_scored_shared(spark, sf_dir),
-                                bins=CAL_BINS)
+    return C.calibration_report(_qc_scored_shared(spark, sf_dir))
 
 
 def _sql_calibration() -> str:
     """q104's unrolled gradient chain, final SELECT swapped for the
     fixed-width-bin reliability aggregation."""
+    from .functions.classify import CAL_BINS
+
     base = _sql_logreg()
     head = base[: base.rindex("\nSELECT")]
     z = ("w.w0 * 1.0 + w.w1 * f.x1 + "
@@ -5173,7 +5145,7 @@ def q121_incremental_near_dups(spark, sf_dir):
         rev, "text", "doc_id", num_hashes=MINHASH_PORT_HASHES)
     return D.incremental_near_dups(
         batch, docs, "text", "doc_id",
-        num_hashes=MINHASH_PORT_HASHES, bands=MINHASH_PORT_BANDS,
+        num_hashes=MINHASH_PORT_HASHES,
         max_df=MINHASH_MAX_DF,
         sig_batch=sig_rev.unionByName(sig_app), sig_ref=sig_ref,
     )
@@ -5183,7 +5155,7 @@ def _sql_portable_side(side: str, corpus_cte: str) -> str:
     """Per-side shingle→fp→signature→band CTE chain of the portable
     MinHash family (the q31 machinery, parameterized by side)."""
     params = D.affine_params(MINHASH_PORT_HASHES)
-    rows = MINHASH_PORT_HASHES // MINHASH_PORT_BANDS
+    rows = MINHASH_PORT_HASHES // D.MINHASH_PORT_BANDS
     hcols = ",\n         ".join(
         f"min((fp * {a} + {b}) % {D.PORTABLE_P})::BIGINT AS h{i}"
         for i, (a, b) in enumerate(params)
@@ -5191,7 +5163,7 @@ def _sql_portable_side(side: str, corpus_cte: str) -> str:
     band_exprs = ", ".join(
         "'" + str(b) + "_' || "
         + " || '_' || ".join(f"h{b * rows + r}" for r in range(rows))
-        for b in range(MINHASH_PORT_BANDS)
+        for b in range(D.MINHASH_PORT_BANDS)
     )
     hlist = ", ".join(f"h{i}" for i in range(MINHASH_PORT_HASHES))
     return f"""
@@ -5478,7 +5450,7 @@ FROM addr GROUP BY source
 SQL_Q119 = _sql_training_assembly()
 
 
-DOREMI_ITERS, DOREMI_ETA, DOREMI_SMOOTH = 5, 1.0, 0.1
+DOREMI_ITERS = 5
 
 
 def q123_doremi_weights(spark, sf_dir):
@@ -5495,8 +5467,7 @@ def q123_doremi_weights(spark, sf_dir):
     ref = _unigram_lm_shared(spark, sf_dir)
     prox = _bigram_lm_shared(spark, sf_dir)
     return TX.doremi_weights(docs, "doc_id", "source", ref, prox,
-                             iters=DOREMI_ITERS, eta=DOREMI_ETA,
-                             smooth=DOREMI_SMOOTH)
+                             iters=DOREMI_ITERS)
 
 
 def _sql_doremi() -> str:
@@ -5506,8 +5477,8 @@ def _sql_doremi() -> str:
     8-digit rnd ladder exactly like the Spark/driver chain, and the
     smoothing constants are repr()'d from the SAME Python floats the
     operator uses, so the two engines cannot disagree about
-    ``1 − smooth``."""
-    keep = 1.0 - DOREMI_SMOOTH
+    ``1 − DOREMI_SMOOTH``."""
+    keep = 1.0 - TX.DOREMI_SMOOTH
     parts = [f"""ref AS ({SQL_Q84}),
 prox AS ({SQL_Q95}),
 ex AS (
@@ -5520,7 +5491,7 @@ per AS (
 sc AS (SELECT count(*)::DOUBLE AS s FROM per),
 m AS (
   SELECT source, excess_loss,
-         {sql_rnd(f'exp({DOREMI_ETA!r} * excess_loss)', 8)} AS m
+         {sql_rnd(f'exp({TX.DOREMI_ETA!r} * excess_loss)', 8)} AS m
   FROM per),
 w0 AS (SELECT source, excess_loss, m, {sql_rnd('1.0 / sc.s', 8)} AS w
        FROM m, sc)"""]
@@ -5532,7 +5503,7 @@ w0 AS (SELECT source, excess_loss, m, {sql_rnd('1.0 / sc.s', 8)} AS w
         alpha = sql_rnd("u / z.z", 8)
         parts.append(f"""w{t} AS (
   SELECT source, excess_loss, m,
-         {sql_rnd(f'{keep!r} * ({alpha}) + {DOREMI_SMOOTH!r} / sc.s', 8)} AS w
+         {sql_rnd(f'{keep!r} * ({alpha}) + {TX.DOREMI_SMOOTH!r} / sc.s', 8)} AS w
   FROM u{t}, z{t} z, sc)""")
     unions = "\nUNION ALL\n".join(
         f"SELECT source, {t}::BIGINT AS step, w AS weight, excess_loss FROM w{t}"
@@ -5548,8 +5519,6 @@ SQL_Q123 = _sql_doremi()
 
 BM25_TOPK = 5
 QUERY_PREFIX_TOKENS = 8
-ZIPF_TOP_RANKS = 500
-KN_DISCOUNT = 0.75
 
 
 # Result frames of the eval-split retrieval family, memoized per
@@ -5845,7 +5814,7 @@ def q125_zipf_stats(spark, sf_dir):
     the cut is engine-stable; the regression moments ride the 8-digit
     rnd ladder."""
     docs = _t(spark, sf_dir, "documents")
-    return TX.zipf_stats(docs, "text", "doc_id", top_ranks=ZIPF_TOP_RANKS)
+    return TX.zipf_stats(docs, "text", "doc_id")
 
 
 def _sql_zipf() -> str:
@@ -5863,7 +5832,7 @@ head AS (
   SELECT {sql_rnd('ln(r)', 8)} AS x, {sql_rnd('ln(c)', 8)} AS y
   FROM (
     SELECT c, row_number() OVER (ORDER BY c DESC, w ASC) AS r
-    FROM cnts ORDER BY c DESC, w ASC LIMIT {ZIPF_TOP_RANKS}) t),
+    FROM cnts ORDER BY c DESC, w ASC LIMIT {TX.ZIPF_TOP_RANKS}) t),
 fit AS (
   SELECT count(*)::DOUBLE AS m,
          {sql_rnd('sum(x)', 8)} AS sx, {sql_rnd('sum(y)', 8)} AS sy,
@@ -5891,12 +5860,11 @@ def q126_kn_bigram_logprob(spark, sf_dir):
     log-prob + perplexity, the q84/q95 output contract, fully
     value-hash oracled."""
     docs = _t(spark, sf_dir, "documents")
-    return TX.kn_bigram_logprob(docs, "text", "doc_id",
-                                discount=KN_DISCOUNT)
+    return TX.kn_bigram_logprob(docs, "text", "doc_id")
 
 
 def _sql_kn() -> str:
-    d = repr(KN_DISCOUNT)
+    d = repr(TX.KN_DISCOUNT)
     case = (
         "CASE WHEN s.prev IS NULL THEN ln(u.cw / tot.n) "
         f"ELSE ln(greatest(coalesce(b.cb, 0.0) - {d}, 0.0) / c.cv "
@@ -5943,9 +5911,6 @@ FROM agg
 SQL_Q126 = _sql_kn()
 
 
-EWMA_ALPHA, EWMA_WINDOW = 0.3, 16
-
-
 def q127_ewma_forecast(spark, sf_dir):
     """Truncated-EWMA smoothing + one-step-ahead forecast residuals
     per user series (operators/timeseries.py:ewma_smooth, r9) — the
@@ -5957,20 +5922,19 @@ def q127_ewma_forecast(spark, sf_dir):
     forecast rows."""
     ev = _t(spark, sf_dir, "events")
     return TS.ewma_smooth(ev, "ts", "value", ["user_id"],
-                          order_tiebreak=["event_id"],
-                          alpha=EWMA_ALPHA, window=EWMA_WINDOW)
+                          order_tiebreak=["event_id"])
 
 
 def _sql_ewma() -> str:
-    wts = [(1.0 - EWMA_ALPHA) ** j for j in range(EWMA_WINDOW)]
+    wts = [(1.0 - TS.EWMA_ALPHA) ** j for j in range(TS.EWMA_WINDOW)]
     # one extra lag: the forecast's re-anchored ladder spans the same
     # W samples as the previous row's ewma (forecast_t == ewma_{t-1})
     lag_cols = ",\n         ".join(
         f"lag(value, {j}) OVER w AS l{j}"
-        for j in range(1, EWMA_WINDOW + 1)
+        for j in range(1, TS.EWMA_WINDOW + 1)
     )
-    lag_chain = [f"l{j}" for j in range(1, EWMA_WINDOW + 1)]
-    xs = ["value"] + lag_chain[: EWMA_WINDOW - 1]
+    lag_chain = [f"l{j}" for j in range(1, TS.EWMA_WINDOW + 1)]
+    xs = ["value"] + lag_chain[: TS.EWMA_WINDOW - 1]
 
     def wsum(terms):
         return " + ".join(
@@ -6208,7 +6172,7 @@ FROM ranked
 SQL_Q129 = _sql_qnorm()
 
 
-CURR_PHASES, CURR_SHARDS = 3, 8
+CURR_SHARDS = 8
 
 
 def q167_curriculum_order(spark, sf_dir):
@@ -6223,12 +6187,11 @@ def q167_curriculum_order(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", "text")
     return TX.curriculum_order(docs, "text", "doc_id", "source",
-                               phases=CURR_PHASES,
                                num_shards=CURR_SHARDS)
 
 
 def _sql_curriculum() -> str:
-    p = CURR_PHASES
+    p = TX.CURR_PHASES
     return f"""
 WITH q38 AS ({SQL_Q38}),
 scored AS (
@@ -6308,7 +6271,7 @@ FROM p
 """
 
 
-HG_BUCKETS, HG_ITERS, HG_LR = 8, 4, 0.5
+HG_ITERS, HG_LR = 4, 0.5
 
 
 def q130_hashed_gram_classifier(spark, sf_dir):
@@ -6329,9 +6292,8 @@ def q130_hashed_gram_classifier(spark, sf_dir):
     # cost at bench scale; the _pca_shared lesson). Bounded: B+3
     # scalars per document, freed by ContextCleaner with the frame.
     feats = C.hashed_gram_features(docs, "text", "doc_id", "source",
-                                   QC_POS_SOURCES,
-                                   buckets=HG_BUCKETS).localCheckpoint()
-    cols = [f"x{j}" for j in range(HG_BUCKETS)]
+                                   QC_POS_SOURCES).localCheckpoint()
+    cols = [f"x{j}" for j in range(C.HG_BUCKETS)]
     w = C.logreg_train(feats, cols, "label", iters=HG_ITERS, lr=HG_LR)
     out = C.logreg_score(feats, cols, w).select(
         "doc_id",
@@ -6346,8 +6308,10 @@ def _sql_hashed_logreg() -> str:
     """q130's oracle: the hashed-gram feature map (portable md5
     fingerprint mod buckets — the dedup family's hash) and the q104
     logreg unroll generalized to B+1 weights."""
+    from .functions import classify as C
+
     pos = ", ".join(f"'{s}'" for s in QC_POS_SOURCES)
-    B = HG_BUCKETS
+    B = C.HG_BUCKETS
     xcols = ",\n         ".join(
         f"{sql_rnd(f'sum(CASE WHEN b = {j} THEN 1.0 ELSE 0.0 END) / count(*)', 6)} AS x{j}"
         for j in range(B)
@@ -6528,7 +6492,7 @@ FROM ranked
 """
 
 
-RUN_TAU, RUN_MIN = 80.0, 3
+RUN_TAU = 80.0
 
 
 def q144_threshold_runs(spark, sf_dir):
@@ -6540,7 +6504,7 @@ def q144_threshold_runs(spark, sf_dir):
     fully value-hash oracled."""
     return TS.threshold_runs(_t(spark, sf_dir, "events"), "ts", "value",
                              ["event_type"], threshold=RUN_TAU,
-                             min_run=RUN_MIN, tiebreak="event_id")
+                             tiebreak="event_id")
 
 
 SQL_Q144 = f"""
@@ -6557,11 +6521,8 @@ SELECT event_type, start_ts, end_ts, n_samples, peak_value FROM (
   SELECT event_type, min(ts) AS start_ts, max(ts) AS end_ts,
          count(*)::BIGINT AS n_samples, max(value) AS peak_value
   FROM isl GROUP BY event_type, grp)
-WHERE n_samples >= {RUN_MIN}
+WHERE n_samples >= {TS.RUN_MIN}
 """
-
-
-CUSUM_SLACK, CUSUM_H = 0.5, 4.0
 
 
 def q145_cusum_alarms(spark, sf_dir):
@@ -6573,8 +6534,7 @@ def q145_cusum_alarms(spark, sf_dir):
     the rounded ladder so the engines' window-tree float association
     can't diverge (the q24 contract). Fully value-hash oracled."""
     return TS.cusum_alarms(_t(spark, sf_dir, "events"), "ts", "value",
-                           ["event_type"], slack_sigmas=CUSUM_SLACK,
-                           h_sigmas=CUSUM_H, tiebreak="event_id")
+                           ["event_type"], tiebreak="event_id")
 
 
 SQL_Q145 = f"""
@@ -6586,7 +6546,7 @@ cum AS (
   SELECT e.event_id, e.ts, e.user_id, e.event_type, e.value, e.props,
          s.sd,
          {sql_rnd(
-             f"sum({sql_rnd(f'e.value - s.mu - {CUSUM_SLACK!r} * s.sd', 8)})"
+             f"sum({sql_rnd(f'e.value - s.mu - {TS.CUSUM_SLACK!r} * s.sd', 8)})"
              " OVER (PARTITION BY e.event_type ORDER BY e.ts, e.event_id"
              " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)", 4)}
            AS c
@@ -6598,11 +6558,11 @@ scored AS (
       ' ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))', 4)} AS cusum
   FROM cum)
 SELECT event_id, ts, user_id, event_type, value, props, cusum
-FROM scored WHERE cusum > {sql_rnd(f'{CUSUM_H!r} * sd', 4)}
+FROM scored WHERE cusum > {sql_rnd(f'{TS.CUSUM_H!r} * sd', 4)}
 """
 
 
-MMR_K, MMR_LAM = 3, 0.7
+MMR_LAM = 0.7
 
 
 def q143_mmr_rerank(spark, sf_dir):
@@ -6627,7 +6587,7 @@ def q143_mmr_rerank(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "embedding"
     )
-    out = RV.mmr_rerank(pool, emb, k=MMR_K, lam=MMR_LAM)
+    out = RV.mmr_rerank(pool, emb, lam=MMR_LAM)
     # the operator's own persisted sims matrix is released after the
     # consuming action; the pool memo is deliberately session-lived
     return out
@@ -6664,6 +6624,20 @@ def _sql_mmr() -> str:
                               ORDER BY mmr DESC, doc_id ASC) AS rk
     FROM {out}_sc) WHERE rk = 1)"""
 
+    # steps 2..MMR_K: each penalizes against the union of the earlier
+    # picks (s1 alone for step 2)
+    parts, sel = [], "s1"
+    for t in range(2, MMR_K + 1):
+        if t > 2:
+            sel = "sel" + "".join(str(i) for i in range(1, t))
+            union = "\n          UNION ALL ".join(
+                f"SELECT query_id, doc_id FROM s{i}" for i in range(1, t))
+            parts.append(f"{sel} AS ({union})")
+        parts.append(pen_step(sel, f"s{t}"))
+    steps = ",\n".join(parts)
+    picks = "\nUNION ALL ".join(
+        f"SELECT query_id, {t}::BIGINT AS step, doc_id, mmr FROM s{t}"
+        for t in range(1, MMR_K + 1))
     return f"""
 WITH pool0 AS ({SQL_Q134}),
 pool AS (SELECT query_id, doc_id, rrf AS rel FROM pool0),
@@ -6686,17 +6660,9 @@ s1 AS (
                               ORDER BY {sql_rnd(f'{lam} * rel', 8)} DESC,
                                        doc_id ASC) AS rk
     FROM pool) WHERE rk = 1),
-{pen_step('s1', 's2')},
-sel12 AS (SELECT query_id, doc_id FROM s1
-          UNION ALL SELECT query_id, doc_id FROM s2),
-{pen_step('sel12', 's3')}
-SELECT query_id, 1::BIGINT AS step, doc_id, mmr FROM s1
-UNION ALL SELECT query_id, 2::BIGINT AS step, doc_id, mmr FROM s2
-UNION ALL SELECT query_id, 3::BIGINT AS step, doc_id, mmr FROM s3
+{steps}
+{picks}
 """
-
-
-IVF_NPROBE = 2
 
 
 # The sub-exhaustive IVF result (q142 + q194 run the IDENTICAL
@@ -6710,8 +6676,7 @@ IVF_NPROBE = 2
 def _ivf_topk_shared(spark, sf_dir) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return S.ann_topk_ivf_portable(
-        emb, "vec_id", "embedding", ANN_NUM_QUERIES, k=ANN_K,
-        k_lists=KMEANS_K, iters=KMEANS_ITERS, nprobe=IVF_NPROBE,
+        emb, "vec_id", "embedding", ANN_NUM_QUERIES, k_lists=KMEANS_K,
         centroids=_kmeans_shared(spark, sf_dir)[0],
     ).cache()
 
@@ -6782,7 +6747,7 @@ route AS (
     SELECT q.query_id, q.e AS qe, c.cluster,
            row_number() OVER (PARTITION BY q.query_id
                               ORDER BY {cos_qc} DESC, c.cluster ASC) AS rk
-    FROM q CROSS JOIN cent2 c) WHERE rk <= {IVF_NPROBE}),
+    FROM q CROSS JOIN cent2 c) WHERE rk <= {S.IVF_NPROBE}),
 cand AS (
   SELECT r.query_id, a.vec_id AS neighbor_id, {cos_ra} AS cosine
   FROM route r JOIN a3 a USING (cluster)
@@ -6820,9 +6785,6 @@ GROUP BY b.query_id
 """
 
 
-MAD_TAU = 3.5
-
-
 def q140_mad_outliers(spark, sf_dir):
     """Robust outliers by modified z-score (operators/stats.py:
     mad_outliers, r9; Iglewicz & Hoaglin 1993): |0.6745·(v − median)/
@@ -6831,7 +6793,7 @@ def q140_mad_outliers(spark, sf_dir):
     100× spike inflates σ enough to hide the 10× ones; the median
     doesn't move). Fully value-hash oracled against quantile_cont."""
     ev = _t(spark, sf_dir, "events")
-    out = ST.mad_outliers(ev, "value", ["event_type"], threshold=MAD_TAU)
+    out = ST.mad_outliers(ev, "value", ["event_type"])
     res = out.select(
         "event_id", "event_type", "value",
         F.col("_med").alias("med"), F.col("_mad").alias("mad"),
@@ -6857,7 +6819,7 @@ scored AS (
          {sql_rnd('0.6745 * (d.value - d.med) / m.mad', 4)} AS robust_z
   FROM dev d JOIN mad m USING (event_type) WHERE m.mad > 0)
 SELECT event_id, event_type, value, med, mad, robust_z
-FROM scored WHERE abs(robust_z) > {MAD_TAU}
+FROM scored WHERE abs(robust_z) > {ST.MAD_TAU}
 """
 
 
@@ -6987,7 +6949,7 @@ FROM j
 """
 
 
-CPPL_WORDS, CPPL_V, CPPL_Q = 16, 20, 0.9
+CPPL_WORDS, CPPL_V = 16, 20
 
 
 def q139_chunk_ppl_cut(spark, sf_dir):
@@ -7002,8 +6964,7 @@ def q139_chunk_ppl_cut(spark, sf_dir):
     threshold all nested in the SQL)."""
     docs = _t(spark, sf_dir, "documents")
     return TX.chunk_ppl_cut(docs, "text", "doc_id",
-                            chunk_words=CPPL_WORDS, vocab_size=CPPL_V,
-                            ppl_quantile=CPPL_Q)
+                            chunk_words=CPPL_WORDS, vocab_size=CPPL_V)
 
 
 SQL_Q139 = rf"""
@@ -7038,7 +6999,7 @@ cppl AS (
   SELECT doc, idx,
          {sql_rnd(f"exp(-({sql_rnd('avg(lp)', 4)}))", 4)} AS ppl
   FROM scored GROUP BY doc, idx),
-thr AS (SELECT {sql_rnd(f'quantile_cont(ppl, {CPPL_Q})', 4)} AS t FROM cppl),
+thr AS (SELECT {sql_rnd(f'quantile_cont(ppl, {TX.CPPL_Q})', 4)} AS t FROM cppl),
 verd AS (SELECT doc, idx, ppl, (ppl <= t) AS keep FROM cppl, thr)
 SELECT c.doc AS doc_id, count(*)::BIGINT AS n_chunks,
        sum(CASE WHEN NOT keep THEN 1 ELSE 0 END)::BIGINT AS n_cut,
@@ -7215,7 +7176,7 @@ FROM truec tr JOIN est e ON tr.t = e.t
 """
 
 
-RRF_POOL, RRF_TOPK, RRF_RK = 20, 10, 60
+RRF_POOL, RRF_TOPK = 20, 10
 # the eval-suite contract made explicit: the hybrid query set is
 # BOUNDED (id < cap), never corpus-proportional — without it both
 # pools grow with |queries| ∝ |corpus| and the whole hybrid goes
@@ -7283,12 +7244,12 @@ def _hybrid_rrf_build(spark, sf_dir):
         ),
         "vec_id", "embedding", RRF_POOL,
     ).select("query_id", F.col("neighbor_id").alias("doc_id"), "rank")
-    return RV.rrf_fuse(lex, sem, k=RRF_TOPK, rrf_k=RRF_RK)
+    return RV.rrf_fuse(lex, sem, k=RRF_TOPK)
 
 
 _RRF_U = (
-    f"coalesce({sql_rnd('1.0 / (%d + l.lr)' % RRF_RK, 8)}, 0.0)"
-    f" + coalesce({sql_rnd('1.0 / (%d + s.sr)' % RRF_RK, 8)}, 0.0)"
+    f"coalesce({sql_rnd('1.0 / (%d + l.lr)' % RRF_K, 8)}, 0.0)"
+    f" + coalesce({sql_rnd('1.0 / (%d + s.sr)' % RRF_K, 8)}, 0.0)"
 )
 
 SQL_Q134 = f"""
@@ -7831,7 +7792,6 @@ FROM events GROUP BY event_type, hour(ts)
 
 ML_TARGET_LANG = "en"
 ML_VOCAB = 20
-ML_DELTA = 0.5
 
 
 def q170_moore_lewis(spark, sf_dir):
@@ -7847,10 +7807,10 @@ def q170_moore_lewis(spark, sf_dir):
         "ind0", (F.col("lang") == ML_TARGET_LANG).cast("int")
     )
     return TX.moore_lewis(docs, "text", "doc_id", "ind0",
-                          vocab_size=ML_VOCAB, delta=ML_DELTA)
+                          vocab_size=ML_VOCAB)
 
 
-_ML_DEN = ML_DELTA * (ML_VOCAB + 1)
+_ML_DEN = TX.ML_DELTA * (ML_VOCAB + 1)
 
 SQL_Q170 = f"""
 WITH toks AS (
@@ -7873,8 +7833,8 @@ ug AS (SELECT coalesce(sum(c_gen), 0) AS cu FROM cnts
        WHERE w NOT IN (SELECT w FROM vg)),
 scored AS (
   SELECT t.doc,
-         {sql_rnd(f'ln((coalesce(vi.c, ui.cu) + {ML_DELTA}) / (ti.n + {_ML_DEN}))', 8)} AS lpi,
-         {sql_rnd(f'ln((coalesce(vg.c, ug.cu) + {ML_DELTA}) / (tg.n + {_ML_DEN}))', 8)} AS lpg
+         {sql_rnd(f'ln((coalesce(vi.c, ui.cu) + {TX.ML_DELTA}) / (ti.n + {_ML_DEN}))', 8)} AS lpi,
+         {sql_rnd(f'ln((coalesce(vg.c, ug.cu) + {TX.ML_DELTA}) / (tg.n + {_ML_DEN}))', 8)} AS lpg
   FROM toks t
   LEFT JOIN vi ON t.w = vi.w
   LEFT JOIN vg ON t.w = vg.w, ti, tg, ui, ug),
@@ -8105,7 +8065,7 @@ def q174_threshold_sweep(spark, sf_dir):
     from .functions import classify as C
 
     scored = q104_quality_classifier(spark, sf_dir)
-    out = C.threshold_sweep(scored, "p_good", "label", taus=SWEEP_TAUS)
+    out = C.threshold_sweep(scored, taus=SWEEP_TAUS)
     out._cached_inputs = getattr(scored, "_cached_inputs", [])
     return out
 
@@ -8375,10 +8335,6 @@ FROM agg
 """
 
 
-WINSOR_LO = 0.05
-WINSOR_HI = 0.95
-
-
 def q179_winsorized_stats(spark, sf_dir):
     """Winsorized per-series moments (operators/stats.py:
     winsorized_stats): clamp each event type's values at its exact
@@ -8389,15 +8345,14 @@ def q179_winsorized_stats(spark, sf_dir):
     corrupts). Two passes: skew-free percentile + one combinable
     clamped agg. Fully value-hash oracled."""
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
-    return ST.winsorized_stats(ev, "value", ["event_type"],
-                               lo=WINSOR_LO, hi=WINSOR_HI)
+    return ST.winsorized_stats(ev, "value", ["event_type"])
 
 
 SQL_Q179 = f"""
 WITH pct AS (
   SELECT event_type,
-         {sql_rnd('quantile_cont(value, 0.05)', 4)} AS p5,
-         {sql_rnd('quantile_cont(value, 0.95)', 4)} AS p95
+         {sql_rnd(f'quantile_cont(value, {ST.WINSOR_LO})', 4)} AS p5,
+         {sql_rnd(f'quantile_cont(value, {ST.WINSOR_HI})', 4)} AS p95
   FROM events GROUP BY event_type),
 j AS (
   SELECT e.event_type, e.value, p.p5, p.p95,
@@ -8622,7 +8577,6 @@ FROM j
 # r9 wave 7: bucketed interval join, hapax density
 # --------------------------------------------------------------------
 
-BURST_BUCKET_SECONDS = 3600
 BURST_MIN_COUNT = 4
 
 
@@ -8639,13 +8593,11 @@ def q183_incident_overlap(spark, sf_dir):
     Per-burst purchase counts and value. Fully value-hash oracled."""
     ev = _t(spark, sf_dir, "events")
     errors = ev.where(F.col("event_type") == "error").select("ts")
-    bursts = TS.burst_intervals(errors, "ts",
-                                bucket_seconds=BURST_BUCKET_SECONDS,
-                                min_count=BURST_MIN_COUNT)
+    bursts = TS.burst_intervals(errors, "ts", min_count=BURST_MIN_COUNT)
     buys = ev.where(F.col("event_type") == "purchase").select(
         "ts", "value")
     j = TS.interval_join(buys, bursts, "ts", "burst_start", "burst_end",
-                         bucket_seconds=BURST_BUCKET_SECONDS)
+                         bucket_seconds=TS.BURST_BUCKET_SECONDS)
     return j.groupBy("burst_start", "burst_end", "n_events").agg(
         F.count(F.lit(1)).cast("long").alias("n_purchases"),
         rnd(F.sum("value"), 2).alias("purchase_value"),
@@ -8656,7 +8608,7 @@ SQL_Q183 = f"""
 WITH errors AS (
   SELECT ts FROM events WHERE event_type = 'error'),
 hot AS (
-  SELECT floor(floor(epoch(ts)) / {BURST_BUCKET_SECONDS})::BIGINT AS bkt,
+  SELECT floor(floor(epoch(ts)) / {TS.BURST_BUCKET_SECONDS})::BIGINT AS bkt,
          count(*)::BIGINT AS cnt,
          min(ts) AS first_ts, max(ts) AS last_ts
   FROM errors GROUP BY bkt
@@ -9299,8 +9251,6 @@ FROM flagged GROUP BY domain
 # --------------------------------------------------------------------
 
 PNDP_EVERY = 97          # plant boilerplate on every 97th document
-PNDP_HASHES = 16
-PNDP_BANDS = 8
 PNDP_MAX_DF = 60         # two-sided hot-band cap (template passages)
 PNDP_TAU = 0.5
 # 13 words: the first 8 fill one pure-boilerplate passage when the
@@ -9359,9 +9309,7 @@ def q192_passage_near_dups(spark, sf_dir):
     value-hash oracled (signatures, band keys, est all replay)."""
     corpus = _pndp_corpus(spark, sf_dir)
     return D.passage_near_dup_pairs(
-        corpus, "text", "doc_id", passage_words=PASSAGE_WORDS,
-        shingle_n=3, num_hashes=PNDP_HASHES, bands=PNDP_BANDS,
-        threshold=PNDP_TAU, max_df=PNDP_MAX_DF,
+        corpus, "text", "doc_id", threshold=PNDP_TAU, max_df=PNDP_MAX_DF,
     )
 
 
@@ -9369,8 +9317,8 @@ def _sql_passage_near_pairs() -> str:
     """DuckDB replay of the passage-level portable MinHash banding:
     q94's passage split + q31's md5+affine mins, keyed by (doc, idx)
     instead of doc."""
-    params = D.affine_params(PNDP_HASHES)
-    rows = PNDP_HASHES // PNDP_BANDS
+    params = D.affine_params(D.PNDP_HASHES)
+    rows = D.PNDP_HASHES // D.PNDP_BANDS
     hcols = ",\n         ".join(
         f"min((fp * {a} + {b}) % {D.PORTABLE_P})::BIGINT AS h{i}"
         for i, (a, b) in enumerate(params)
@@ -9378,14 +9326,14 @@ def _sql_passage_near_pairs() -> str:
     band_exprs = ", ".join(
         "'" + str(b) + "_' || "
         + " || '_' || ".join(f"h{b * rows + r}" for r in range(rows))
-        for b in range(PNDP_BANDS)
+        for b in range(D.PNDP_BANDS)
     )
     match_sum = " + ".join(
         f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END"
-        for i in range(PNDP_HASHES)
+        for i in range(D.PNDP_HASHES)
     )
-    est = sql_rnd(f"({match_sum})::DOUBLE / {PNDP_HASHES}", 4)
-    hlist = ", ".join(f"h{i}" for i in range(PNDP_HASHES))
+    est = sql_rnd(f"({match_sum})::DOUBLE / {D.PNDP_HASHES}", 4)
+    hlist = ", ".join(f"h{i}" for i in range(D.PNDP_HASHES))
     corpus = SQL_PNDP_CORPUS.format(plant_offset=PLANT_OFFSET)
     return rf"""
 WITH corpus AS ({corpus}),
@@ -9394,13 +9342,13 @@ dwords AS (
 p0 AS (
   SELECT doc, w,
          unnest(range(0, greatest(
-           CAST(ceil(len(w) / {PASSAGE_WORDS}.0) AS BIGINT), 1))) AS idx
+           CAST(ceil(len(w) / {D.PNDP_WORDS}.0) AS BIGINT), 1))) AS idx
   FROM dwords),
 pass AS (
   SELECT doc, idx,
          array_to_string(list_transform(
-           range(idx * {PASSAGE_WORDS} + 1,
-                 least((idx + 1) * {PASSAGE_WORDS}, len(w)) + 1),
+           range(idx * {D.PNDP_WORDS} + 1,
+                 least((idx + 1) * {D.PNDP_WORDS}, len(w)) + 1),
            j -> w[j]), ' ') AS passage
   FROM p0),
 pw AS (
@@ -9596,7 +9544,6 @@ SQL_Q194 = _sql_ann_ndcg()
 # --------------------------------------------------------------------
 
 APSS_TAU = 0.9
-APSS_MAX_DF_RATIO = 0.5
 
 
 def q195_allpairs_cosine(spark, sf_dir):
@@ -9616,9 +9563,7 @@ def q195_allpairs_cosine(spark, sf_dir):
     same plan with full vectors. Fully value-hash oracled —
     idf/norm/prefix boundary all ride the rnd ladder."""
     corpus = _planted_corpus(spark, sf_dir)
-    return S.allpairs_cosine_tfidf(corpus, "text", "doc_id",
-                                   tau=APSS_TAU,
-                                   max_df_ratio=APSS_MAX_DF_RATIO)
+    return S.allpairs_cosine_tfidf(corpus, "text", "doc_id", tau=APSS_TAU)
 
 
 def _sql_apss() -> str:
@@ -9633,7 +9578,7 @@ tf AS (SELECT doc, t, count(*)::DOUBLE AS tf FROM toks GROUP BY doc, t),
 nd AS (SELECT count(DISTINCT doc_id)::DOUBLE AS n FROM corpus),
 dfreq AS (
   SELECT t, count(*)::BIGINT AS df_ FROM tf GROUP BY t
-  HAVING count(*) <= {APSS_MAX_DF_RATIO} * (SELECT n FROM nd)),
+  HAVING count(*) <= {S.APSS_MAX_DF_RATIO} * (SELECT n FROM nd)),
 w AS (
   SELECT tf.doc, tf.t, d.df_,
          {r8(f"tf.tf * {sql_rnd('ln(((SELECT n FROM nd) + 1.0) / (d.df_ + 1.0))', 8)}")} AS w

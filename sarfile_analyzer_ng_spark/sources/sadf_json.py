@@ -155,13 +155,12 @@ def parse_sadf_columns(file_name: str, content: bytes,
     }
 
 
-def parse_sadf_json(file_name: str, content: bytes,
-                    skipped: set[str] | None = None) -> list[dict]:
+def parse_sadf_json(file_name: str, content: bytes) -> list[dict]:
     """Row-dict view of :func:`parse_sadf_columns`."""
     # imported here: sar_text imports this module's parser
     from .sar_text import rows_of
 
-    return rows_of(parse_sadf_columns(file_name, content, skipped))
+    return rows_of(parse_sadf_columns(file_name, content))
 
 
 def read_sadf_json(spark: SparkSession, path: str) -> DataFrame:

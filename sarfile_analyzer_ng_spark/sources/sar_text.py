@@ -124,9 +124,10 @@ _RE_RESTART = re.compile(r"LINUX RESTART", re.IGNORECASE)
 #   thermal device names): parse_into_polars.py:88 ``reg_ignore``,
 #   always on;
 # - the "unwanted headers" list "CPU MHz" / "INTR intr/s":
-#   pl_helpers2.py:100-113 ``get_unwanted_headers``, surfaced as the
-#   ``drop_unwanted`` flag (default True = reference behavior; False
-#   parses both sections like any other).
+#   pl_helpers2.py:100-113 ``get_unwanted_headers``, always on in the
+#   readers and the store; the row parsers' ``drop_unwanted`` flag
+#   (default True = reference behavior; False parses both sections
+#   like any other) keeps the switch testable.
 _RE_IGNORE_ALWAYS = re.compile(r"(bus.*idvendor|temp.*device)", re.IGNORECASE)
 _RE_IGNORE_UNWANTED = re.compile(r"(intr/s|mhz)", re.IGNORECASE)
 _RE_COMMA_NUM = re.compile(r"(\d+),(\d+)")
@@ -484,15 +485,15 @@ def _xz_head(content: bytes) -> bytes:
 
 
 def decode_file(file_name: str, content: bytes, kinds=KINDS,
-                drop_unwanted: bool = True,
                 skipped: set[str] | None = None) -> Decoded:
     """The per-file decode shared by every reader and the store's
     upload: sniff the format from the first plain bytes (unpacking an
     xz archive only that far), and only when ``kinds`` may want it,
     unpack the file, tell sar text from binary, and parse it into one
     Arrow record batch of line rows (:func:`line_batch`) when its kind
-    is one of ``kinds``.
-    ``skipped`` collects the sadf fields the JSON traversal drops.
+    is one of ``kinds``; sar text drops the reference's "CPU MHz" /
+    "INTR intr/s" sections. ``skipped`` collects the sadf fields the
+    JSON traversal drops.
     Raises one of :data:`DECODE_ERRORS` on input it cannot decode; the
     caller decides whether that skips the file or fails the upload.
     A broken archive whose head already shows an unwanted kind is
@@ -517,12 +518,11 @@ def decode_file(file_name: str, content: bytes, kinds=KINDS,
     if kind == SADF_JSON:
         cols = parse_sadf_columns(file_name, data, skipped)
     else:
-        cols = parse_sar_columns(file_name, text, drop_unwanted)
+        cols = parse_sar_columns(file_name, text)
     return Decoded(kind, unxz, data, line_batch(cols))
 
 
-def read_files(spark: SparkSession, path: str, kinds=KINDS,
-               drop_unwanted: bool = True) -> DataFrame:
+def read_files(spark: SparkSession, path: str, kinds=KINDS) -> DataFrame:
     """The one distributed read: every file under ``path`` whose kind
     is in ``kinds`` goes through :func:`decode_file` (``binaryFile``
     source → ``mapInArrow``, one record batch of line rows per file,
@@ -542,7 +542,7 @@ def read_files(spark: SparkSession, path: str, kinds=KINDS,
             for i in range(batch.num_rows):
                 try:
                     dec = decode_file(names[i].as_py(), contents[i].as_py(),
-                                      kinds, drop_unwanted)
+                                      kinds)
                 except DECODE_ERRORS:
                     continue
                 if dec.batch is not None:
@@ -558,14 +558,13 @@ def read_files(spark: SparkSession, path: str, kinds=KINDS,
     return explode_lines(raw.mapInArrow(parse_batches, LINE_SCHEMA))
 
 
-def read_sar(spark: SparkSession, path: str,
-             drop_unwanted: bool = True) -> DataFrame:
+def read_sar(spark: SparkSession, path: str) -> DataFrame:
     """Distributed sar-text read: one Python task per scan partition
     (the scan packs whole files into partitions), ``.xz`` unpacked
     transparently (sar_ingest.py:333 behavior); sadf JSON
-    files are left to ``read_sadf_json``. ``drop_unwanted`` applies the
-    reference's "CPU MHz" / "INTR intr/s" exclusion."""
-    return read_files(spark, path, (SAR_TEXT, BINARY), drop_unwanted)
+    files are left to ``read_sadf_json``. The reference's "CPU MHz" /
+    "INTR intr/s" sections are dropped."""
+    return read_files(spark, path, (SAR_TEXT, BINARY))
 
 
 def sections(df: DataFrame) -> DataFrame:

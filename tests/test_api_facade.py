@@ -171,6 +171,23 @@ def test_cli_json_output_respects_limit(spark, tmp_path, capsys, monkeypatch):
     assert len(lines_all) == 2  # fixture has two devices at one ts
 
 
+def test_cli_file_substring_picks_the_first_name(spark, tmp_path):
+    """``--file`` resolves to the alphabetically first matching file,
+    like the default pick; the ``binaryFile`` scan lists the larger
+    file first, so here the first row would name the other one."""
+    from sarfile_analyzer_ng_spark.__main__ import _first_file, _load
+
+    d = tmp_path / "sar_pick"
+    d.mkdir()
+    (d / "host_a.txt").write_text(SAR_AMPM)
+    (d / "host_b.txt").write_text(SAR_24H)  # larger, sorts last
+    assert len(SAR_24H) > len(SAR_AMPM)
+    df = _load(spark, str(d))
+    assert _first_file(df, "host").endswith("host_a.txt")
+    assert _first_file(df, None).endswith("host_a.txt")
+    df.unpersist()
+
+
 def test_cli_curate_prints_funnel(spark, capsys, monkeypatch):
     """`curate` points the funnel at a documents parquet dir and prints
     per-(source, stage) rows; --json rows parse and carry the four

@@ -1,7 +1,7 @@
 """The driver contract: entry() returns rows, every queries() key has a
 callable, oracle keys are a subset, and results carry stable schemas;
 no engine name is reached only from tests, and no engine option is
-left at its default by every caller."""
+left at its default by every caller or passed only its default."""
 
 from __future__ import annotations
 
@@ -128,10 +128,6 @@ OPTIONS_ONLY_TESTS_SET = {
         "a low cap checks that non-convergence logs a warning",
     "functions/text.py:budget_select.approx":
         "tests compare the approximate cut with the exact one",
-    "operators/reshape.py:pivot_wide.agg":
-        "test_unpivot_roundtrip names the aggregate it pivots with",
-    "operators/sketches.py:approx_distinct.rsd":
-        "test_approx_distinct_within_rsd sets the error bound it checks",
     "functions/similarity.py:jl_project.seed_tag":
         "tests check that another seed gives another projection",
     "functions/pipeline.py:assemble_training_data.source_weights":
@@ -143,26 +139,53 @@ OPTIONS_ONLY_TESTS_SET = {
 }
 
 
-def _passed_options(paths: list[Path]) -> tuple[dict, dict, set]:
-    """For every callee name: the keywords passed to it, the largest
-    number of positional arguments passed to it, and whether any call
-    passes ``*args`` or ``**kwargs`` (which may set any option)."""
-    keywords, positional, splat = {}, {}, set()
+def _calls(paths: list[Path]) -> dict[str, list[ast.Call]]:
+    """Every call in ``paths``, by the callee's name."""
+    calls = {}
     for path in paths:
         for node in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(node, ast.Call):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = getattr(func, "id", None) or getattr(func, "attr", None)
+                if name is not None:
+                    calls.setdefault(name, []).append(node)
+    return calls
+
+
+def _splat(call: ast.Call) -> bool:
+    """Whether a call passes ``*args`` or ``**kwargs``, which may set
+    any option."""
+    return (any(isinstance(a, ast.Starred) for a in call.args)
+            or any(k.arg is None for k in call.keywords))
+
+
+def _options(paths: list[Path]):
+    """``(path, function, positional index or None, name, default)``
+    for every parameter with a default of a function in ``paths``; the
+    index counts call arguments, so a method's ``self``/``cls`` is not
+    one."""
+    for path in paths:
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef | ast.AsyncFunctionDef):
                 continue
-            func = node.func
-            name = getattr(func, "id", None) or getattr(func, "attr", None)
-            if name is None:
-                continue
-            if (any(isinstance(a, ast.Starred) for a in node.args)
-                    or any(k.arg is None for k in node.keywords)):
-                splat.add(name)
-            keywords.setdefault(name, set()).update(
-                k.arg for k in node.keywords)
-            positional[name] = max(positional.get(name, 0), len(node.args))
-    return keywords, positional, splat
+            args = fn.args
+            params = [*args.posonlyargs, *args.args]
+            shift = int(bool(params) and params[0].arg in ("self", "cls"))
+            first = len(params) - len(args.defaults)
+            for i, (p, d) in enumerate(zip(params[first:], args.defaults),
+                                       start=first):
+                yield path, fn.name, i - shift, p.arg, d
+            for p, d in zip(args.kwonlyargs, args.kw_defaults):
+                if d is not None:
+                    yield path, fn.name, None, p.arg, d
+
+
+def _passed(call: ast.Call, index: int | None, option: str) -> list:
+    """The argument expressions a call passes to one option."""
+    passed = [k.value for k in call.keywords if k.arg == option]
+    if index is not None and index < len(call.args):
+        passed.append(call.args[index])
+    return passed
 
 
 def test_no_engine_option_is_left_at_its_default():
@@ -173,30 +196,116 @@ def test_no_engine_option_is_left_at_its_default():
     default is a constant: write the value where it is used. Calls
     match by the callee's name, so a name two functions share counts
     the calls of both."""
-    keywords, positional, splat = _passed_options(USERS)
+    calls = _calls(USERS)
     engine = [*(PKG / "operators").glob("*.py"),
               *(PKG / "functions").glob("*.py"),
               PKG / "queries.py", PKG / "util.py", PKG / "catalog.py"]
-    unset = set()
-    for path in engine:
-        for fn in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(fn, ast.FunctionDef | ast.AsyncFunctionDef):
-                continue
-            args = fn.args
-            params = [*args.posonlyargs, *args.args]
-            first = len(params) - len(args.defaults)
-            options = [(i, p.arg) for i, p in enumerate(params)
-                       if i >= first]
-            options += [(None, p.arg) for p, d in zip(args.kwonlyargs,
-                                                      args.kw_defaults)
-                        if d is not None]
-            for index, option in options:
-                if (fn.name in splat
-                        or option in keywords.get(fn.name, ())
-                        or (index is not None
-                            and index < positional.get(fn.name, 0))):
-                    continue
-                unset.add(f"{path.relative_to(PKG).as_posix()}:"
-                          f"{fn.name}.{option}")
+    unset = {
+        f"{path.relative_to(PKG).as_posix()}:{name}.{option}"
+        for path, name, index, option, _ in _options(engine)
+        if not any(_splat(c) or _passed(c, index, option)
+                   for c in calls.get(name, ()))
+    }
     assert unset == set(OPTIONS_ONLY_TESTS_SET)
-    assert len(OPTIONS_ONLY_TESTS_SET) <= 12
+    assert len(OPTIONS_ONLY_TESTS_SET) <= 10
+
+
+_UNKNOWN = object()
+
+
+def _bind(target: ast.expr, value: ast.expr | None, consts: dict) -> None:
+    """Record what one assignment target binds: a name gets the literal
+    of ``value``; a tuple or list target takes the elements of a tuple
+    or list value of the same length one by one; any other pairing
+    binds its names to :data:`_UNKNOWN`."""
+    if isinstance(target, ast.Name):
+        consts.setdefault(target.id, []).append(_literal(value, {}))
+    elif (isinstance(target, ast.Tuple | ast.List)
+          and isinstance(value, ast.Tuple | ast.List)
+          and len(target.elts) == len(value.elts)
+          and not any(isinstance(e, ast.Starred)
+                      for e in (*target.elts, *value.elts))):
+        for t, v in zip(target.elts, value.elts):
+            _bind(t, v, consts)
+    else:
+        for n in ast.walk(target):
+            if isinstance(n, ast.Name):
+                consts.setdefault(n.id, []).append(_UNKNOWN)
+
+
+def _module_constants(paths: list[Path]) -> dict[str, list]:
+    """For every name a module-level assignment in ``paths`` binds, the
+    value of each binding: the literal it assigns, or :data:`_UNKNOWN`
+    (see :func:`_bind`)."""
+    consts = {}
+    for path in paths:
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets = [node.target]
+            else:
+                continue
+            for target in targets:
+                _bind(target, node.value, consts)
+    return consts
+
+
+def _literal(expr: ast.expr | None, consts: dict[str, list]):
+    """The value of an argument or default: a literal, or a bare or
+    dotted name the scanned modules bind exactly once to a literal at
+    module level; :data:`_UNKNOWN` for anything else."""
+    if expr is None:
+        return _UNKNOWN
+    try:
+        return ast.literal_eval(expr)
+    except (ValueError, TypeError, SyntaxError, MemoryError,
+            RecursionError):
+        pass
+    name = (expr.id if isinstance(expr, ast.Name)
+            else expr.attr if isinstance(expr, ast.Attribute) else None)
+    bound = consts.get(name, ())
+    return bound[0] if len(bound) == 1 else _UNKNOWN
+
+
+def _same(a, b) -> bool:
+    """Whether two values are known and equal; numbers compare by value
+    (``3`` is ``3.0``), anything else also by type (``True`` is not
+    ``1``)."""
+    if a is _UNKNOWN or b is _UNKNOWN:
+        return False
+    if all(isinstance(v, int | float) and not isinstance(v, bool)
+           for v in (a, b)):
+        return a == b
+    return type(a) is type(b) and a == b
+
+
+def test_every_engine_option_takes_another_value_somewhere():
+    """Every parameter with a default of a function in operators/,
+    functions/, sources/, queries.py, util.py or catalog.py is passed
+    a value other than its default at one or more call sites in the
+    package, tools/, perfbench/, bench.py, __spark_entry__.py or
+    tests/. An option that only ever receives its default has one
+    value in use: write that value where it is used. Values compare
+    as literals (``ast.literal_eval``), numbers by value; a bare or
+    dotted name compares as the module-level literal constant of that
+    name when the scanned modules bind it exactly once, by a plain or
+    a tuple assignment; any other expression, and any call passing
+    ``*``/``**``, counts as another value."""
+    callers = [*USERS, *(ROOT / "perfbench").glob("test_*.py"),
+               *(ROOT / "tests").rglob("*.py")]
+    calls = _calls(callers)
+    consts = _module_constants(callers)
+    engine = [*(PKG / "operators").glob("*.py"),
+              *(PKG / "functions").glob("*.py"),
+              *(PKG / "sources").glob("*.py"),
+              PKG / "queries.py", PKG / "util.py", PKG / "catalog.py"]
+    one_value = set()
+    for path, name, index, option, default in _options(engine):
+        value = _literal(default, consts)
+        if not any(_splat(c) or any(not _same(_literal(e, consts), value)
+                                    for e in _passed(c, index, option))
+                   for c in calls.get(name, ())):
+            one_value.add(f"{path.relative_to(PKG).as_posix()}:"
+                          f"{name}.{option}")
+    assert sorted(one_value) == []

@@ -107,3 +107,35 @@ def test_load_table_casts_spark_written_ntz(spark, tmp_path):
     assert row["t"] == datetime.datetime(2024, 1, 5, 12, 30, 0)
     assert row["s"]["t"] == datetime.datetime(1969, 12, 31, 23, 59, 59, 500000)
     assert row["s"]["n"] == 7
+
+
+def test_load_table_floors_nanos_to_micros(spark, tmp_path):
+    """A pyarrow-written TIMESTAMP(NANOS) column reads as a timestamp
+    floored to microseconds, pre-1970 values included (truncating
+    toward zero would move them up to 999 ns late); a tz-less
+    microsecond column in the same table reads as a timestamp too,
+    and a plain int64 column stays a long."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [-1, -1_500, -86_400_000_000_001, 0, 1_234_567_891]
+    us = [-1, 0, 1, 2, 3]
+    pq.write_table(
+        pa.table({
+            "ts_ns": pa.array(ns, pa.timestamp("ns")),
+            "ts_us": pa.array(us, pa.timestamp("us")),
+            "n": pa.array(range(5), pa.int64()),
+        }),
+        str(tmp_path / "nanos.parquet"),
+        version="2.6",
+    )
+    assert pq.read_schema(str(tmp_path / "nanos.parquet")).field(
+        "ts_ns").type == pa.timestamp("ns")
+
+    df = load_table(spark, str(tmp_path), "nanos")
+    assert dict(df.dtypes) == {"ts_ns": "timestamp", "ts_us": "timestamp",
+                               "n": "bigint"}
+    got = df.select(F.unix_micros("ts_ns").alias("ns"),
+                    F.unix_micros("ts_us").alias("us"), "n").collect()
+    assert sorted((r["n"], r["ns"], r["us"]) for r in got) == [
+        (i, v // 1000, u) for i, (v, u) in enumerate(zip(ns, us))]

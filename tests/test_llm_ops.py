@@ -31,7 +31,7 @@ def test_exact_dedup_keeps_min_id(spark):
 
 
 def test_minhash_finds_planted_neighbors(spark):
-    pairs = D.minhash_lsh_pairs(docs_df(spark), "text", "doc_id", shingle_n=3)
+    pairs = D.minhash_lsh_pairs(docs_df(spark), "text", "doc_id")
     found = {(r["doc_a"], r["doc_b"]): r["est_jaccard"] for r in pairs.collect()}
     assert found[(1, 4)] == 1.0           # exact dup → identical signatures
     assert found.get((1, 2), 0.0) > 0.5   # near dup shares most shingles
@@ -72,10 +72,10 @@ def test_lsh_jaccard_matches_exact(spark):
     """The LSH-prefiltered composition must reproduce the exact
     jaccard pair set on the gate corpus (deterministic hashes; all
     qualifying pairs sit well above the banding S-curve knee)."""
-    from sarfile_analyzer_ng_spark.queries import _planted_corpus, JACCARD_TAU
+    from sarfile_analyzer_ng_spark.queries import _planted_corpus
     corpus = _planted_corpus(spark, "/root/testdata/sf0.001")
-    exact = D.ngram_jaccard_pairs(corpus, "text", "doc_id", threshold=JACCARD_TAU)
-    lsh = D.lsh_jaccard_pairs(corpus, "text", "doc_id", threshold=JACCARD_TAU)
+    exact = D.ngram_jaccard_pairs(corpus, "text", "doc_id", threshold=D.JACCARD_TAU)
+    lsh = D.lsh_jaccard_pairs(corpus, "text", "doc_id")
     a = {tuple(r) for r in exact.collect()}
     b = {tuple(r) for r in lsh.collect()}
     assert a == b and len(a) > 0
@@ -316,7 +316,7 @@ def test_kmeans_lloyd_exact_separates_clusters(spark):
         (5, [1.0, 0.1, 0.0, 0.0]), (6, [0.0, 1.1, 0.1, 0.1]),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = S.kmeans_lloyd_exact(emb, "vec_id", "embedding", k=2, iters=2)
+    out = S.kmeans_lloyd_exact(emb, "vec_id", "embedding", k=2)
     got = {r["vec_id"]: r["cluster"] for r in out.collect()}
     assert got[1] == got[3] == got[5]
     assert got[2] == got[4] == got[6]
@@ -441,7 +441,7 @@ def test_winnow_guarantee_shared_substring(spark):
         (3, "completely different words with no common trigram at all here"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = D.winnow_fingerprints(df, "text", "doc_id", k=3, window=4)
+    fps = D.winnow_fingerprints(df, "text", "doc_id")
     by_doc = {
         r["doc"]: set(r["fps"])
         for r in fps.groupBy("doc").agg(F.collect_set("fp").alias("fps")).collect()
@@ -460,7 +460,7 @@ def test_winnow_density_and_short_docs(spark):
     words = [f"w{rng.randrange(5000)}" for _ in range(400)]
     rows = [(1, " ".join(words)), (2, "too short doc"), (3, "a b c d e f")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = D.winnow_fingerprints(df, "text", "doc_id", k=3, window=4)
+    fps = D.winnow_fingerprints(df, "text", "doc_id")
     counts = {r["doc"]: r["n"] for r in
               fps.groupBy("doc").agg(F.count(F.lit(1)).alias("n")).collect()}
     n_grams = 400 - 2
@@ -523,7 +523,7 @@ def test_winnow_guarantee_randomized(spark):
             doc_id += 1
         expect_share[tuple(pair)] = positive
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = D.winnow_fingerprints(df, "text", "doc_id", k=3, window=4)
+    fps = D.winnow_fingerprints(df, "text", "doc_id")
     by_doc: dict[int, set] = {}
     for r in fps.collect():
         by_doc.setdefault(r["doc"], set()).add(r["fp"])
@@ -542,7 +542,7 @@ def test_ngram_jaccard_maxdf_releases_the_cached_frame(spark):
     rows = [(i, "common words everywhere " + " ".join(f"u{i}x{j}" for j in range(6)))
             for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = D.ngram_jaccard_pairs(df, "text", "doc_id", shingle_n=3,
+    out = D.ngram_jaccard_pairs(df, "text", "doc_id",
                                 threshold=0.0, max_df=3)
     out.count()
     cached = out._cached_inputs
@@ -980,7 +980,7 @@ def test_repeated_spans_cut_keeps_first_occurrence(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in D.repeated_spans_cut(
-        df, "text", "doc_id", k=8, min_tokens=16).collect()}
+        df, "text", "doc_id", k=8).collect()}
     # the smallest (doc, pos) occurrence survives with original case
     assert out[1]["text_clean"] == "u1 u2 " + boiler
     assert out[1]["n_cut_tokens"] == 0
@@ -1009,7 +1009,7 @@ def test_repeated_spans_cut_partial_copy_still_keeps_one(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in D.repeated_spans_cut(
-        df, "text", "doc_id", k=8, min_tokens=16).collect()}
+        df, "text", "doc_id", k=8).collect()}
     # the below-threshold partial copy is untouched
     assert out[1]["n_cut_tokens"] == 0
     # exactly one FULL span survives: doc 2's (the family's min span)
@@ -1036,7 +1036,7 @@ def test_repeated_spans_cut_midrun_first_occurrence_keeps_one(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in D.repeated_spans_cut(
-        df, "text", "doc_id", k=8, min_tokens=16).collect()}
+        df, "text", "doc_id", k=8).collect()}
     assert out[1]["n_cut_tokens"] == 0           # family keeper (1, 2)
     assert out[2]["text_clean"] == "z3"
     assert out[3]["n_cut_tokens"] == 0           # family keeper (3, 0)
@@ -1361,7 +1361,7 @@ def test_repeat_schedule_caps_and_shortfall(spark):
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     out = {r["source"]: r for r in TX.repeat_schedule(
         df, "source", "text", {"a": 0.5, "b": 0.5},
-        token_budget=100, max_epochs=4.0).collect()}
+        token_budget=100).collect()}
     a, b = out["a"], out["b"]
     assert (a["epochs"], a["effective_tokens"], a["shortfall"]) == (4.0, 40.0, 10.0)
     assert (b["epochs"], b["effective_tokens"], b["shortfall"]) == (0.5, 50.0, 0.0)
@@ -1456,7 +1456,7 @@ def test_top_ngrams_excludes_short_doc_pseudo_grams(spark):
     rows = [(i, "click here") for i in range(10)]
     rows.append((100, "one genuine five word sequence right here okay"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = TX.top_ngrams(df, "text", "doc_id", n=5, k=5).collect()
+    out = TX.top_ngrams(df, "text", "doc_id", k=5).collect()
     assert all(len(r["ngram"].split()) == 5 for r in out)
     assert all(r["ngram"] != "click here" for r in out)
 
@@ -1552,7 +1552,7 @@ def test_edit_dup_pairs_catches_typos_jaccard_blurs(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["doc_a"], r["doc_b"]): r["edit_sim"] for r in
-           D.edit_dup_pairs(df, "text", "doc_id", tau=0.8).collect()}
+           D.edit_dup_pairs(df, "text", "doc_id").collect()}
     assert got[(1, 4)] == 1.0
     assert got[(1, 2)] == got[(2, 4)] == round(1 - 1 / len(base), 4)
     assert all(3 not in pair for pair in got)
@@ -1566,7 +1566,7 @@ def test_edit_dup_pairs_exposes_lsh_cache_for_release(spark):
     # frame before, which silently dropped it (storage leak per call).
     rows = [(i, f"doc {i} words alpha beta gamma delta") for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = D.edit_dup_pairs(df, "text", "doc_id", tau=0.8)
+    out = D.edit_dup_pairs(df, "text", "doc_id")
     cached = getattr(out, "_cached_inputs", [])
     assert len(cached) >= 1
     out.collect()
@@ -2013,7 +2013,7 @@ def test_chunk_ppl_cut_cuts_garbled_chunk_keeps_fluent(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in
            TX.chunk_ppl_cut(df, "text", "doc_id", chunk_words=4,
-                            vocab_size=4, ppl_quantile=0.9).collect()}
+                            vocab_size=4).collect()}
     assert out[99]["n_chunks"] == 2 and out[99]["n_cut"] == 1
     assert out[99]["clean_text"] == fluent
     for i in range(10):
@@ -2132,7 +2132,7 @@ def test_cluster_silhouette_separated_vs_merged(spark):
     for i in range(6, 12):
         rows.append((i, [0.0, 0.0, 10.0, float(i % 3) * 0.1]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = S.cluster_silhouette(emb, "vec_id", "embedding", k=2, iters=2)
+    out = S.cluster_silhouette(emb, "vec_id", "embedding", k=2)
     rows_out = out.collect()
     assert len(rows_out) == 2
     assert sum(r["n_members"] for r in rows_out) == 12
@@ -2201,7 +2201,7 @@ def test_pair_pagerank_hub_outranks_leaves(spark):
         [(1, 2), (1, 3), (1, 4), (1, 5), (8, 9)],
         "doc_a long, doc_b long")
     out = {r["doc_id"]: r["pagerank"] for r in D.pair_pagerank(
-        pairs, iters=3).collect()}
+        pairs).collect()}
     assert len(out) == 7
     hub, leaves = out[1], [out[i] for i in (2, 3, 4, 5)]
     assert all(hub > lv for lv in leaves)
@@ -2316,7 +2316,7 @@ def test_curriculum_order_phases_and_addresses(spark):
         rows.append((i, "s" + str(i % 2), " ".join(words)))
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     out = TX.curriculum_order(df, "text", "doc_id", "source",
-                              phases=3, num_shards=4).collect()
+                              num_shards=4).collect()
     assert len(out) == 30
     by_phase = {}
     for r in out:

@@ -107,7 +107,7 @@ def test_unpivot_roundtrip(spark):
     df = spark.createDataFrame([(1, 2.0, 3.0)], "id long, a double, b double")
     long = ST.unpivot(df, ["id"], ["a", "b"])
     assert {(r["metric"], r["value"]) for r in long.collect()} == {("a", 2.0), ("b", 3.0)}
-    wide = RS.pivot_wide(long, ["id"], "metric", "value", ["a", "b"], agg="avg")
+    wide = RS.pivot_wide(long, ["id"], "metric", "value", ["a", "b"])
     row = wide.collect()[0]
     assert (row["a"], row["b"]) == (2.0, 3.0)
 
@@ -235,7 +235,7 @@ def test_seasonal_outliers_uses_per_hour_baseline(spark):
         rows, "event_id long, event_type string, ts timestamp, value double"
     )
     out = {r["event_id"]: r for r in TS.seasonal_outliers(
-        df, "ts", "value", ["event_type"], threshold=3.0).collect()}
+        df, "ts", "value", ["event_type"]).collect()}
     assert 900 in out and out[900]["hour"] == 3      # 3am spike flagged
     assert 901 not in out                            # normal at 3pm
     from sarfile_analyzer_ng_spark.operators.stats import zscore_outliers
@@ -267,11 +267,10 @@ def test_ewma_smooth_matches_pandas_and_forecast_identity(spark):
         rows, "event_id long, user_id long, ts timestamp, value double"
     )
     out = TS.ewma_smooth(df, "ts", "value", ["user_id"],
-                         order_tiebreak=["event_id"],
-                         alpha=0.3, window=16)
+                         order_tiebreak=["event_id"])
     got = {r["event_id"]: r for r in out.collect()}
 
-    exp = pd.Series(vals).ewm(alpha=0.3, adjust=True).mean()
+    exp = pd.Series(vals).ewm(alpha=TS.EWMA_ALPHA, adjust=True).mean()
     for i in range(len(vals)):
         assert got[i]["ewma"] == round(round(exp[i], 8), 4)
     assert got[0]["forecast"] is None and got[0]["resid"] is None
@@ -324,7 +323,7 @@ def test_mad_outliers_robust_to_the_spike_zscore_misses(spark):
         [(i, k, v) for i, (k, v) in enumerate(rows)],
         "event_id long, k string, value double",
     )
-    out = ST.mad_outliers(df, "value", ["k"], threshold=3.5)
+    out = ST.mad_outliers(df, "value", ["k"])
     flagged = {r["event_id"] for r in out.collect()}
     assert 12 in flagged and 13 in flagged     # both spikes
     assert all(e >= 12 for e in flagged)       # no quiet sample flagged
@@ -388,7 +387,7 @@ def test_threshold_runs_islands_and_min_run(spark):
         "k string, event_id long, ts timestamp, value double",
     )
     runs = TS.threshold_runs(df, "ts", "value", ["k"], threshold=80.0,
-                             min_run=3, tiebreak="event_id").collect()
+                             tiebreak="event_id").collect()
     assert len(runs) == 1
     r = runs[0]
     assert r["n_samples"] == 3 and r["peak_value"] == 95.0
@@ -407,8 +406,8 @@ def test_cusum_catches_small_persistent_shift_zscore_misses(spark):
             for i, v in enumerate(vals)]
     df = spark.createDataFrame(
         rows, "k string, event_id long, ts timestamp, value double")
-    alarms = TS.cusum_alarms(df, "ts", "value", ["k"], slack_sigmas=0.5,
-                             h_sigmas=4.0, tiebreak="event_id").collect()
+    alarms = TS.cusum_alarms(df, "ts", "value", ["k"],
+                             tiebreak="event_id").collect()
     assert alarms, "persistent shift must alarm"
     assert min(a["event_id"] for a in alarms) >= len(base)
     # no sample individually crosses mean + 4*sigma (z-score silent)

@@ -157,7 +157,7 @@ def test_doremi_weights_trajectory(spark):
         [(i, -2.5 if i < 6 else -4.0) for i in range(12)],
         "doc_id long, avg_logp double")
     out = TX.doremi_weights(docs, "doc_id", "source", ref, prox,
-                            iters=4, eta=1.0, smooth=0.1)
+                            iters=4)
     rows = out.collect()
     by_step: dict[int, dict[str, float]] = {}
     for r in rows:
@@ -175,7 +175,7 @@ def test_doremi_weights_trajectory(spark):
     ex = {r["source"]: r["excess_loss"] for r in rows}
     assert ex["easy"] == 0.5 and ex["hard"] == 2.0
     # smoothing keeps every source alive
-    assert min(by_step[4].values()) >= 0.1 / 2 - 1e-9
+    assert min(by_step[4].values()) >= TX.DOREMI_SMOOTH / 2 - 1e-9
 
 
 def test_snapshot_diff_classifies_all_four_statuses(spark):

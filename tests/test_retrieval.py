@@ -265,11 +265,11 @@ def test_hashed_gram_classifier_separates_disjoint_vocab(spark):
         )
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     feats = C.hashed_gram_features(df, "text", "doc_id", "source",
-                                   ("wiki",), buckets=8)
+                                   ("wiki",))
     row = feats.where(F.col("doc_id") == 0).collect()[0]
     assert row.label == 1
-    assert abs(sum(row[f"x{j}"] for j in range(8)) - 1.0) < 1e-4  # normalized
-    cols = [f"x{j}" for j in range(8)]
+    assert abs(sum(row[f"x{j}"] for j in range(C.HG_BUCKETS)) - 1.0) < 1e-4  # normalized
+    cols = [f"x{j}" for j in range(C.HG_BUCKETS)]
     w = C.logreg_train(feats, cols, "label", iters=20, lr=2.0)
     scored = C.logreg_score(feats, cols, w)
     acc = scored.where(
@@ -388,7 +388,7 @@ def test_mmr_rerank_diversity_beats_near_copy(spark):
         "doc_id long, embedding array<double>",
     )
     rows = {r["step"]: r for r in
-            RV.mmr_rerank(pool, vecs, k=3, lam=0.7).collect()}
+            RV.mmr_rerank(pool, vecs, lam=0.7).collect()}
     assert rows[1]["doc_id"] == 10
     assert rows[2]["doc_id"] == 30
     assert rows[3]["doc_id"] == 20
@@ -407,7 +407,7 @@ def test_mmr_rerank_lam1_is_pure_relevance_order(spark):
         [(5, [1.0, 0.0]), (6, [1.0, 0.01]), (7, [1.0, 0.02])],
         "doc_id long, embedding array<double>",
     )
-    rows = sorted(RV.mmr_rerank(pool, vecs, k=3, lam=1.0).collect(),
+    rows = sorted(RV.mmr_rerank(pool, vecs, lam=1.0).collect(),
                   key=lambda r: r["step"])
     assert [r["doc_id"] for r in rows] == [5, 6, 7]
 

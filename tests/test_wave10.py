@@ -72,7 +72,7 @@ def test_interval_join_negative_epoch_floor(spark):
         spark.createDataFrame(
             [(t(1969, 12, 31, 23, m),) for m in (10, 20, 30, 40)],
             "ts timestamp"),
-        "ts", bucket_seconds=3600, min_count=4,
+        "ts", min_count=4,
     ).collect()
     assert len(bursts) == 1 and bursts[0].n_events == 4
 
@@ -162,8 +162,7 @@ def _pnd_corpus(spark):
 
 def test_passage_near_dups_exact_and_paraphrase(spark):
     out = D.passage_near_dup_pairs(
-        _pnd_corpus(spark), "text", "doc_id",
-        passage_words=8, num_hashes=16, bands=8, threshold=0.4,
+        _pnd_corpus(spark), "text", "doc_id", threshold=0.4,
     )
     pairs = {(r.doc_a, r.idx_a, r.doc_b, r.idx_b): r.est_jaccard
              for r in out.collect()}
@@ -184,12 +183,10 @@ def test_passage_near_dups_max_df_cap(spark):
     rows = [(i, "spam spam spam alpha beta gamma delta epsilon")
             for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = D.passage_near_dup_pairs(df, "text", "doc_id",
-                                        passage_words=8)
+    uncapped = D.passage_near_dup_pairs(df, "text", "doc_id")
     n_un = uncapped.count()
     D.release(uncapped)
-    capped = D.passage_near_dup_pairs(df, "text", "doc_id",
-                                      passage_words=8, max_df=10)
+    capped = D.passage_near_dup_pairs(df, "text", "doc_id", max_df=10)
     n_cap = capped.count()
     D.release(capped)
     assert n_un == 30 * 29 // 2 and n_cap == 0

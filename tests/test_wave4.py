@@ -127,7 +127,7 @@ def test_threshold_sweep_counts_and_f1(spark):
         "label int, p_good double",
     )
     out = {r.tau: r for r in C.threshold_sweep(
-        scored, "p_good", "label", taus=(0.25, 0.5, 0.75)).collect()}
+        scored, taus=(0.25, 0.5, 0.75)).collect()}
     r = out[0.5]
     assert (r.tp, r.fp, r.fn, r.tn) == (2, 1, 1, 2)
     assert r.precision == pytest.approx(2 / 3, abs=1e-6)

@@ -120,8 +120,7 @@ def test_winsorized_mean_resists_outlier(spark):
     df = spark.createDataFrame(
         [("s", v) for v in vals], "event_type string, value double"
     )
-    out = ST.winsorized_stats(df, "value", ["event_type"],
-                              lo=0.05, hi=0.95)
+    out = ST.winsorized_stats(df, "value", ["event_type"])
     r = out.collect()[0]
     D.release(out)
     assert r.n == 100

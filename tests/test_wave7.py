@@ -30,8 +30,7 @@ def test_burst_intervals_merge_contiguous_hot_buckets(spark):
     )
     df = spark.createDataFrame(rows, "ts timestamp")
     out = sorted(
-        TS.burst_intervals(df, "ts", bucket_seconds=3600,
-                           min_count=3).collect(),
+        TS.burst_intervals(df, "ts", min_count=3).collect(),
         key=lambda r: r.burst_start,
     )
     assert len(out) == 2
